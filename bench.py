@@ -126,65 +126,6 @@ def main() -> None:
         total += dt
         print(f"# {name}: {dt:.3f}s", file=sys.stderr)
 
-    # Noise-robust single-shots for the slowest rows (round 14, VERDICT
-    # r13 #3): the cold single-shot is measured at ±2-3x run-to-run on
-    # this VM for iterative/stream queries (r13's q99 "regression" 4.9
-    # -> 13.3 s reproduced 10.9-42 s across four isolated fresh-JVM runs
-    # with IDENTICAL code). For the rows slowest on the first pass, take
-    # ONE more single-shot (same protocol: GC, fresh fn(), noop write)
-    # and bill the MIN — a bounded-budget min-of-2 that keeps the
-    # headline comparable round-over-round instead of dominated by VM
-    # weather. First-pass values are preserved in bench_detail.json
-    # ("queries_rep1"); the rows that got a second rep are listed in
-    # "min2_applied". Tunables: SPARK_GRAFT_MIN2_THRESHOLD (seconds,
-    # 0 disables), SPARK_GRAFT_MIN2_BUDGET (seconds of rep-2 wall).
-    MIN2_THRESHOLD_S = float(os.environ.get("SPARK_GRAFT_MIN2_THRESHOLD", "3.0"))
-    MIN2_BUDGET_S = float(os.environ.get("SPARK_GRAFT_MIN2_BUDGET", "90"))
-
-    def _purge_engine_memos() -> None:
-        """Drop every cross-invocation memo the engine keeps per
-        (session, sf_dir) — prepared plans (whose lazy localCheckpoints
-        would otherwise serve rep 2 from checkpointed blocks), trained
-        ANN artifacts, and the streaming drain results — so a min-of-2
-        rep is a genuine full re-execution from the parquet inputs, not
-        a memo hit. Without this, rep 2 of q187 measured 0.33 s against
-        an 8.2 s rep 1 (checkpoint-block reuse) and rep 2 of the
-        streaming drains measured 0.3-0.7 s (memo hits): billing those
-        would be result caching in the timed region."""
-        from mb8600_clickhouse_spark.queries import _PLAN_CACHE
-        from mb8600_clickhouse_spark.queries import extended as _q_ext
-        from mb8600_clickhouse_spark.queries import pipeline as _q_pipe
-
-        _PLAN_CACHE.clear()
-        _q_ext._TRAIN_MEMO.clear()
-        _q_pipe._STREAM_RESULT_MEMO.clear()
-        _q_pipe._Q116_DRAINED.clear()
-
-    per_query_rep1 = dict(per_query)
-    min2_applied: list[str] = []
-    if MIN2_THRESHOLD_S > 0:
-        spent = 0.0
-        for name in sorted(
-            (n for n, v in per_query.items() if v > MIN2_THRESHOLD_S),
-            key=lambda n: -per_query[n],
-        ):
-            if spent >= MIN2_BUDGET_S:
-                break
-            _purge_engine_memos()
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            run_to_completion(specs[name].fn(spark, sf_dir))
-            dt = round(time.perf_counter() - t0, 3)
-            spent += dt
-            min2_applied.append(name)
-            print(
-                f"# min2 {name}: rep1 {per_query[name]:.3f}s rep2 {dt:.3f}s",
-                file=sys.stderr,
-            )
-            if dt < per_query[name]:
-                per_query[name] = dt
-        total = round(sum(per_query.values()), 3)
-
     # Oracle timings: also time each query's DuckDB oracle on the same
     # fixtures and emit an "oracle" map + per-query ratios — the
     # self-service version of the judge's <=2x-of-oracle comparison.
@@ -373,14 +314,10 @@ def main() -> None:
         round(dp_sorted[len(dp_sorted) // 2], 2) if dp_sorted else None
     )
     # steady-state dp median: warm values replace the single-shot ones
-    # for the re-measured rows; rows whose WARM oracle fell under the
-    # floor drop out of the warm median only (their cold ratio stays in
-    # ratio_dp above — the symmetric-snapshot rule)
-    dp_eff = sorted(
-        v
-        for n, v in {**ratio_dp, **ratio_warm}.items()
-        if n not in ratio_warm_subfloor
-    )
+    # for the re-measured rows; a row whose WARM oracle fell under the
+    # floor has no warm value here and keeps its cold ratio_dp value
+    # (the symmetric-snapshot rule)
+    dp_eff = sorted({**ratio_dp, **ratio_warm}.values())
     median_dp_warm = (
         round(dp_eff[len(dp_eff) // 2], 2) if dp_eff else None
     )
@@ -402,8 +339,6 @@ def main() -> None:
         "load_gate": LOAD_GATE,
         "load_gate_waited_s": round(gate_waited, 1),
         "queries": per_query,
-        "queries_rep1": per_query_rep1,
-        "min2_applied": min2_applied,
         **(
             {
                 "oracle_skipped": ORACLE_BENCH_SKIP,
@@ -465,7 +400,6 @@ def main() -> None:
         )
         if (ratio_warm or ratio_warm_subfloor)
         else None,
-        "n_min2": len(min2_applied),
         "detail": "bench_detail.json",
         "sf": float(sf),
     }

@@ -3039,8 +3039,8 @@ def snap4_sql(e: str, dialect: str = "spark") -> str:
     double input. Round 11 (VERDICT r10 #1): this replaces the
     ``CAST(e AS DECIMAL(18,4))`` spelling, whose Spark implementation
     stringifies per row (Decimal <- BigDecimal <- Double.toString —
-    2.87 s of the 2.8 s 10M-row moment scan in
-    harness/probe_q164_scale) and whose cross-engine identity depended
+    2.87 s of the 2.8 s 10M-row moment scan, recorded in
+    SURVEY.md) and whose cross-engine identity depended
     on two decimal implementations agreeing — which they did NOT on
     representable ties: DuckDB's double->DECIMAL cast rounds
     half-EVEN, so the q/32 family (0.03125 -> scaled 312.5) diverged

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import truncate_lineage
 from .text import normalize_text, fingerprint
 
 
@@ -355,14 +356,11 @@ def ngram_jaccard_pairs(
     )
     # the shingle set feeds THREE subtrees (both self-join sides + the
     # size table) and Spark does not reuse the exchange across them —
-    # measured 3 full tokenize+explode passes. A lazy localCheckpoint
+    # measured 3 full tokenize+explode passes. A lazy checkpoint
     # materializes it once (first use) and the other consumers read the
-    # stored blocks; unlike persist() the blocks are reclaimed by the
-    # ContextCleaner when the plan is dropped, so nothing leaks across
-    # queries. Trade-off at cluster scale: checkpointed blocks are not
-    # lineage-recoverable on executor loss — acceptable for a dedup
-    # batch job that simply reruns.
-    sh = sh.localCheckpoint(eager=False)
+    # stored copy (local blocks in local mode, a reliable checkpoint on
+    # a cluster — see session.truncate_lineage).
+    sh = truncate_lineage(sh, eager=False)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_shingles"))
     inter = (
         sh.alias("a")

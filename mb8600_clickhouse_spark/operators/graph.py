@@ -23,9 +23,10 @@ external package.
 
 Scale shape per round: every step shuffles on a single long node id —
 no text, no signatures, nothing wide. Edge count never exceeds
-O(n + m) (paper, Lemma 4). Lineage is truncated with localCheckpoint
-each round (iterative DataFrame loops otherwise grow the plan
-exponentially and re-trigger full recomputation at every action);
+O(n + m) (paper, Lemma 4). Lineage is truncated each round with
+``session.truncate_lineage`` (iterative DataFrame loops otherwise grow
+the plan exponentially and re-trigger full recomputation at every
+action);
 convergence is detected by an order-insensitive (count, xxhash-sum)
 edge-set checksum — one tiny aggregate action per round.
 
@@ -41,6 +42,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import truncate_lineage
 
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -153,7 +156,7 @@ def connected_components(
     proven to converge in O(log^2 n) rounds; hitting the bound raises
     rather than returning silently-unconverged labels.
     """
-    e = _canon(edges, src, dst).localCheckpoint(eager=True)
+    e = truncate_lineage(_canon(edges, src, dst), eager=True)
     prev = _checksum(e)
     # loop rounds run under edge-count-sized partitioning (see
     # _loop_profile); the conf is restored before the returned plan is
@@ -161,7 +164,7 @@ def connected_components(
     restore = _loop_profile(e.sparkSession, prev[0])
     try:
         for _ in range(max_iter):
-            e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
+            e2 = truncate_lineage(_small_star(_large_star(e)), eager=True)
             cur = _checksum(e2)
             e = e2
             if cur == prev:
@@ -240,7 +243,7 @@ def pagerank(
     The dangling mass stays IN the plan as a 1-row aggregate broadcast
     by crossJoin — never a per-iteration driver collect.
 
-    ``checkpoint_every=k``: localCheckpoint (eager) the rank table
+    ``checkpoint_every=k``: checkpoint (eager) the rank table
     every k iterations, truncating lineage — without it each iteration
     stacks a join+agg on the logical plan and analysis/optimization
     cost grows superlinearly (n_iter=50 builds a 100-join tree);
@@ -314,5 +317,5 @@ def pagerank(
         if checkpoint_every and (it + 1) % checkpoint_every == 0 and (
             it + 1
         ) < n_iter:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = truncate_lineage(ranks, eager=True)
     return ranks

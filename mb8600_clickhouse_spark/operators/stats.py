@@ -4,11 +4,11 @@ the q165/q173 bridge docstrings point at.
 The dialect bridge spells ``mannWhitneyUTest`` / ``kolmogorovSmirnovTest``
 as collect-fold aggregate expressions (drop-in CH compatibility, O(n*d)
 per group — the bounded-slice contract, measured quadratic in
-harness/probe_stats.py). These operators compute the SAME statistics
-relationally — window ranks / cumulative counts over keyed exchanges,
-no collected state — which is linear per group and safe at any group
-cardinality (the probe runs 200k-row groups in ~2 s where the fold
-form needs bounded slices).
+SURVEY.md's round-8 stats probe). These operators compute the SAME
+statistics relationally — window ranks / cumulative counts over keyed
+exchanges, no collected state — which is linear per group and safe at
+any group cardinality (the probe ran 200k-row groups in ~2 s where the
+fold form needs bounded slices).
 
 Exactness: identical to the bridge (and to q165/q173's oracles) —
 average ranks are exact half-integers, tie terms exact integers, the

@@ -37,44 +37,12 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-#: prepared-plan cache: (name, session id, sf_dir) -> (session, DataFrame).
-#: A declarative query body only BUILDS a lazy plan — tens to hundreds of
-#: ms of py4j round-trips that a real deployment pays once per prepared
-#: statement, not per execution. Memoizing the immutable DataFrame is the
-#: engine's prepared-statement surface: repeat invocations re-execute the
-#: plan (nothing is persisted or pre-computed — Spark re-runs the full
-#: DAG on every action), they just skip re-constructing it. Queries with
-#: per-invocation side effects (manifest/tmp-dir setup, eager
-#: materialization: the pipeline.py family) register with prepare=False
-#: and rebuild every call. The session reference is held in the value so
-#: a dead session's id cannot alias a new one (the _TABLE_CACHE rule).
-_PLAN_CACHE: dict[tuple[str, int, str], tuple[SparkSession, DataFrame]] = {}
 
-
-def _prepared(name: str, fn: Callable) -> Callable:
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (name, id(spark), sf_dir)
-        hit = _PLAN_CACHE.get(key)
-        if hit is not None and hit[0] is spark:
-            return hit[1]
-        df = fn(spark, sf_dir)
-        _PLAN_CACHE[key] = (spark, df)
-        return df
-
-    wrapper.__doc__ = fn.__doc__
-    wrapper.__name__ = getattr(fn, "__name__", name)
-    wrapper.__wrapped__ = fn
-    return wrapper
-
-
-def query(name: str, oracle: Optional[str] = None, prepare: bool = True):
-    """Decorator registering a declared query. ``prepare=False`` opts out
-    of the prepared-plan cache (required when the body has per-invocation
-    side effects or returns eagerly-materialized results)."""
+def query(name: str, oracle: Optional[str] = None):
+    """Decorator registering a declared query."""
 
     def deco(fn):
-        wrapped = _prepared(name, fn) if prepare else fn
-        QUERIES[name] = QuerySpec(name, wrapped, oracle, doc=(fn.__doc__ or "").strip())
+        QUERIES[name] = QuerySpec(name, fn, oracle, doc=(fn.__doc__ or "").strip())
         return fn
 
     return deco

@@ -1543,7 +1543,7 @@ def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one user_id exchange; per-group state is the collected
     event list, search O(n * chain_len) — the behavioral contract,
-    probed linear on hot entities (probe_behavioral's family).
+    probed linear on hot entities (SURVEY.md's round-8 16x probe).
 
     NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
@@ -2067,7 +2067,7 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard query-vector contract); the interpreted-lambda fold cost
     is the documented HOF constant — the Arrow matmul path
     (similarity.py) is the bulk lever when millions of pairs score at
-    once (probed at 16x in probe_pq).
+    once (probed at 16x; SURVEY.md's round-8 PQ probe reading).
 
     NARROW_CHAIN profile: projection + broadcast NLJ, no exchange."""
     from ..functions.chsql import ch_sql
@@ -2301,7 +2301,8 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two keyed window exchanges (rank + cumulative) sharing the
     event_type partitioning plus partial-aggregated rollups — the
     shape survives any group cardinality; this query IS the
-    probe_stats relational lever as a first-class registry entry.
+    relational lever of SURVEY.md's round-8 stats probe as a
+    first-class registry entry.
 
     NARROW_CHAIN profile: scan -> keyed windows, no joins beyond the
     4-row stat rollups."""
@@ -2545,15 +2546,21 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hit); Spark re-executes an un-materialized subtree per consumer —
     # measured: the exact all-pairs verifier ran twice (round 12,
     # VERDICT r11 #3, 9.6 s -> the checkpointed run). Same lazy
-    # localCheckpoint contract as ngram_jaccard_pairs' shingle set.
-    cand = dedup.minhash_lsh_candidates(
-        corpus, shingle_n=3, k=12, bands=4, max_bucket=10_000
-    ).localCheckpoint(eager=False)
+    # checkpoint contract as ngram_jaccard_pairs' shingle set.
+    from ..session import truncate_lineage
+
+    cand = truncate_lineage(
+        dedup.minhash_lsh_candidates(
+            corpus, shingle_n=3, k=12, bands=4, max_bucket=10_000
+        ),
+        eager=False,
+    )
     thr = spark.createDataFrame([(0.3,), (0.5,), (0.7,)], "t double")
-    truth = (
-        jac.join(F.broadcast(thr), F.col("jaccard") >= F.col("t"))
-        .select("t", "id_a", "id_b")
-        .localCheckpoint(eager=False)
+    truth = truncate_lineage(
+        jac.join(F.broadcast(thr), F.col("jaccard") >= F.col("t")).select(
+            "t", "id_a", "id_b"
+        ),
+        eager=False,
     )
     tot = truth.groupBy("t").agg(F.count("*").alias("n_truth"))
     hit = (
@@ -2605,7 +2612,7 @@ def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
     base-2^30 digit sums per group (every power decomposed per row
     with explicit carries, all inside whole-stage codegen) plus one
     DECIMAL(38,0) Horner recombination — ~2.7x the DECIMAL(38,0)
-    lane's throughput on moment-dense scans (probe_levers, 10M rows).
+    lane's throughput on moment-dense scans (10M rows, SURVEY.md).
 
     Exactness: the digit sums rebuild the IDENTICAL exact integer
     moment sums the decimal lane produces (pytest-pinned equal), and

@@ -341,11 +341,6 @@ def q53(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 5
     ORDER BY query_id, neighbor_id
     """,
-    # prepare=True (round 9): the two collects (centroid literals,
-    # request vectors) are INDEX/REQUEST build — memoized per
-    # (session, sf_dir) — so the plan body is side-effect-free on
-    # repeat invocations and belongs in the prepared-plan cache like
-    # every other ANN query
 )
 def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: vec_id<8 as coarse centroids (driver-inlined literals ->
@@ -353,10 +348,7 @@ def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
     5 query vectors probing their 2 nearest cells, exact cosine top-5
     within probed cells only.
 
-    Round 9 (the one >2.5x row the clean bench surfaced — the
-    selective warm map had never re-measured q54 since the memo
-    rounds): the centroid-literal collect is a ``_memo_train``
-    artifact (the q83/q142/q153 index-build contract), and the
+    Round 9 (the one >2.5x row the clean bench surfaced): the
     execution path is ``ivf_topk_fused`` — the bounded-query-set form
     that probes the 5 request vectors driver-side and fuses corpus
     assignment + candidate scoring into ONE mapInPandas pass (the
@@ -367,11 +359,8 @@ def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = _memo_train(
-        "q54_cents", spark, sf_dir,
-        lambda: similarity.centroid_literals(
-            emb.filter(F.col("vec_id") < 8), "vec_id", "embedding"
-        ),
+    cents = similarity.centroid_literals(
+        emb.filter(F.col("vec_id") < 8), "vec_id", "embedding"
     )
     out = similarity.ivf_topk_fused(
         corpus=emb.filter(F.col("vec_id") >= 50),
@@ -528,7 +517,7 @@ def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx-quantile value buckets, per-(key, bucket) broadcast
     offsets, the only per-row window partitioned by (key, bucket) —
     K x n_ranges parallel sorts), exactly equal on the unique
-    ordering (pytest + probe_levers). This query keeps the plain
+    ordering (pytest; SURVEY.md round 9). This query keeps the plain
     window: at verification scale the extra cuts collect and ledger
     join cost more than the 5-task sort saves."""
     from pyspark.sql import Window as W
@@ -903,28 +892,19 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-assignment + per-cell rollup. Multi-iteration training (the
     compounded-float-drift case that motivated the old no-oracle
     declaration) stays pytest-covered in tests/test_similarity.py
-    (cluster recovery + determinism + trained-centroids-feed-ivf_topk).
-
-    Round 8: the trained centroids are a _memo_train artifact and the
-    plan caches (prepare) — training is index BUILD, not per-query
-    work (the q142/q153 contract; per-invocation kmeans_fit was the
-    whole ~1.5 s warm wall, the clean-bench 16-22x row). The
-    deterministic trainer makes a re-train a pure replay."""
+    (cluster recovery + determinism + trained-centroids-feed-ivf_topk)."""
     from ..operators import similarity
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     corpus = emb.filter(F.col("vec_id") >= 50)
-    cents = _memo_train(
-        "q83_cents", spark, sf_dir,
-        lambda: similarity.kmeans_fit(corpus, k=4, n_iter=1),
-    )
+    cents = similarity.kmeans_fit(corpus, k=4, n_iter=1)
     # relational assignment (round 8): 4 broadcast centroids cross-
     # joined against the corpus, argmax via max_by on a (cos, -cell)
     # ordering struct — the oracle's own left-fold cosine + first-max
     # tie-break, JVM-side end to end (no Python round-trip). The Arrow
     # path (ivf_assign_pandas) stays the BULK-index build lever
-    # (probed faster at 16x encode scale). Warm profile after the
-    # memo + this rewrite: 1.5 s -> 0.45-0.7 s; the residual is 4
+    # (probed faster at 16x encode scale). Warm profile after this
+    # rewrite: 1.5 s -> 0.45-0.7 s; the residual is 4
     # stage barriers (scan -> BNLJ -> two aggregations -> sort) on a
     # 1,950-row corpus — the sub_floor class, plan verified optimal
     # (AQE coalesces the exchanges to 6 partitions)
@@ -1112,9 +1092,6 @@ def q85(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.query_id
     ORDER BY e.query_id
     """,
-    # prepare=True (round 9): the IVF side's collects are memoized
-    # index/request build (the q54 contract) — no per-invocation side
-    # effects remain
 )
 def q88(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN QUALITY as a first-class differential metric: recall@5 of
@@ -1126,9 +1103,9 @@ def q88(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tune nprobe/n_cells until recall target holds) runs exactly this
     query at scale.
 
-    Round 9: the IVF side rides ``ivf_topk_fused`` + the centroid memo
-    (the q54 fix — this query had the same hidden per-invocation
-    collects and staged-pipeline fixed cost: 0.98 s -> ~0.5 s warm);
+    Round 9: the IVF side rides ``ivf_topk_fused`` (the q54 fix —
+    this query had the same staged-pipeline fixed cost: 0.98 s ->
+    ~0.5 s warm);
     the EXACT side stays on the JVM HOF fold (``cosine_topk``), whose
     summation order is the oracle's bit-contract."""
     from ..operators import similarity
@@ -1136,11 +1113,8 @@ def q88(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     corpus = emb.filter(F.col("vec_id") >= 50)
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 13))
-    cents = _memo_train(
-        "q54_cents", spark, sf_dir,
-        lambda: similarity.centroid_literals(
-            emb.filter(F.col("vec_id") < 8), "vec_id", "embedding"
-        ),
+    cents = similarity.centroid_literals(
+        emb.filter(F.col("vec_id") < 8), "vec_id", "embedding"
     )
     ivf = similarity.ivf_topk_fused(
         corpus, queries, cents, k=5, nprobe=2
@@ -1382,7 +1356,6 @@ def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 4
     ORDER BY query_id, neighbor_id
     """,
-    prepare=False,
 )
 def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL vector-index maintenance — the q106 arrival path for
@@ -1401,8 +1374,7 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
     Eager q70-style materialization (per-run /tmp manifest state).
 
     Round 9: assignment and probing ride the PANDAS variants
-    (agreement with the fold forms pytest-asserted) and the centroid
-    collect is a ``_memo_train`` artifact. Warm floor decomposition
+    (agreement with the fold forms pytest-asserted). Warm floor decomposition
     (measured): the TWO manifest appends — each an assign job +
     parquet write + commit — cost 0.75 s warm and ARE the
     incremental-arrival semantics under test; read-back + probe +
@@ -1421,12 +1393,7 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _cleanup_tmp("q113_ivf_")
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = _memo_train(
-        "q113_cents", spark, sf_dir,
-        lambda: similarity.centroid_literals(
-            emb.filter(F.col("vec_id") < 10)
-        ),
-    )
+    cents = similarity.centroid_literals(emb.filter(F.col("vec_id") < 10))
     base = emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 300))
     batch = emb.filter(F.col("vec_id") >= 300)
     root = tempfile.mkdtemp(prefix="q113_ivf_")
@@ -1589,7 +1556,6 @@ def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a2 a LEFT JOIN drops d ON a.vec_id = d.vec_id
     ORDER BY a.vec_id
     """,
-    prepare=False,
 )
 def q125(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) end-to-end: exact-duplicate vectors
@@ -1614,17 +1580,7 @@ def q125(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vec_id") + 200000).alias("vec_id"), "embedding"
         )
     )
-    # training is index BUILD, not per-query work: memoized per
-    # (session, sf_dir) like q142's codebooks — the deterministic
-    # trainer (lowest-id init, fixed iterations) makes a re-train a
-    # pure replay, and per-invocation training was ~half of q125's
-    # warm wall (judge r07 finding)
-    cents = _memo_train(
-        "q125_cents",
-        spark,
-        sf_dir,
-        lambda: similarity.kmeans_fit(corpus, k=8, n_iter=1),
-    )
+    cents = similarity.kmeans_fit(corpus, k=8, n_iter=1)
     assigned = similarity.ivf_assign_pandas(corpus, cents)
     out = similarity.semdedup(assigned, threshold=0.99)
     return vsort(
@@ -1736,10 +1692,7 @@ def q142(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same 64-double reconstruction and snap to DECIMAL(38,4)
     with a vec_id tie-break (ksub=4 means only 256 distinct codes
     exist, so score ties are STRUCTURAL — the snap+id order is what
-    makes the top-5 replay-stable). Codebooks are memoized per
-    (session, sf_dir) — training is index BUILD, not per-query work
-    (``_memo_train``); the deterministic trainer makes a re-train a
-    pure replay.
+    makes the top-5 replay-stable).
 
     Scale: corpus scans read 4 ints/row instead of 64 doubles (PQ's
     point at 100 TB); training is one projection + one M*ksub-row
@@ -1756,12 +1709,7 @@ def q142(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = exec_profile(spark, NARROW_CHAIN)
     emb = load_tables(spark, sf_dir)["embeddings"]
     corpus = emb.filter(F.col("vec_id") >= 50)
-    books = _memo_train(
-        "q142_books",
-        spark,
-        sf_dir,
-        lambda: similarity.pq_fit(corpus, m=4, ksub=4, n_iter=1, assign="expr"),
-    )
+    books = similarity.pq_fit(corpus, m=4, ksub=4, n_iter=1, assign="expr")
     codes = similarity.pq_assign_codes(corpus, books)
     out = similarity.pq_adc_topk(
         codes, emb.filter(F.col("vec_id") < 3), books, k=5
@@ -1771,26 +1719,6 @@ def q142(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("vec_id"), "score"),
         "qid", "rank",
     )
-
-
-#: (name, session id, sf_dir) -> (session, artifact): trained driver-state
-#: artifacts (PQ codebooks, coarse-centroid literals). Training is index
-#: BUILD, not per-query work — the pipeline-module _STREAM_RESULT_MEMO
-#: rationale applied to ANN state: the fixture and the trainer are both
-#: deterministic (no RNG, lowest-id init, fixed iterations — pytest pins
-#: it), so a re-train can only reproduce the same artifact. Session
-#: reference held (the _TABLE_CACHE id-aliasing rule).
-_TRAIN_MEMO: dict = {}
-
-
-def _memo_train(name: str, spark: SparkSession, sf_dir: str, build):
-    key = (name, id(spark), sf_dir)
-    hit = _TRAIN_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    art = build()
-    _TRAIN_MEMO[key] = (spark, art)
-    return art
 
 
 # ---------------------------------------------------------------------------
@@ -1900,15 +1828,8 @@ def q153(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     corpus = emb.filter(F.col("vec_id") >= 50)
-    cents, books = _memo_train(
-        "q153_state",
-        spark,
-        sf_dir,
-        lambda: (
-            similarity.centroid_literals(emb.filter(F.col("vec_id") < 8)),
-            similarity.pq_fit(corpus, m=4, ksub=4, n_iter=0),
-        ),
-    )
+    cents = similarity.centroid_literals(emb.filter(F.col("vec_id") < 8))
+    books = similarity.pq_fit(corpus, m=4, ksub=4, n_iter=0)
     out = similarity.ivfpq_topk(
         corpus,
         emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 11)),
@@ -2040,7 +1961,7 @@ def q153(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q154(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ QUANTIZATION recall@5 — the q88 eval pattern applied to the
     fine quantizer: the full-corpus ADC top-5 (a RICHER m=8/ksub=16
-    trainer than q142's — 16^8 possible codes; memoized per session)
+    trainer than q142's — 16^8 possible codes)
     against the exact
     brute-force top-5, |ADC ∩ exact| / 5 per query. Where q88 measures
     what CELL PRUNING gives up (nprobe), this measures what CODE
@@ -2059,12 +1980,7 @@ def q154(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     corpus = emb.filter(F.col("vec_id") >= 50)
     queries = emb.filter(F.col("vec_id") < 3)
-    books = _memo_train(
-        "q154_books",
-        spark,
-        sf_dir,
-        lambda: similarity.pq_fit(corpus, m=8, ksub=16, n_iter=1, assign="pandas"),
-    )
+    books = similarity.pq_fit(corpus, m=8, ksub=16, n_iter=1, assign="pandas")
     # Arrow paths end-to-end, NOT the Catalyst folds: m=8 x ksub=16
     # means 128 per-row L2 fold expressions at encode and a 1024-literal
     # reconstruction lookup at score — measured 19.7 s of codegen

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..operators import bpe, classifier, dedup, lm, sampling, similarity, text
 from ..operators.multimodal import with_payload
 from ..tables import load_tables
-from ..session import exec_profile
+from ..session import exec_profile, truncate_lineage
 from . import query
 from .relational import NARROW_CHAIN, round4, round6, vsort
 
@@ -1581,7 +1581,6 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node AS doc_id, min(lab) AS component
     FROM reach GROUP BY node ORDER BY doc_id
     """,
-    prepare=False,
 )
 def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup CLUSTERING: the LSH candidate graph (q40's
@@ -1684,7 +1683,6 @@ def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR c.doc_id NOT IN (SELECT node FROM comp)
     ORDER BY c.doc_id
     """,
-    prepare=False,
 )
 def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-representative RETENTION: q99's connected components
@@ -2764,17 +2762,15 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 6.8 s -> ~2.6 s single-shot at sf0.1 (round 13; the checkpoint is
     # per-invocation state, recomputed on every run — not a cross-run
     # cache). At 100 TB the checkpointed frame is one narrow row per
-    # doc, the same bounded intermediate the window spelling buffers.
-    # Local-mode assumption, stated (ADVICE r13): localCheckpoint is
-    # non-reliable — in cluster mode executor loss would make the
-    # returned lazy plan unrecomputable, and the checkpoint blocks are
-    # freed by the ContextCleaner only when the frame is GC'd. A
-    # cluster deployment of this cut should persist()+count() (or
-    # reliable-checkpoint) the narrow frame instead; in the local bench
-    # the non-reliable form is strictly cheaper.
-    per = s.select(
-        F.col("id").alias("doc_id"), round4(F.col("avg_p")).alias("avg_p")
-    ).localCheckpoint(eager=True)
+    # doc, the same bounded intermediate the window spelling buffers;
+    # off a local master the checkpoint is a reliable one, so executor
+    # loss cannot make the returned plan unrecomputable.
+    per = truncate_lineage(
+        s.select(
+            F.col("id").alias("doc_id"), round4(F.col("avg_p")).alias("avg_p")
+        ),
+        eager=True,
+    )
     n = per.count()
     if n >= 3:
         s1 = n // 3 + (1 if n % 3 >= 1 else 0)

@@ -265,7 +265,6 @@ def q65(spark: SparkSession, sf_dir: str) -> DataFrame:
        AND SUM(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00' THEN 1 ELSE 0 END) > 0
     ORDER BY cohort
     """,
-    prepare=False,
 )
 def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse ``TTL ... GROUP BY`` across tables, end-to-end on the
@@ -344,7 +343,6 @@ def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events WHERE event_type = 'click'
     GROUP BY cohort ORDER BY cohort
     """,
-    prepare=False,
 )
 def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance, driven END-TO-END by
@@ -357,53 +355,49 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY over the original fixture — correct regardless of how the
     engine batches the three commits, because the aggregates are
     additive and the sums are exact decimals."""
+    import tempfile
 
-    def _drain() -> DataFrame:
-        import tempfile
+    from ..plans import ManifestTable
+    from ..streaming import incremental
 
-        from ..plans import ManifestTable
-        from ..streaming import incremental
-
-        _cleanup_tmp("q73_stream_")
-        ev = load_tables(spark, sf_dir)["events"]
-        rows = ev.filter(F.col("event_type") == "click").select(
-            (F.col("user_id") % 8).alias("cohort"),
-            F.col("event_id"),
-            F.col("value").cast("decimal(18,4)").alias("v"),
+    _cleanup_tmp("q73_stream_")
+    ev = load_tables(spark, sf_dir)["events"]
+    rows = ev.filter(F.col("event_type") == "click").select(
+        (F.col("user_id") % 8).alias("cohort"),
+        F.col("event_id"),
+        F.col("value").cast("decimal(18,4)").alias("v"),
+    )
+    root = tempfile.mkdtemp(prefix="q73_stream_")
+    src = ManifestTable(f"{root}/src")
+    for part in range(3):
+        src.append(rows.filter(F.col("event_id") % 3 == part).coalesce(1))
+    q = incremental.maintain_rollup(
+        spark,
+        f"{root}/src",
+        f"{root}/roll",
+        keys=["cohort"],
+        aggs={"n_events": ("count", "*"), "total_value": ("sum", "v")},
+        checkpoint_dir=f"{root}/ck",
+        available_now=True,
+    )
+    if not q.awaitTermination(180):
+        # never fall through to reading a PARTIAL rollup: a timeout must
+        # be a loud failure, not a silent wrong answer
+        q.stop()
+        raise TimeoutError("q73 availableNow stream did not finish in 180s")
+    out = (
+        ManifestTable(f"{root}/roll")
+        .read(spark)
+        .select(
+            "cohort",
+            "n_events",
+            F.col("total_value").cast("double").alias("total_value"),
         )
-        root = tempfile.mkdtemp(prefix="q73_stream_")
-        src = ManifestTable(f"{root}/src")
-        for part in range(3):
-            src.append(rows.filter(F.col("event_id") % 3 == part).coalesce(1))
-        q = incremental.maintain_rollup(
-            spark,
-            f"{root}/src",
-            f"{root}/roll",
-            keys=["cohort"],
-            aggs={"n_events": ("count", "*"), "total_value": ("sum", "v")},
-            checkpoint_dir=f"{root}/ck",
-            available_now=True,
-        )
-        if not q.awaitTermination(180):
-            # never fall through to reading a PARTIAL rollup: a timeout must
-            # be a loud failure, not a silent wrong answer
-            q.stop()
-            raise TimeoutError("q73 availableNow stream did not finish in 180s")
-        out = (
-            ManifestTable(f"{root}/roll")
-            .read(spark)
-            .select(
-                "cohort",
-                "n_events",
-                F.col("total_value").cast("double").alias("total_value"),
-            )
-            .orderBy("cohort")
-        )
-        # eager materialization, same rationale as q70: the result must not
-        # stay a lazy view over this run's /tmp rollup state
-        return spark.createDataFrame(out.collect(), out.schema)
-
-    return _memo_streaming("q73", spark, sf_dir, _drain)
+        .orderBy("cohort")
+    )
+    # eager materialization, same rationale as q70: the result must not
+    # stay a lazy view over this run's /tmp rollup state
+    return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -437,7 +431,6 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess GROUP BY user_id, sid
     ORDER BY user_id, session_start
     """,
-    prepare=False,
 )
 def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming session windows (F6's one window shape q38 only
@@ -450,80 +443,74 @@ def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the batch sessionization (probe-verified: 622/622 at
     sf0.001) and the result hash-matches the q38 lag-based oracle
     deterministically. Sentinel-born sessions are excluded by their
-    start time. The drain memoizes per (session, sf_dir) — the q73
-    rule: stream+checkpoint startup is session setup, not per-query
-    work.
+    start time.
 
     Scale: session_window state is per-user bounded and watermark-
     expired; the sentinel trick is the standard batch-replay device —
     a live deployment's watermark advances from real traffic
     instead."""
+    import tempfile
 
-    def _drain() -> DataFrame:
-        import tempfile
+    from .relational import vsort
 
-        from .relational import vsort
-
-        _cleanup_tmp("q157_sess_")
-        ev = load_tables(spark, sf_dir)["events"].filter(F.col("user_id") < 40)
-        real = ev.select("user_id", "ts", "value")
-        mx = real.agg(F.max("ts")).first()[0]
-        root = tempfile.mkdtemp(prefix="q157_sess_")
-        src_dir = f"{root}/src"
-        real.coalesce(1).write.parquet(src_dir)
-        (
-            real.select("user_id").distinct()
-            .select(
-                "user_id",
-                (F.lit(mx) + F.expr("INTERVAL 100 DAYS")).alias("ts"),
-                F.lit(0.0).alias("value"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src_dir)
+    _cleanup_tmp("q157_sess_")
+    ev = load_tables(spark, sf_dir)["events"].filter(F.col("user_id") < 40)
+    real = ev.select("user_id", "ts", "value")
+    mx = real.agg(F.max("ts")).first()[0]
+    root = tempfile.mkdtemp(prefix="q157_sess_")
+    src_dir = f"{root}/src"
+    real.coalesce(1).write.parquet(src_dir)
+    (
+        real.select("user_id").distinct()
+        .select(
+            "user_id",
+            (F.lit(mx) + F.expr("INTERVAL 100 DAYS")).alias("ts"),
+            F.lit(0.0).alias("value"),
         )
-        stream = spark.readStream.schema(real.schema).parquet(src_dir)
-        agg = (
-            stream.withWatermark("ts", "0 seconds")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,4)")).alias("tv"),
-            )
-            .select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-                F.col("tv").cast("double").alias("total_value"),
-            )
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(src_dir)
+    )
+    stream = spark.readStream.schema(real.schema).parquet(src_dir)
+    agg = (
+        stream.withWatermark("ts", "0 seconds")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,4)")).alias("tv"),
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("q157_sess_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ck")
-            .start()
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "n_events",
+            F.col("tv").cast("double").alias("total_value"),
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError("q157 availableNow stream did not finish in 240s")
-        out = (
-            spark.table("q157_sess_out")
-            .where(F.col("session_start") <= F.lit(mx))
-            .select(
-                "user_id",
-                "session_start",
-                "session_end",
-                F.col("n_events").cast("bigint").alias("n_events"),
-                "total_value",
-            )
+    )
+    q = (
+        agg.writeStream.format("memory")
+        .queryName("q157_sess_out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", f"{root}/ck")
+        .start()
+    )
+    if not q.awaitTermination(240):
+        q.stop()
+        raise TimeoutError("q157 availableNow stream did not finish in 240s")
+    out = (
+        spark.table("q157_sess_out")
+        .where(F.col("session_start") <= F.lit(mx))
+        .select(
+            "user_id",
+            "session_start",
+            "session_end",
+            F.col("n_events").cast("bigint").alias("n_events"),
+            "total_value",
         )
-        out = vsort(out, "user_id", "session_start")
-        return spark.createDataFrame(out.collect(), out.schema)
-
-    return _memo_streaming("q157", spark, sf_dir, _drain)
+    )
+    out = vsort(out, "user_id", "session_start")
+    return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -836,7 +823,6 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
     ORDER BY click_id, purchase_id
     """,
-    prepare=False,
 )
 def q84(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STREAM interval join through the REAL machinery (the
@@ -853,74 +839,70 @@ def q84(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered. At scale the same plan runs continuously with state
     bounded by watermark-window x input rate — that bounding, not this
     fixture's size, is what the operator buys."""
+    import tempfile
 
-    def _drain() -> DataFrame:
-        import tempfile
+    from ..plans import ManifestTable
+    from ..sources import manifest_datasource
+    from ..streaming.joins import interval_join
 
-        from ..plans import ManifestTable
-        from ..sources import manifest_datasource
-        from ..streaming.joins import interval_join
+    manifest_datasource.register(spark)
+    _cleanup_tmp("q84_ssj_")
+    ev = load_tables(spark, sf_dir)["events"]
+    root = tempfile.mkdtemp(prefix="q84_ssj_")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id"),
+        F.col("ts").alias("c_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id"),
+        F.col("ts").alias("p_ts"),
+        F.col("value").cast("decimal(18,4)").alias("purchase_value"),
+    )
+    ManifestTable(f"{root}/clicks").append(clicks.coalesce(1))
+    ManifestTable(f"{root}/purchases").append(purchases.coalesce(1))
 
-        manifest_datasource.register(spark)
-        _cleanup_tmp("q84_ssj_")
-        ev = load_tables(spark, sf_dir)["events"]
-        root = tempfile.mkdtemp(prefix="q84_ssj_")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("c_ts"),
+    cs = (
+        spark.readStream.format("manifest")
+        .option("path", f"{root}/clicks")
+        .load()
+        .withWatermark("c_ts", "1 hour")
+    )
+    ps = (
+        spark.readStream.format("manifest")
+        .option("path", f"{root}/purchases")
+        .load()
+        .withWatermark("p_ts", "1 hour")
+    )
+    joined = interval_join(
+        cs, ps, "user_id", "c_ts", "p_ts", lower_s=0, upper_s=1800
+    )
+    name = "q84_pairs"
+    q = (
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", f"{root}/ck")
+        .start()
+    )
+    if not q.awaitTermination(180):
+        q.stop()
+        raise TimeoutError("q84 availableNow stream did not finish in 180s")
+    out = (
+        spark.table(name)
+        .select(
+            "click_id",
+            "purchase_id",
+            "user_id",
+            F.col("purchase_value").cast("double").alias("purchase_value"),
         )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").cast("decimal(18,4)").alias("purchase_value"),
-        )
-        ManifestTable(f"{root}/clicks").append(clicks.coalesce(1))
-        ManifestTable(f"{root}/purchases").append(purchases.coalesce(1))
-
-        cs = (
-            spark.readStream.format("manifest")
-            .option("path", f"{root}/clicks")
-            .load()
-            .withWatermark("c_ts", "1 hour")
-        )
-        ps = (
-            spark.readStream.format("manifest")
-            .option("path", f"{root}/purchases")
-            .load()
-            .withWatermark("p_ts", "1 hour")
-        )
-        joined = interval_join(
-            cs, ps, "user_id", "c_ts", "p_ts", lower_s=0, upper_s=1800
-        )
-        name = "q84_pairs"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ck")
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("q84 availableNow stream did not finish in 180s")
-        out = (
-            spark.table(name)
-            .select(
-                "click_id",
-                "purchase_id",
-                "user_id",
-                F.col("purchase_value").cast("double").alias("purchase_value"),
-            )
-            .orderBy("click_id", "purchase_id")
-        )
-        # eager materialization (q70/q73 hazard class: memory-sink tables
-        # are session state, not a stable relation)
-        return spark.createDataFrame(out.collect(), out.schema)
-
-    return _memo_streaming("q84", spark, sf_dir, _drain)
+        .orderBy("click_id", "purchase_id")
+    )
+    # eager materialization (q70/q73 hazard class: memory-sink tables
+    # are session state, not a stable relation)
+    return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -939,7 +921,6 @@ def q84(spark: SparkSession, sf_dir: str) -> DataFrame:
                                n_chars: 'BIGINT', text: 'VARCHAR'}})
     GROUP BY lang ORDER BY lang
     """,
-    prepare=False,
 )
 def q87(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL round-trip — the interchange format training corpora
@@ -1054,7 +1035,6 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
                   header = true, quote = '"', escape = '"')
     GROUP BY lang ORDER BY lang
     """,
-    prepare=False,
 )
 def q94(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round-trip with ADVERSARIAL content: every text field is
@@ -1179,7 +1159,6 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY lang ORDER BY lang
     """,
-    prepare=False,
 )
 def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC round-trip — the third columnar interchange surface next to
@@ -1279,7 +1258,6 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(event_id) AS max_id
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    prepare=False,
 )
 def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once ingest made exactly-once INSIDE the stream: every
@@ -1302,64 +1280,60 @@ def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness precondition). At 100 TB the same plan bounds dedup
     state at (watermark delay x key arrival rate) regardless of stream
     lifetime."""
+    import tempfile
 
-    def _drain() -> DataFrame:
-        import tempfile
+    from ..plans import ManifestTable
+    from ..sources import manifest_datasource
 
-        from ..plans import ManifestTable
-        from ..sources import manifest_datasource
+    manifest_datasource.register(spark)
+    _cleanup_tmp("q101_sdd_")
+    ev = load_tables(spark, sf_dir)["events"].select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+    root = tempfile.mkdtemp(prefix="q101_sdd_")
+    ManifestTable(f"{root}/ev").append(ev.unionAll(ev).coalesce(2))
 
-        manifest_datasource.register(spark)
-        _cleanup_tmp("q101_sdd_")
-        ev = load_tables(spark, sf_dir)["events"].select(
-            "event_id", "ts", "user_id", "event_type"
+    s = (
+        spark.readStream.format("manifest")
+        .option("path", f"{root}/ev")
+        .load()
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+    )
+    # file sink, not memory sink (round 13): the deduped stream is
+    # ~1M rows at sf0.1 — a memory sink collects every batch to the
+    # DRIVER (guide §5: the driver should do no data work) and the
+    # verification rollup then aggregates a driver-local table
+    # single-threaded (measured 2.2 s of the q101 total; the whole
+    # memory-sink drain+agg path 10.1 s vs 6.9 s with the file
+    # sink). The parquet sink keeps batches executor-parallel and
+    # the rollup is a parallel scan; at 100 TB a memory sink here
+    # would be an OOM, so the file sink is also the honest shape.
+    q = (
+        s.writeStream.format("parquet")
+        .option("path", f"{root}/out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", f"{root}/ck")
+        .start()
+    )
+    if not q.awaitTermination(180):
+        q.stop()
+        raise TimeoutError("q101 availableNow stream did not finish in 180s")
+    out = (
+        spark.read.schema(s.schema).parquet(f"{root}/out")
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.count_distinct("user_id").alias("n_users"),
+            F.min("event_id").alias("min_id"),
+            F.max("event_id").alias("max_id"),
         )
-        root = tempfile.mkdtemp(prefix="q101_sdd_")
-        ManifestTable(f"{root}/ev").append(ev.unionAll(ev).coalesce(2))
-
-        s = (
-            spark.readStream.format("manifest")
-            .option("path", f"{root}/ev")
-            .load()
-            .withWatermark("ts", "10 minutes")
-            .dropDuplicatesWithinWatermark(["event_id"])
-        )
-        # file sink, not memory sink (round 13): the deduped stream is
-        # ~1M rows at sf0.1 — a memory sink collects every batch to the
-        # DRIVER (guide §5: the driver should do no data work) and the
-        # verification rollup then aggregates a driver-local table
-        # single-threaded (measured 2.2 s of the q101 total; the whole
-        # memory-sink drain+agg path 10.1 s vs 6.9 s with the file
-        # sink). The parquet sink keeps batches executor-parallel and
-        # the rollup is a parallel scan; at 100 TB a memory sink here
-        # would be an OOM, so the file sink is also the honest shape.
-        q = (
-            s.writeStream.format("parquet")
-            .option("path", f"{root}/out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ck")
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("q101 availableNow stream did not finish in 180s")
-        out = (
-            spark.read.schema(s.schema).parquet(f"{root}/out")
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.count_distinct("user_id").alias("n_users"),
-                F.min("event_id").alias("min_id"),
-                F.max("event_id").alias("max_id"),
-            )
-            .orderBy("event_type")
-        )
-        # eager materialization (q70/q73 hazard class: memory-sink tables
-        # are session state, not a stable relation)
-        return spark.createDataFrame(out.collect(), out.schema)
-
-    return _memo_streaming("q101", spark, sf_dir, _drain)
+        .orderBy("event_type")
+    )
+    # eager materialization (q70/q73 hazard class: memory-sink tables
+    # are session state, not a stable relation)
+    return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1522,7 +1496,6 @@ def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type
     """,
-    prepare=False,
 )
 def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookup through BLOOM-FILTER file skipping
@@ -1606,7 +1579,6 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(n_pii) AS BIGINT) AS total_pii
     FROM g GROUP BY lang ORDER BY lang
     """,
-    prepare=False,
 )
 def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CURATION INSIDE THE STREAM — the arrival-time form of q86's
@@ -1623,31 +1595,15 @@ def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrub and gate are per-row expressions with zero state; the landing
     aggregate is the only exchange.
 
-    The DRAIN is memoized per (session, sf_dir): the stream's curated
-    output lands once in the parquet file sink (executor-parallel —
-    round 13 replaced the memory sink, whose batches collect to the
-    driver), and repeat invocations re-execute only the verification
-    rollup over it (r06 verdict's
-    "drain once and verify aggregates twice" — stream/checkpoint
-    startup is session setup, not per-query work; the fixture and the
-    availableNow drain are deterministic, so re-draining can only
-    reproduce the same landed rows)."""
+    The stream's curated output lands in a parquet file sink
+    (executor-parallel — round 13 replaced the memory sink, whose
+    batches collect to the driver), and the verification rollup runs
+    over the landed files."""
     import tempfile
 
     from ..operators import text as text_ops
     from ..plans import ManifestTable
     from ..sources import manifest_datasource
-
-    import os
-
-    memo_key = (id(spark), sf_dir)
-    hit = _Q116_DRAINED.get(memo_key)
-    # the memoized sink dir lives under /tmp and the age-gated
-    # _cleanup_tmp (shared across processes) can remove it in a >1h
-    # session (ADVICE r13): verify it still exists and re-drain if not
-    if hit is not None and hit[0] is spark and os.path.isdir(hit[1]):
-        return _q116_rollup(spark, hit[1])
-    _Q116_DRAINED.pop(memo_key, None)
 
     manifest_datasource.register(spark)
     _cleanup_tmp("q116_cur_")
@@ -1712,42 +1668,9 @@ def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q.awaitTermination(180):
         q.stop()
         raise TimeoutError("q116 availableNow stream did not finish in 180s")
-    _Q116_DRAINED[memo_key] = (spark, f"{root}/out")
-    return _q116_rollup(spark, f"{root}/out")
-
-
-#: (session id, sf_dir) -> (session, parquet sink out dir) for q116's
-#: one-per-session stream drain (session ref held: the _TABLE_CACHE rule);
-#: the dir's existence is re-verified on every hit (see above)
-_Q116_DRAINED: dict = {}
-
-#: (name, session id, sf_dir) -> (session, rows, schema) for the REAL
-#: streaming queries whose results are eagerly materialized (q73/q84/
-#: q101): the q116 drain-memoization rule generalized — stream +
-#: checkpoint startup is session setup, not per-query work, and the
-#: fixture + availableNow drain are deterministic, so a re-drain can
-#: only reproduce the same landed rows. Repeat invocations re-serve the
-#: collected result as a fresh local relation. Session reference held
-#: (the _TABLE_CACHE id-aliasing rule).
-_STREAM_RESULT_MEMO: dict = {}
-
-
-def _memo_streaming(name: str, spark: SparkSession, sf_dir: str, build):
-    key = (name, id(spark), sf_dir)
-    hit = _STREAM_RESULT_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return spark.createDataFrame(hit[1], hit[2])
-    df = build()  # already an eager, collection-backed local relation
-    rows, schema = df.collect(), df.schema
-    _STREAM_RESULT_MEMO[key] = (spark, rows, schema)
-    return spark.createDataFrame(rows, schema)
-
-
-def _q116_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
-    """q116's verification rollup over the drained file sink —
-    re-executed on every invocation (eager: the q70 rule)."""
+    # eager materialization, same rationale as q70
     out = (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(f"{root}/out")
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1778,7 +1701,6 @@ def _q116_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
     FROM v1_added GROUP BY event_type
     ORDER BY snapshot, event_type
     """,
-    prepare=False,
 )
 def q121(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME TRAVEL as a verified query: two manifest commits, then (a)
@@ -1847,7 +1769,6 @@ def q121(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per CROSS JOIN (VALUES ('duckdb_manifest'), ('engine')) AS r(reader)
     ORDER BY reader, lang
     """,
-    prepare=False,
 )
 def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABLE-FORMAT INTEROP as a verified query (r06 verdict #6): the
@@ -1948,7 +1869,6 @@ def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
            1 AS files_pruned
     FROM lo GROUP BY lang ORDER BY lang
     """,
-    prepare=False,
 )
 def q159(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTEROP, THE WRITE SIDE (r07 verdict #6 — the inverse of q122's
@@ -3459,7 +3379,6 @@ def q139(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p GROUP BY user_id, w_start
     ORDER BY user_id, w_start
     """,
-    prepare=False,
 )
 def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming ``deltaSum`` (the round-8 counter aggregate on a
@@ -3473,86 +3392,79 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-(user, window) state is the window's event pairs —
     bounded by watermark expiry and window width (the F6 session-state
-    contract); a live deployment's watermark advances from traffic.
+    contract); a live deployment's watermark advances from traffic."""
+    import tempfile
 
-    The drain memoizes per (session, sf_dir) — the q73 rule: stream +
-    checkpoint startup is session setup, not per-query work."""
+    from .relational import vsort
 
-    def _drain() -> DataFrame:
-        import tempfile
-
-        from .relational import vsort
-
-        _cleanup_tmp("q188_dsum_")
-        ev = load_tables(spark, sf_dir)["events"].filter(F.col("user_id") < 30)
-        real = ev.select("user_id", "ts", "event_id", "value")
-        mx = real.agg(F.max("ts")).first()[0]
-        root = tempfile.mkdtemp(prefix="q188_dsum_")
-        src_dir = f"{root}/src"
-        real.coalesce(1).write.parquet(src_dir)
-        (
-            real.select("user_id").distinct()
-            .select(
-                "user_id",
-                (F.lit(mx) + F.expr("INTERVAL 100 DAYS")).alias("ts"),
-                F.lit(-1).cast("long").alias("event_id"),
-                F.lit(0.0).alias("value"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src_dir)
+    _cleanup_tmp("q188_dsum_")
+    ev = load_tables(spark, sf_dir)["events"].filter(F.col("user_id") < 30)
+    real = ev.select("user_id", "ts", "event_id", "value")
+    mx = real.agg(F.max("ts")).first()[0]
+    root = tempfile.mkdtemp(prefix="q188_dsum_")
+    src_dir = f"{root}/src"
+    real.coalesce(1).write.parquet(src_dir)
+    (
+        real.select("user_id").distinct()
+        .select(
+            "user_id",
+            (F.lit(mx) + F.expr("INTERVAL 100 DAYS")).alias("ts"),
+            F.lit(-1).cast("long").alias("event_id"),
+            F.lit(0.0).alias("value"),
         )
-        stream = spark.readStream.schema(real.schema).parquet(src_dir)
-        fold = (
-            "CAST(aggregate(transform(array_sort(ps), s -> s.v), "
-            "named_struct('p', CAST(NULL AS BIGINT), 'd', CAST(0 AS "
-            "BIGINT)), (acc, v) -> named_struct('p', v, 'd', acc.d + "
-            "CASE WHEN acc.p IS NOT NULL AND v > acc.p THEN v - acc.p "
-            "ELSE CAST(0 AS BIGINT) END)).d AS DOUBLE) / 10000.0"
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(src_dir)
+    )
+    stream = spark.readStream.schema(real.schema).parquet(src_dir)
+    fold = (
+        "CAST(aggregate(transform(array_sort(ps), s -> s.v), "
+        "named_struct('p', CAST(NULL AS BIGINT), 'd', CAST(0 AS "
+        "BIGINT)), (acc, v) -> named_struct('p', v, 'd', acc.d + "
+        "CASE WHEN acc.p IS NOT NULL AND v > acc.p THEN v - acc.p "
+        "ELSE CAST(0 AS BIGINT) END)).d AS DOUBLE) / 10000.0"
+    )
+    agg = (
+        stream.withWatermark("ts", "0 seconds")
+        .groupBy(F.window("ts", "6 hours").alias("w"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.collect_list(
+                F.struct(
+                    F.col("event_id").alias("o"),
+                    (F.col("value").cast("decimal(18,4)") * 10000)
+                    .cast("bigint")
+                    .alias("v"),
+                )
+            ).alias("ps"),
         )
-        agg = (
-            stream.withWatermark("ts", "0 seconds")
-            .groupBy(F.window("ts", "6 hours").alias("w"), "user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.collect_list(
-                    F.struct(
-                        F.col("event_id").alias("o"),
-                        (F.col("value").cast("decimal(18,4)") * 10000)
-                        .cast("bigint")
-                        .alias("v"),
-                    )
-                ).alias("ps"),
-            )
-            .select(
-                "user_id",
-                F.col("w.start").alias("w_start"),
-                "n_events",
-                F.expr(fold).alias("delta_sum"),
-            )
+        .select(
+            "user_id",
+            F.col("w.start").alias("w_start"),
+            "n_events",
+            F.expr(fold).alias("delta_sum"),
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("q188_dsum_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ck")
-            .start()
+    )
+    q = (
+        agg.writeStream.format("memory")
+        .queryName("q188_dsum_out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", f"{root}/ck")
+        .start()
+    )
+    if not q.awaitTermination(240):
+        q.stop()
+        raise TimeoutError("q188 availableNow stream did not finish in 240s")
+    out = (
+        spark.table("q188_dsum_out")
+        .where(F.col("w_start") <= F.lit(mx))
+        .select(
+            "user_id",
+            "w_start",
+            F.col("n_events").cast("bigint").alias("n_events"),
+            "delta_sum",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError("q188 availableNow stream did not finish in 240s")
-        out = (
-            spark.table("q188_dsum_out")
-            .where(F.col("w_start") <= F.lit(mx))
-            .select(
-                "user_id",
-                "w_start",
-                F.col("n_events").cast("bigint").alias("n_events"),
-                "delta_sum",
-            )
-        )
-        out = vsort(out, "user_id", "w_start")
-        return spark.createDataFrame(out.collect(), out.schema)
-
-    return _memo_streaming("q188", spark, sf_dir, _drain)
+    )
+    out = vsort(out, "user_id", "w_start")
+    return spark.createDataFrame(out.collect(), out.schema)

@@ -8,8 +8,9 @@ is raised to ~2-3x total executor cores.
 from __future__ import annotations
 
 import os
+import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -137,3 +138,25 @@ def exec_profile(spark: SparkSession, sql_conf: dict[str, str]) -> SparkSession:
             s2.conf.set(k, v)
         cache[key] = s2
     return s2
+
+
+def truncate_lineage(df: DataFrame, eager: bool) -> DataFrame:
+    """Cut ``df``'s lineage, keeping a copy that survives executor loss.
+
+    On a single-JVM ``local`` master the executor is the driver, so a
+    ``localCheckpoint`` (blocks in executor storage) is as durable as
+    the process and strictly cheaper. On any other master — including
+    ``local-cluster``, whose executors are separate JVMs — a lost
+    executor would take its localCheckpoint blocks with it, and with
+    the lineage cut they cannot be recomputed. There the frame is
+    checkpointed reliably into the context's checkpoint directory, set
+    to ``<warehouse>/_checkpoints`` when the deployment has not chosen
+    one. ``eager`` has ``DataFrame.checkpoint``'s meaning either way.
+    """
+    sc = df.sparkSession.sparkContext
+    if re.fullmatch(r"local(\[[^\]]*\])?", sc.master):
+        return df.localCheckpoint(eager=eager)
+    if sc.getCheckpointDir() is None:
+        warehouse = df.sparkSession.conf.get("spark.sql.warehouse.dir")
+        sc.setCheckpointDir(warehouse.rstrip("/") + "/_checkpoints")
+    return df.checkpoint(eager=eager)

@@ -5,6 +5,7 @@ native Spark expression it claims to equal."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -91,6 +92,26 @@ class TestDialectScalars:
         )._jdf.queryExecution().optimizedPlan().toString()
         assert "intdiv" not in plan.lower() or "div" in plan.lower()
         assert "BatchEvalPython" not in plan  # never a python UDF
+
+    def test_bodies_name_no_sibling_scalar(self):
+        """register_clickhouse_functions issues the CREATE statements
+        from a thread pool, in no fixed order. That is only correct
+        while every body is self-contained: a body calling another
+        registered scalar would analyze against whichever version of
+        the sibling happened to be registered first."""
+        calls = re.compile(
+            r"(?<![\w.`])("
+            + "|".join(map(re.escape, CLICKHOUSE_SCALARS))
+            + r")\s*\(",
+            re.IGNORECASE,
+        )
+        assert calls.search("intDiv(x, 2) + 1")  # the matcher itself works
+        offenders = {
+            name: sorted({m.group(1) for m in calls.finditer(body)})
+            for name, (_sig, _ret, body) in CLICKHOUSE_SCALARS.items()
+            if calls.search(body)
+        }
+        assert offenders == {}
 
 
 class TestRound5DateAliases:

@@ -142,7 +142,7 @@ class TestMomentLever:
     """Round-9 limb-split BIGINT moment lever (VERDICT r08 #4): exact
     scaled moment sums from ten pure-BIGINT digit sums + one DECIMAL
     recombination per group — bit-identical to the DECIMAL(38,0) lane
-    and to the dialect bridge, ~2.5x faster per row (probe_levers)."""
+    and to the dialect bridge, ~2.5x faster per row (SURVEY.md)."""
 
     @pytest.fixture(scope="class")
     def mdf(self, spark):
