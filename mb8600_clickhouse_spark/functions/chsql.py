@@ -75,10 +75,9 @@ they cannot be a scalar alias and need a textual rewrite before
   ReplacingMergeTree contract via ``final_tables`` (the DDL knowledge
   ClickHouse has and Spark doesn't).
 
-Usage — the whole bridge in two lines::
+Usage — the whole bridge in one line::
 
-    register_clickhouse_functions(spark)        # scalar vocabulary
-    df = spark.sql(rewrite_clickhouse_sql(ch_sql))
+    df = ch_sql(spark, sql)
 
 Scope (documented, not silent): the rewriter operates on ONE SELECT
 statement — and, since round 6, on every parenthesized subquery and CTE
@@ -103,6 +102,8 @@ non-scalar surface a reference-deployment dashboard uses (reference
 from __future__ import annotations
 
 import re
+
+from .clickhouse import register_clickhouse_functions
 
 __all__ = ["rewrite_clickhouse_sql", "ChSqlError"]
 
@@ -7009,7 +7010,8 @@ def ch_sql(spark, sql: str, final_tables: dict | None = None,
     today ``ORDER BY ... WITH FILL [INTERPOLATE]``, whose inserted rows
     take per-column TYPE defaults that only schema analysis can supply,
     and ``ASOF [LEFT|INNER] JOIN``, which routes through the DataFrame
-    as-of operator. Returns a DataFrame."""
+    as-of operator. Returns a DataFrame. The ClickHouse scalars the
+    statement names are registered in ``spark`` first."""
     asof = _extract_asof_join(sql)
     if asof is not None:
         return _apply_asof_join(spark, sql, asof, final_tables, sample_by)
@@ -7018,14 +7020,23 @@ def ch_sql(spark, sql: str, final_tables: dict | None = None,
         return _apply_any_join(spark, sql, anyj, final_tables, sample_by)
     ext = _extract_with_fill(sql)
     if ext is None:
-        return spark.sql(
-            rewrite_clickhouse_sql(sql, final_tables, sample_by, dictionaries, params)
+        return _spark_sql(
+            spark,
+            rewrite_clickhouse_sql(sql, final_tables, sample_by, dictionaries, params),
         )
     inner, spec = ext
-    src = spark.sql(
-        rewrite_clickhouse_sql(inner, final_tables, sample_by, dictionaries, params)
+    src = _spark_sql(
+        spark,
+        rewrite_clickhouse_sql(inner, final_tables, sample_by, dictionaries, params),
     )
     return _apply_with_fill(spark, src, spec)
+
+
+def _spark_sql(spark, sql: str):
+    """``spark.sql(sql)`` after registering the ClickHouse scalars that
+    ``sql`` names. Every statement ``ch_sql`` runs goes through here."""
+    register_clickhouse_functions(spark, sql)
+    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -7171,7 +7182,7 @@ def _apply_asof_join(spark, sql: str, spec, final_tables, sample_by):
         out = re.sub(rf"\b{re.escape(spec['ra'])}\.{re.escape(b)}\b", a, out)
     out = re.sub(rf"\b{re.escape(spec['ra'])}\.(\w+)", r"asof_\1", out)
     out = re.sub(rf"\b{re.escape(spec['la'])}\.(\w+)", r"\1", out)
-    return spark.sql(rewrite_clickhouse_sql(out, final_tables, sample_by))
+    return _spark_sql(spark, rewrite_clickhouse_sql(out, final_tables, sample_by))
 
 
 # ---------------------------------------------------------------------------
@@ -7267,4 +7278,4 @@ def _apply_any_join(spark, sql: str, spec, final_tables, sample_by):
         + f"{spec['ra']} "
         + sql[e:]
     )
-    return spark.sql(rewrite_clickhouse_sql(out, final_tables, sample_by))
+    return _spark_sql(spark, rewrite_clickhouse_sql(out, final_tables, sample_by))

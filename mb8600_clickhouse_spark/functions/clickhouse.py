@@ -5,10 +5,12 @@ functions (zero runtime cost — same mechanism as
 
 A user of the reference deployment queries the ``docsis`` table with
 ClickHouse SQL (SURVEY §2.E derives that surface from ``tables.sql``).
-After ``register_clickhouse_functions(spark)``, the common scalar calls
-run verbatim; the non-scalar dialect forms that CANNOT be a scalar
-alias are documented in ``DIALECT_NOTES`` with their Spark SQL
-spelling.
+The common scalar calls run verbatim: ``chsql.ch_sql`` registers, in
+the statement's session, the scalars the statement names before Spark
+analyses it; a bare ``spark.sql`` user calls
+``register_clickhouse_functions(spark)`` once for the whole vocabulary.
+The non-scalar dialect forms that CANNOT be a scalar alias are
+documented in ``DIALECT_NOTES`` with their Spark SQL spelling.
 
 Only functions whose ClickHouse semantics map EXACTLY onto a Spark
 expression are aliased — a silently-different alias would be worse
@@ -24,7 +26,11 @@ than a missing one. Notable care:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import SparkSession
+
+from .sql_functions import _register
 
 # name -> (signature, return type, body)
 CLICKHOUSE_SCALARS: dict[str, tuple[str, str, str]] = {
@@ -1319,42 +1325,29 @@ DIALECT_NOTES: dict[str, str] = {
 }
 
 
+#: lower-case name -> name (all 241 are distinct in lower case)
+_BY_LOWER = {n.lower(): n for n in CLICKHOUSE_SCALARS}
+
+
 def register_clickhouse_functions(
-    spark: SparkSession, force: bool = False
+    spark: SparkSession, sql: str | None = None
 ) -> list[str]:
-    """Register the ClickHouse scalar vocabulary in this session;
-    returns the registered names.
+    """Register in this session the ``CLICKHOUSE_SCALARS`` that the
+    statement text ``sql`` names, or the whole vocabulary when no text
+    is given; returns those names.
 
-    Memoized per session (round 9): each CREATE OR REPLACE TEMPORARY
-    FUNCTION is a catalog round-trip, and the full vocabulary costs
-    ~1.4 s warm — ~90 registry queries call this defensively, which
-    summed to ~2 minutes of pure re-registration across a full bench
-    run. The fingerprint covers the definitions, so editing
-    ``CLICKHOUSE_SCALARS`` still re-registers; pass ``force=True``
-    after dropping/replacing a function out-of-band.
-
-    The 241 CREATE statements are issued from a small thread pool
-    (round 14): each one is an independent driver-side DDL (parse +
-    body analysis + a synchronized registry insert — no Spark job), and
-    the per-statement latency is py4j + Catalyst round-trip dominated,
-    so they pipeline near-linearly. Measured session-cold: 5.7 s serial
-    -> 1.6 s with 8 threads (the whole cost lands on the FIRST dialect
-    query of a session — q102 in bench order)."""
-    fp = hash(tuple((n, v) for n, v in CLICKHOUSE_SCALARS.items()))
-    if not force and getattr(spark, "_ch_scalar_fp", None) == fp:
-        return list(CLICKHOUSE_SCALARS)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _reg(item):
-        name, (sig, ret, body) = item
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
-            f"RETURNS {ret} RETURN {body}"
-        )
-
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        # list() drains the iterator so any registration error surfaces
-        # here, before the memo fingerprint is committed
-        list(pool.map(_reg, CLICKHOUSE_SCALARS.items()))
-    spark._ch_scalar_fp = fp
-    return list(CLICKHOUSE_SCALARS)
+    A statement names a scalar when one of its words equals the name,
+    case-insensitively, as Spark resolves function names. The scan
+    over-matches and never under-matches: a word in a string literal,
+    or a column sharing a scalar's name, costs one extra CREATE and
+    changes no result. Pass the text Spark will analyse, i.e. the
+    rewritten text for dialect statements (``chsql.ch_sql`` does this
+    for every statement it runs). No body calls a sibling scalar, so a
+    scalar registers on its own. Names a session already has are not
+    created again (``sql_functions._register``)."""
+    if sql is None:
+        names = CLICKHOUSE_SCALARS
+    else:
+        words = set(re.findall(r"\w+", sql.lower()))
+        names = [n for low, n in _BY_LOWER.items() if low in words]
+    return _register(spark, CLICKHOUSE_SCALARS, names)

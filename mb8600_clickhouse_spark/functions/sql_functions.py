@@ -15,6 +15,8 @@ engine's text/similarity scalar vocabulary.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import SparkSession
 
 # name -> (signature, return type, body)
@@ -75,20 +77,35 @@ SQL_FUNCTIONS: dict[str, tuple[str, str, str]] = {
 }
 
 
-def register_sql_functions(
-    spark: SparkSession, force: bool = False
+def _register(
+    spark: SparkSession,
+    defs: dict[str, tuple[str, str, str]],
+    names: Iterable[str],
 ) -> list[str]:
+    """Create each of ``names`` (keys of ``defs``) as a temporary SQL
+    function in this session, one statement after another, unless the
+    session already has it; returns ``names`` as a list.
+
+    Each session keeps one set of the names it has registered, shared
+    by both vocabularies: a CREATE is a catalog round-trip that parses
+    and analyses the body, so a name is created once per session. A
+    name joins the set only after its CREATE succeeded."""
+    done = getattr(spark, "_registered_functions", None)
+    if done is None:
+        done = spark._registered_functions = set()
+    names = list(names)
+    for name in names:
+        if name not in done:
+            sig, ret, body = defs[name]
+            spark.sql(
+                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
+                f"RETURNS {ret} RETURN {body}"
+            )
+            done.add(name)
+    return names
+
+
+def register_sql_functions(spark: SparkSession) -> list[str]:
     """Register every engine scalar function as a temporary SQL function
-    in this session; returns the registered names. Memoized per
-    session on a definition fingerprint (the round-9
-    register_clickhouse_functions finding — repeated defensive
-    registration is a catalog round-trip per function)."""
-    fp = hash(tuple((n, v) for n, v in SQL_FUNCTIONS.items()))
-    if not force and getattr(spark, "_engine_scalar_fp", None) == fp:
-        return list(SQL_FUNCTIONS)
-    for name, (sig, ret, body) in SQL_FUNCTIONS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} RETURNS {ret} RETURN {body}"
-        )
-    spark._engine_scalar_fp = fp
-    return list(SQL_FUNCTIONS)
+    in this session; returns the registered names."""
+    return _register(spark, SQL_FUNCTIONS, SQL_FUNCTIONS)

@@ -167,12 +167,10 @@ def q164(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: scan -> one exchange -> project, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q164_CLICKHOUSE_SQL), "grp")
 
@@ -271,12 +269,10 @@ def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q165_CLICKHOUSE_SQL), "event_type")
 
@@ -423,12 +419,10 @@ def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection, nothing for AQE to adapt."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q166_CLICKHOUSE_SQL), "doc_id")
 
@@ -528,12 +522,10 @@ def q167(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: one exchange + folds, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q167_CLICKHOUSE_SQL), "user_id")
 
@@ -612,12 +604,10 @@ def q168(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: one exchange + window, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q168_CLICKHOUSE_SQL), "event_id")
 
@@ -692,12 +682,10 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     sql = """
     SELECT doc_id, a,
@@ -792,12 +780,10 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     sql = """
     SELECT doc_id,
@@ -924,12 +910,10 @@ def q171(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q171_CLICKHOUSE_SQL), "event_type")
 
@@ -1031,12 +1015,10 @@ def q172(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q172_CLICKHOUSE_SQL), "event_id")
 
@@ -1174,12 +1156,10 @@ def q173(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q173_CLICKHOUSE_SQL), "event_type")
 
@@ -1274,12 +1254,10 @@ def q174(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q174_CLICKHOUSE_SQL).select(
         "event_type",
@@ -1366,12 +1344,10 @@ def q175(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(
         ch_sql(spark, _Q175_CLICKHOUSE_SQL),
@@ -1472,12 +1448,10 @@ def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q176_CLICKHOUSE_SQL), "event_id")
 
@@ -1547,12 +1521,10 @@ def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q177_CLICKHOUSE_SQL), "user_id")
 
@@ -1628,12 +1600,10 @@ def q178(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q178_CLICKHOUSE_SQL), "event_id")
 
@@ -1724,12 +1694,10 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q179_CLICKHOUSE_SQL), "event_id")
 
@@ -1817,12 +1785,10 @@ def q180(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q180_CLICKHOUSE_SQL), "event_type")
 
@@ -1887,12 +1853,10 @@ def q181(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: scan -> exchange + scalar-subquery scan."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q181_CLICKHOUSE_SQL), "bucket")
 
@@ -1978,12 +1942,10 @@ def q182(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: pure projection."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q182_CLICKHOUSE_SQL).select(
         "doc_id",
@@ -2071,12 +2033,10 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: projection + broadcast NLJ, no exchange."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q183_CLICKHOUSE_SQL), "vec_id")
 
@@ -2190,12 +2150,10 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q184_CLICKHOUSE_SQL).select(
         "event_type",
@@ -2399,12 +2357,10 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: two window exchanges, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q186_CLICKHOUSE_SQL), "event_id")
 
@@ -2729,12 +2685,10 @@ def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter is a per-row predicate pushed at the scan. NARROW_CHAIN
     profile: scan -> one exchange -> project, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q190_CLICKHOUSE_SQL), "event_type")
 
@@ -2813,12 +2767,10 @@ def q191(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample rollup shards with exactly this SAMPLE/OFFSET split,
     `tables.sql:5-30`)."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(
         spark, _Q191_CLICKHOUSE_SQL, sample_by={"events": "event_id"}
@@ -2896,11 +2848,9 @@ def q192(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined exchange on event_type, scalar tails
     on 5 group rows. NARROW_CHAIN profile: scan -> one exchange."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(spark, _Q192_CLICKHOUSE_SQL)

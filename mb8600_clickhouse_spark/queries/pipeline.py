@@ -554,7 +554,7 @@ def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinary codegen expressions, no python, no overhead."""
     from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
+    register_clickhouse_functions(spark, _Q74_CLICKHOUSE_SQL)
     register_views(spark, sf_dir)
     return spark.sql(_Q74_CLICKHOUSE_SQL)
 
@@ -708,12 +708,10 @@ def q76(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the SCALAR vocabulary runs verbatim, this proves the syntax
     forms the reference deployment's Grafana dashboards rely on
     (reference ``tables.sql:5-30`` workload) need zero hand-rewriting."""
-    from ..functions.chsql import rewrite_clickhouse_sql
-    from ..functions.clickhouse import register_clickhouse_functions
+    from ..functions.chsql import ch_sql
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
-    return spark.sql(rewrite_clickhouse_sql(_Q76_CLICKHOUSE_SQL))
+    return ch_sql(spark, _Q76_CLICKHOUSE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -755,16 +753,13 @@ def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is deterministic (a tied version column is arbitrary in
     ClickHouse too). Exact decimal sums; oracle spells the same
     collapse directly."""
-    from ..functions.chsql import rewrite_clickhouse_sql
-    from ..functions.clickhouse import register_clickhouse_functions
+    from ..functions.chsql import ch_sql
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
-    return spark.sql(
-        rewrite_clickhouse_sql(
-            _Q79_CLICKHOUSE_SQL,
-            final_tables={"events": (["user_id", "event_type"], "event_id")},
-        )
+    return ch_sql(
+        spark,
+        _Q79_CLICKHOUSE_SQL,
+        final_tables={"events": (["user_id", "event_type"], "event_id")},
     )
 
 
@@ -799,12 +794,10 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals row carries NULL group keys in both engines), verified
     against DuckDB spelling the grouping sets directly. Exact decimal
     sums make the totals row hash-stable."""
-    from ..functions.chsql import rewrite_clickhouse_sql
-    from ..functions.clickhouse import register_clickhouse_functions
+    from ..functions.chsql import ch_sql
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
-    return spark.sql(rewrite_clickhouse_sql(_Q82_CLICKHOUSE_SQL))
+    return ch_sql(spark, _Q82_CLICKHOUSE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1006,12 +999,10 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent). The driver contract needs scalar sortable columns, so
     the top-k array flattens to a comma-joined string; the oracle
     recomputes the ranking with row_number + string_agg."""
-    from ..functions.chsql import rewrite_clickhouse_sql
-    from ..functions.clickhouse import register_clickhouse_functions
+    from ..functions.chsql import ch_sql
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
-    df = spark.sql(rewrite_clickhouse_sql(_Q93_CLICKHOUSE_SQL))
+    df = ch_sql(spark, _Q93_CLICKHOUSE_SQL)
     return df.select(
         "event_type",
         "n",
@@ -1136,12 +1127,10 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-rewriting; the oracle spells the same pipeline in ANSI with
     unnest + FILTER + GROUPING SETS. Median over integer token counts
     interpolates exactly in both engines (sums of small ints in binary64)."""
-    from ..functions.chsql import rewrite_clickhouse_sql
-    from ..functions.clickhouse import register_clickhouse_functions
+    from ..functions.chsql import ch_sql
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
-    return spark.sql(rewrite_clickhouse_sql(_Q95_CLICKHOUSE_SQL))
+    return ch_sql(spark, _Q95_CLICKHOUSE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1374,12 +1363,10 @@ def q102(spark: SparkSession, sf_dir: str) -> DataFrame:
     LATERAL VIEW explode Catalyst plans as generate + partial hash
     aggregate (explode feeds the aggregate in the SAME stage; only
     (modem, channel) groups shuffle)."""
-    from ..functions.chsql import rewrite_clickhouse_sql
-    from ..functions.clickhouse import register_clickhouse_functions
+    from ..functions.chsql import ch_sql
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
-    return spark.sql(rewrite_clickhouse_sql(_Q102_CLICKHOUSE_SQL))
+    return ch_sql(spark, _Q102_CLICKHOUSE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1987,9 +1974,7 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join keys are the series axis — fill cost is O(grid +
     series), independent of the event stream behind the aggregate."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(spark, _Q123_CLICKHOUSE_SQL)
 
@@ -2037,9 +2022,7 @@ def q124(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite itself is textual and type-blind — the 2-arg neighbor
     form (CH type-default fallback) rejects loudly instead of guessing."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(spark, _Q124_CLICKHOUSE_SQL)
 
@@ -2101,9 +2084,7 @@ def q143(spark: SparkSession, sf_dir: str) -> DataFrame:
     final step — at 100 TB the bucket series is already tiny (one row
     per bucket) by the time it reaches the window."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(spark, _Q143_CLICKHOUSE_SQL)
 
@@ -2173,18 +2154,19 @@ def q127(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this IS the 100 TB pattern — states pre-aggregate per
     partition/day at ingest (map-side, small), queries merge states
     instead of rescanning raw events."""
-    from ..functions.chsql import rewrite_clickhouse_sql
+    from ..functions.chsql import ch_sql
     from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
-    merged = spark.sql(rewrite_clickhouse_sql(_Q127_CLICKHOUSE_SQL))
-    direct = spark.sql(
+    merged = ch_sql(spark, _Q127_CLICKHOUSE_SQL)
+    direct_sql = (
         "SELECT event_type AS et,"
         " hll_sketch_estimate(hll_sketch_agg(user_id)) AS direct_est,"
         " count(DISTINCT user_id) AS exact_u"
         " FROM events GROUP BY event_type"
     )
+    register_clickhouse_functions(spark, direct_sql)
+    direct = spark.sql(direct_sql)
     return (
         merged.join(direct, merged["event_type"] == direct["et"])
         .select(
@@ -2355,9 +2337,7 @@ def q133(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing is global, unlike the single-series q123 path whose
     verification-scale global window is documented."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(spark, _Q133_CLICKHOUSE_SQL)
 
@@ -2400,9 +2380,7 @@ def q134(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer (the q07 list-cell rule). Pure hash aggregation —
     one exchange on user_id, map-side combined, no state machine."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(spark, _Q134_CLICKHOUSE_SQL).selectExpr(
         "user_id",
@@ -2481,9 +2459,7 @@ def q135(spark: SparkSession, sf_dir: str) -> DataFrame:
     row onto itself at equal timestamps, which the bridge's old-state
     fold deliberately does not — documented divergence."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     from .relational import vsort
 
@@ -2572,9 +2548,7 @@ def q136(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by condition-relevant events, no joins in the Spark plan
     (each sequenceMatch is an independent aggregate expression)."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     from .relational import vsort
 
@@ -2664,9 +2638,7 @@ def q147(spark: SparkSession, sf_dir: str) -> DataFrame:
     state bounded by condition-relevant events, O(pattern) doubles of
     fold state."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     from .relational import vsort
 
@@ -2773,12 +2745,10 @@ def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
     NARROW_CHAIN profile: one exchange + fold, no joins — the q57/q108
     rationale (0.57 -> 0.43 s warm at sf0.1)."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     # vsort, not an in-statement ORDER BY: a global sort's range
     # sampler RE-EXECUTES the fold subtree (the q03/q48/q57 device)
@@ -2838,9 +2808,7 @@ def q137(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as q135/q136: one user exchange, per-group state bounded by
     condition-relevant events."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     from .relational import vsort
 
@@ -2936,12 +2904,10 @@ def q160(spark: SparkSession, sf_dir: str) -> DataFrame:
     NARROW_CHAIN profile: one exchange + fold, no joins (the q148
     rationale)."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q160_CLICKHOUSE_SQL)
     out = out.select(
@@ -3025,12 +2991,10 @@ def q161(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: one exchange + folds, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q161_CLICKHOUSE_SQL)
     out = out.select(
@@ -3174,12 +3138,10 @@ def q162(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: one exchange + fold, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q162_CLICKHOUSE_SQL)
     out = out.select(
@@ -3276,12 +3238,10 @@ def q163(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NARROW_CHAIN profile: one exchange, no joins."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
     from ..session import exec_profile
     from .relational import NARROW_CHAIN, vsort
 
     spark = exec_profile(spark, NARROW_CHAIN)
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q163_CLICKHOUSE_SQL)
     out = out.select(
@@ -3339,9 +3299,7 @@ def q139(spark: SparkSession, sf_dir: str) -> DataFrame:
     is documented on the rewrite; the typed/OrDefault forms used here
     are exact."""
     from ..functions.chsql import ch_sql
-    from ..functions.clickhouse import register_clickhouse_functions
 
-    register_clickhouse_functions(spark)
     register_views(spark, sf_dir)
     return ch_sql(
         spark,

@@ -94,11 +94,11 @@ class TestDialectScalars:
         assert "BatchEvalPython" not in plan  # never a python UDF
 
     def test_bodies_name_no_sibling_scalar(self):
-        """register_clickhouse_functions issues the CREATE statements
-        from a thread pool, in no fixed order. That is only correct
-        while every body is self-contained: a body calling another
-        registered scalar would analyze against whichever version of
-        the sibling happened to be registered first."""
+        """register_clickhouse_functions registers only the scalars a
+        statement names. That is only correct while every body is
+        self-contained: a body calling another registered scalar would
+        fail its CREATE in a session where the sibling is not yet
+        registered."""
         calls = re.compile(
             r"(?<![\w.`])("
             + "|".join(map(re.escape, CLICKHOUSE_SCALARS))
@@ -113,6 +113,103 @@ class TestDialectScalars:
         }
         assert offenders == {}
 
+
+
+class TestOnDemandRegistration:
+    """ch_sql registers, in the statement's session, the scalars the
+    statement names; each test starts from a fresh session, which has
+    none of them."""
+
+    @pytest.fixture()
+    def session(self, spark):
+        s = spark.newSession()
+        s.createDataFrame(
+            [
+                Row(id=1, ts=dt.datetime(2026, 3, 2, 14, 37, 11), v=2.0),
+                Row(id=4, ts=dt.datetime(2026, 3, 3, 9, 5, 0), v=3.0),
+            ]
+        ).createOrReplaceTempView("od_t")
+        return s
+
+    def test_statement_registers_exactly_its_scalars(self, session):
+        from mb8600_clickhouse_spark.functions.chsql import ch_sql
+
+        rows = ch_sql(
+            session,
+            "SELECT toStartOfHour(ts) AS h, toYYYYMM(ts) AS ym, "
+            "toDayOfWeek(ts) AS dow, count() AS n "
+            "FROM od_t GROUP BY 1, 2, 3 ORDER BY h",
+        ).collect()
+        assert rows[0]["h"] == dt.datetime(2026, 3, 2, 14, 0)
+        assert rows[0]["dow"] == 1 and rows[1]["ym"] == 202603
+        mine = {"toStartOfHour", "toYYYYMM", "toDayOfWeek"}
+        assert session._registered_functions == mine
+        assert all(session.catalog.functionExists(n) for n in mine)
+        assert not session.catalog.functionExists("toMonth")
+
+    def test_lower_case_spelling_resolves(self, session):
+        from mb8600_clickhouse_spark.functions.chsql import ch_sql
+
+        r = ch_sql(session, "SELECT tostartofhour(ts) AS h FROM od_t WHERE id = 1")
+        assert r.first()["h"] == dt.datetime(2026, 3, 2, 14, 0)
+
+    def test_scalar_only_in_cte_or_subquery_resolves(self, session):
+        from mb8600_clickhouse_spark.functions.chsql import ch_sql
+
+        cte = ch_sql(
+            session,
+            "WITH b AS (SELECT intDiv(id, 2) AS k FROM od_t) "
+            "SELECT sum(k) AS s FROM b",
+        )
+        assert cte.first()["s"] == 2
+        sub = ch_sql(
+            session,
+            "SELECT max(m) AS m FROM (SELECT toMonth(ts) AS m FROM od_t)",
+        )
+        assert sub.first()["m"] == 3
+
+    def test_with_fill_and_asof_scalars_resolve(self, session):
+        from mb8600_clickhouse_spark.functions.chsql import ch_sql
+
+        fill = ch_sql(
+            session,
+            "SELECT intDiv(id, 2) AS k, sum(v) AS total FROM od_t GROUP BY k "
+            "ORDER BY k WITH FILL FROM 0 TO 4",
+        )
+        assert [(r["k"], r["total"]) for r in fill.collect()] == [
+            (0, 2.0), (1, 0.0), (2, 3.0), (3, 0.0)
+        ]
+        session.createDataFrame(
+            [Row(id=1, ts=dt.datetime(2026, 3, 2, 12, 0), w=7.0)]
+        ).createOrReplaceTempView("od_r")
+        asof = ch_sql(
+            session,
+            "SELECT toYYYYMMDD(l.ts) AS d, r.w AS w FROM od_t l "
+            "ASOF JOIN od_r r ON l.id = r.id AND l.ts >= r.ts",
+        ).collect()
+        assert [(r["d"], r["w"]) for r in asof] == [(20260302, 7.0)]
+
+    def test_repeated_statement_issues_no_create(self, session, monkeypatch):
+        from mb8600_clickhouse_spark.functions.chsql import ch_sql
+
+        sql = "SELECT toHour(ts) AS hr FROM od_t ORDER BY hr"
+        first = ch_sql(session, sql).collect()
+        issued = []
+        real = session.sql
+
+        def spy(text, *args, **kwargs):
+            issued.append(text)
+            return real(text, *args, **kwargs)
+
+        monkeypatch.setattr(session, "sql", spy)
+        assert ch_sql(session, sql).collect() == first
+        assert len(issued) == 1
+        assert not any("CREATE" in t.upper() for t in issued)
+
+    def test_no_text_registers_whole_vocabulary(self, session):
+        names = register_clickhouse_functions(session)
+        assert sorted(names) == sorted(CLICKHOUSE_SCALARS)
+        assert session._registered_functions == set(CLICKHOUSE_SCALARS)
 
 class TestRound5DateAliases:
     def test_quarter_family_and_monday(self, spark):
