@@ -1,12 +1,15 @@
-"""Warm min-of-3 A/B measurement for named queries vs their DuckDB
-oracles — the judge's "warm" methodology (VERDICT r06), self-service.
+"""Warm time of named queries against their DuckDB oracles, with one
+protocol on both sides.
 
 Usage: python -m harness.ab [sf_dir] name [name ...]
 
 Each query runs once untimed (warm-up: parquet footers, broadcast
-builds, codegen) then 3x timed; the oracle likewise. Prints per-query
-min-of-3 Spark, oracle, and ratio. Spark action is the bench's
-noop-format write (full materialization, final sorts kept).
+builds, codegen), then 3 timed reps; the oracle likewise. Prints the
+minimum of the 3 warm reps for Spark and for the oracle, and their
+ratio. The Spark action is the bench's noop-format write (full
+materialization, final sorts kept). DuckDB runs on as many threads as
+the Spark context's ``defaultParallelism``, so both engines get the
+same cores.
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ def main() -> int:
 
     spark = get_spark("ab")
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {spark.sparkContext.defaultParallelism}")
     for t in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"

@@ -37,8 +37,6 @@ same way IVF extends exact cosine search.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,48 +83,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.filter(F.col("hi") != F.col("lo")).distinct()
 
 
-def _loop_profile(spark, n_edges: int):
-    """Size the CC loop's per-round shuffles to the EDGE COUNT instead of
-    inheriting the engine's shuffle width (guide §2: scale-adaptive
-    partitioning, derived from input size — VERDICT r13 #2).
-
-    Each round shuffles only (long, long) edges, so the right partition
-    count is ``ceil(n_edges / SPARK_GRAFT_CC_EDGES_PER_PART)`` (default
-    2M rows ≈ 32 MB per partition). When that lands BELOW the cluster's
-    default parallelism the graph is small enough that AQE's
-    per-exchange query-stage materialization (one scheduler job per
-    Exchange, ~6 exchanges + checkpoint + checksum per round) is pure
-    overhead: measured at sf0.1 (2.3k edges, 2 rounds) 10-14 s with the
-    engine profile vs 2-4 s with AQE off + sized partitions — and the
-    32-core bench ran 1.75x SLOWER than 8 cores (PERF_r13 scaling 0.57)
-    because every round fanned tiny edge sets 32 ways. Large graphs
-    (p >= defaultParallelism) keep the engine profile untouched: AQE's
-    runtime coalescing and skew-join handling are exactly right there.
-
-    Returns a restore() closure; the caller wraps the loop in
-    try/finally. Under SPARK_GRAFT_MIMIC=1 (default-config certification
-    sweep) this is a no-op, the exec_profile convention — results never
-    depend on the tuning."""
-    if os.environ.get("SPARK_GRAFT_MIMIC") == "1":
-        return lambda: None
-    per_part = int(os.environ.get("SPARK_GRAFT_CC_EDGES_PER_PART", "2000000"))
-    p = max(1, -(-n_edges // per_part))
-    if p >= spark.sparkContext.defaultParallelism:
-        return lambda: None
-    old = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    def restore() -> None:
-        for k, v in old.items():
-            spark.conf.set(k, v)
-
-    return restore
-
-
 def _checksum(e: DataFrame) -> tuple[int, int]:
     # bit_xor, not sum: order-insensitive over the distinct edge set and
     # immune to ANSI-mode long overflow
@@ -158,24 +114,17 @@ def connected_components(
     """
     e = truncate_lineage(_canon(edges, src, dst), eager=True)
     prev = _checksum(e)
-    # loop rounds run under edge-count-sized partitioning (see
-    # _loop_profile); the conf is restored before the returned plan is
-    # built, so only the bounded per-round actions execute under it
-    restore = _loop_profile(e.sparkSession, prev[0])
-    try:
-        for _ in range(max_iter):
-            e2 = truncate_lineage(_small_star(_large_star(e)), eager=True)
-            cur = _checksum(e2)
-            e = e2
-            if cur == prev:
-                break
-            prev = cur
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds"
-            )
-    finally:
-        restore()
+    for _ in range(max_iter):
+        e2 = truncate_lineage(_small_star(_large_star(e)), eager=True)
+        cur = _checksum(e2)
+        e = e2
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
     # converged star forest: (child=hi, root=lo); roots map to themselves
     return (
         e.select(F.col("hi").alias("node"), F.col("lo").alias("component"))

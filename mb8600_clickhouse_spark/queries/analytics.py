@@ -163,14 +163,10 @@ def q164(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-group DISTINCT values of a 7-value bucket column).
 
     Reference parity: `tables.sql:5-30`'s docsis rollups are the
-    natural consumer (SNR skew/kurtosis monitoring).
-
-    NARROW_CHAIN profile: scan -> one exchange -> project, no joins."""
+    natural consumer (SNR skew/kurtosis monitoring)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q164_CLICKHOUSE_SQL), "grp")
 
@@ -265,14 +261,10 @@ def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
     contracts (the behavioral-aggregate collect rule, q135-q148); the
     window-rank spelling the oracle uses IS the distributed upgrade
     path (rank + tie counts over a keyed window, no collect) when a
-    group's cardinality is unbounded.
-
-    NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
+    group's cardinality is unbounded."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q165_CLICKHOUSE_SQL), "event_type")
 
@@ -415,14 +407,10 @@ def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: extends the §2.E dialect surface; the crawl
     pipeline (q131/q150/q156) consumes domain/path policy decisions
-    built from exactly these primitives.
-
-    NARROW_CHAIN profile: pure projection, nothing for AQE to adapt."""
+    built from exactly these primitives."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q166_CLICKHOUSE_SQL), "doc_id")
 
@@ -518,14 +506,10 @@ def q167(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: the counter-delta upgrade of `mb8600.py`'s
     codeword counters (SURVEY §2.E10) — deltaSum IS the CH idiom the
-    reference's dashboards would use for reset-tolerant rates.
-
-    NARROW_CHAIN profile: one exchange + folds, no joins."""
+    reference's dashboards would use for reset-tolerant rates."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q167_CLICKHOUSE_SQL), "user_id")
 
@@ -600,14 +584,10 @@ def q168(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange.
 
     Reference parity: §2.E10/E12 — the rate the reference's poller
-    derives from uptime/codeword counters, spelled as CH window SQL.
-
-    NARROW_CHAIN profile: one exchange + window, no joins."""
+    derives from uptime/codeword counters, spelled as CH window SQL."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q168_CLICKHOUSE_SQL), "event_id")
 
@@ -678,14 +658,10 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
     space-split tokens.
 
     Scale: one narrow scan-speed projection, no exchange (the q166
-    shape); every function whole-stage-codegens.
-
-    NARROW_CHAIN profile: pure projection."""
+    shape); every function whole-stage-codegens."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     sql = """
     SELECT doc_id, a,
@@ -776,14 +752,10 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted by these patterns, and grams5 windows over raw text are
     joined with the same byte both sides so the cell compares exactly).
 
-    Scale: one narrow scan-speed projection, no exchange.
-
-    NARROW_CHAIN profile: pure projection."""
+    Scale: one narrow scan-speed projection, no exchange."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     sql = """
     SELECT doc_id,
@@ -906,14 +878,10 @@ def q171(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: uptime/downtime coverage over `mb8600.py:30`'s
     uptime samples is exactly intervalLengthSum; concurrent-session
-    peaks are the dashboard sibling.
-
-    NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
+    peaks are the dashboard sibling."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q171_CLICKHOUSE_SQL), "event_type")
 
@@ -1011,14 +979,10 @@ def q172(spark: SparkSession, sf_dir: str) -> DataFrame:
     addresses as a (lo, hi) struct (flattened to columns here — the
     q161 interchange rule).
 
-    Scale: narrow scan-speed projection, no exchange (q166 shape).
-
-    NARROW_CHAIN profile: pure projection."""
+    Scale: narrow scan-speed projection, no exchange (q166 shape)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q172_CLICKHOUSE_SQL), "event_id")
 
@@ -1152,14 +1116,10 @@ def q173(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one event_type exchange; per-group state is the collected
     pair list with O(n*d) distinct-value folds — the bounded-slice
     collect contract (q165's MW rule); the oracle's cumulative-count /
-    contingency-table spelling IS the unbounded relational path.
-
-    NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
+    contingency-table spelling IS the unbounded relational path."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q173_CLICKHOUSE_SQL), "event_type")
 
@@ -1250,14 +1210,10 @@ def q174(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unbounded path.
 
     Output shape: heavy_buckets/low5 are RENDERED to comma-joined
-    integer strings (the q07 list-cell rule — scalar cells only).
-
-    NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
+    integer strings (the q07 list-cell rule — scalar cells only)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q174_CLICKHOUSE_SQL).select(
         "event_type",
@@ -1340,14 +1296,10 @@ def q175(spark: SparkSession, sf_dir: str) -> DataFrame:
     input is exact integer algebra).
 
     Scale: one exchange on the composite key; all aggregates are
-    constant-state partial folds.
-
-    NARROW_CHAIN profile: scan -> one exchange, no joins."""
+    constant-state partial folds."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(
         ch_sql(spark, _Q175_CLICKHOUSE_SQL),
@@ -1444,14 +1396,10 @@ def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (bounded arrays), the per-group path collects pairs (the
     behavioral contract) and a window-rank relational spelling is the
     unbounded lever (same machinery as q165's Mann-Whitney — AUC IS
-    U/(n0*n1)).
-
-    NARROW_CHAIN profile: pure projection."""
+    U/(n0*n1))."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q176_CLICKHOUSE_SQL), "event_id")
 
@@ -1517,14 +1465,10 @@ def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one user_id exchange; per-group state is the collected
     event list, search O(n * chain_len) — the behavioral contract,
-    probed linear on hot entities (SURVEY.md's round-8 16x probe).
-
-    NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
+    probed linear on hot entities (SURVEY.md's round-8 16x probe)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q177_CLICKHOUSE_SQL), "user_id")
 
@@ -1596,14 +1540,10 @@ def q178(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure scan-speed projection (Jackson-backed get_json_object,
     whole-stage codegen) — no exchange; the JSON-heavy training-data
     path (metadata sidecars on document/image corpora) runs at scan
-    speed.
-
-    NARROW_CHAIN profile: pure projection."""
+    speed."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q178_CLICKHOUSE_SQL), "event_id")
 
@@ -1690,14 +1630,10 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure scan-speed projection (polygon is a plan literal —
     the broadcast-rules posture of q150's robots matcher); O(edges)
-    per point.
-
-    NARROW_CHAIN profile: pure projection."""
+    per point."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q179_CLICKHOUSE_SQL), "event_id")
 
@@ -1781,14 +1717,10 @@ def q180(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sum/min/max/count combinators are constant-state partial
     folds (scan-speed, map-side combined); uniqExactArray collects per
     group (bounded contract; approx_count_distinct over an exploded
-    stream is the unbounded spelling).
-
-    NARROW_CHAIN profile: one exchange, no joins."""
+    stream is the unbounded spelling)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q180_CLICKHOUSE_SQL), "event_type")
 
@@ -1849,14 +1781,10 @@ def q181(spark: SparkSession, sf_dir: str) -> DataFrame:
     row); the oracle carries it as a CTE cross join.
 
     Scale: the constant substitution is free; one group-by exchange;
-    the global average is one tiny auxiliary aggregate.
-
-    NARROW_CHAIN profile: scan -> exchange + scalar-subquery scan."""
+    the global average is one tiny auxiliary aggregate."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q181_CLICKHOUSE_SQL), "bucket")
 
@@ -1938,14 +1866,10 @@ def q182(spark: SparkSession, sf_dir: str) -> DataFrame:
     is q41/q45's banded MinHash machinery, never per-pair).
 
     Output shape: rot_l/rot_r are RENDERED to chr(31)-joined string
-    cells (the q07 list-cell rule — scalar cells only).
-
-    NARROW_CHAIN profile: pure projection."""
+    cells (the q07 list-cell rule — scalar cells only)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q182_CLICKHOUSE_SQL).select(
         "doc_id",
@@ -2029,14 +1953,10 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard query-vector contract); the interpreted-lambda fold cost
     is the documented HOF constant — the Arrow matmul path
     (similarity.py) is the bulk lever when millions of pairs score at
-    once (probed at 16x; SURVEY.md's round-8 PQ probe reading).
-
-    NARROW_CHAIN profile: projection + broadcast NLJ, no exchange."""
+    once (probed at 16x; SURVEY.md's round-8 PQ probe reading)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q183_CLICKHOUSE_SQL), "vec_id")
 
@@ -2146,14 +2066,10 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is the family's documented shape.
 
     Output shape: heavy_buckets is RENDERED to a comma-joined integer
-    string (the q07 list-cell rule — scalar cells only).
-
-    NARROW_CHAIN profile: filtered scan -> one exchange, no joins."""
+    string (the q07 list-cell rule — scalar cells only)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q184_CLICKHOUSE_SQL).select(
         "event_type",
@@ -2260,16 +2176,11 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type partitioning plus partial-aggregated rollups — the
     shape survives any group cardinality; this query IS the
     relational lever of SURVEY.md's round-8 stats probe as a
-    first-class registry entry.
-
-    NARROW_CHAIN profile: scan -> keyed windows, no joins beyond the
-    4-row stat rollups."""
+    first-class registry entry."""
     from ..operators.stats import ks_test, mann_whitney_u
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
     from ..tables import load_tables
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     ev = load_tables(spark, sf_dir)["events"].withColumn(
         "par", (F.col("user_id") % 2).cast("int")
     )
@@ -2353,14 +2264,10 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact decimal keys.
 
     Scale: one user_id window exchange + the global top-k rank (the
-    q57-class exchange — bounded output); the WITH constant is free.
-
-    NARROW_CHAIN profile: two window exchanges, no joins."""
+    q57-class exchange — bounded output); the WITH constant is free."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q186_CLICKHOUSE_SQL), "event_id")
 
@@ -2464,9 +2371,7 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: truth is the exact all-pairs verifier — bounded corpus by
     contract (at 100 TB you run it on LSH candidates only, q41's
-    note); candidates and minhash signatures are the linear q40 path.
-
-    NARROW_CHAIN profile kept OFF — the self-join benefits from AQE."""
+    note); candidates and minhash signatures are the linear q40 path."""
     from ..operators import dedup
     from .relational import vsort
 
@@ -2585,14 +2490,10 @@ def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one event_type exchange with map-side partial aggregation
     of ten longs (vs four boxed BigDecimals) — strictly lighter than
     the q164 shape at any scale; the audit columns (count, max) ride
-    the same exchange.
-
-    NARROW_CHAIN profile: scan -> one exchange, no joins."""
+    the same exchange."""
     from ..operators.stats import skew_kurt
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     ev = load_tables(spark, sf_dir)["events"]
     out = skew_kurt(ev, "value", "event_type", method="limb")
     return vsort(out, "event_type")
@@ -2682,13 +2583,10 @@ def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
     expanded ANSI form — two independent spellings, one hash.
 
     Scale: one map-side-combined exchange on event_type; the tuple-IN
-    filter is a per-row predicate pushed at the scan. NARROW_CHAIN
-    profile: scan -> one exchange -> project, no joins."""
+    filter is a per-row predicate pushed at the scan."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return vsort(ch_sql(spark, _Q190_CLICKHOUSE_SQL), "event_type")
 
@@ -2761,16 +2659,12 @@ def q191(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the SAMPLE filter is a per-row scan predicate (no shuffle);
     the CTE's distinct and the semi-join IN both exchange only the
     ~5-row event_type domain; one map-side-combined aggregate exchange.
-    NARROW_CHAIN profile: scan -> one exchange -> limit, no fact joins.
 
     Reference parity: §2.E dialect surface (the reference's consumers
     sample rollup shards with exactly this SAMPLE/OFFSET split,
     `tables.sql:5-30`)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return ch_sql(
         spark, _Q191_CLICKHOUSE_SQL, sample_by={"events": "event_id"}
@@ -2846,11 +2740,8 @@ def q192(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``roundToExp2(count())`` — power-of-two floor, exponent-clamped.
 
     Scale: one map-side-combined exchange on event_type, scalar tails
-    on 5 group rows. NARROW_CHAIN profile: scan -> one exchange."""
+    on 5 group rows."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     return ch_sql(spark, _Q192_CLICKHOUSE_SQL)

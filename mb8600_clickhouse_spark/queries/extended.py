@@ -55,13 +55,8 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The total order is vsort, not orderBy: the range sampler would
     RE-EXECUTE the whole session aggregation subtree to pick range
-    bounds (the q98 finding). NARROW_CHAIN profile (AQE off,
-    session-local): scan → session-window exchange → vsort is a fixed
-    join-free chain. Both together: warm 0.93 → 0.34 s at sf0.1."""
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN
-
-    ev = load_tables(exec_profile(spark, NARROW_CHAIN), sf_dir)["events"]
+    bounds (the q98 finding)."""
+    ev = load_tables(spark, sf_dir)["events"]
     return vsort(
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), dsum4(F.col("value")).alias("sum_value"))
@@ -494,10 +489,6 @@ def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions over per-priority price order:
     quartile bucket, percent rank, cumulative distribution.
 
-    NARROW_CHAIN profile: join-free fixed chain (one window exchange +
-    the verification sort); AQE stage materialization is pure overhead
-    (0.58 -> 0.48 s warm at sf0.1).
-
     Round-8 floor decomposition (judge r07 asked for a fresh profile —
     the apparent r06->r07 'regression' did not reproduce): warm
     min-of-3 at sf0.1 sits at 0.37-0.56 s across runs (noise band).
@@ -522,10 +513,7 @@ def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     join cost more than the 5-task sort saves."""
     from pyspark.sql import Window as W
 
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN
-
-    orders = load_tables(exec_profile(spark, NARROW_CHAIN), sf_dir)["orders"]
+    orders = load_tables(spark, sf_dir)["orders"]
     w = W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return (
         orders.select(
@@ -1697,16 +1685,9 @@ def q142(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corpus scans read 4 ints/row instead of 64 doubles (PQ's
     point at 100 TB); training is one projection + one M*ksub-row
     exchange per iteration; scoring is a broadcast cross join + rank
-    window — compose with q54's cell probe for sublinear IVFPQ.
-
-    NARROW_CHAIN profile: fixed shape, the one join an explicit
-    broadcast of the 16-row codebook reconstruction (0.41 -> 0.32 s
-    warm at sf0.1)."""
+    window — compose with q54's cell probe for sublinear IVFPQ."""
     from ..operators import similarity
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     emb = load_tables(spark, sf_dir)["embeddings"]
     corpus = emb.filter(F.col("vec_id") >= 50)
     books = similarity.pq_fit(corpus, m=4, ksub=4, n_iter=1, assign="expr")

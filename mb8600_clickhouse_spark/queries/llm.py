@@ -19,9 +19,9 @@ from pyspark.sql import functions as F
 from ..operators import bpe, classifier, dedup, lm, sampling, similarity, text
 from ..operators.multimodal import with_payload
 from ..tables import load_tables
-from ..session import exec_profile, truncate_lineage
+from ..session import truncate_lineage
 from . import query
-from .relational import NARROW_CHAIN, round4, round6, vsort
+from .relational import round4, round6, vsort
 
 # ---------------------------------------------------------------------------
 # duplicated corpora (used by Spark + oracle identically)
@@ -1314,21 +1314,10 @@ def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id < 500 so the all-positive BoW vectors' bucket concentration
     keeps pair counts fixture-independent). The oracle recomputes
     embedder + LSH + verification end-to-end, so one hash pins the
-    whole composed pipeline.
-
-    Execution profile (session-local): the corpus is BOUNDED by
-    construction (doc_id < 500 → ≤571 rows at any sf), so the whole
-    composition runs AQE-off with ONE shuffle partition — stage count
-    and data volume are fixtures of the query, not the corpus; warm
-    0.65 → 0.34 s at sf0.1. Unbounded callers use the operators
-    directly under the engine default."""
+    whole composed pipeline."""
     from ..operators import similarity
     from ..operators import text as text_ops
 
-    spark = exec_profile(
-        spark,
-        {**NARROW_CHAIN, "spark.sql.shuffle.partitions": "1"},
-    )
     docs = load_tables(spark, sf_dir)["documents"].filter(F.col("doc_id") < 500)
     corpus = docs.select("doc_id", "text").unionAll(
         docs.filter(F.col("doc_id") % 7 == 0).select(
@@ -1497,16 +1486,10 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLANTED on doc_id % 3 so both signals separate; the output carries
     the gate decision itself (``flagged``) at the published
     Gopher-style thresholds. Fractions are exact rationals of small
-    ints, rounded to 6 decimals for cross-engine hash stability.
-
-    NARROW_CHAIN profile (AQE off, session-local): a fixed 3-exchange
-    doc_id-keyed chain with no skew by construction (keys are unique
-    doc ids); warm 0.58 → 0.43 s at sf0.1. ``with_repetition_signals``
-    itself is profile-agnostic — a production curation run over a
-    full crawl keeps the engine default (AQE on)."""
+    ints, rounded to 6 decimals for cross-engine hash stability."""
     from ..operators.text import with_repetition_signals
 
-    docs = load_tables(exec_profile(spark, NARROW_CHAIN), sf_dir)["documents"]
+    docs = load_tables(spark, sf_dir)["documents"]
     c = docs.select(
         "doc_id",
         F.when(
@@ -1872,20 +1855,8 @@ def q107(spark: SparkSession, sf_dir: str) -> DataFrame:
     can split the join's probe side; a count-over-hash window cannot be
     split and would serialize the hot hash onto one task) — then the
     per-doc rollup. No O(n^2) pair step anywhere. Reported here: only
-    docs with at least one duplicated span.
-
-    Verification-scale profile (session-local): AQE off + 4 shuffle
-    partitions for THIS registered fixture query (warm 0.91 → 0.48 s at
-    sf0.1 — five exchanges of a few MB each, where per-stage scheduling
-    dominates). ``dup_span_stats`` is profile-agnostic: a production
-    run over a real crawl drops the profile and keeps AQE's probe-side
-    skew splitting, which is the operator's documented scale story."""
-    docs = load_tables(
-        exec_profile(
-            spark, {**NARROW_CHAIN, "spark.sql.shuffle.partitions": "4"}
-        ),
-        sf_dir,
-    )["documents"]
+    docs with at least one duplicated span."""
+    docs = load_tables(spark, sf_dir)["documents"]
     stats = dedup.dup_span_stats(_neardup_corpus(docs), span_n=8)
     return vsort(
         stats.filter(F.col("n_dup_spans") > 0).select(
@@ -1954,14 +1925,7 @@ def q108(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the trained model is a (w1,w2,p) table bounded by the bigram
     vocabulary; documents pre-aggregate their bigrams with multiplicity
     before the single model equi-join; V is a window aggregate over the
-    vocab-bounded count table, never a collected scalar.
-
-    NARROW_CHAIN profile: fixed-shape plan whose one join is the
-    explicitly hinted broadcast of the vocab-bounded model — AQE's
-    per-exchange stage materialization is pure scheduling overhead here
-    (measured 0.41 -> 0.30 s warm at sf0.1); MIMIC ignores the profile
-    so the correctness gate stays config-independent."""
-    spark = exec_profile(spark, NARROW_CHAIN)
+    vocab-bounded count table, never a collected scalar."""
     docs = load_tables(spark, sf_dir)["documents"]
     s = lm.bigram_lm_scores(docs)
     return vsort(
@@ -2044,11 +2008,7 @@ def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is join-free: scan → features → margin sum — three exchanges,
     no weight broadcast, no second evaluation of the feature subtree
     for the weight table (warm 1.04 → ~0.5 s at sf0.1). Margins are
-    bit-identical to the join form (same DECIMAL(28,10) term snap).
-    NARROW_CHAIN profile applies (join-free fixed-depth chain)."""
-    spark = exec_profile(
-        spark, {**NARROW_CHAIN, "spark.sql.shuffle.partitions": "8"}
-    )
+    bit-identical to the join form (same DECIMAL(28,10) term snap)."""
     docs = load_tables(spark, sf_dir)["documents"]
     feat = classifier.bow_feature_rows(docs, dim=64)
     labels = docs.select(
@@ -2179,11 +2139,7 @@ def q111(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-bounded broadcast count tables, EXACT unseen-bigram smoothing
     via left-joined raw counts (a pre-divided p-table cannot express
     c2=0/c1=0), linear-domain decimal-snapped averages so both models
-    and the scoring verify bit-for-bit against the oracle.
-
-    NARROW_CHAIN profile (the q108 rationale — fixed shape, hinted
-    broadcast model; 0.52 -> 0.38 s warm at sf0.1)."""
-    spark = exec_profile(spark, NARROW_CHAIN)
+    and the scoring verify bit-for-bit against the oracle."""
     docs = load_tables(spark, sf_dir)["documents"]
     s = lm.dsir_weights(
         docs.withColumn("is_en", F.col("lang") == "en"), target_col="is_en"
@@ -2746,12 +2702,9 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     then bucket assignment is a pure tuple-comparison projection.
     That removes the only global window from the runtime plan — the
     same gap ``lm.ccnet_cut_buckets`` closes approximately at 100 TB,
-    closed exactly here; sampling is a narrow md5 expression.
-
-    NARROW_CHAIN profile (the q108 rationale)."""
+    closed exactly here; sampling is a narrow md5 expression."""
     from pyspark.sql import Window as W2
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     docs = load_tables(spark, sf_dir)["documents"]
     s = lm.bigram_lm_scores(docs)
     # One invocation runs THREE actions over the score pipeline (the
@@ -3863,11 +3816,10 @@ def q141(spark: SparkSession, sf_dir: str) -> DataFrame:
     line predicates.
 
     Scale: one narrow projection — zero shuffle, scan-bound (the vsort
-    is verification order only). NARROW_CHAIN profile (join-free fixed
-    chain; 0.43 -> 0.38 s warm at sf0.1)."""
+    is verification order only)."""
     from ..operators.text import gopher_rules
 
-    docs = load_tables(exec_profile(spark, NARROW_CHAIN), sf_dir)["documents"]
+    docs = load_tables(spark, sf_dir)["documents"]
     page = docs.select(
         "doc_id",
         F.concat_ws(

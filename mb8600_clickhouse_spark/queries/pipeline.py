@@ -2740,15 +2740,9 @@ def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
     message says so (documented-failure contract).
 
     Scale: the q135/q136 shape — one user_id exchange, fold state
-    2 x levels doubles.
-
-    NARROW_CHAIN profile: one exchange + fold, no joins — the q57/q108
-    rationale (0.57 -> 0.43 s warm at sf0.1)."""
+    2 x levels doubles."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     # vsort, not an in-statement ORDER BY: a global sort's range
     # sampler RE-EXECUTES the fold subtree (the q03/q48/q57 device)
@@ -2899,15 +2893,10 @@ def q160(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q135-q148), probed linear on hot entities.
 
     Reference parity: extends the §2.E ClickHouse aggregate surface
-    (tables.sql's docsis rollups are this family's natural consumer).
-
-    NARROW_CHAIN profile: one exchange + fold, no joins (the q148
-    rationale)."""
+    (tables.sql's docsis rollups are this family's natural consumer)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q160_CLICKHOUSE_SQL)
     out = out.select(
@@ -2987,14 +2976,10 @@ def q161(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: extends §2.E's ClickHouse aggregate surface
     (tables.sql's per-channel metric maps are this family's natural
-    consumer).
-
-    NARROW_CHAIN profile: one exchange + folds, no joins."""
+    consumer)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q161_CLICKHOUSE_SQL)
     out = out.select(
@@ -3134,14 +3119,10 @@ def q162(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output shape: the (x, y) coordinate arrays are POSEXPLODED to one
     row per (user_id, idx) with scalar DOUBLE columns — the driver's
     canonicalizer sorts raw pandas cells and list cells are unhashable
-    (the q07 list-cell rule, enforced registry-wide since round 9).
-
-    NARROW_CHAIN profile: one exchange + fold, no joins."""
+    (the q07 list-cell rule, enforced registry-wide since round 9)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q162_CLICKHOUSE_SQL)
     out = out.select(
@@ -3234,14 +3215,10 @@ def q163(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, idx) with scalar columns (slope/intercept repeat per
     row) — the driver's canonicalizer sorts raw pandas cells and list
     cells are unhashable (the q07 list-cell rule, enforced
-    registry-wide since round 9).
-
-    NARROW_CHAIN profile: one exchange, no joins."""
+    registry-wide since round 9)."""
     from ..functions.chsql import ch_sql
-    from ..session import exec_profile
-    from .relational import NARROW_CHAIN, vsort
+    from .relational import vsort
 
-    spark = exec_profile(spark, NARROW_CHAIN)
     register_views(spark, sf_dir)
     out = ch_sql(spark, _Q163_CLICKHOUSE_SQL)
     out = out.select(

@@ -21,17 +21,8 @@ from pyspark.sql import types as T
 
 from .. import parse
 from ..parse import parse_downstream, parse_uptime, parse_upstream
-from ..session import exec_profile
 from ..tables import load_tables
 from . import query
-
-#: Session-local profile for short fixed-depth NARROW plans (no joins,
-#: or bounded inputs): AQE's one-scheduler-job-per-exchange query-stage
-#: materialization is pure overhead for a plan whose stage count and
-#: balance are fixed by construction. Applied per-query via
-#: ``exec_profile`` (never globally — every data-proportional join in
-#: the engine keeps AQE + skew-join + coalescing).
-NARROW_CHAIN = {"spark.sql.adaptive.enabled": "false"}
 
 DOCSIS = "read_parquet('{docsis}')"
 
@@ -252,13 +243,8 @@ def q02(spark: SparkSession, sf_dir: str) -> DataFrame:
       orderBy: the SAME total order (range partitions are globally
       ordered, rows sorted within), measured 0.88 -> 0.55 s warm at
       sf0.1 — orderBy's AQE interplay re-plans the sort stage, the
-      explicit spelling doesn't.
-    - NARROW_CHAIN profile (AQE off, session-local): scan → range
-      exchange → sort → project has a fixed two-stage shape; AQE's
-      per-exchange stage-materialization job is pure scheduling cost
-      here (warm 0.83 → 0.55 s at sf0.1). The range partitioner sizes
-      output partitions by sampling, so nothing AQE would adapt."""
-    li = load_tables(exec_profile(spark, NARROW_CHAIN), sf_dir)["lineitem"]
+      explicit spelling doesn't."""
+    li = load_tables(spark, sf_dir)["lineitem"]
     return (
         li.select("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount")
         .repartitionByRange("l_orderkey", "l_linenumber")
@@ -430,12 +416,8 @@ def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort/hash list cells (round-1 q07 err), and a string is portable.
     Decimal(18,4) renders identically ("38.5000") in Spark and DuckDB.
     The native array<struct> round-trip (assembly = inverse of explode)
-    is asserted in tests/test_plans.py::test_q07_struct_roundtrip.
-
-    NARROW_CHAIN profile (AQE off, session-local): the plan is narrow
-    array algebra + one repartition(1) — nothing for AQE to adapt; its
-    per-exchange stage job cost 0.53 vs 0.39 s warm at sf0.1."""
-    d = load_tables(exec_profile(spark, NARROW_CHAIN), sf_dir)["docsis"]
+    is asserted in tests/test_plans.py::test_q07_struct_roundtrip."""
+    d = load_tables(spark, sf_dir)["docsis"]
     # ZERO-SHUFFLE form: the "assembly" group key (modem_name, timestamp)
     # is exactly one source row -- explode + groupBy + collect_list is an
     # identity round-trip through an exchange. Recognizing that, the
@@ -883,14 +865,11 @@ def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum was 1.35 s — VERDICT r11 #1).
 
     Physical choices, verification-scale: the dim map (150k rows × 18
-    bytes at sf0.1) is broadcast by hint, and NARROW_CHAIN (AQE off,
-    session-local) because with both joins broadcast the plan shape is
-    fixed — scan → probe → 5-group agg — and AQE's per-exchange stage
-    jobs are pure overhead. At 100 TB drop the hint and keep AQE: the
+    bytes at sf0.1) is broadcast by hint. At 100 TB drop the hint: the
     dim side no longer fits an executor, AQE shuffle-joins
     lineitem ⋈ dim on orderkey (one fact shuffle — same count as the
     un-restructured shape) and handles skew."""
-    t = load_tables(exec_profile(spark, NARROW_CHAIN), sf_dir)
+    t = load_tables(spark, sf_dir)
     dim = (
         t["orders"]
         .join(

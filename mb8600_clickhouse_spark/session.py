@@ -1,8 +1,10 @@
-"""SparkSession factory with the engine's standard configuration.
+"""SparkSession factory with the engine's standard configuration, and
+the execution policy every registered query runs under.
 
 Local-mode testing uses ``local[N]``; at cluster scale the same settings
-hold (AQE, UTC session time zone, Arrow) and the shuffle-partition count
-is raised to ~2-3x total executor cores.
+hold (AQE, UTC session time zone, Arrow). Shuffle width is not a
+deployment constant: ``exec_profile`` derives it per query from the
+input size (see there).
 """
 
 from __future__ import annotations
@@ -12,13 +14,14 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import pin_session_confs
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(
     app_name: str = "mb8600_clickhouse_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
@@ -29,23 +32,18 @@ def get_spark(
       timestamps (mb8600.py:366); the DuckDB oracle is UTC-naive.
     - AQE on: runtime coalescing, skew-join splitting, dynamic join
       strategy selection.
-    - ``spark.sql.shuffle.partitions`` sized to cores locally (not the
-      200 default) -- on a real cluster set ~2-3x total cores.
+    - ``spark.sql.shuffle.partitions`` = cores (not the 200 default):
+      the width of plans run outside the registry; registered queries
+      get theirs from ``exec_profile``.
     - Arrow enabled: vectorized pandas interchange for Pandas UDFs.
     - nested schema pruning: array-of-struct queries (docsis channels)
       read only the struct leaves they touch.
     """
     n = cpus or DEFAULT_CPUS
-    # explicit shuffle-partition choices (arg or env) are PINNED: the
-    # data-proportional autosizer in tables.load_tables respects them
-    explicit_sp = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-    )
     builder = (
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{n}]"))
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(explicit_sp or n))
-        .config("spark.graft.shuffle.pinned", "true" if explicit_sp else "false")
+        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # respect the advisory size when coalescing instead of refusing
@@ -96,48 +94,58 @@ def get_spark(
     return spark
 
 
-def exec_profile(spark: SparkSession, sql_conf: dict[str, str]) -> SparkSession:
-    """Session-local physical-execution profile for ONE query.
+def _parse_bytes(s: str) -> int:
+    """'8m' / '64k' / '1g' / '1048576' -> bytes (Spark conf size syntax,
+    the subset the engine sets)."""
+    s = s.strip().lower().removesuffix("b")
+    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(s[-1], 1)
+    return int(s[:-1] if s[-1] in "kmg" else s) * mult
 
-    ``newSession()`` shares the SparkContext (executors, scheduler,
-    cached JVM) but carries its OWN SQLConf, so a query can pin planner
-    settings for its action without mutating the caller's session — no
-    cross-query leakage in a sequential bench/harness run, and the
-    builder-level engine conventions (UTC, Arrow, WGL threshold) are
-    inherited from the context's SparkConf.
 
-    Intended use: short fixed-depth narrow plans (no joins, or bounded
-    inputs) where AQE's per-exchange query-stage materialization — one
-    scheduler job per exchange — is pure overhead by construction.
-    Measured at sf0.1 warm (min-of-3): q92 0.65→0.34 s, q07 0.53→0.39 s,
-    q98 0.58→0.43 s, q02 0.83→0.55 s.
+def exec_profile(spark: SparkSession, input_bytes: int) -> SparkSession:
+    """The session a query's plan executes on, chosen from its input size.
 
-    Scale policy: the profile is part of the QUERY, not the engine —
-    operators stay profile-agnostic and the engine default (AQE on,
-    skew-join, coalescing) is untouched for every plan with
-    data-proportional joins. Under ``SPARK_GRAFT_MIMIC=1`` (the
-    default-config certification sweep) this is a NO-OP so the
-    correctness gate still proves results don't depend on any tuning.
+    The engine's one execution policy: ``p = clamp(ceil(input_bytes /
+    advisory), 1, 4 x defaultParallelism)`` shuffle partitions, where
+    ``advisory`` is the caller's
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. Below the cap
+    AQE is off: on a small input AQE's per-exchange query-stage
+    materialization (one scheduler job per exchange) costs more than
+    its runtime re-planning recovers. Once the cap binds, AQE is on (the
+    engine default): runtime coalescing and skew-join splitting are what
+    a large input needs. Where between the two AQE starts to pay is not
+    settled; the cap is the switch point until a measurement moves it
+    (ROADMAP.md, open item 3).
+
+    The profile lives on a ``newSession()`` child, which shares the
+    SparkContext (executors, scheduler, JVM) but carries its own
+    SQLConf, so the caller's session is never written to and concurrent
+    queries on it cannot change each other's shuffle width. Children
+    are cached on the caller, one per partition count: a fresh session
+    per query would pay SessionState construction and cold per-session
+    caches every time. Each child carries ``tables.pin_session_confs``
+    from creation. Under ``SPARK_GRAFT_MIMIC=1`` (the default-config
+    certification sweep) the caller is returned unchanged, so the
+    correctness gate proves results do not depend on the policy.
     """
     if os.environ.get("SPARK_GRAFT_MIMIC") == "1":
         return spark
-    # One session per (parent, profile), cached ON the parent: a fresh
-    # newSession() per invocation pays SessionState construction and
-    # cold per-session caches (table/footer probes in tables.load_tables
-    # key on the session) — measured as the entire profile win given
-    # back. The cache dies with the parent session object.
+    advisory = _parse_bytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = 4 * spark.sparkContext.defaultParallelism
+    p = min(max(-(-input_bytes // advisory), 1), cap)
     cache = getattr(spark, "_graft_profiles", None)
     if cache is None:
-        cache = {}
-        spark._graft_profiles = cache
-    key = tuple(sorted(sql_conf.items()))
-    s2 = cache.get(key)
-    if s2 is None:
-        s2 = spark.newSession()
-        for k, v in sql_conf.items():
-            s2.conf.set(k, v)
-        cache[key] = s2
-    return s2
+        cache = spark._graft_profiles = {}
+    child = cache.get(p)
+    if child is None:
+        child = spark.newSession()
+        pin_session_confs(child)
+        child.conf.set("spark.sql.shuffle.partitions", str(p))
+        child.conf.set("spark.sql.adaptive.enabled", str(p == cap).lower())
+        cache[p] = child
+    return child
 
 
 def truncate_lineage(df: DataFrame, eager: bool) -> DataFrame:

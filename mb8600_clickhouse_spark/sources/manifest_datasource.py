@@ -255,5 +255,21 @@ class ManifestDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Make ``format("manifest")`` available in this session."""
-    spark.dataSource.register(ManifestDataSource)
+    """Make ``format("manifest")`` available in this session.
+
+    Spark checks a new name against the ACTIVE session's sources, not
+    ``spark``'s, so once the active session has registered the source
+    the name reads as taken in every other session
+    (DATA_SOURCE_ALREADY_EXISTS). Registered queries run on
+    session-local children of the caller's session, so ``spark`` is
+    made active for the registration."""
+    active = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = active.getActiveSession()
+    active.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(ManifestDataSource)
+    finally:
+        if prev.isDefined():
+            active.setActiveSession(prev.get())
+        else:
+            active.clearActiveSession()

@@ -32,14 +32,6 @@ def pin_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def _parse_bytes(s: str) -> int:
-    """'8m' / '64k' / '1g' / '1048576' -> bytes (Spark conf size syntax,
-    the subset the engine sets)."""
-    s = s.strip().lower().removesuffix("b")
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(s[-1], 1)
-    return int(s[:-1] if s[-1] in "kmg" else s) * mult
-
-
 _FIXTURE_BYTES: dict[str, int] = {}
 
 
@@ -72,43 +64,6 @@ def _fixture_bytes(sf_dir: str) -> int:
             )
     _FIXTURE_BYTES[sf_dir] = total
     return total
-
-
-def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Size ``spark.sql.shuffle.partitions`` to the DATA, not a constant:
-    ``clamp(ceil(total_fixture_bytes / advisory_partition_size), 4,
-    max(4 x defaultParallelism, $SPARK_GRAFT_MAX_SHUFFLE_PARTITIONS))``.
-
-    Why: reduce-task count is the dominant per-stage overhead when
-    partitions are far below the advisory size — at sf0.1 (~50 MB total)
-    32-way shuffles cost 2x the wall of right-sized ones (measured: full
-    bench 149.7 s at 32 vs 137.7 s at 8; q108 0.95 -> 0.63 s), while AQE
-    coalescing recovers only part of it because the stage barriers and
-    map-side bucket setup already happened. The SAME formula is the
-    100 TB posture: 100 TB / 8 MB advisory rides the cap, which on a
-    real cluster is raised with the env knob to the standard 2-3x total
-    cores (session.py docstring). AQE (still on) coalesces further and
-    splits skew at runtime in both regimes.
-
-    Explicit settings win: a session built with ``shuffle_partitions=``
-    or ``$SPARK_GRAFT_SHUFFLE_PARTITIONS`` is marked pinned by
-    ``get_spark`` and never autosized."""
-    import math
-    import os
-
-    if spark.conf.get("spark.graft.shuffle.pinned", "false") == "true":
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    advisory = _parse_bytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-    )
-    cores = spark.sparkContext.defaultParallelism
-    cap = max(
-        4 * cores, int(os.environ.get("SPARK_GRAFT_MAX_SHUFFLE_PARTITIONS", "0"))
-    )
-    n = min(max(math.ceil(_fixture_bytes(sf_dir) / advisory), 4), cap)
-    if spark.conf.get("spark.sql.shuffle.partitions") != str(n):
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n
 
 
 def _events_ts_is_nanos(path: str) -> bool:
@@ -201,7 +156,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> LazyTables:
     Holding the session reference inside the cached value keeps ``id``
     reuse impossible while an entry is alive."""
     pin_session_confs(spark)  # every call: callers rely on the re-pin
-    autosize_shuffle_partitions(spark, sf_dir)
     key = (id(spark), sf_dir)
     cached = _TABLE_CACHE.get(key)
     if cached is not None and cached._spark is spark:

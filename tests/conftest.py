@@ -23,7 +23,7 @@ SF0001 = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus=8, shuffle_partitions=8)
+    s = get_spark("pytest", cpus=8)
     yield s
 
 

@@ -274,16 +274,3 @@ class TestLoopProfile:
             spark.conf.get("spark.sql.adaptive.enabled"),
         )
         assert before == after
-
-    def test_large_graph_threshold_leaves_conf_alone(self, spark, monkeypatch):
-        # force p >= defaultParallelism: 1 edge/partition -> profile must
-        # decline to touch the conf (engine AQE path)
-        monkeypatch.delenv("SPARK_GRAFT_MIMIC", raising=False)
-        monkeypatch.setenv("SPARK_GRAFT_CC_EDGES_PER_PART", "1")
-        from mb8600_clickhouse_spark.operators.graph import _loop_profile
-
-        sp_before = spark.conf.get("spark.sql.shuffle.partitions")
-        restore = _loop_profile(spark, n_edges=10**9)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == sp_before
-        restore()
-        assert self._run(spark) == _union_find(self.EDGES)

@@ -35,6 +35,16 @@ class TestManifestBatchRead:
         ).first()
         assert (row["n"], row["lo"], row["hi"]) == (8, 0, 7)
 
+    def test_register_in_second_session(self, spark, tmp_path):
+        """The active session already has the source (module fixture);
+        a second session of the same context can still register it."""
+        path = str(tmp_path / "t")
+        ManifestTable(path).append(_df(spark, 0, 3))
+        other = spark.newSession()
+        manifest_datasource.register(other)
+        df = other.read.format("manifest").load(path)
+        assert sorted(r["k"] for r in df.collect()) == [0, 1, 2]
+
     def test_version_option_time_travel(self, spark, tmp_path):
         path = str(tmp_path / "t")
         t = ManifestTable(path)

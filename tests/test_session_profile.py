@@ -1,38 +1,78 @@
-"""session.exec_profile — session-local physical-execution profiles."""
+"""session.exec_profile — the size-derived execution policy, applied by
+the query registry on a session-local child."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from mb8600_clickhouse_spark.session import exec_profile, truncate_lineage
+from mb8600_clickhouse_spark.queries import all_queries
+from mb8600_clickhouse_spark.session import _parse_bytes, exec_profile, truncate_lineage
 
-PROFILE = {"spark.sql.adaptive.enabled": "false"}
+PINS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def _advisory(spark) -> int:
+    return _parse_bytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+
+
+def _cap(spark) -> int:
+    return 4 * spark.sparkContext.defaultParallelism
 
 
 class TestExecProfile:
+    @pytest.fixture(autouse=True)
+    def _policy_on(self, monkeypatch):
+        monkeypatch.delenv("SPARK_GRAFT_MIMIC", raising=False)
+
     def test_parent_conf_untouched(self, spark):
         before = spark.conf.get("spark.sql.adaptive.enabled")
-        s2 = exec_profile(spark, PROFILE)
+        s2 = exec_profile(spark, 3 * _advisory(spark) - 1)
         assert s2 is not spark
         assert s2.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert s2.conf.get("spark.sql.shuffle.partitions") == "3"
         assert spark.conf.get("spark.sql.adaptive.enabled") == before
 
-    def test_cached_per_profile(self, spark):
-        a = exec_profile(spark, PROFILE)
-        b = exec_profile(spark, dict(PROFILE))
-        assert a is b  # same profile -> same cached session
-        c = exec_profile(spark, {"spark.sql.shuffle.partitions": "4"})
-        assert c is not a
+    def test_floor_of_one_partition(self, spark):
+        s2 = exec_profile(spark, 0)
+        assert s2.conf.get("spark.sql.shuffle.partitions") == "1"
+        assert s2.conf.get("spark.sql.adaptive.enabled") == "false"
 
-    def test_engine_conventions_inherited(self, spark):
-        # builder-level conventions ride the SparkConf into newSession
-        s2 = exec_profile(spark, PROFILE)
-        assert s2.conf.get("spark.sql.session.timeZone") == "UTC"
+    @pytest.mark.parametrize("over", [0, 1, 10**6])
+    def test_at_or_above_cap_aqe_on_with_cap(self, spark, over):
+        s2 = exec_profile(spark, _cap(spark) * _advisory(spark) + over)
+        assert s2.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert s2.conf.get("spark.sql.shuffle.partitions") == str(_cap(spark))
+
+    def test_cached_per_profile(self, spark):
+        n = 2 * _advisory(spark)
+        a = exec_profile(spark, n)
+        assert exec_profile(spark, n) is a
+        assert exec_profile(spark, 5 * _advisory(spark)) is not a
 
     def test_mimic_mode_noop(self, spark, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_MIMIC", "1")
-        assert exec_profile(spark, PROFILE) is spark
+        assert exec_profile(spark, 0) is spark
+
+    def test_engine_conventions_inherited(self, spark):
+        # UTC and the other pins are set on each child at creation
+        for n in (0, _cap(spark) * _advisory(spark)):
+            s2 = exec_profile(spark.newSession(), n)
+            assert {k: s2.conf.get(k) for k in PINS} == PINS
+
+    def test_registered_queries_leave_caller_conf_alone(self, spark, sf_dir):
+        caller = spark.newSession()
+        before = dict(caller.conf.getAll)
+        specs = all_queries()
+        for name in ("q19_multi_join_revenue", "q99_dedup_components"):
+            assert specs[name].fn(caller, sf_dir).count() > 0
+        assert dict(caller.conf.getAll) == before
 
 
 class TestTruncateLineage:
