@@ -1,5 +1,6 @@
 """Benchmark runner: all declared queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+SPARK_GRAFT_CPUS defaults to the cores this process may run on.
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -41,7 +42,7 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 from mb8600_clickhouse_spark.queries import all_queries  # noqa: E402
-from mb8600_clickhouse_spark.session import get_spark  # noqa: E402
+from mb8600_clickhouse_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def run_to_completion(df) -> None:
@@ -59,7 +60,7 @@ def _timed(fn) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     def _load1() -> float:
         try:
             return os.getloadavg()[0]

@@ -16,7 +16,23 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .tables import pin_session_confs
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def default_cpus(environ=os.environ) -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on (what ``nproc`` counts)."""
+    return int(environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory(mem_total_bytes: int) -> str:
+    """The driver heap for a host with ``mem_total_bytes`` of RAM: half
+    of it, in whole MiB. The other half stays with what the heap does
+    not hold: the JVM's off-heap and metaspace, the Python workers and
+    the page cache the parquet scans read through."""
+    return f"{mem_total_bytes // 2 >> 20}m"
+
+
+DEFAULT_CPUS = default_cpus()
 
 
 def get_spark(
@@ -83,7 +99,14 @@ def get_spark(
         # min/max stats, which would blind manifest-level data skipping
         # and row-group pruning on event-time columns
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            # the host's RAM, as /proc/meminfo's MemTotal counts it
+            or default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

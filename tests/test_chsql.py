@@ -808,6 +808,17 @@ class TestSubqueryRecursion:
             "ORDER BY doc_id LIMIT 2 BY lang) s"
         )
         assert "row_number() OVER (PARTITION BY lang" in out
+        # an apostrophe in a comment or a quoted identifier before the
+        # subquery does not hide it from the masking
+        for sql in (
+            "SELECT x FROM u -- don't\nWHERE x IN "
+            "(SELECT k FROM t LIMIT 1 BY k)",
+            "SELECT `it's` FROM u WHERE x IN (SELECT k FROM t LIMIT 1 BY k)",
+            'SELECT "it\'s" FROM u WHERE x IN (SELECT k FROM t LIMIT 1 BY k)',
+        ):
+            out = rw(sql)
+            assert "row_number() OVER (PARTITION BY k" in out, out
+            assert "LIMIT 1 BY" not in out, out
 
     def test_in_subquery_rewritten(self):
         out = rw(
@@ -3177,6 +3188,12 @@ class TestWithConstants:
             rw("WITH 1 AS k SELECT count(*) AS c FROM t GROUP BY k")
         with pytest.raises(ChSqlError, match="positional"):
             rw("WITH 2 AS k SELECT a, b FROM t ORDER BY a, k DESC")
+        # an apostrophe in a comment or identifier in the list does not
+        # hide the bare item
+        with pytest.raises(ChSqlError, match="positional"):
+            rw("WITH 2 AS k SELECT v, count() FROM t GROUP BY /* it's */ k")
+        with pytest.raises(ChSqlError, match="positional"):
+            rw("WITH 2 AS k SELECT v, count() FROM t GROUP BY `a'b`, k")
         # inside a subquery block too
         with pytest.raises(ChSqlError, match="positional"):
             rw("WITH 1 AS k SELECT * FROM "
@@ -4248,8 +4265,8 @@ class TestRound11GapProbe:
         """Quotes/parens/commas inside -- and /* */ comments must not
         desync the scanner: an apostrophe in a block comment
         previously read as string-start and silently turned every
-        rewrite after it OFF (round 11 probe; _scan and _LazyState
-        re-fuzzed with comment tokens, 1500 trials)."""
+        rewrite after it OFF (round 11 probe). The lexer's views are
+        property-tested against each other in test_chsql_lexer.py."""
         got = rw("SELECT /* block 'quote */ sumIf(v, ok) FROM t")
         assert "CASE WHEN ok THEN v END" in got
         got2 = rw("SELECT 1 AS a -- don't\n, sumIf(v, ok) FROM t")
@@ -4337,6 +4354,9 @@ class TestRound11GapProbe:
         assert "CASE WHEN ok THEN v END" in got
         got2 = rw(r"SELECT 'a\\' AS s, uniq(x) FROM t")
         assert "approx_count_distinct" in got2
+        # a subquery inside an escaped literal is text, not a block
+        lit = r"SELECT 'a\'b (SELECT count() FROM t)' AS s FROM u"
+        assert rw(lit) == lit
         spark.range(1).selectExpr(
             "true AS ok", "2.0 AS v"
         ).createOrReplaceTempView("chsql_esc_t")
@@ -4584,6 +4604,11 @@ class TestRound12GapProbe:
             rw("SELECT 1; SELECT 2")
         with pytest.raises(ChSqlError, match="multi-statement"):
             rw("INSERT INTO t VALUES (1); SELECT 1")
+        # an apostrophe in a quoted identifier does not hide the ';'
+        with pytest.raises(ChSqlError, match="multi-statement"):
+            rw('SELECT "it\'s" AS a FROM t; SELECT 2')
+        with pytest.raises(ChSqlError, match="multi-statement"):
+            rw("SELECT `it's` AS a FROM t; SELECT 2")
         # ';' inside a string or comment is NOT a statement separator
         assert rw("SELECT 'a;b' AS s") == "SELECT 'a;b' AS s"
         # a ';' inside a MID-statement comment is opaque (the comment

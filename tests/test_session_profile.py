@@ -1,5 +1,6 @@
 """session.exec_profile — the size-derived execution policy, applied by
-the query registry on a session-local child."""
+the query registry on a session-local child — and the host-derived
+session defaults."""
 
 from __future__ import annotations
 
@@ -7,7 +8,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from mb8600_clickhouse_spark.queries import all_queries
-from mb8600_clickhouse_spark.session import _parse_bytes, exec_profile, truncate_lineage
+from mb8600_clickhouse_spark.session import (
+    _parse_bytes,
+    default_cpus,
+    default_driver_memory,
+    exec_profile,
+    truncate_lineage,
+)
 
 PINS = {
     "spark.sql.session.timeZone": "UTC",
@@ -24,6 +31,25 @@ def _advisory(spark) -> int:
 
 def _cap(spark) -> int:
     return 4 * spark.sparkContext.defaultParallelism
+
+
+class TestHostDefaults:
+    """Pure derivations: no second JVM is started."""
+
+    def test_cpus_from_env_else_affinity(self):
+        import os
+
+        assert default_cpus({"SPARK_GRAFT_CPUS": "3"}) == 3
+        assert default_cpus({}) == len(os.sched_getaffinity(0))
+        assert default_cpus({"SPARK_GRAFT_CPUS": ""}) == len(
+            os.sched_getaffinity(0)
+        )
+
+    def test_driver_memory_is_half_of_ram(self):
+        assert default_driver_memory(16 << 30) == "8192m"
+        # a host whose /proc/meminfo reads MemTotal: 16479424 kB
+        assert default_driver_memory(16_479_424 << 10) == "8046m"
+        assert _parse_bytes(default_driver_memory(3 << 30)) == 1536 << 20
 
 
 class TestExecProfile:
