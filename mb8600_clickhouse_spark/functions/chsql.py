@@ -97,18 +97,29 @@ double-quoted identifiers, comments) and the structural characters
 ``( ) [ ] ,``. Every pass sees the statement through it (``_lex``,
 ``_Cursor``, ``_code_marks``), so commas, parens, quotes and keywords
 inside literals, identifiers or comments never confuse clause
-detection, and parens are matched in code only. This is deliberately
-a *pre-rewriter*, not a full CH grammar: the forms above are the
-complete non-scalar surface a reference-deployment dashboard uses
-(reference ``tables.sql:5-30`` workload; VERDICT r04 "What's missing
-#1").
+detection, and parens are matched in code only.
+
+One function rewrites calls: ``_rewrite_calls(sql, pattern, rule)``
+finds each call in code whose head matches ``pattern`` (compiled at
+import), matches its parens through the lexer, rewrites the arguments
+first and hands ``rule`` the head match and the argument text; the
+rule returns the replacement, or None to keep the call. Every
+call-shaped pass is rules over it. One rule, ``_gate_if``, serves every
+``-If`` spelling: it peels ``If`` off the name, gates each value
+argument with ``CASE WHEN <last argument> THEN v END`` and leaves the
+rest of the name to the base aggregate's own rule.
+
+This is deliberately a *pre-rewriter*, not a full CH grammar: the
+forms above are the complete non-scalar surface a reference-deployment
+dashboard uses (reference ``tables.sql:5-30`` workload; VERDICT r04
+"What's missing #1").
 """
 
 from __future__ import annotations
 
 import re
 
-from .clickhouse import register_clickhouse_functions
+from .clickhouse import CLICKHOUSE_SCALARS, register_clickhouse_functions
 
 __all__ = ["rewrite_clickhouse_sql", "ChSqlError"]
 
@@ -199,9 +210,10 @@ class _Cursor:
 
     __slots__ = ("sql", "toks", "tok", "depth")
 
-    def __init__(self, sql: str) -> None:
+    def __init__(self, sql: str, pos: int = 0) -> None:
+        # from ``pos`` on, which must lie in code; depths are relative
         self.sql = sql
-        self.toks = _TOKEN.finditer(sql)
+        self.toks = _TOKEN.finditer(sql, pos)
         self.tok = next(self.toks, None)
         self.depth = 0
 
@@ -223,21 +235,28 @@ class _Cursor:
         return (depth - 1 if ch == ")" else depth), False
 
 
-def _top_level_matches(sql: str, pattern: str) -> list[re.Match]:
+def _ci(pattern: str | re.Pattern) -> re.Pattern:
+    """``pattern`` compiled case-insensitively (a compiled one as is)."""
+    if isinstance(pattern, str):
+        return re.compile(pattern, re.IGNORECASE)
+    return pattern
+
+
+def _top_level_matches(sql: str, pattern: str | re.Pattern) -> list[re.Match]:
     """Regex matches of `pattern` (case-insensitive) that start in code
     at paren depth 0."""
     cur, out = None, []
-    for m in re.finditer(pattern, sql, re.IGNORECASE):
+    for m in _ci(pattern).finditer(sql):
         cur = cur or _Cursor(sql)
         if cur.at(m.start()) == (0, False):
             out.append(m)
     return out
 
 
-def _first_match(sql: str, pattern: str) -> re.Match | None:
+def _first_match(sql: str, pattern: str | re.Pattern) -> re.Match | None:
     """First regex match (case-insensitive) that starts in code."""
     cur = None
-    for m in re.finditer(pattern, sql, re.IGNORECASE):
+    for m in _ci(pattern).finditer(sql):
         cur = cur or _Cursor(sql)
         if not cur.at(m.start())[1]:
             return m
@@ -280,6 +299,93 @@ def _split_top_commas(s: str) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
+# the call rewriter: find each call, match its parens, hand it to a rule
+# ---------------------------------------------------------------------------
+_NEXT_LIST = re.compile(r"\s*\(")
+
+
+def _call_pattern(names) -> re.Pattern:
+    """The call head ``name(`` for any of ``names`` (case-insensitive),
+    the name in group 1."""
+    return re.compile(rf"\b({'|'.join(names)})\s*\(", re.IGNORECASE)
+
+
+def _rewrite_calls(
+    sql: str,
+    pattern: str | re.Pattern,
+    rule,
+    *,
+    parametric: bool = False,
+    span: bool = False,
+) -> str:
+    """Rewrite every call in code whose head matches ``pattern`` (which
+    ends at the call's ``(``; a string compiles case-insensitively).
+
+    Innermost first: ``rule(m, args)`` gets the head match (``m.string``
+    is the text rewritten so far, this call's arguments included) and
+    the argument text. With ``parametric`` it gets ``rule(m, params,
+    args)`` for ``name(params)(args)``, ``args`` None when no second
+    list follows; with ``span`` also the index just past the call, and
+    it may return ``(text, end)`` to replace through ``end``. The rule
+    returns the replacement, which is not rescanned, or None to keep
+    the call. Raises ``ChSqlError`` on a call with no closing paren."""
+    return _calls_between(
+        sql, 0, len(sql), _ci(pattern), rule, parametric, span
+    )[0]
+
+
+def _calls_between(sql, pos, end, pattern, rule, parametric, span):
+    """``_rewrite_calls`` over ``sql[pos:end]`` (``pos`` in code);
+    returns the new text and where ``end`` moved to."""
+    base, cur = pos, None
+    while m := pattern.search(sql, pos, end):
+        s = m.start()
+        cur = cur or _Cursor(sql, base)
+        if cur.at(s)[1]:
+            pos = m.end()
+            continue
+        lists, o, stop = [], m.end() - 1, end
+        while o is not None:
+            c = _match_paren(sql, o)
+            n = len(sql)
+            sql, c = _calls_between(
+                sql, o + 1, c, pattern, rule, parametric, span
+            )
+            end += len(sql) - n
+            lists.append(sql[o + 1 : c])
+            nxt = _NEXT_LIST.match(sql, c + 1, end) if parametric else None
+            o = nxt.end() - 1 if nxt and len(lists) == 1 else None
+            stop = c + 1
+        if parametric and len(lists) == 1:
+            lists.append(None)
+        m = pattern.match(sql, s)
+        rep = rule(m, *lists, stop) if span else rule(m, *lists)
+        if isinstance(rep, tuple):
+            rep, stop = rep
+        if rep is not None:
+            sql = sql[:s] + rep + sql[stop:]
+            end += len(rep) - (stop - s)
+            stop = s + len(rep)
+        base = pos = stop
+        cur = None
+    return sql, end
+
+
+def _sub_code(sql: str, pattern: str | re.Pattern, repl) -> str:
+    """``pattern.sub(repl, sql)`` over the matches that start in code
+    (a string pattern compiles case-insensitively); replacements are
+    not rescanned."""
+    cur = None
+
+    def sub(m: re.Match) -> str:
+        nonlocal cur
+        cur = cur or _Cursor(sql)
+        return m.group(0) if cur.at(m.start())[1] else repl(m)
+
+    return _ci(pattern).sub(sub, sql)
+
+
+# ---------------------------------------------------------------------------
 # 1. aggregate-combinator call syntax (pure expression rewrites)
 # ---------------------------------------------------------------------------
 _QUANTILE_MAP = {
@@ -292,534 +398,376 @@ _QUANTILE_MAP = {
     "quantiledeterministic": "percentile_approx",
     "quantile": "percentile_approx",
 }
-_IF_MAP = {
-    "sumif": "sum",
-    "avgif": "avg",
-    "minif": "min",
-    "maxif": "max",
-    # anyIf is NOT here: ClickHouse aggregates skip NULLs, and the -If
-    # CASE gate introduces them, so any_value needs its ignoreNulls
-    # flag — the -If pass special-cases it (ADVICE r10)
-    "uniqif": "approx_count_distinct",
+#: the aggregates an -If call peels down to: every -If spelling is
+#: ``<base>If``, and the stacked forms add -OrNull/-OrDefault on either
+#: side of the If (CH appends combinators left to right, and accepts
+#: both orders with identical semantics)
+_IF_CALL = re.compile(
+    r"\b(sumArray|minArray|maxArray|avgArray|countArray|uniqExactArray"
+    r"|countDistinct|quantilesExact|quantilesTDigest|quantilesTiming"
+    r"|quantiles|quantileExact|quantileTDigest|quantileTiming|quantile"
+    r"|medianExact|medianTiming|median|argMax|argMin|uniqExact|uniq"
+    r"|sum|count|avg|min|max|any)"
+    r"(If|IfOrNull|IfOrDefault|OrNullIf|OrDefaultIf)\s*\(",
+    re.IGNORECASE,
+)
+#: the bases that take -OrNull/-OrDefault stacked on -If
+_IF_STACKABLE = frozenset(
+    ("sum", "count", "avg", "min", "max", "any", "uniq", "uniqexact")
+)
+#: each base's value arguments (the gated ones, before the condition)
+_IF_VALUES = {
+    "argmax": ("x", "ord"), "argmin": ("x", "ord"), "count": (),
+    **dict.fromkeys(
+        ("sumarray", "minarray", "maxarray", "avgarray", "countarray",
+         "uniqexactarray"),
+        ("array",),
+    ),
 }
 
 
-def _rewrite_combinators(sql: str) -> str:
-    # STACKED combinators first (round 10, probing wave): CH appends
-    # combinators left-to-right (sum -> sumIf -> sumIfOrNull). Each
-    # stacked form peels its -If into the CASE gate and re-spells as
-    # the single-combinator form the later passes already bridge —
-    # CH also accepts the OrNull/OrDefault-first spelling, and the
-    # semantics are identical, so both orders normalize the same way.
-    while True:
-        m = _first_match(
-            sql,
-            r"\b(sum|count|avg|min|max|any|uniq|uniqExact)"
-            r"(IfOrNull|OrNullIf|IfOrDefault|OrDefaultIf)\s*\(",
+def _gate_if(m, params: str, args: str | None) -> str | None:
+    """The -If rule: ``<base>If(v..., cond)`` -> ``<base>(CASE WHEN
+    cond THEN v END, ...)``, each value argument gated; the base's own
+    rule (a later step of this pass) finishes the call.
+
+    The gate's misses are NULLs, which every base aggregate skips:
+    approx_count_distinct (uniqIf), count(DISTINCT ...) (uniqExactIf,
+    and countDistinctIf, CH's alias of it), max_by/min_by over a gated
+    ordering (argMaxIf), the -Array folds over a NULL array (-ArrayIf),
+    and any_value through its ignoreNulls flag — without it a leading
+    non-match masks real matching values (ADVICE r10). The parametric
+    quantile bases keep their level list, ``quantileIf(p)(x, cond)``.
+    A stacked -OrNull/-OrDefault applies its template here, because
+    the array-vocabulary pass that holds the templates ran already.
+    ``countIf`` stays the ``count_if`` rename."""
+    base, comb = m.group(1), m.group(2)
+    low = base.lower()
+    tail = comb.lower().replace("if", "", 1)
+    quantile = low.startswith("quantile")
+    if (tail and low not in _IF_STACKABLE) or (low == "count" and not tail):
+        return None
+    if quantile and args is None:
+        raise ChSqlError(f"{base}If(p) must be followed by an argument list")
+    if not quantile and args is not None:
+        return None  # a one-list -If followed by a second list: not CH
+    tmpl = _ARRAY_TEMPLATES.get(low + tail) if tail else None
+    if tail and tmpl is None:
+        leg = "OrNull" if tail == "ornull" else "OrDefault"
+        raise ChSqlError(
+            f"{low}{comb}: the -{leg} leg is not bridged for "
+            f"{low} (min/max -OrDefault needs the column TYPE's zero "
+            "value, unknowable textually; uniq* -OrNull diverges when "
+            "matching rows are all NULL) — spell the fallback with "
+            "coalesce/nullif around the -If form"
         )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        # normalize case BEFORE the membership check: _first_match is
-        # case-insensitive, so base can arrive as 'Sum'/'ANY' — the
-        # template lookup lowercases, and the ok_bases guard must too
-        # or a bridgeable form raises 'not bridged' (ADVICE r10)
-        base = m.group(1).lower()
-        tail = "OrNull" if "ornull" in m.group(2).lower() else "OrDefault"
-        ok_bases = (
-            ("sum", "count", "avg", "min", "max", "any")
-            if tail == "OrNull"
-            else ("sum", "count", "avg")
+    names = _IF_VALUES.get(low, ("expr",))
+    vals = _split_top_commas(args if quantile else params)
+    if len(vals) != len(names) + 1:
+        call = f"{base}{comb}(p)" if quantile else f"{base}{comb}"
+        raise ChSqlError(f"{call} expects ({', '.join((*names, 'cond'))})")
+    cond = vals.pop()
+    gated = [f"CASE WHEN {cond} THEN {v} END" for v in vals or ["1"]]
+    if tmpl:  # .replace, not .format: the arguments may contain braces
+        return tmpl[1].replace("{0}", gated[0])
+    if quantile:
+        return f"{low}({params})({gated[0]})"
+    return f"{low}({', '.join(gated)})"
+
+
+_QUANTILE_CALL = re.compile(
+    r"\b(quantilesExact|quantilesTDigest|quantilesTiming|quantiles"
+    r"|quantileExact|quantileTDigest|quantileTiming"
+    r"|quantileDeterministic|quantile)\s*\(",
+    re.IGNORECASE,
+)
+
+
+def _quantile(m, p: str, x: str | None) -> str:
+    """quantile*(p)(x) and the array-returning quantiles*(p1, p2)(x):
+    two adjacent balanced argument lists. The plural forms pass the
+    probability LIST as an array argument (Spark's percentile /
+    percentile_approx both accept one and return array<double> —
+    exactly ClickHouse's quantiles* contract)."""
+    if x is None:
+        raise ChSqlError(
+            f"{m.group(1)}(p) must be followed by an argument list"
         )
-        if base not in ok_bases:
+    p, x = p.strip(), x.strip()
+    name = m.group(1).lower()
+    if name == "quantiledeterministic":
+        xa = _split_top_commas(x)
+        if len(xa) != 2:
             raise ChSqlError(
-                f"{base}{m.group(2)}: the -{tail} leg is not bridged for "
-                f"{base} (min/max -OrDefault needs the column TYPE's zero "
-                "value, unknowable textually; uniq* -OrNull diverges when "
-                "matching rows are all NULL) — spell the fallback with "
-                "coalesce/nullif around the -If form"
+                "quantileDeterministic(p)(x, determinator) takes "
+                "two arguments"
             )
-        if base == "count":
-            if len(args) != 1:
-                raise ChSqlError(f"count{m.group(2)} expects (cond)")
-            case = f"CASE WHEN {args[0]} THEN 1 END"
-        else:
-            if len(args) != 2:
-                raise ChSqlError(f"{base}{m.group(2)} expects (expr, cond)")
-            case = f"CASE WHEN {args[1]} THEN {args[0]} END"
-        # emit the FINAL spelling directly (the single-combinator
-        # -OrNull/-OrDefault templates live in the array-vocabulary
-        # pass, which ran BEFORE this one): .replace, not .format —
-        # the argument text may itself contain braces
-        tmpl = _ARRAY_TEMPLATES[f"{base}{tail}".lower()][1]
-        sql = sql[: m.start()] + tmpl.replace("{0}", case) + sql[c + 1 :]
+        x = xa[0]  # the determinator seeds CH's sampling; dropped
+    if name.startswith("quantiles"):
+        fn = _QUANTILE_MAP[name.replace("quantiles", "quantile", 1)]
+        return f"{fn}({x}, array({p}))"
+    return f"{_QUANTILE_MAP[name]}({x}, {p})"
 
-    # -ArrayIf: the aggregate over array ELEMENTS of matching rows —
-    # gate the ARRAY to NULL (size(NULL)/array_min(NULL) are NULL in
-    # Spark, which every -Array fold then skips) and re-spell as -Array
-    while True:
-        m = _first_match(
-            sql,
-            r"\b(sumArray|minArray|maxArray|avgArray|countArray|"
-            r"uniqExactArray)If\s*\(",
-        )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2:
-            raise ChSqlError(f"{m.group(1)}If expects (array, cond)")
-        case = f"CASE WHEN {args[1]} THEN {args[0]} END"
-        sql = sql[: m.start()] + f"{m.group(1)}({case})" + sql[c + 1 :]
 
-    # countDistinctIf == uniqExactIf (countDistinct is CH's alias for
-    # uniqExact); quantile/median -If peel into the CASE gate and the
-    # plain form (finished by the quantile passes below)
-    while True:
-        m = _first_match(sql, r"\bcountDistinctIf\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        sql = sql[: m.start()] + f"uniqExactIf({sql[o + 1:c]})" + sql[c + 1 :]
-    while True:
-        m = _first_match(
-            sql,
-            r"\b(quantilesExact|quantilesTDigest|quantilesTiming|quantiles"
-            r"|quantileExact|quantileTDigest|quantileTiming|quantile"
-            r"|medianExact|medianTiming|median)If\s*\(",
-        )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        name = m.group(1)
-        if name.lower().startswith("median"):
-            args = _split_top_commas(sql[o + 1 : c])
-            if len(args) != 2:
-                raise ChSqlError(f"{name}If expects (expr, cond)")
-            rep = f"{name}(CASE WHEN {args[1]} THEN {args[0]} END)"
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-            continue
-        # parametric: quantile*If(p)(x, cond)
-        rest = sql[c + 1 :]
-        m2 = re.match(r"\s*\(", rest)
-        if not m2:
-            raise ChSqlError(
-                f"{name}If(p) must be followed by an argument list"
-            )
-        x_open = c + 1 + m2.end() - 1
-        x_close = _match_paren(sql, x_open)
-        args = _split_top_commas(sql[x_open + 1 : x_close])
-        if len(args) != 2:
-            raise ChSqlError(f"{name}If(p)(x, cond) takes two arguments")
-        rep = (
-            f"{name}({sql[o + 1:c]})"
-            f"(CASE WHEN {args[1]} THEN {args[0]} END)"
-        )
-        sql = sql[: m.start()] + rep + sql[x_close + 1 :]
-
-    # quantile*(p)(x) and the array-returning quantiles*(p1, p2)(x):
-    # two adjacent balanced argument lists. The plural forms pass the
-    # probability LIST as an array argument (Spark's percentile /
-    # percentile_approx both accept one and return array<double> —
-    # exactly ClickHouse's quantiles* contract).
-    while True:
-        m = _first_match(
-            sql,
-            r"\b(quantilesExact|quantilesTDigest|quantilesTiming|quantiles"
-            r"|quantileExact|quantileTDigest|quantileTiming"
-            r"|quantileDeterministic|quantile)\s*\(",
-        )
-        if not m:
-            break
-        p_open = sql.index("(", m.end() - 1)
-        p_close = _match_paren(sql, p_open)
-        rest = sql[p_close + 1 :]
-        m2 = re.match(r"\s*\(", rest)
-        if not m2:
-            raise ChSqlError(
-                f"{m.group(1)}(p) must be followed by an argument list: "
-                f"...{sql[m.start():p_close + 20]!r}"
-            )
-        x_open = p_close + 1 + m2.end() - 1
-        x_close = _match_paren(sql, x_open)
-        p = sql[p_open + 1 : p_close].strip()
-        x = sql[x_open + 1 : x_close].strip()
-        name = m.group(1).lower()
-        if name == "quantiledeterministic":
-            xa = _split_top_commas(x)
-            if len(xa) != 2:
-                raise ChSqlError(
-                    "quantileDeterministic(p)(x, determinator) takes "
-                    "two arguments"
-                )
-            x = xa[0]  # the determinator seeds CH's sampling; dropped
-        if name.startswith("quantiles"):
-            fn = _QUANTILE_MAP[name.replace("quantiles", "quantile", 1)]
-            rep = f"{fn}({x}, array({p}))"
-        else:
-            fn = _QUANTILE_MAP[name]
-            rep = f"{fn}({x}, {p})"
-        sql = sql[: m.start()] + rep + sql[x_close + 1 :]
-
-    # median family == quantile*(0.5): argument-position rewrites.
-    # medianExactWeighted re-spells as quantileExactWeighted(0.5)(...)
-    # and is finished by _rewrite_weighted_aggs later in the pipeline
-    while True:
-        m = _first_match(
-            sql, r"\b(medianExactWeighted|medianExact|medianTiming"
-                 r"|median)\s*\("
-        )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        arg = sql[o + 1 : c].strip()
-        name = m.group(1).lower()
-        if name == "medianexactweighted":
-            rep = f"quantileExactWeighted(0.5)({arg})"
-        elif name == "medianexact":
-            rep = f"percentile({arg}, 0.5)"
-        else:
-            rep = f"percentile_approx({arg}, 0.5)"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # -State / -Merge combinators (the AggregatingMergeTree materialized-
-    # view pattern, round 7): a partial aggregate STATE is stored per
-    # fine-grained group, then MERGED at query time across groups. The
-    # Spark spellings are exact for the algebraic aggregates (a count/
-    # sum/min/max partial state IS its value; merge = sum/sum/min/max),
-    # a (sum, count) struct for avg, and the DataSketches HLL pair
-    # (hll_sketch_agg / hll_union_agg + estimate) for uniq — the same
-    # mergeable-sketch contract as ClickHouse's uniqState, different
-    # sketch constants (estimates are engine-specific either way; both
-    # promise merged == single-pass, which is what q127 verifies).
-    for ch, fmt in (
-        (r"\buniqState\s*\(", "hll_sketch_agg({x})"),
-        (r"\buniqMerge\s*\(", "hll_sketch_estimate(hll_union_agg({x}))"),
-        (r"\bcountState\s*\(", "count({star})"),
-        (r"\bcountMerge\s*\(", "sum({x})"),
-        (r"\bsumState\s*\(", "sum({x})"),
-        (r"\bsumMerge\s*\(", "sum({x})"),
-        (r"\bminState\s*\(", "min({x})"),
-        (r"\bminMerge\s*\(", "min({x})"),
-        (r"\bmaxState\s*\(", "max({x})"),
-        (r"\bmaxMerge\s*\(", "max({x})"),
-        (
-            r"\bavgState\s*\(",
-            "named_struct('s', sum({x}), 'c', count({x}))",
-        ),
-        # CAST to double BEFORE dividing: CH avg returns Float64, and a
-        # decimal-state sum would otherwise divide in decimal (scale
-        # truncation at 6 digits diverges from the IEEE quotient)
-        (r"\bavgMerge\s*\(", "(CAST(sum({x}.s) AS DOUBLE) / sum({x}.c))"),
-    ):
-        while True:
-            m = _first_match(sql, ch)
-            if not m:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            x = sql[o + 1 : c].strip()
-            # str.replace, not .format: the argument text may itself
-            # contain braces (string literals)
-            rep = fmt.replace("{x}", x).replace("{star}", x or "*")
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # uniqExact(x) -> count(DISTINCT x); uniq(x) -> approx_count_distinct(x)
-    while True:
-        m = _first_match(sql, r"\b(uniqExact|uniq)\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = sql[o + 1 : c].strip()
-        if m.group(1).lower() == "uniqexact":
-            rep = f"count(DISTINCT {args})"
-        else:
-            rep = f"approx_count_distinct({args})"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # direct aggregate-name renames with EXACT Spark builtins:
+#: median family == quantile*(0.5): medianExactWeighted re-spells as
+#: quantileExactWeighted(0.5)(...), finished by _rewrite_weighted_aggs
+_MEDIAN = {
+    "medianexactweighted": "quantileExactWeighted(0.5)({})",
+    "medianexact": "percentile({}, 0.5)",
+    "mediantiming": "percentile_approx({}, 0.5)",
+    "median": "percentile_approx({}, 0.5)",
+}
+#: -State / -Merge combinators (the AggregatingMergeTree materialized-
+#: view pattern, round 7): a partial aggregate STATE is stored per
+#: fine-grained group, then MERGED at query time across groups. The
+#: Spark spellings are exact for the algebraic aggregates (a count/
+#: sum/min/max partial state IS its value; merge = sum/sum/min/max),
+#: a (sum, count) struct for avg, and the DataSketches HLL pair
+#: (hll_sketch_agg / hll_union_agg + estimate) for uniq — the same
+#: mergeable-sketch contract as ClickHouse's uniqState, different
+#: sketch constants (estimates are engine-specific either way; both
+#: promise merged == single-pass, which is what q127 verifies).
+_STATE_MERGE = {
+    "uniqstate": "hll_sketch_agg({x})",
+    "uniqmerge": "hll_sketch_estimate(hll_union_agg({x}))",
+    "countstate": "count({star})",
+    "countmerge": "sum({x})",
+    "sumstate": "sum({x})",
+    "summerge": "sum({x})",
+    "minstate": "min({x})",
+    "minmerge": "min({x})",
+    "maxstate": "max({x})",
+    "maxmerge": "max({x})",
+    "avgstate": "named_struct('s', sum({x}), 'c', count({x}))",
+    # CAST to double BEFORE dividing: CH avg returns Float64, and a
+    # decimal-state sum would otherwise divide in decimal (scale
+    # truncation at 6 digits diverges from the IEEE quotient)
+    "avgmerge": "(CAST(sum({x}.s) AS DOUBLE) / sum({x}.c))",
+}
+#: direct aggregate-name renames with EXACT Spark builtins
+_AGG_RENAMES = {
     # argMax/argMin == max_by/min_by (value at the extremum of the 2nd
-    # arg), uniqHLL12 == approx_count_distinct (both HLL-class), any ==
-    # any_value (both "arbitrary element" — equally nondeterministic,
-    # don't rely on insert order in either engine)
-    for ch, sp in (
-        (r"\bargMax\s*\(", "max_by("),
-        (r"\bargMin\s*\(", "min_by("),
-        # the uniq* sketch family all map to Spark's HLL aggregate
-        (r"\buniqHLL12\s*\(", "approx_count_distinct("),
-        (r"\buniqCombined64\s*\(", "approx_count_distinct("),
-        (r"\buniqCombined\s*\(", "approx_count_distinct("),
-        (r"\buniqTheta\s*\(", "approx_count_distinct("),
-        # anyLast moved to the paren-aware any pass below: CH's any
-        # family skips NULLs, so the rename needs any_value's
-        # ignoreNulls flag, not just the name (ADVICE r10)
-        (r"\bcountIf\s*\(", "count_if("),  # count_if is exact too
-        # array-of-group aggregates: both engines collect in arbitrary
-        # (parallelism-dependent) order — identical contracts
-        (r"\bgroupUniqArray\s*\(", "collect_set("),
-        (r"\bgroupArray\s*\(", "collect_list("),
-        # bare ascending arraySort only (CH's lambda form would need a
-        # comparator translation this rename cannot express)
-        (r"\barraySort\s*\(", "sort_array("),
-        # bitwise aggregates / scalar: exact integer contracts
-        (r"\bgroupBitAnd\s*\(", "bit_and("),
-        (r"\bgroupBitOr\s*\(", "bit_or("),
-        (r"\bgroupBitXor\s*\(", "bit_xor("),
-        (r"\bbitCount\s*\(", "bit_count("),
-        # moment aggregates: identical population/sample contracts
-        (r"\bstddevPop\s*\(", "stddev_pop("),
-        (r"\bstddevSamp\s*\(", "stddev_samp("),
-        (r"\bvarPop\s*\(", "var_pop("),
-        (r"\bvarSamp\s*\(", "var_samp("),
-        # covarPop/covarSamp are NOT renamed to the native functions:
-        # their streaming accumulation is partition-order-dependent in
-        # the last ulps, so _rewrite_stats_aggs expands them to exact
-        # scaled-moment algebra instead (hash-verifiable, q164)
-    ):
-        while True:
-            m = _first_match(sql, ch)
-            if not m:
-                break
-            sql = sql[: m.start()] + sp + sql[m.end() :]
-    # window navigation: CH's lagInFrame/leadInFrame respect the window
-    # FRAME where Spark's lag/lead ignore it — identical ONLY for the
-    # default (whole-partition) frame. An explicit ROWS/RANGE/GROUPS
-    # spec in the OVER clause (or a named window this pass cannot see
-    # into) would silently diverge, so those forms are loud rejects
-    # (ADVICE r08: the blind rename also fired on framed windows).
-    while True:
-        m = _first_match(sql, r"\b(lagInFrame|leadInFrame)\s*\(")
-        if not m:
-            break
-        fn = m.group(1)
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        om = re.match(
-            r"\s*OVER\s*(?:(\()|(\w+))", sql[c + 1 :], re.IGNORECASE
-        )
-        if om:
-            if om.group(2):  # OVER <named window>: resolve its def
-                wname = om.group(2)
-                wm = _first_match(
-                    sql, rf"\bWINDOW\s+{re.escape(wname)}\s+AS\s*\("
-                )
-                if not wm:
-                    raise ChSqlError(
-                        f"{fn} OVER {wname}: window definition not "
-                        "found at this nesting level — cannot verify "
-                        "the frame spec (only the default frame "
-                        "bridges to Spark lag/lead)"
-                    )
-                oo = sql.index("(", wm.end() - 1)
-            else:
-                oo = c + 1 + om.end() - 1
-            oc = _match_paren(sql, oo)
-            over = sql[oo + 1 : oc]
-            if re.search(r"\b(ROWS|RANGE|GROUPS)\b", over, re.IGNORECASE):
-                raise ChSqlError(
-                    f"{fn} with an explicit window frame: Spark's "
-                    "lag/lead ignore frames, so the rename would "
-                    "silently change semantics — remove the frame spec "
-                    "(the default whole-partition frame is the only "
-                    "bridged form) or spell the frame navigation with "
-                    "nth_value/first_value over the frame instead"
-                )
-        sql = sql[: m.start()] + ("lag(" if fn == "lagInFrame" else "lead(") + sql[o + 1 :]
+    # arg); any/anyLast == any_value is NOT here: CH's any family skips
+    # NULLs, so it needs the ignoreNulls flag (the any rule, ADVICE r10)
+    "argmax": "max_by",
+    "argmin": "min_by",
+    # the uniq* sketch family all map to Spark's HLL aggregate (both
+    # HLL-class)
+    "uniqhll12": "approx_count_distinct",
+    "uniqcombined64": "approx_count_distinct",
+    "uniqcombined": "approx_count_distinct",
+    "uniqtheta": "approx_count_distinct",
+    "countif": "count_if",  # count_if is exact too
+    # array-of-group aggregates: both engines collect in arbitrary
+    # (parallelism-dependent) order — identical contracts
+    "groupuniqarray": "collect_set",
+    "grouparray": "collect_list",
+    # bare ascending arraySort only (CH's lambda form would need a
+    # comparator translation this rename cannot express)
+    "arraysort": "sort_array",
+    # bitwise aggregates / scalar: exact integer contracts
+    "groupbitand": "bit_and",
+    "groupbitor": "bit_or",
+    "groupbitxor": "bit_xor",
+    "bitcount": "bit_count",
+    # moment aggregates: identical population/sample contracts.
+    # covarPop/covarSamp are NOT renamed to the native functions: their
+    # streaming accumulation is partition-order-dependent in the last
+    # ulps, so _rewrite_stats_aggs expands them to exact scaled-moment
+    # algebra instead (hash-verifiable, q164)
+    "stddevpop": "stddev_pop",
+    "stddevsamp": "stddev_samp",
+    "varpop": "var_pop",
+    "varsamp": "var_samp",
+}
+#: a masked subquery, as ``_mask_subselects`` leaves it
+_MASKED = re.compile(r"\s*__CHSQL_SUB_\d+__\s*")
 
+
+_MEDIAN_CALL = _call_pattern(_MEDIAN)
+_STATE_MERGE_CALL = re.compile(
+    r"\b(uniq|count|sum|min|max|avg)(State|Merge)\s*\(", re.IGNORECASE
+)
+_UNIQ_CALL = _call_pattern(("uniqExact", "uniq"))
+_AGG_RENAME_CALL = _call_pattern(_AGG_RENAMES)
+_FRAME_NAV_CALL = _call_pattern(("lagInFrame", "leadInFrame"))
+_ANY_CALL = _call_pattern(("anyLast", "any"))
+_DISTINCT_CALL = _call_pattern(("sumDistinct", "avgDistinct", "countDistinct"))
+_ARRAY_AGG_CALL = _call_pattern(
+    ("sumArray", "minArray", "maxArray", "avgArray", "countArray",
+     "uniqExactArray")
+)
+_ARRAY_HOF_CALL = _call_pattern(
+    ("arrayMap", "arrayFilter", "arrayExists", "arrayAll", "arrayCount")
+)
+_COUNT_CALL = _call_pattern(("count",))
+_OVER = re.compile(r"\s*OVER\s*(?:(\()|(\w+))", re.IGNORECASE)
+_FRAME_SPEC = re.compile(r"\b(ROWS|RANGE|GROUPS)\b", re.IGNORECASE)
+
+
+def _frame_nav(m, args: str, end: int) -> str:
+    """CH's lagInFrame/leadInFrame respect the window FRAME where
+    Spark's lag/lead ignore it — identical ONLY for the default
+    (whole-partition) frame. An explicit ROWS/RANGE/GROUPS spec in the
+    OVER clause (or a named window this pass cannot see into) would
+    silently diverge, so those forms are loud rejects (ADVICE r08: the
+    blind rename also fired on framed windows)."""
+    sql, fn = m.string, m.group(1)
+    om = _OVER.match(sql, end)
+    if om:
+        if om.group(2):  # OVER <named window>: resolve its def
+            wname = om.group(2)
+            wm = _first_match(sql, rf"\bWINDOW\s+{re.escape(wname)}\s+AS\s*\(")
+            if not wm:
+                raise ChSqlError(
+                    f"{fn} OVER {wname}: window definition not "
+                    "found at this nesting level — cannot verify "
+                    "the frame spec (only the default frame "
+                    "bridges to Spark lag/lead)"
+                )
+            oo = wm.end() - 1
+        else:
+            oo = om.end() - 1
+        if _FRAME_SPEC.search(sql, oo + 1, _match_paren(sql, oo)):
+            raise ChSqlError(
+                f"{fn} with an explicit window frame: Spark's "
+                "lag/lead ignore frames, so the rename would "
+                "silently change semantics — remove the frame spec "
+                "(the default whole-partition frame is the only "
+                "bridged form) or spell the frame navigation with "
+                "nth_value/first_value over the frame instead"
+            )
+    return ("lag(" if fn == "lagInFrame" else "lead(") + args + ")"
+
+
+def _array_agg(m, a: str) -> str:
+    """-Array combinators: the aggregate applied to every ELEMENT of the
+    row arrays (CH folds arrays into the aggregate state). sum/avg
+    promote to DOUBLE (CH widens too) — exact for integer-valued
+    elements below 2^53, the fixture contract; min/max/count are
+    type-preserving; uniqExactArray collects (bounded-group contract)"""
+    a = a.strip()
+    fam = m.group(1).lower()
+    fold = (
+        f"aggregate(filter({a}, e -> e IS NOT NULL), "
+        f"CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
+    )
+    if fam == "sumarray":
+        return f"sum({fold})"
+    if fam == "avgarray":
+        # NULL-array guard on the size term: in a non-ANSI session
+        # (the engine's fixture mode) size(NULL) is legacy -1, which
+        # would silently skew the denominator — the -If gate feeds
+        # NULL arrays here by design (round 10)
+        return (
+            f"(sum({fold}) / "
+            f"sum(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS DOUBLE) "
+            f"ELSE CAST(size(filter({a}, e -> e IS NOT NULL)) "
+            f"AS DOUBLE) END))"
+        )
+    if fam == "minarray":
+        return f"min(array_min({a}))"
+    if fam == "maxarray":
+        return f"max(array_max({a}))"
+    if fam == "countarray":
+        # same size(NULL) = -1 hazard as avgArray: a NULL array row
+        # must contribute nothing, in ANSI and non-ANSI sessions
+        return (
+            f"sum(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS BIGINT) "
+            f"ELSE CAST(size({a}) AS BIGINT) END)"
+        )
+    return (  # uniqExactArray
+        f"size(array_distinct(flatten(collect_list("
+        f"filter({a}, e -> e IS NOT NULL)))))"
+    )
+
+
+def _array_hof(m, args: str) -> str:
+    """Array higher-order functions: ClickHouse's lambda syntax (x -> e)
+    is IDENTICAL to Spark's, only the function names and argument order
+    differ (CH: lambda first, arrays after; Spark: array first).
+    Two-array forms map to zip_with."""
+    args = _split_top_commas(args)
+    name = m.group(1).lower()
+    if len(args) < 2:
+        raise ChSqlError(f"{m.group(1)} expects (lambda, array...)")
+    lam, arrays = args[0], args[1:]
+    if name == "arraymap" and len(arrays) == 2:
+        return f"zip_with({arrays[0]}, {arrays[1]}, {lam})"
+    if len(arrays) != 1:
+        raise ChSqlError(
+            f"{m.group(1)} with {len(arrays)} arrays has no Spark mapping"
+        )
+    if name == "arraycount":
+        return f"size(filter({arrays[0]}, {lam}))"
+    fn = {"arraymap": "transform", "arrayfilter": "filter",
+          "arrayexists": "exists", "arrayall": "forall"}[name]
+    return f"{fn}({arrays[0]}, {lam})"
+
+
+def _rewrite_combinators(sql: str) -> str:
+    # one -If rule first: every -If spelling becomes its gated base aggregate
+    sql = _rewrite_calls(sql, _IF_CALL, _gate_if, parametric=True)
+    sql = _rewrite_calls(sql, _QUANTILE_CALL, _quantile, parametric=True)
+    sql = _rewrite_calls(
+        sql, _MEDIAN_CALL,
+        lambda m, a: _MEDIAN[m.group(1).lower()].format(a.strip()),
+    )
+    # str.replace, not .format: the argument text may contain braces
+    sql = _rewrite_calls(
+        sql, _STATE_MERGE_CALL,
+        lambda m, x: _STATE_MERGE[(m.group(1) + m.group(2)).lower()]
+        .replace("{x}", x.strip()).replace("{star}", x.strip() or "*"),
+    )
+    # uniqExact(x) -> count(DISTINCT x); uniq(x) -> approx_count_distinct(x)
+    sql = _rewrite_calls(
+        sql, _UNIQ_CALL,
+        lambda m, a: (
+            f"count(DISTINCT {a.strip()})"
+            if m.group(1).lower() == "uniqexact"
+            else f"approx_count_distinct({a.strip()})"
+        ),
+    )
+    sql = _rewrite_calls(
+        sql, _AGG_RENAME_CALL,
+        lambda m, a: f"{_AGG_RENAMES[m.group(1).lower()]}({a})",
+    )
+    sql = _rewrite_calls(sql, _FRAME_NAV_CALL, _frame_nav, span=True)
     # any(x)/anyLast(x) -> any_value(x, true) — CH's any family SKIPS
     # NULLs (every CH aggregate does), so the ignoreNulls flag is part
     # of the contract, not an option: any(x) over (NULL, 1) is 1 in CH
     # but NULL under a bare any_value (ADVICE r10). EXCEPT the ANSI
-    # quantified-comparison form `expr > ANY (subquery)` (preceded by
-    # a comparison operator or IN).
-    pos = 0
-    while True:
-        m = _first_match(sql[pos:], r"\b(anyLast|any)\s*\(")
-        if not m:
-            break
-        start = pos + m.start()
-        before = sql[:start].rstrip()
-        if re.search(r"([=<>!]|\bIN|\bLIKE)$", before, re.IGNORECASE):
-            pos = start + len(m.group(1))  # quantified: leave untouched
-            continue
-        o = sql.index("(", pos + m.end() - 1)
-        c = _match_paren(sql, o)
-        inner = sql[o + 1 : c].strip()
-        rep = f"any_value({inner}, true)"
-        sql = sql[:start] + rep + sql[c + 1 :]
-        # resume INSIDE the replacement, just past "any_value(": the
-        # argument text may itself contain any()/anyLast() (e.g. a
-        # scalar-subquery argument), and Spark resolves a missed bare
-        # any(bool) as bool_or — a silent divergence, not an error
-        # (ADVICE r11; restores the pre-r11 rescan behavior)
-        pos = start + len("any_value(")
-
-    # *If combinators (x, c) -> agg(CASE WHEN c THEN x END): the CASE
-    # drops non-matching rows to NULL, which every target aggregate
-    # ignores — including approx_count_distinct (uniqIf) and
-    # count(DISTINCT ...) (uniqExactIf)
-    while True:
-        m = _first_match(
-            sql, r"\b(sumIf|avgIf|minIf|maxIf|anyIf|uniqIf|uniqExactIf)\s*\("
-        )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2:
-            raise ChSqlError(f"{m.group(1)} expects (expr, cond), got {args!r}")
-        case = f"CASE WHEN {args[1]} THEN {args[0]} END"
-        if m.group(1).lower() == "uniqexactif":
-            rep = f"count(DISTINCT {case})"
-        elif m.group(1).lower() == "anyif":
-            # ignoreNulls=true: CH's any skips NULLs, and the gate's
-            # misses are NULLs — without the flag a leading non-match
-            # masks real matching values (ADVICE r10, verified)
-            rep = f"any_value({case}, true)"
-        else:
-            rep = f"{_IF_MAP[m.group(1).lower()]}({case})"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
+    # quantified comparison `expr > ANY (subquery)`, whose argument is
+    # always a masked subquery by now; Spark resolves a missed bare
+    # any(bool) as bool_or — a silent divergence, not an error
+    sql = _rewrite_calls(
+        sql, _ANY_CALL,
+        lambda m, a: None if _MASKED.fullmatch(a)
+        else f"any_value({a.strip()}, true)",
+    )
     # -Distinct combinators -> ANSI DISTINCT aggregates (exact)
-    while True:
-        m = _first_match(
-            sql, r"\b(sumDistinct|avgDistinct|countDistinct)\s*\("
-        )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        arg = sql[o + 1 : c].strip()
-        agg = m.group(1).lower().replace("distinct", "")
-        sql = (
-            sql[: m.start()] + f"{agg}(DISTINCT {arg})" + sql[c + 1 :]
-        )
-
-    # argMaxIf/argMinIf (x, ord, cond) -> max_by/min_by over gated
-    # operands (NULL ordering rows are skipped by both engines)
-    while True:
-        m = _first_match(sql, r"\b(argMaxIf|argMinIf)\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 3:
-            raise ChSqlError(f"{m.group(1)} expects (x, ord, cond)")
-        fn = "max_by" if m.group(1).lower() == "argmaxif" else "min_by"
-        rep = (
-            f"{fn}(CASE WHEN {args[2]} THEN {args[0]} END, "
-            f"CASE WHEN {args[2]} THEN {args[1]} END)"
-        )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # -Array combinators: the aggregate applied to every ELEMENT of the
-    # row arrays (CH folds arrays into the aggregate state). sum/avg
-    # promote to DOUBLE (CH widens too) — exact for integer-valued
-    # elements below 2^53, the fixture contract; min/max/count are
-    # type-preserving; uniqExactArray collects (bounded-group contract)
-    while True:
-        m = _first_match(
-            sql,
-            r"\b(sumArray|minArray|maxArray|avgArray|countArray|"
-            r"uniqExactArray)\s*\(",
-        )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        a = sql[o + 1 : c].strip()
-        fam = m.group(1).lower()
-        fold = (
-            f"aggregate(filter({a}, e -> e IS NOT NULL), "
-            f"CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
-        )
-        if fam == "sumarray":
-            rep = f"sum({fold})"
-        elif fam == "avgarray":
-            # NULL-array guard on the size term: in a non-ANSI session
-            # (the engine's fixture mode) size(NULL) is legacy -1, which
-            # would silently skew the denominator — the -ArrayIf gate
-            # feeds NULL arrays here by design (round 10)
-            rep = (
-                f"(sum({fold}) / "
-                f"sum(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS DOUBLE) "
-                f"ELSE CAST(size(filter({a}, e -> e IS NOT NULL)) "
-                f"AS DOUBLE) END))"
-            )
-        elif fam == "minarray":
-            rep = f"min(array_min({a}))"
-        elif fam == "maxarray":
-            rep = f"max(array_max({a}))"
-        elif fam == "countarray":
-            # same size(NULL) = -1 hazard as avgArray: a NULL array row
-            # must contribute nothing, in ANSI and non-ANSI sessions
-            rep = (
-                f"sum(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS BIGINT) "
-                f"ELSE CAST(size({a}) AS BIGINT) END)"
-            )
-        else:  # uniqExactArray
-            rep = (
-                f"size(array_distinct(flatten(collect_list("
-                f"filter({a}, e -> e IS NOT NULL)))))"
-            )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # array higher-order functions: ClickHouse's lambda syntax (x -> e)
-    # is IDENTICAL to Spark's, only the function names and argument
-    # order differ (CH: lambda first, arrays after; Spark: array first).
-    # Two-array forms map to zip_with.
-    while True:
-        m = _first_match(
-            sql, r"\b(arrayMap|arrayFilter|arrayExists|arrayAll|arrayCount)\s*\("
-        )
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        name = m.group(1).lower()
-        if len(args) < 2:
-            raise ChSqlError(f"{m.group(1)} expects (lambda, array...)")
-        lam, arrays = args[0], args[1:]
-        if name == "arraymap" and len(arrays) == 2:
-            rep = f"zip_with({arrays[0]}, {arrays[1]}, {lam})"
-        elif len(arrays) != 1:
-            raise ChSqlError(
-                f"{m.group(1)} with {len(arrays)} arrays has no Spark mapping"
-            )
-        elif name == "arraymap":
-            rep = f"transform({arrays[0]}, {lam})"
-        elif name == "arrayfilter":
-            rep = f"filter({arrays[0]}, {lam})"
-        elif name == "arrayexists":
-            rep = f"exists({arrays[0]}, {lam})"
-        elif name == "arrayall":
-            rep = f"forall({arrays[0]}, {lam})"
-        else:  # arrayCount
-            rep = f"size(filter({arrays[0]}, {lam}))"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
+    sql = _rewrite_calls(
+        sql, _DISTINCT_CALL,
+        lambda m, a: (
+            f"{m.group(1).lower().replace('distinct', '')}"
+            f"(DISTINCT {a.strip()})"
+        ),
+    )
+    sql = _rewrite_calls(sql, _ARRAY_AGG_CALL, _array_agg)
+    sql = _rewrite_calls(sql, _ARRAY_HOF_CALL, _array_hof)
     # bare count() -> count(*)
-    while True:
-        m = _first_match(sql, r"\bcount\s*\(\s*\)")
-        if not m:
-            break
-        sql = sql[: m.start()] + "count(*)" + sql[m.end() :]
-    return sql
+    return _rewrite_calls(
+        sql, _COUNT_CALL, lambda m, a: None if a.strip() else "count(*)"
+    )
 
 
 # ---------------------------------------------------------------------------
 # 2. arrayJoin(expr) -> LATERAL VIEW explode(expr)
 # ---------------------------------------------------------------------------
+_SCALAR_ALIASES = {n.lower(): spec for n, spec in CLICKHOUSE_SCALARS.items()}
+_SCALAR_ALIAS_CALL = _call_pattern(CLICKHOUSE_SCALARS)
+
+
 def _inline_scalar_aliases(expr: str) -> str:
     """Textually inline ``CLICKHOUSE_SCALARS`` alias calls in `expr`.
 
@@ -827,32 +775,21 @@ def _inline_scalar_aliases(expr: str) -> str:
     VIEW) cannot call a ``CREATE FUNCTION`` SQL UDF
     (UNSUPPORTED_SQL_UDF_USAGE), so the arrayJoin argument must carry
     the alias *body*, not the alias call. The bodies are pure SQL
-    expressions with simple named params, so substitution is exact."""
-    from .clickhouse import CLICKHOUSE_SCALARS
+    expressions with simple named params, so substitution is exact; a
+    body's own alias calls inline in turn."""
+    return _rewrite_calls(expr, _SCALAR_ALIAS_CALL, _inline_scalar_alias)
 
-    changed = True
-    while changed:
-        changed = False
-        for name, (sig, _ret, body) in CLICKHOUSE_SCALARS.items():
-            m = _first_match(expr, rf"\b{name}\s*\(")
-            if not m:
-                continue
-            o = expr.index("(", m.end() - 1)
-            c = _match_paren(expr, o)
-            args = _split_top_commas(expr[o + 1 : c])
-            params = [
-                p.strip().split()[0]
-                for p in _split_top_commas(sig.strip()[1:-1])
-            ]
-            if len(args) != len(params):
-                continue
-            b = body
-            for pname, a in zip(params, args):
-                # lambda repl: argument text must not be re-escaped
-                b = re.sub(rf"\b{re.escape(pname)}\b", lambda _m, a=a: f"({a})", b)
-            expr = expr[: m.start()] + f"({b})" + expr[c + 1 :]
-            changed = True
-    return expr
+
+def _inline_scalar_alias(m, args: str) -> str | None:
+    sig, _ret, body = _SCALAR_ALIASES[m.group(1).lower()]
+    args = _split_top_commas(args)
+    params = [p.strip().split()[0] for p in _split_top_commas(sig.strip()[1:-1])]
+    if len(args) != len(params):
+        return None
+    for pname, a in zip(params, args):
+        # lambda repl: argument text must not be re-escaped
+        body = re.sub(rf"\b{re.escape(pname)}\b", lambda _m, a=a: f"({a})", body)
+    return _inline_scalar_aliases(f"({body})")
 
 
 _CLAUSE_AFTER_FROM = (
@@ -1082,15 +1019,7 @@ def _subst_ident_expr(text: str, name: str, expr: str) -> str:
     reference). Advances past each replacement so an expr containing
     the alias name cannot loop."""
     pat = rf"(?<![\w.`]){re.escape(name)}\b(?!\s*[.(])"
-    rep = f"({expr})"
-    pos = 0
-    while True:
-        mm = _first_match(text[pos:], pat)
-        if not mm:
-            return text
-        start = pos + mm.start()
-        text = text[:start] + rep + text[pos + mm.end() :]
-        pos = start + len(rep)
+    return _sub_code(text, pat, lambda _m: f"({expr})")
 
 
 #: identifiers that look like implicit aliases but are (or commonly
@@ -1173,7 +1102,7 @@ def _rewrite_running_accumulate(sql: str) -> str:
       merge function is not recoverable from the outer statement —
       spell the window directly.
     """
-    pat = r"\brunningAccumulate\s*\("
+    pat = _RUNNING_ACC_CALL
     if not _first_match(sql, pat):
         return sql
     if not _top_level_matches(sql, r"\bGROUP\s+BY\b"):
@@ -1185,19 +1114,11 @@ def _rewrite_running_accumulate(sql: str) -> str:
         )
     obtxt = _order_anchor(sql, pat, "runningAccumulate()")
     over = f"OVER ({obtxt} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    while True:
-        m = _first_match(sql, pat)
-        if not m:
-            return sql
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        inner = sql[o + 1 : c].strip()
-        im = re.match(
-            r"(sumState|countState|minState|maxState|avgState)\s*\(", inner
-        )
-        if not im or _match_paren(inner, inner.index("(", im.end() - 1)) != len(
-            inner
-        ) - 1:
+
+    def accumulate(m, inner: str) -> str:
+        inner = inner.strip()
+        im = _STATE_ARG.match(inner)
+        if not im or _match_paren(inner, im.end() - 1) != len(inner) - 1:
             raise ChSqlError(
                 "runningAccumulate is bridged only for an INLINE -State "
                 "aggregate (runningAccumulate(sumState(x)) and the count/"
@@ -1207,23 +1128,31 @@ def _rewrite_running_accumulate(sql: str) -> str:
                 "PRECEDING). uniqState accumulation needs sketch-merge "
                 "windows, which Spark's HLL aggregates do not support."
             )
-        io = inner.index("(", im.end() - 1)
-        x = inner[io + 1 : _match_paren(inner, io)].strip()
+        x = inner[im.end() : -1].strip()
         fn = im.group(1)
         if fn == "avgState":
-            rep = (
+            return (
                 f"(CAST(sum(sum({x})) {over} AS DOUBLE) / "
                 f"sum(count({x})) {over})"
             )
-        elif fn == "countState":
-            rep = f"sum(count({x or '*'})) {over}"
-        elif fn == "minState":
-            rep = f"min(min({x})) {over}"
-        elif fn == "maxState":
-            rep = f"max(max({x})) {over}"
-        else:
-            rep = f"sum(sum({x})) {over}"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
+        if fn == "countState":
+            return f"sum(count({x or '*'})) {over}"
+        if fn == "minState":
+            return f"min(min({x})) {over}"
+        if fn == "maxState":
+            return f"max(max({x})) {over}"
+        return f"sum(sum({x})) {over}"
+
+    return _rewrite_calls(sql, pat, accumulate)
+
+
+_RUNNING_ACC_CALL = _call_pattern(("runningAccumulate",))
+_STATE_ARG = re.compile(
+    r"(sumState|countState|minState|maxState|avgState)\s*\("
+)
+_RUNNING_CALL = _call_pattern(
+    ("neighbor", "runningDifferenceStartingWithFirstValue", "runningDifference")
+)
 
 
 def _rewrite_running(sql: str) -> str:
@@ -1247,28 +1176,26 @@ def _rewrite_running(sql: str) -> str:
       loudly: CH falls back to the column's TYPE default, which a
       string rewriter cannot know — callers pass it explicitly.
     """
-    pat = r"\b(neighbor|runningDifferenceStartingWithFirstValue|runningDifference)\s*\("
+    pat = _RUNNING_CALL
     if not _first_match(sql, pat):
         return sql
     obtxt = _order_anchor(sql, pat, "neighbor()/runningDifference()")
     over = f"OVER ({obtxt})"
-    while True:
-        m = _first_match(sql, pat)
-        if not m:
-            return sql
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
+
+    def running(m, args: str) -> str:
         # a select-list alias as the argument hits Spark's
         # LATERAL_COLUMN_ALIAS_IN_WINDOW restriction — inline it, same
         # as the ORDER BY anchor does
-        args = [_inline_select_aliases(sql, a, pat) for a in args]
+        args = [
+            _inline_select_aliases(m.string, a, pat)
+            for a in _split_top_commas(args)
+        ]
         if m.group(1) == "runningDifference":
             if len(args) != 1:
                 raise ChSqlError("runningDifference takes exactly one argument")
             x = args[0]
-            repl = f"coalesce(({x}) - lag({x}) {over}, 0)"
-        elif m.group(1) == "runningDifferenceStartingWithFirstValue":
+            return f"coalesce(({x}) - lag({x}) {over}, 0)"
+        if m.group(1) == "runningDifferenceStartingWithFirstValue":
             # CH variant: the first row carries the VALUE, not 0
             if len(args) != 1:
                 raise ChSqlError(
@@ -1276,30 +1203,29 @@ def _rewrite_running(sql: str) -> str:
                     "exactly one argument"
                 )
             x = args[0]
-            repl = f"coalesce(({x}) - lag({x}) {over}, ({x}))"
-        else:
-            if len(args) == 2:
-                raise ChSqlError(
-                    "neighbor(x, off) without an explicit default: ClickHouse "
-                    "falls back to the column's TYPE default, which the "
-                    "rewriter cannot know — pass the third argument"
-                )
-            if len(args) != 3:
-                raise ChSqlError("neighbor takes (x, offset, default)")
-            x, off, dflt = args
-            if not re.fullmatch(r"[+-]?\d+", off):
-                raise ChSqlError(
-                    "neighbor offset must be an integer literal (the lag/lead "
-                    "direction must be static)"
-                )
-            n = int(off)
-            if n == 0:
-                repl = f"({x})"
-            elif n > 0:
-                repl = f"lead({x}, {n}, {dflt}) {over}"
-            else:
-                repl = f"lag({x}, {-n}, {dflt}) {over}"
-        sql = sql[: m.start()] + repl + sql[c + 1 :]
+            return f"coalesce(({x}) - lag({x}) {over}, ({x}))"
+        if len(args) == 2:
+            raise ChSqlError(
+                "neighbor(x, off) without an explicit default: ClickHouse "
+                "falls back to the column's TYPE default, which the "
+                "rewriter cannot know — pass the third argument"
+            )
+        if len(args) != 3:
+            raise ChSqlError("neighbor takes (x, offset, default)")
+        x, off, dflt = args
+        if not re.fullmatch(r"[+-]?\d+", off):
+            raise ChSqlError(
+                "neighbor offset must be an integer literal (the lag/lead "
+                "direction must be static)"
+            )
+        n = int(off)
+        if n == 0:
+            return f"({x})"
+        if n > 0:
+            return f"lead({x}, {n}, {dflt}) {over}"
+        return f"lag({x}, {-n}, {dflt}) {over}"
+
+    return _rewrite_calls(sql, pat, running)
 
 
 def _inline_aliases_into_where(sql: str) -> str:
@@ -1337,16 +1263,8 @@ def _inline_aliases_into_where(sql: str) -> str:
 def _replace_ident(sql: str, name: str, repl: str) -> str:
     """Replace standalone (unqualified, word-boundary) references to
     identifier ``name`` in code."""
-    cur = _Cursor(sql)
-    out, last = [], 0
-    for m in re.finditer(rf"(?<![\w.`]){re.escape(name)}\b", sql):
-        if cur.at(m.start())[1]:
-            continue
-        out.append(sql[last : m.start()])
-        out.append(repl)
-        last = m.end()
-    out.append(sql[last:])
-    return "".join(out)
+    pat = re.compile(rf"(?<![\w.`]){re.escape(name)}\b")
+    return _sub_code(sql, pat, lambda _m: repl)
 
 
 #: LEFT keeps empty-array rows; INNER is the (redundant) default spelling.
@@ -1439,19 +1357,16 @@ def _rewrite_array_join_clause(sql: str) -> str:
         counter += 1
 
 
+_ARRAY_JOIN_CALL = _call_pattern(("arrayJoin",))
+
+
 def _rewrite_array_join(sql: str) -> str:
     # collect distinct argument texts in order of first appearance
     aliases: dict[str, str] = {}
-    while True:
-        m = _first_match(sql, r"\barrayJoin\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        arg = sql[o + 1 : c].strip()
-        if arg not in aliases:
-            aliases[arg] = f"__aj{len(aliases)}"
-        sql = sql[: m.start()] + aliases[arg] + sql[c + 1 :]
+    sql = _rewrite_calls(
+        sql, _ARRAY_JOIN_CALL,
+        lambda m, a: aliases.setdefault(a.strip(), f"__aj{len(aliases)}"),
+    )
     if not aliases:
         return sql
 
@@ -1531,13 +1446,9 @@ def _rewrite_format_datetime(sql: str) -> str:
     ``date_format(ts, 'yyyy-MM-dd HH:mm:ss')`` — the strftime-style
     codes translated to Java patterns, EXACT subset only (unknown
     codes raise rather than silently reformat)."""
-    while True:
-        m = _first_match(sql, r"\bformatDateTime\s*\(")
-        if not m:
-            return sql
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
+
+    def date_format(m, args: str) -> str:
+        args = _split_top_commas(args)
         if len(args) != 2:
             raise ChSqlError("formatDateTime expects (ts, 'format')")
         fm = re.fullmatch(r"'(.*)'", args[1].strip())
@@ -1550,11 +1461,12 @@ def _rewrite_format_datetime(sql: str) -> str:
         # breaks at the first such format (round-11 round-trip
         # property found it)
         esc = java.replace("'", "''")
-        sql = (
-            sql[: m.start()]
-            + f"date_format({args[0]}, '{esc}')"
-            + sql[c + 1 :]
-        )
+        return f"date_format({args[0]}, '{esc}')"
+
+    return _rewrite_calls(sql, _FORMAT_DATETIME_CALL, date_format)
+
+
+_FORMAT_DATETIME_CALL = _call_pattern(("formatDateTime",))
 
 
 # ---------------------------------------------------------------------------
@@ -1576,15 +1488,14 @@ def _rewrite_topk(sql: str) -> str:
     m = _first_match(sql, r"\btopK\s*\(")
     if not m:
         return sql
-    k_open = sql.index("(", m.end() - 1)
-    k_close = _match_paren(sql, k_open)
-    k = sql[k_open + 1 : k_close].strip()
+    k_close = _match_paren(sql, m.end() - 1)
+    k = sql[m.end() : k_close].strip()
     if not k.isdigit():
         raise ChSqlError("topK(k) needs an integer k")
-    m2 = re.match(r"\s*\(", sql[k_close + 1 :])
+    m2 = _NEXT_LIST.match(sql, k_close + 1)
     if not m2:
         raise ChSqlError("topK(k) must be followed by an argument list")
-    x_open = k_close + 1 + m2.end() - 1
+    x_open = m2.end() - 1
     x_close = _match_paren(sql, x_open)
     x = sql[x_open + 1 : x_close].strip()
     malias = re.match(r"\s+AS\s+(\w+)", sql[x_close + 1 :], re.IGNORECASE)
@@ -1639,25 +1550,17 @@ def _rewrite_topk(sql: str) -> str:
 # 2a2. Behavioral-analytics aggregates: retention / windowFunnel /
 #      sequenceMatch (round 8 — the last reject-only dialect rows)
 # ---------------------------------------------------------------------------
-def _parametric_call(sql: str, name: str):
-    """Locate ``name(params)(args)`` — ClickHouse's parametric-aggregate
-    syntax (two adjacent balanced lists). Returns (start, params_text,
-    args_list, end_after_second_list) or None."""
-    m = _first_match(sql, rf"\b{name}\s*\(")
-    if m is None:
-        return None
-    p_open = sql.index("(", m.end() - 1)
-    p_close = _match_paren(sql, p_open)
-    m2 = re.match(r"\s*\(", sql[p_close + 1 :])
-    if not m2:
+def _second_list(m, args: str | None) -> list[str]:
+    """The argument list of a parametric ``name(params)(args)`` call —
+    ClickHouse's parametric-aggregate syntax, two adjacent balanced
+    lists — split on its top-level commas."""
+    if args is None:
+        name = m.group(1)
         raise ChSqlError(
             f"{name}(...) is parametric — it needs a second argument list: "
             f"{name}(params)(timestamp, cond1, ...)"
         )
-    a_open = p_close + 1 + m2.end() - 1
-    a_close = _match_paren(sql, a_open)
-    args = [a.strip() for a in _split_top_commas(sql[a_open + 1 : a_close])]
-    return m.start(), sql[p_open + 1 : p_close].strip(), args, a_close + 1
+    return _split_top_commas(args)
 
 
 def _behavior_events(ts: str, conds: list[str]) -> str:
@@ -1698,84 +1601,84 @@ def _rewrite_lttb(sql: str) -> str:
     descaled; groups with <= n points return every point (CH contract).
     Scale: per-group state is the collected series — the behavioral
     collect contract; the fold is O(sz) per group."""
-    for fam in ("largestTriangleThreeBuckets", "lttb"):
-        while True:
-            if not _first_match(sql, rf"\b{fam}\s*\("):
-                break
-            pc = _parametric_call(sql, fam)
-            start, params, args, end = pc
-            try:
-                n = int(params)
-            except ValueError:
-                raise ChSqlError(f"{fam}(n) needs an integer n") from None
-            if n < 3 or len(args) != 2:
-                raise ChSqlError(f"{fam}(n)(x, y): n >= 3, two arguments")
-            x, y = args
-            ps = (
-                f"array_sort(collect_list(named_struct("
-                f"'x', CAST({x} AS DOUBLE), "
-                f"'y', CAST(CAST(CAST({y} AS DECIMAL(18,4)) * 10000 "
-                f"AS BIGINT) AS DOUBLE))))"
-            )
-            sz = "size(ps)"
-            every = f"(CAST({sz} - 2 AS DOUBLE) / {n - 2})"
-            # 1-based slice bounds from the 0-based reference formula
-            a_lo = f"(CAST(floor((i + 1) * {every}) AS INT) + 2)"
-            a_len = (
-                f"greatest(0, CAST(least(floor((i + 2) * {every}) + 1, "
-                f"CAST({sz} AS DOUBLE)) AS INT) "
-                f"- CAST(floor((i + 1) * {every}) AS INT) - 1)"
-            )
-            r_lo = f"(CAST(floor(i * {every}) AS INT) + 2)"
-            r_len = (
-                f"(CAST(floor((i + 1) * {every}) AS INT) "
-                f"- CAST(floor(i * {every}) AS INT))"
-            )
-            nb0 = f"slice(ps, {a_lo}, {a_len})"
-            nb = (
-                f"CASE WHEN size({nb0}) = 0 "
-                f"THEN array(element_at(ps, {sz})) ELSE {nb0} END"
-            )
-            area = (
-                "abs((acc.prev.x - nav.nx) * (c.y - acc.prev.y) "
-                "- (acc.prev.x - c.x) * (nav.ny - acc.prev.y))"
-            )
-            argmax = (
-                f"aggregate(bk, named_struct('a', CAST(-1 AS DOUBLE), "
-                f"'p', element_at(bk, 1)), (b, c) -> "
-                f"CASE WHEN {area} > b.a "
-                f"THEN named_struct('a', {area}, 'p', c) ELSE b END)"
-            )
-            step = (
-                f"element_at(transform(array({nb}), nbx -> "
-                f"element_at(transform(array(named_struct("
-                f"'nx', aggregate(nbx, CAST(0 AS DOUBLE), (a, p) -> a + p.x) / size(nbx), "
-                f"'ny', aggregate(nbx, CAST(0 AS DOUBLE), (a, p) -> a + p.y) / size(nbx))), "
-                f"nav -> element_at(transform(array(slice(ps, {r_lo}, {r_len})), bk -> "
-                f"element_at(transform(array({argmax}), best -> named_struct("
-                f"'out', concat(acc.out, array(best.p)), 'prev', best.p)), 1)"
-                f"), 1)), 1)), 1)"
-            )
-            fold = (
-                f"aggregate(sequence(0, {n - 3}), "
-                f"named_struct('out', array(element_at(ps, 1)), "
-                f"'prev', element_at(ps, 1)), (acc, i) -> {step})"
-            )
-            full = (
-                f"element_at(transform(array({fold}), st -> named_struct("
-                f"'x', transform(concat(st.out, array(element_at(ps, {sz}))), p -> p.x), "
-                f"'y', transform(concat(st.out, array(element_at(ps, {sz}))), p -> p.y / 10000.0)"
-                f")), 1)"
-            )
-            repl = (
-                f"element_at(transform(array({ps}), ps -> "
-                f"CASE WHEN {sz} <= {n} THEN named_struct("
-                f"'x', transform(ps, p -> p.x), "
-                f"'y', transform(ps, p -> p.y / 10000.0)) "
-                f"ELSE {full} END), 1)"
-            )
-            sql = sql[:start] + repl + sql[end:]
-    return sql
+    return _rewrite_calls(sql, _LTTB_CALL, _lttb, parametric=True)
+
+
+_LTTB_CALL = _call_pattern(("largestTriangleThreeBuckets", "lttb"))
+
+
+def _lttb(m, params: str, args: str | None) -> str:
+    fam, args = m.group(1), _second_list(m, args)
+    try:
+        n = int(params)
+    except ValueError:
+        raise ChSqlError(f"{fam}(n) needs an integer n") from None
+    if n < 3 or len(args) != 2:
+        raise ChSqlError(f"{fam}(n)(x, y): n >= 3, two arguments")
+    x, y = args
+    ps = (
+        f"array_sort(collect_list(named_struct("
+        f"'x', CAST({x} AS DOUBLE), "
+        f"'y', CAST(CAST(CAST({y} AS DECIMAL(18,4)) * 10000 "
+        f"AS BIGINT) AS DOUBLE))))"
+    )
+    sz = "size(ps)"
+    every = f"(CAST({sz} - 2 AS DOUBLE) / {n - 2})"
+    # 1-based slice bounds from the 0-based reference formula
+    a_lo = f"(CAST(floor((i + 1) * {every}) AS INT) + 2)"
+    a_len = (
+        f"greatest(0, CAST(least(floor((i + 2) * {every}) + 1, "
+        f"CAST({sz} AS DOUBLE)) AS INT) "
+        f"- CAST(floor((i + 1) * {every}) AS INT) - 1)"
+    )
+    r_lo = f"(CAST(floor(i * {every}) AS INT) + 2)"
+    r_len = (
+        f"(CAST(floor((i + 1) * {every}) AS INT) "
+        f"- CAST(floor(i * {every}) AS INT))"
+    )
+    nb0 = f"slice(ps, {a_lo}, {a_len})"
+    nb = (
+        f"CASE WHEN size({nb0}) = 0 "
+        f"THEN array(element_at(ps, {sz})) ELSE {nb0} END"
+    )
+    area = (
+        "abs((acc.prev.x - nav.nx) * (c.y - acc.prev.y) "
+        "- (acc.prev.x - c.x) * (nav.ny - acc.prev.y))"
+    )
+    argmax = (
+        f"aggregate(bk, named_struct('a', CAST(-1 AS DOUBLE), "
+        f"'p', element_at(bk, 1)), (b, c) -> "
+        f"CASE WHEN {area} > b.a "
+        f"THEN named_struct('a', {area}, 'p', c) ELSE b END)"
+    )
+    step = (
+        f"element_at(transform(array({nb}), nbx -> "
+        f"element_at(transform(array(named_struct("
+        f"'nx', aggregate(nbx, CAST(0 AS DOUBLE), (a, p) -> a + p.x) / size(nbx), "
+        f"'ny', aggregate(nbx, CAST(0 AS DOUBLE), (a, p) -> a + p.y) / size(nbx))), "
+        f"nav -> element_at(transform(array(slice(ps, {r_lo}, {r_len})), bk -> "
+        f"element_at(transform(array({argmax}), best -> named_struct("
+        f"'out', concat(acc.out, array(best.p)), 'prev', best.p)), 1)"
+        f"), 1)), 1)), 1)"
+    )
+    fold = (
+        f"aggregate(sequence(0, {n - 3}), "
+        f"named_struct('out', array(element_at(ps, 1)), "
+        f"'prev', element_at(ps, 1)), (acc, i) -> {step})"
+    )
+    full = (
+        f"element_at(transform(array({fold}), st -> named_struct("
+        f"'x', transform(concat(st.out, array(element_at(ps, {sz}))), p -> p.x), "
+        f"'y', transform(concat(st.out, array(element_at(ps, {sz}))), p -> p.y / 10000.0)"
+        f")), 1)"
+    )
+    return (
+        f"element_at(transform(array({ps}), ps -> "
+        f"CASE WHEN {sz} <= {n} THEN named_struct("
+        f"'x', transform(ps, p -> p.x), "
+        f"'y', transform(ps, p -> p.y / 10000.0)) "
+        f"ELSE {full} END), 1)"
+    )
 
 
 def _rewrite_map_aggs(sql: str) -> str:
@@ -1796,41 +1699,39 @@ def _rewrite_map_aggs(sql: str) -> str:
     Only the 2-array CH form is bridged; the Map-typed 1-argument form
     rejects loudly. Scale: per-group state is the pair list — the
     behavioral-aggregate collect contract."""
-    folds = {
-        "sumMap": "aggregate(filter(ps, p -> p.k <=> key), "
-        "CAST(0 AS BIGINT), (a, p) -> a + p.v)",
-        "minMap": "array_min(transform(filter(ps, p -> p.k <=> key), p -> p.v))",
-        "maxMap": "array_max(transform(filter(ps, p -> p.k <=> key), p -> p.v))",
-    }
-    for fam, fold in folds.items():
-        while True:
-            m = _first_match(sql, rf"\b{fam}\s*\(")
-            if m is None:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-            if len(args) != 2:
-                raise ChSqlError(
-                    f"{fam} is bridged for the 2-array form "
-                    f"{fam}(key_array, value_array); the Map-typed "
-                    "1-argument form is not bridged"
-                )
-            k, v = args
-            pairs = (
-                f"flatten(collect_list(transform({k}, (x, i) -> "
-                f"named_struct('k', x, 'v', CAST(CAST(element_at({v}, i + 1) "
-                f"AS DECIMAL(18,4)) * 10000 AS BIGINT)))))"
-            )
-            repl = (
-                f"element_at(transform(array({pairs}), ps -> "
-                f"element_at(transform(array(array_sort(array_distinct("
-                f"transform(ps, p -> p.k)))), ks -> named_struct("
-                f"'k', ks, 'v', transform(ks, key -> "
-                f"CAST({fold} AS DOUBLE) / 10000.0))), 1)), 1)"
-            )
-            sql = sql[: m.start()] + repl + sql[c + 1 :]
-    return sql
+    return _rewrite_calls(sql, _MAP_AGG_CALL, _map_agg)
+
+
+_MAP_FOLDS = {
+    "summap": "aggregate(filter(ps, p -> p.k <=> key), "
+    "CAST(0 AS BIGINT), (a, p) -> a + p.v)",
+    "minmap": "array_min(transform(filter(ps, p -> p.k <=> key), p -> p.v))",
+    "maxmap": "array_max(transform(filter(ps, p -> p.k <=> key), p -> p.v))",
+}
+_MAP_AGG_CALL = _call_pattern(("sumMap", "minMap", "maxMap"))
+
+
+def _map_agg(m, args: str) -> str:
+    fam, args = m.group(1), _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError(
+            f"{fam} is bridged for the 2-array form "
+            f"{fam}(key_array, value_array); the Map-typed "
+            "1-argument form is not bridged"
+        )
+    k, v = args
+    pairs = (
+        f"flatten(collect_list(transform({k}, (x, i) -> "
+        f"named_struct('k', x, 'v', CAST(CAST(element_at({v}, i + 1) "
+        f"AS DECIMAL(18,4)) * 10000 AS BIGINT)))))"
+    )
+    return (
+        f"element_at(transform(array({pairs}), ps -> "
+        f"element_at(transform(array(array_sort(array_distinct("
+        f"transform(ps, p -> p.k)))), ks -> named_struct("
+        f"'k', ks, 'v', transform(ks, key -> "
+        f"CAST({_MAP_FOLDS[fam.lower()]} AS DOUBLE) / 10000.0))), 1)), 1)"
+    )
 
 
 def _rewrite_uniq_upto(sql: str) -> str:
@@ -1840,24 +1741,21 @@ def _rewrite_uniq_upto(sql: str) -> str:
     exact distinct count then a clamp is semantically identical (the
     clamp is what makes it cheap in CH; Spark pays the full distinct —
     fine, the operator CONTRACT is the bounded answer)."""
-    while True:
-        pc = None
-        if _first_match(sql, r"\buniqUpTo\s*\("):
-            pc = _parametric_call(sql, "uniqUpTo")
-        if pc is None:
-            return sql
-        start, params, args, end = pc
+
+    def uniq_upto(m, params: str, args: str | None) -> str:
+        args = _second_list(m, args)
         try:
             n = int(params)
         except ValueError:
             raise ChSqlError("uniqUpTo(N) needs an integer N") from None
         if n <= 0 or len(args) != 1:
             raise ChSqlError("uniqUpTo(N)(x): N positive, one argument")
-        sql = (
-            sql[:start]
-            + f"least(count(DISTINCT {args[0]}), {n + 1})"
-            + sql[end:]
-        )
+        return f"least(count(DISTINCT {args[0]}), {n + 1})"
+
+    return _rewrite_calls(sql, _UNIQ_UPTO_CALL, uniq_upto, parametric=True)
+
+
+_UNIQ_UPTO_CALL = _call_pattern(("uniqUpTo",))
 
 
 def _rewrite_moving(sql: str) -> str:
@@ -1883,72 +1781,66 @@ def _rewrite_moving(sql: str) -> str:
 
     Scale: per-group state is the collected (k, x) list — the
     collect_list contract every behavioral aggregate here shares."""
-    for fam, avg in (("groupArrayMovingSum", False), ("groupArrayMovingAvg", True)):
-        while True:
-            m = _first_match(sql, rf"\b{fam}\s*\(")
-            if m is None:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            m2 = re.match(r"\s*\(", sql[c + 1 :])
-            if m2:  # parametric: fam(w)(x, k)
-                try:
-                    w = int(sql[o + 1 : c].strip())
-                except ValueError:
-                    raise ChSqlError(
-                        f"{fam}({sql[o + 1:c]!r}): the window parameter "
-                        "must be an integer row count"
-                    ) from None
-                if w <= 0:
-                    raise ChSqlError(f"{fam} window must be positive")
-                a_open = c + 1 + m2.end() - 1
-                a_close = _match_paren(sql, a_open)
-                start, end = m.start(), a_close + 1
-                args = _split_top_commas(sql[a_open + 1 : a_close])
-            else:  # plain: fam(x, k) — unbounded running form
-                start, end, w = m.start(), c + 1, None
-                args = _split_top_commas(sql[o + 1 : c])
-            args = [a.strip() for a in args]
-            if len(args) != 2:
-                raise ChSqlError(
-                    f"{fam} is bridged with an EXPLICIT intra-group sort "
-                    f"key: {fam}[(w)](x, k). ClickHouse's 1-argument form "
-                    "folds in block order, which is non-deterministic — "
-                    "pass the ordering column as the second argument"
-                )
-            x, k = args
-            lst = (
-                f"transform(array_sort(collect_list(named_struct("
-                f"'o', {k}, 'v', CAST(CAST({x} AS DECIMAL(18,4)) * 10000 "
-                f"AS BIGINT)))), s -> s.v)"
+    return _rewrite_calls(sql, _MOVING_CALL, _moving, parametric=True)
+
+
+_MOVING_CALL = _call_pattern(("groupArrayMovingSum", "groupArrayMovingAvg"))
+
+
+def _moving(m, params: str, args: str | None) -> str:
+    fam = m.group(1)
+    avg = fam.lower() == "grouparraymovingavg"
+    if args is not None:  # parametric: fam(w)(x, k)
+        try:
+            w = int(params.strip())
+        except ValueError:
+            raise ChSqlError(
+                f"{fam}({params!r}): the window parameter "
+                "must be an integer row count"
+            ) from None
+        if w <= 0:
+            raise ChSqlError(f"{fam} window must be positive")
+        args = _split_top_commas(args)
+    else:  # plain: fam(x, k) — unbounded running form
+        w, args = None, _split_top_commas(params)
+    if len(args) != 2:
+        raise ChSqlError(
+            f"{fam} is bridged with an EXPLICIT intra-group sort "
+            f"key: {fam}[(w)](x, k). ClickHouse's 1-argument form "
+            "folds in block order, which is non-deterministic — "
+            "pass the ordering column as the second argument"
+        )
+    x, k = args
+    lst = (
+        f"transform(array_sort(collect_list(named_struct("
+        f"'o', {k}, 'v', CAST(CAST({x} AS DECIMAL(18,4)) * 10000 "
+        f"AS BIGINT)))), s -> s.v)"
+    )
+    run = (
+        f"aggregate({lst}, named_struct("
+        f"'a', CAST(array() AS ARRAY<BIGINT>), 'r', CAST(0 AS BIGINT)), "
+        f"(acc, v) -> named_struct("
+        f"'a', concat(acc.a, array(acc.r + v)), 'r', acc.r + v)).a"
+    )
+    if w is None:
+        if avg:
+            # unbounded avg: divide by the group size
+            fin = (
+                f"transform(arr, s -> CAST(s AS DOUBLE) / 10000.0 "
+                f"/ size(arr))"
             )
-            run = (
-                f"aggregate({lst}, named_struct("
-                f"'a', CAST(array() AS ARRAY<BIGINT>), 'r', CAST(0 AS BIGINT)), "
-                f"(acc, v) -> named_struct("
-                f"'a', concat(acc.a, array(acc.r + v)), 'r', acc.r + v)).a"
-            )
-            if w is None:
-                if avg:
-                    # unbounded avg: divide by the group size
-                    fin = (
-                        f"transform(arr, s -> CAST(s AS DOUBLE) / 10000.0 "
-                        f"/ size(arr))"
-                    )
-                else:
-                    fin = "transform(arr, s -> CAST(s AS DOUBLE) / 10000.0)"
-            else:
-                div = f" / {w}" if avg else ""
-                fin = (
-                    f"transform(arr, (s, i) -> CAST(s - CASE WHEN i + 1 > {w} "
-                    f"THEN element_at(arr, i + 1 - {w}) ELSE CAST(0 AS BIGINT) "
-                    f"END AS DOUBLE) / 10000.0{div})"
-                )
-            # bind the run array ONCE via a single-element-array lambda
-            # (HOF lambdas defeat codegen CSE — the q141 finding)
-            repl = f"element_at(transform(array({run}), arr -> {fin}), 1)"
-            sql = sql[:start] + repl + sql[end:]
-    return sql
+        else:
+            fin = "transform(arr, s -> CAST(s AS DOUBLE) / 10000.0)"
+    else:
+        div = f" / {w}" if avg else ""
+        fin = (
+            f"transform(arr, (s, i) -> CAST(s - CASE WHEN i + 1 > {w} "
+            f"THEN element_at(arr, i + 1 - {w}) ELSE CAST(0 AS BIGINT) "
+            f"END AS DOUBLE) / 10000.0{div})"
+        )
+    # bind the run array ONCE via a single-element-array lambda
+    # (HOF lambdas defeat codegen CSE — the q141 finding)
+    return f"element_at(transform(array({run}), arr -> {fin}), 1)"
 
 
 def ks_tail(dmax_num: str, n0: str, n1: str, dialect: str = "spark") -> str:
@@ -2076,19 +1968,16 @@ def _rewrite_numbers(sql: str) -> str:
     function → a Spark ``range()`` subquery exposing CH's column name
     ``number``. Literal arguments only (a table function's cardinality
     should be plan-time static — CH agrees)."""
-    while True:
-        m = _first_match(sql, r"\bnumbers\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)")
-        if not m:
-            return sql
+
+    def numbers(m: re.Match) -> str:
         if m.group(2) is None:
-            n = int(m.group(1))
-            rep = f"(SELECT id AS number FROM range({n}))"
-        else:
-            off, n = int(m.group(1)), int(m.group(2))
-            rep = (
-                f"(SELECT id AS number FROM range({off}, {off + n}))"
-            )
-        sql = sql[: m.start()] + rep + sql[m.end() :]
+            return f"(SELECT id AS number FROM range({int(m.group(1))}))"
+        off, n = int(m.group(1)), int(m.group(2))
+        return f"(SELECT id AS number FROM range({off}, {off + n}))"
+
+    return _sub_code(
+        sql, r"\bnumbers\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)", numbers
+    )
 
 
 def _rewrite_brackets(sql: str) -> str:
@@ -2227,14 +2116,7 @@ def _subst_const(
     pat = rf"(?<![\w.`]){re.escape(name)}\b"
     if head_safe:
         pat += r"(?!\s*[.(])"
-    pos = 0
-    while True:
-        mm = _first_match(text[pos:], pat)
-        if not mm:
-            return text
-        start = pos + mm.start()
-        text = text[:start] + expr + text[pos + mm.end() :]
-        pos = start + len(expr)
+    return _sub_code(text, pat, lambda _m: expr)
 
 
 def _rewrite_with_constants(
@@ -2417,72 +2299,70 @@ def _rewrite_sequence_next_node(sql: str) -> str:
     flags evaluate per ROW before collection, so the collected state
     is (t, ev, flags) — the q136 automaton contract; the search is an
     index filter over the sorted array (O(n * N) per group)."""
-    while True:
-        pc = None
-        if _first_match(sql, r"\bsequenceNextNode\s*\("):
-            pc = _parametric_call(sql, "sequenceNextNode")
-        if pc is None:
-            return sql
-        start, params, args, end = pc
-        pm = re.fullmatch(
-            r"\s*'(\w+)'\s*,\s*'(\w+)'\s*", params
+    return _rewrite_calls(sql, _NEXT_NODE_CALL, _next_node, parametric=True)
+
+
+_NEXT_NODE_CALL = _call_pattern(("sequenceNextNode",))
+
+
+def _next_node(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    pm = re.fullmatch(r"\s*'(\w+)'\s*,\s*'(\w+)'\s*", params)
+    if not pm:
+        raise ChSqlError(
+            "sequenceNextNode needs two literal parameters: "
+            "(direction, base)"
         )
-        if not pm:
-            raise ChSqlError(
-                "sequenceNextNode needs two literal parameters: "
-                "(direction, base)"
-            )
-        direction, base = pm.group(1).lower(), pm.group(2).lower()
-        if (direction, base) not in (
-            ("forward", "head"), ("forward", "first_match"),
-            ("backward", "tail"), ("backward", "last_match"),
-        ):
-            raise ChSqlError(
-                "sequenceNextNode is bridged for (forward, head), "
-                "(forward, first_match), (backward, tail), "
-                "(backward, last_match)"
-            )
-        if len(args) < 4:
-            raise ChSqlError(
-                "sequenceNextNode(dir, base)(ts, ev, base_cond, c1, ...)"
-                " needs at least one chain condition"
-            )
-        ts, ev, base_cond = args[0], args[1], args[2]
-        conds = args[3:]
-        n = len(conds)
-        flags = ", ".join(
-            f"coalesce(({c}), false)" for c in [base_cond] + conds
+    direction, base = pm.group(1).lower(), pm.group(2).lower()
+    if (direction, base) not in (
+        ("forward", "head"), ("forward", "first_match"),
+        ("backward", "tail"), ("backward", "last_match"),
+    ):
+        raise ChSqlError(
+            "sequenceNextNode is bridged for (forward, head), "
+            "(forward, first_match), (backward, tail), "
+            "(backward, last_match)"
         )
-        item = (
-            f"CASE WHEN ({ts}) IS NOT NULL THEN named_struct("
-            f"'t', CAST({ts} AS TIMESTAMP), 'e', CAST({ev} AS STRING), "
-            f"'f', array({flags})) END"
+    if len(args) < 4:
+        raise ChSqlError(
+            "sequenceNextNode(dir, base)(ts, ev, base_cond, c1, ...)"
+            " needs at least one chain condition"
         )
-        seq = f"array_sort(collect_list({item}))"
-        if direction == "backward":
-            seq = f"reverse({seq})"
-        # chain match at 0-based index i: base flag f[1] on s[i+1
-        # (1-based)], cond j on s[i+j]
-        conds_at = " AND ".join(
-            f"element_at(element_at(s, i + {j}).f, {j + 1})"
-            for j in range(1, n + 1)
+    ts, ev, base_cond = args[0], args[1], args[2]
+    conds = args[3:]
+    n = len(conds)
+    flags = ", ".join(
+        f"coalesce(({c}), false)" for c in [base_cond] + conds
+    )
+    item = (
+        f"CASE WHEN ({ts}) IS NOT NULL THEN named_struct("
+        f"'t', CAST({ts} AS TIMESTAMP), 'e', CAST({ev} AS STRING), "
+        f"'f', array({flags})) END"
+    )
+    seq = f"array_sort(collect_list({item}))"
+    if direction == "backward":
+        seq = f"reverse({seq})"
+    # chain match at 0-based index i: base flag f[1] on s[i+1
+    # (1-based)], cond j on s[i+j]
+    conds_at = " AND ".join(
+        f"element_at(element_at(s, i + {j}).f, {j + 1})"
+        for j in range(1, n + 1)
+    )
+    ok_at = f"element_at(element_at(s, i + 1).f, 1) AND {conds_at}"
+    if base in ("head", "tail"):
+        srch = f"filter(array(0), i -> size(s) >= {n} AND {ok_at})"
+    else:
+        srch = (
+            f"CASE WHEN size(s) >= {n} THEN "
+            f"filter(sequence(0, size(s) - {n}), i -> {ok_at}) "
+            f"ELSE array() END"
         )
-        ok_at = f"element_at(element_at(s, i + 1).f, 1) AND {conds_at}"
-        if base in ("head", "tail"):
-            srch = f"filter(array(0), i -> size(s) >= {n} AND {ok_at})"
-        else:
-            srch = (
-                f"CASE WHEN size(s) >= {n} THEN "
-                f"filter(sequence(0, size(s) - {n}), i -> {ok_at}) "
-                f"ELSE array() END"
-            )
-        rep = (
-            f"element_at(transform(array({seq}), s -> CASE WHEN "
-            f"size({srch}) > 0 AND element_at({srch}, 1) + {n} < size(s) "
-            f"THEN element_at(s, element_at({srch}, 1) + {n} + 1).e "
-            f"END), 1)"
-        )
-        sql = sql[:start] + rep + sql[end:]
+    return (
+        f"element_at(transform(array({seq}), s -> CASE WHEN "
+        f"size({srch}) > 0 AND element_at({srch}, 1) + {n} < size(s) "
+        f"THEN element_at(s, element_at({srch}, 1) + {n} + 1).e "
+        f"END), 1)"
+    )
 
 
 def _rewrite_weighted_aggs(sql: str) -> str:
@@ -2505,143 +2385,131 @@ def _rewrite_weighted_aggs(sql: str) -> str:
     be non-negative integers in CH — the snap accepts any numeric and
     keeps exactness). Per-group state is the collected pair list (the
     behavioral-aggregate contract)."""
-    pc = None
-    while True:
-        pc = None
-        if _first_match(sql, r"\bquantileExactWeighted\s*\("):
-            pc = _parametric_call(sql, "quantileExactWeighted")
-        if pc is None:
-            break
-        start, params, args, end = pc
-        try:
-            p = float(params)
-        except ValueError:
-            raise ChSqlError(
-                "quantileExactWeighted(p) needs a numeric level"
-            ) from None
-        if not (0.0 <= p <= 1.0) or len(args) != 2:
-            raise ChSqlError(
-                "quantileExactWeighted(p)(x, w): level in [0, 1], "
-                "two arguments"
-            )
-        x, wt = args
-        pair = (
-            f"CASE WHEN ({x}) IS NOT NULL AND ({wt}) IS NOT NULL THEN "
-            f"named_struct('v', CAST(CAST({x} AS DECIMAL(18,4)) * 10000 "
-            f"AS BIGINT), 'w', CAST({wt} AS BIGINT)) END"
-        )
-        fold = (
-            "aggregate(ps, named_struct('c', CAST(0 AS BIGINT), "
-            "'a', CAST(NULL AS BIGINT)), (acc, p) -> named_struct("
-            "'c', acc.c + p.w, 'a', CASE WHEN acc.a IS NULL AND "
-            "CAST(acc.c + p.w AS DOUBLE) >= thr THEN p.v ELSE acc.a "
-            "END)).a"
-        )
-        rep = (
-            f"(CAST(element_at(transform(array(array_sort("
-            f"collect_list({pair}))), ps -> element_at(transform(array("
-            f"CAST({p!r} AS DOUBLE) * CAST(aggregate(ps, CAST(0 AS "
-            f"BIGINT), (a, p) -> a + p.w) AS DOUBLE)), thr -> {fold}), "
-            f"1)), 1) AS DOUBLE) / 10000.0)"
-        )
-        sql = sql[:start] + rep + sql[end:]
-
-    while True:
-        pc = None
-        if _first_match(sql, r"\btopKWeighted\s*\("):
-            pc = _parametric_call(sql, "topKWeighted")
-        if pc is None:
-            break
-        start, params, args, end = pc
-        if not params.strip().isdigit() or len(args) != 2:
-            raise ChSqlError("topKWeighted(k)(x, w): integer k, two args")
-        k = int(params)
-        x, wt = args
-        pair = (
-            f"CASE WHEN ({x}) IS NOT NULL AND ({wt}) IS NOT NULL THEN "
-            f"named_struct('v', ({x}), "
-            f"'w', CAST({wt} AS BIGINT)) END"
-        )
-        tw = "aggregate(filter(ps, q -> q.v = u), CAST(0 AS BIGINT), (a, q) -> a + q.w)"
-        rep = (
-            f"element_at(transform(array(collect_list({pair})), ps -> "
-            f"transform(slice(array_sort(transform(array_distinct("
-            f"transform(ps, p -> p.v)), u -> named_struct("
-            f"'nw', -{tw}, 'v', u))), 1, {k}), s -> s.v)), 1)"
-        )
-        sql = sql[:start] + rep + sql[end:]
-
-    while True:
-        pc = None
-        if _first_match(sql, r"\bgroupArrayInsertAt\s*\("):
-            pc = _parametric_call(sql, "groupArrayInsertAt")
-        if pc is None:
-            break
-        start, params, args, end = pc
-        pa = _split_top_commas(params)
-        if len(pa) != 2 or not pa[1].strip().isdigit() or len(args) != 2:
-            raise ChSqlError(
-                "groupArrayInsertAt is bridged as "
-                "groupArrayInsertAt(default, size)(x, pos): literal "
-                "default, integer size, two arguments"
-            )
-        dflt, size = pa[0].strip(), int(pa[1])
-        x, pos = args
-        # CH keeps an ARBITRARY value on position collisions — the
-        # bridge keeps the MINIMUM (deterministic, documented); 0-based
-        # positions, out-of-range positions are dropped (CH errors)
-        pair = (
-            f"CASE WHEN ({x}) IS NOT NULL AND ({pos}) IS NOT NULL AND "
-            f"({pos}) >= 0 AND ({pos}) < {size} THEN named_struct("
-            f"'p', CAST({pos} AS INT), 'x', ({x})) END"
-        )
-        rep = (
-            f"element_at(transform(array(collect_list({pair})), ps -> "
-            f"transform(sequence(0, {size - 1}), i -> coalesce("
-            f"array_min(transform(filter(ps, q -> q.p = i), "
-            f"q -> q.x)), {dflt}))), 1)"
-        )
-        sql = sql[:start] + rep + sql[end:]
-
-    while True:
-        pc = None
-        if _first_match(sql, r"\bgroupArraySorted\s*\("):
-            pc = _parametric_call(sql, "groupArraySorted")
-        if pc is None:
-            break
-        start, params, args, end = pc
-        if not params.strip().isdigit() or len(args) != 1:
-            raise ChSqlError("groupArraySorted(N)(x): integer N, one arg")
-        rep = (
-            f"slice(array_sort(collect_list({args[0]})), 1, "
-            f"{int(params)})"
-        )
-        sql = sql[:start] + rep + sql[end:]
+    for pat, rule in _WEIGHTED_AGGS:
+        sql = _rewrite_calls(sql, pat, rule, parametric=True)
     return sql
+
+
+def _quantile_weighted(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    try:
+        p = float(params)
+    except ValueError:
+        raise ChSqlError(
+            "quantileExactWeighted(p) needs a numeric level"
+        ) from None
+    if not (0.0 <= p <= 1.0) or len(args) != 2:
+        raise ChSqlError(
+            "quantileExactWeighted(p)(x, w): level in [0, 1], "
+            "two arguments"
+        )
+    x, wt = args
+    pair = (
+        f"CASE WHEN ({x}) IS NOT NULL AND ({wt}) IS NOT NULL THEN "
+        f"named_struct('v', CAST(CAST({x} AS DECIMAL(18,4)) * 10000 "
+        f"AS BIGINT), 'w', CAST({wt} AS BIGINT)) END"
+    )
+    fold = (
+        "aggregate(ps, named_struct('c', CAST(0 AS BIGINT), "
+        "'a', CAST(NULL AS BIGINT)), (acc, p) -> named_struct("
+        "'c', acc.c + p.w, 'a', CASE WHEN acc.a IS NULL AND "
+        "CAST(acc.c + p.w AS DOUBLE) >= thr THEN p.v ELSE acc.a "
+        "END)).a"
+    )
+    return (
+        f"(CAST(element_at(transform(array(array_sort("
+        f"collect_list({pair}))), ps -> element_at(transform(array("
+        f"CAST({p!r} AS DOUBLE) * CAST(aggregate(ps, CAST(0 AS "
+        f"BIGINT), (a, p) -> a + p.w) AS DOUBLE)), thr -> {fold}), "
+        f"1)), 1) AS DOUBLE) / 10000.0)"
+    )
+
+
+def _topk_weighted(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    if not params.strip().isdigit() or len(args) != 2:
+        raise ChSqlError("topKWeighted(k)(x, w): integer k, two args")
+    k = int(params)
+    x, wt = args
+    pair = (
+        f"CASE WHEN ({x}) IS NOT NULL AND ({wt}) IS NOT NULL THEN "
+        f"named_struct('v', ({x}), "
+        f"'w', CAST({wt} AS BIGINT)) END"
+    )
+    tw = "aggregate(filter(ps, q -> q.v = u), CAST(0 AS BIGINT), (a, q) -> a + q.w)"
+    return (
+        f"element_at(transform(array(collect_list({pair})), ps -> "
+        f"transform(slice(array_sort(transform(array_distinct("
+        f"transform(ps, p -> p.v)), u -> named_struct("
+        f"'nw', -{tw}, 'v', u))), 1, {k}), s -> s.v)), 1)"
+    )
+
+
+def _insert_at(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    pa = _split_top_commas(params)
+    if len(pa) != 2 or not pa[1].strip().isdigit() or len(args) != 2:
+        raise ChSqlError(
+            "groupArrayInsertAt is bridged as "
+            "groupArrayInsertAt(default, size)(x, pos): literal "
+            "default, integer size, two arguments"
+        )
+    dflt, size = pa[0].strip(), int(pa[1])
+    x, pos = args
+    # CH keeps an ARBITRARY value on position collisions — the
+    # bridge keeps the MINIMUM (deterministic, documented); 0-based
+    # positions, out-of-range positions are dropped (CH errors)
+    pair = (
+        f"CASE WHEN ({x}) IS NOT NULL AND ({pos}) IS NOT NULL AND "
+        f"({pos}) >= 0 AND ({pos}) < {size} THEN named_struct("
+        f"'p', CAST({pos} AS INT), 'x', ({x})) END"
+    )
+    return (
+        f"element_at(transform(array(collect_list({pair})), ps -> "
+        f"transform(sequence(0, {size - 1}), i -> coalesce("
+        f"array_min(transform(filter(ps, q -> q.p = i), "
+        f"q -> q.x)), {dflt}))), 1)"
+    )
+
+
+def _array_sorted(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    if not params.strip().isdigit() or len(args) != 1:
+        raise ChSqlError("groupArraySorted(N)(x): integer N, one arg")
+    return (
+        f"slice(array_sort(collect_list({args[0]})), 1, "
+        f"{int(params)})"
+    )
+
+
+_WEIGHTED_AGGS = (
+    (_call_pattern(("quantileExactWeighted",)), _quantile_weighted),
+    (_call_pattern(("topKWeighted",)), _topk_weighted),
+    (_call_pattern(("groupArrayInsertAt",)), _insert_at),
+    (_call_pattern(("groupArraySorted",)), _array_sorted),
+)
 
 
 def _rewrite_assoc_aggs(sql: str) -> str:
     """kolmogorovSmirnovTest / cramersV / theilsU / contingency →
     collect-fold aggregate expressions (see _ks_expr / _assoc_expr)."""
-    for fam, arity in (
-        ("kolmogorovSmirnovTest", 2), ("cramersV", 2), ("theilsU", 2),
-        ("contingency", 2),
-    ):
-        while True:
-            m = _first_match(sql, rf"\b{fam}\s*\(")
-            if m is None:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = [x.strip() for x in _split_top_commas(sql[o + 1 : c])]
-            if len(args) != arity:
-                raise ChSqlError(f"{fam} expects {arity} arguments")
-            if fam == "kolmogorovSmirnovTest":
-                rep = _ks_expr(args[0], args[1])
-            else:
-                rep = _assoc_expr(fam, args[0], args[1])
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-    return sql
+
+    def assoc(m, args: str) -> str:
+        fam, args = _ASSOC_AGGS[m.group(1).lower()], _split_top_commas(args)
+        if len(args) != 2:
+            raise ChSqlError(f"{fam} expects 2 arguments")
+        if fam == "kolmogorovSmirnovTest":
+            return _ks_expr(args[0], args[1])
+        return _assoc_expr(fam, args[0], args[1])
+
+    return _rewrite_calls(sql, _ASSOC_AGG_CALL, assoc)
+
+
+_ASSOC_AGGS = {
+    n.lower(): n
+    for n in ("kolmogorovSmirnovTest", "cramersV", "theilsU", "contingency")
+}
+_ASSOC_AGG_CALL = _call_pattern(_ASSOC_AGGS)
 
 
 def _rewrite_interval_aggs(sql: str) -> str:
@@ -2666,61 +2534,55 @@ def _rewrite_interval_aggs(sql: str) -> str:
     computation paths, one exact integer answer. Per-group state is
     the collected interval list (the behavioral-aggregate contract).
     Degenerate/empty groups: 0 for the sums, NULL position."""
-    ivs = {
-        "intervalLengthSum": None, "maxIntersectionsPosition": None,
-        "maxIntersections": None,
-    }
-    for fam in ivs:
-        while True:
-            m = _first_match(sql, rf"\b{fam}\s*\(")
-            if m is None:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-            if len(args) != 2:
-                raise ChSqlError(f"{fam} expects (start, end)")
-            s, e = args
-            pair = (
-                f"CASE WHEN ({s}) IS NOT NULL AND ({e}) IS NOT NULL THEN "
-                f"named_struct('s', CAST({s} AS BIGINT), "
-                f"'e', CAST({e} AS BIGINT)) END"
-            )
-            if fam == "intervalLengthSum":
-                rep = (
-                    f"aggregate(array_sort(collect_list({pair})), "
-                    f"named_struct('c', CAST(-9223372036854775808 AS "
-                    f"BIGINT), 't', CAST(0 AS BIGINT)), (a, iv) -> "
-                    f"named_struct('c', greatest(a.c, iv.e), 't', a.t + "
-                    f"greatest(CAST(0 AS BIGINT), iv.e - greatest(iv.s, "
-                    f"a.c)))).t"
-                )
-            else:
-                ev = (
-                    f"array_sort(flatten(collect_list(CASE WHEN ({s}) IS "
-                    f"NOT NULL AND ({e}) IS NOT NULL THEN array("
-                    f"named_struct('x', CAST({s} AS BIGINT), 'd', "
-                    f"CAST(1 AS BIGINT)), named_struct('x', "
-                    f"CAST({e} AS BIGINT), 'd', CAST(-1 AS BIGINT))) END)))"
-                )
-                if fam == "maxIntersections":
-                    rep = (
-                        f"aggregate({ev}, named_struct('c', CAST(0 AS "
-                        f"BIGINT), 'b', CAST(0 AS BIGINT)), (a, p) -> "
-                        f"named_struct('c', a.c + p.d, 'b', "
-                        f"greatest(a.b, a.c + p.d))).b"
-                    )
-                else:
-                    rep = (
-                        f"aggregate({ev}, named_struct('c', CAST(0 AS "
-                        f"BIGINT), 'b', CAST(0 AS BIGINT), 'p', "
-                        f"CAST(NULL AS BIGINT)), (a, p) -> named_struct("
-                        f"'c', a.c + p.d, 'b', greatest(a.b, a.c + p.d), "
-                        f"'p', CASE WHEN p.d = 1 AND a.c + p.d > a.b "
-                        f"THEN p.x ELSE a.p END)).p"
-                    )
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-    return sql
+    return _rewrite_calls(sql, _INTERVAL_AGG_CALL, _interval_agg)
+
+
+_INTERVAL_AGG_CALL = _call_pattern(
+    ("intervalLengthSum", "maxIntersectionsPosition", "maxIntersections")
+)
+
+
+def _interval_agg(m, args: str) -> str:
+    fam, args = m.group(1), _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError(f"{fam} expects (start, end)")
+    s, e = args
+    if fam.lower() == "intervallengthsum":
+        pair = (
+            f"CASE WHEN ({s}) IS NOT NULL AND ({e}) IS NOT NULL THEN "
+            f"named_struct('s', CAST({s} AS BIGINT), "
+            f"'e', CAST({e} AS BIGINT)) END"
+        )
+        return (
+            f"aggregate(array_sort(collect_list({pair})), "
+            f"named_struct('c', CAST(-9223372036854775808 AS "
+            f"BIGINT), 't', CAST(0 AS BIGINT)), (a, iv) -> "
+            f"named_struct('c', greatest(a.c, iv.e), 't', a.t + "
+            f"greatest(CAST(0 AS BIGINT), iv.e - greatest(iv.s, "
+            f"a.c)))).t"
+        )
+    ev = (
+        f"array_sort(flatten(collect_list(CASE WHEN ({s}) IS "
+        f"NOT NULL AND ({e}) IS NOT NULL THEN array("
+        f"named_struct('x', CAST({s} AS BIGINT), 'd', "
+        f"CAST(1 AS BIGINT)), named_struct('x', "
+        f"CAST({e} AS BIGINT), 'd', CAST(-1 AS BIGINT))) END)))"
+    )
+    if fam.lower() == "maxintersections":
+        return (
+            f"aggregate({ev}, named_struct('c', CAST(0 AS "
+            f"BIGINT), 'b', CAST(0 AS BIGINT)), (a, p) -> "
+            f"named_struct('c', a.c + p.d, 'b', "
+            f"greatest(a.b, a.c + p.d))).b"
+        )
+    return (
+        f"aggregate({ev}, named_struct('c', CAST(0 AS "
+        f"BIGINT), 'b', CAST(0 AS BIGINT), 'p', "
+        f"CAST(NULL AS BIGINT)), (a, p) -> named_struct("
+        f"'c', a.c + p.d, 'b', greatest(a.b, a.c + p.d), "
+        f"'p', CASE WHEN p.d = 1 AND a.c + p.d > a.b "
+        f"THEN p.x ELSE a.p END)).p"
+    )
 
 
 def _rewrite_delta_ema(sql: str) -> str:
@@ -2750,107 +2612,99 @@ def _rewrite_delta_ema(sql: str) -> str:
       ``toUnixTimestamp(ts)``; the INTERVAL third argument is not
       bridged and raises via arity).
     """
-    for fam in ("deltaSumTimestamp", "deltaSum"):
-        while True:
-            m = _first_match(sql, rf"\b{fam}\s*\(")
-            if m is None:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-            if len(args) != 2:
-                raise ChSqlError(
-                    f"{fam} is bridged with an EXPLICIT sort key: "
-                    f"{fam}(x, order_col). ClickHouse's 1-argument "
-                    "deltaSum folds in block order, which is "
-                    "non-deterministic — pass the ordering column"
-                )
-            x, k = args
-            lst = (
-                f"transform(array_sort(collect_list(CASE WHEN ({x}) IS NOT "
-                f"NULL AND ({k}) IS NOT NULL THEN named_struct('o', {k}, "
-                f"'v', CAST(CAST({x} AS DECIMAL(18,4)) * 10000 AS BIGINT)) "
-                f"END)), s -> s.v)"
-            )
-            fold = (
-                f"aggregate({lst}, named_struct('p', CAST(NULL AS BIGINT), "
-                f"'d', CAST(0 AS BIGINT)), (acc, v) -> named_struct('p', v, "
-                f"'d', acc.d + CASE WHEN acc.p IS NOT NULL AND v > acc.p "
-                f"THEN v - acc.p ELSE CAST(0 AS BIGINT) END)).d"
-            )
-            rep = f"(CAST({fold} AS DOUBLE) / 10000.0)"
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
+    sql = _rewrite_calls(sql, _DELTA_SUM_CALL, _delta_sum)
+    sql = _rewrite_calls(sql, _EMA_CALL, _ema, parametric=True)
+    return _rewrite_calls(sql, _DERIVATIVE_CALL, _derivative, span=True)
 
-    while True:
-        pc = None
-        if _first_match(sql, r"\bexponentialMovingAverage\s*\("):
-            pc = _parametric_call(sql, "exponentialMovingAverage")
-        if pc is None:
-            break
-        start, params, args, end = pc
-        try:
-            hl = float(params)
-        except ValueError:
-            raise ChSqlError(
-                "exponentialMovingAverage(halflife) needs a numeric "
-                "half-life parameter"
-            ) from None
-        if hl <= 0 or len(args) != 2:
-            raise ChSqlError(
-                "exponentialMovingAverage(hl)(value, time_seconds): "
-                "positive half-life, two arguments"
-            )
-        v, t = args
-        ps = (
-            f"collect_list(CASE WHEN ({v}) IS NOT NULL AND ({t}) IS NOT "
-            f"NULL THEN named_struct('t', CAST({t} AS DOUBLE), "
-            f"'v', CAST({v} AS DOUBLE)) END)"
-        )
-        wgt = f"power(CAST(2.0 AS DOUBLE), (p.t - tmax) / CAST({hl!r} AS DOUBLE))"
-        body = (
-            f"CAST(aggregate(ps, CAST(0.0 AS DOUBLE), (a, p) -> "
-            f"a + p.v * {wgt}) / aggregate(ps, CAST(0.0 AS DOUBLE), "
-            f"(a, p) -> a + {wgt}) AS DECIMAL(18,6))"
-        )
-        rep = (
-            f"element_at(transform(array({ps}), ps -> element_at("
-            f"transform(array(array_max(transform(ps, q -> q.t))), "
-            f"tmax -> {body}), 1)), 1)"
-        )
-        sql = sql[:start] + rep + sql[end:]
 
-    while True:
-        m = _first_match(sql, r"\bnonNegativeDerivative\s*\(")
-        if m is None:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-        if len(args) != 2:
-            raise ChSqlError(
-                "nonNegativeDerivative is bridged as "
-                "nonNegativeDerivative(x, t_seconds) OVER (...); the "
-                "INTERVAL unit argument is not supported — scale t"
-            )
-        mo = re.match(r"\s*OVER\s*\(", sql[c + 1 :], re.IGNORECASE)
-        if not mo:
-            raise ChSqlError(
-                "nonNegativeDerivative is a WINDOW function — it needs "
-                "an inline OVER (...) clause (named windows not bridged)"
-            )
-        w_open = c + 1 + mo.end() - 1
-        w_close = _match_paren(sql, w_open)
-        over = sql[w_open : w_close + 1]
-        x, t = args
-        num = f"(CAST({x} AS DOUBLE) - lag(CAST({x} AS DOUBLE)) OVER {over})"
-        den = f"(CAST({t} AS DOUBLE) - lag(CAST({t} AS DOUBLE)) OVER {over})"
-        rep = (
-            f"(CASE WHEN {num} IS NULL OR {den} IS NULL OR {den} = 0.0 "
-            f"THEN CAST(NULL AS DOUBLE) WHEN {num} / {den} < 0.0 "
-            f"THEN 0.0 ELSE {num} / {den} END)"
+_DELTA_SUM_CALL = _call_pattern(("deltaSumTimestamp", "deltaSum"))
+_EMA_CALL = _call_pattern(("exponentialMovingAverage",))
+_DERIVATIVE_CALL = _call_pattern(("nonNegativeDerivative",))
+_OVER_LIST = re.compile(r"\s*OVER\s*\(", re.IGNORECASE)
+
+
+def _delta_sum(m, args: str) -> str:
+    fam, args = m.group(1), _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError(
+            f"{fam} is bridged with an EXPLICIT sort key: "
+            f"{fam}(x, order_col). ClickHouse's 1-argument "
+            "deltaSum folds in block order, which is "
+            "non-deterministic — pass the ordering column"
         )
-        sql = sql[: m.start()] + rep + sql[w_close + 1 :]
-    return sql
+    x, k = args
+    lst = (
+        f"transform(array_sort(collect_list(CASE WHEN ({x}) IS NOT "
+        f"NULL AND ({k}) IS NOT NULL THEN named_struct('o', {k}, "
+        f"'v', CAST(CAST({x} AS DECIMAL(18,4)) * 10000 AS BIGINT)) "
+        f"END)), s -> s.v)"
+    )
+    fold = (
+        f"aggregate({lst}, named_struct('p', CAST(NULL AS BIGINT), "
+        f"'d', CAST(0 AS BIGINT)), (acc, v) -> named_struct('p', v, "
+        f"'d', acc.d + CASE WHEN acc.p IS NOT NULL AND v > acc.p "
+        f"THEN v - acc.p ELSE CAST(0 AS BIGINT) END)).d"
+    )
+    return f"(CAST({fold} AS DOUBLE) / 10000.0)"
+
+
+def _ema(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    try:
+        hl = float(params)
+    except ValueError:
+        raise ChSqlError(
+            "exponentialMovingAverage(halflife) needs a numeric "
+            "half-life parameter"
+        ) from None
+    if hl <= 0 or len(args) != 2:
+        raise ChSqlError(
+            "exponentialMovingAverage(hl)(value, time_seconds): "
+            "positive half-life, two arguments"
+        )
+    v, t = args
+    ps = (
+        f"collect_list(CASE WHEN ({v}) IS NOT NULL AND ({t}) IS NOT "
+        f"NULL THEN named_struct('t', CAST({t} AS DOUBLE), "
+        f"'v', CAST({v} AS DOUBLE)) END)"
+    )
+    wgt = f"power(CAST(2.0 AS DOUBLE), (p.t - tmax) / CAST({hl!r} AS DOUBLE))"
+    body = (
+        f"CAST(aggregate(ps, CAST(0.0 AS DOUBLE), (a, p) -> "
+        f"a + p.v * {wgt}) / aggregate(ps, CAST(0.0 AS DOUBLE), "
+        f"(a, p) -> a + {wgt}) AS DECIMAL(18,6))"
+    )
+    return (
+        f"element_at(transform(array({ps}), ps -> element_at("
+        f"transform(array(array_max(transform(ps, q -> q.t))), "
+        f"tmax -> {body}), 1)), 1)"
+    )
+
+
+def _derivative(m, args: str, end: int) -> tuple[str, int]:
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError(
+            "nonNegativeDerivative is bridged as "
+            "nonNegativeDerivative(x, t_seconds) OVER (...); the "
+            "INTERVAL unit argument is not supported — scale t"
+        )
+    mo = _OVER_LIST.match(m.string, end)
+    if not mo:
+        raise ChSqlError(
+            "nonNegativeDerivative is a WINDOW function — it needs "
+            "an inline OVER (...) clause (named windows not bridged)"
+        )
+    w_close = _match_paren(m.string, mo.end() - 1)
+    over = m.string[mo.end() - 1 : w_close + 1]
+    x, t = args
+    num = f"(CAST({x} AS DOUBLE) - lag(CAST({x} AS DOUBLE)) OVER {over})"
+    den = f"(CAST({t} AS DOUBLE) - lag(CAST({t} AS DOUBLE)) OVER {over})"
+    return (
+        f"(CASE WHEN {num} IS NULL OR {den} IS NULL OR {den} = 0.0 "
+        f"THEN CAST(NULL AS DOUBLE) WHEN {num} / {den} < 0.0 "
+        f"THEN 0.0 ELSE {num} / {den} END)"
+    ), w_close + 1
 
 
 # ---------------------------------------------------------------------------
@@ -3450,21 +3304,21 @@ def _rewrite_stats_aggs(sql: str) -> str:
     DECIMAL(18,4) snap bounds |x| <= ~3e5 for the 4th-power moments to
     stay inside the 128-bit lane — larger magnitudes raise on overflow
     (ANSI), never silently round."""
-    for fam, arity in _STATS_ARITY.items():
-        while True:
-            m = _first_match(sql, rf"\b{fam}\s*\(")
-            if m is None:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-            if len(args) != arity:
-                raise ChSqlError(
-                    f"{fam} expects {arity} argument(s), got {len(args)}"
-                )
-            rep = stats_agg_sql(fam, args)
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-    return sql
+
+    def stats_agg(m, args: str) -> str:
+        fam = _STATS_NAMES[m.group(1).lower()]
+        arity, args = _STATS_ARITY[fam], _split_top_commas(args)
+        if len(args) != arity:
+            raise ChSqlError(
+                f"{fam} expects {arity} argument(s), got {len(args)}"
+            )
+        return stats_agg_sql(fam, args)
+
+    return _rewrite_calls(sql, _STATS_CALL, stats_agg)
+
+
+_STATS_NAMES = {n.lower(): n for n in _STATS_ARITY}
+_STATS_CALL = _call_pattern(_STATS_ARITY)
 
 
 def _rewrite_retention(sql: str) -> str:
@@ -3475,19 +3329,19 @@ def _rewrite_retention(sql: str) -> str:
     AND cond_i seen. That is plain ``max(CASE...)`` algebra — no state
     machine, no order dependence — so the bridge is a pure expression
     rewrite and the result is bit-identical to CH."""
-    while True:
-        m = _first_match(sql, r"\bretention\s*\(")
-        if m is None:
-            return sql
-        open_i = sql.index("(", m.end() - 1)
-        close_i = _match_paren(sql, open_i)
-        conds = [c.strip() for c in _split_top_commas(sql[open_i + 1 : close_i])]
+
+    def retention(m, args: str) -> str:
+        conds = _split_top_commas(args)
         if not conds or not conds[0]:
             raise ChSqlError("retention() needs at least one condition")
         flags = [f"max(CASE WHEN ({c}) THEN 1 ELSE 0 END)" for c in conds]
         items = [flags[0]] + [f"{flags[0]} * {f}" for f in flags[1:]]
-        repl = "array(" + ", ".join(items) + ")"
-        sql = sql[: m.start()] + repl + sql[close_i + 1 :]
+        return "array(" + ", ".join(items) + ")"
+
+    return _rewrite_calls(sql, _RETENTION_CALL, retention)
+
+
+_RETENTION_CALL = _call_pattern(("retention",))
 
 
 def _rewrite_window_funnel(sql: str) -> str:
@@ -3509,54 +3363,54 @@ def _rewrite_window_funnel(sql: str) -> str:
     per-entity-bounded assumption CH's own implementation makes (it
     also materializes the group's events); modes (strict_order /
     strict_dedup / strict_increase) are not bridged and reject."""
-    while True:
-        pc = _parametric_call(sql, "windowFunnel")
-        if pc is None:
-            return sql
-        start, params, args, end = pc
-        parts = [p.strip() for p in _split_top_commas(params)]
-        strict_increase = False
-        try:
-            float(parts[0])
-        except ValueError:
+    return _rewrite_calls(sql, _FUNNEL_CALL, _funnel, parametric=True)
+
+
+_FUNNEL_CALL = _call_pattern(("windowFunnel",))
+
+
+def _funnel(m, params: str, args: str | None) -> str:
+    args, params = _second_list(m, args), params.strip()
+    parts = [p.strip() for p in _split_top_commas(params)]
+    strict_increase = False
+    try:
+        float(parts[0])
+    except ValueError:
+        raise ChSqlError(
+            f"windowFunnel({params!r}): the first parameter must be a "
+            "numeric window (seconds)"
+        ) from None
+    for mode in parts[1:]:
+        if mode == "'strict_increase'":
+            strict_increase = True
+        else:
             raise ChSqlError(
-                f"windowFunnel({params!r}): the first parameter must be a "
-                "numeric window (seconds)"
-            ) from None
-        for mode in parts[1:]:
-            if mode == "'strict_increase'":
-                strict_increase = True
-            else:
-                raise ChSqlError(
-                    f"windowFunnel mode {mode}: only 'strict_increase' is "
-                    "bridged ('strict_order'/'strict_deduplication' have "
-                    "version-dependent early-exit corner semantics in "
-                    "ClickHouse — spell the funnel manually, q89's shape)"
-                )
-        window = parts[0]
-        if len(args) < 2:
-            raise ChSqlError("windowFunnel needs (timestamp, cond1, ...)")
-        ts, conds = args[0], args[1:]
-        n = len(conds)
-        lst = _behavior_events(ts, conds)
-        if strict_increase:
-            sql = sql[:start] + _strict_increase_funnel(n, window, lst) + sql[end:]
-            continue
-        params = window
-        step = (
-            f"(acc, e) -> transform(acc, (s, i) -> CASE "
-            f"WHEN NOT e.c[i] THEN s "
-            f"WHEN i = 0 THEN greatest(s, e.t) "
-            f"WHEN element_at(acc, i) IS NOT NULL "
-            f"AND e.t - element_at(acc, i) <= {params} "
-            f"THEN greatest(s, element_at(acc, i)) ELSE s END)"
-        )
-        repl = (
-            f"size(filter(aggregate({lst}, "
-            f"array_repeat(CAST(NULL AS DOUBLE), {n}), {step}), "
-            f"s -> s IS NOT NULL))"
-        )
-        sql = sql[:start] + repl + sql[end:]
+                f"windowFunnel mode {mode}: only 'strict_increase' is "
+                "bridged ('strict_order'/'strict_deduplication' have "
+                "version-dependent early-exit corner semantics in "
+                "ClickHouse — spell the funnel manually, q89's shape)"
+            )
+    window = parts[0]
+    if len(args) < 2:
+        raise ChSqlError("windowFunnel needs (timestamp, cond1, ...)")
+    ts, conds = args[0], args[1:]
+    n = len(conds)
+    lst = _behavior_events(ts, conds)
+    if strict_increase:
+        return _strict_increase_funnel(n, window, lst)
+    step = (
+        f"(acc, e) -> transform(acc, (s, i) -> CASE "
+        f"WHEN NOT e.c[i] THEN s "
+        f"WHEN i = 0 THEN greatest(s, e.t) "
+        f"WHEN element_at(acc, i) IS NOT NULL "
+        f"AND e.t - element_at(acc, i) <= {window} "
+        f"THEN greatest(s, element_at(acc, i)) ELSE s END)"
+    )
+    return (
+        f"size(filter(aggregate({lst}, "
+        f"array_repeat(CAST(NULL AS DOUBLE), {n}), {step}), "
+        f"s -> s IS NOT NULL))"
+    )
 
 
 def _strict_increase_funnel(n: int, window: str, lst: str) -> str:
@@ -3675,48 +3529,49 @@ def _rewrite_sequence_match(sql: str) -> str:
     a '.*' gap accepts A|B of p-1; the pattern is unanchored, so
     position 0 matches anywhere. Matched = last position's state > 0
     after the fold."""
-    while True:
-        pc = _parametric_call(sql, "sequenceMatch")
-        if pc is None:
-            return sql
-        start, params, args, end = pc
-        mpat = re.fullmatch(r"'([^']*)'", params)
-        if not mpat:
+    return _rewrite_calls(sql, _SEQ_MATCH_CALL, _seq_match, parametric=True)
+
+
+_SEQ_MATCH_CALL = _call_pattern(("sequenceMatch",))
+
+
+def _seq_match(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    mpat = re.fullmatch(r"'([^']*)'", params.strip())
+    if not mpat:
+        raise ChSqlError(
+            "sequenceMatch needs a quoted literal pattern: "
+            "sequenceMatch('(?1)(?2)')(ts, cond1, cond2)"
+        )
+    steps = _parse_seq_pattern(mpat.group(1), allow_time=True)
+    if len(args) < 2:
+        raise ChSqlError("sequenceMatch needs (timestamp, cond1, ...)")
+    ts, conds = args[0], args[1:]
+    for ci, *_rest in steps:
+        if not (0 <= ci < len(conds)):
             raise ChSqlError(
-                "sequenceMatch needs a quoted literal pattern: "
-                "sequenceMatch('(?1)(?2)')(ts, cond1, cond2)"
+                f"sequenceMatch pattern ref (?{ci + 1}) has no matching "
+                f"condition (got {len(conds)})"
             )
-        steps = _parse_seq_pattern(mpat.group(1), allow_time=True)
-        if len(args) < 2:
-            raise ChSqlError("sequenceMatch needs (timestamp, cond1, ...)")
-        ts, conds = args[0], args[1:]
-        for ci, *_rest in steps:
-            if not (0 <= ci < len(conds)):
-                raise ChSqlError(
-                    f"sequenceMatch pattern ref (?{ci + 1}) has no matching "
-                    f"condition (got {len(conds)})"
-                )
-        p_n = len(steps)
-        lst = _behavior_events(ts, conds)
-        cidx = "array(" + ", ".join(str(ci) for ci, *_ in steps) + ")"
-        garr = "array(" + ", ".join(
-            "true" if g else "false" for _, g, *_ in steps
-        ) + ")"
-        if any(top is not None for _, _, top, _ in steps):
-            repl = _timed_seq_match(steps, p_n, lst, cidx, garr)
-        else:
-            step = (
-                f"(acc, e) -> transform(acc, (s, p) -> "
-                f"(CASE WHEN e.c[{cidx}[p]] AND (p = 0 OR (CASE WHEN {garr}[p] "
-                f"THEN element_at(acc, p) > 0 "
-                f"ELSE pmod(element_at(acc, p), 2) = 1 END)) "
-                f"THEN 1 ELSE 0 END) + (CASE WHEN s > 0 THEN 2 ELSE 0 END))"
-            )
-            repl = (
-                f"CAST(element_at(aggregate({lst}, array_repeat(0, {p_n}), "
-                f"{step}), {p_n}) > 0 AS INT)"
-            )
-        sql = sql[:start] + repl + sql[end:]
+    p_n = len(steps)
+    lst = _behavior_events(ts, conds)
+    cidx = "array(" + ", ".join(str(ci) for ci, *_ in steps) + ")"
+    garr = "array(" + ", ".join(
+        "true" if g else "false" for _, g, *_ in steps
+    ) + ")"
+    if any(top is not None for _, _, top, _ in steps):
+        return _timed_seq_match(steps, p_n, lst, cidx, garr)
+    step = (
+        f"(acc, e) -> transform(acc, (s, p) -> "
+        f"(CASE WHEN e.c[{cidx}[p]] AND (p = 0 OR (CASE WHEN {garr}[p] "
+        f"THEN element_at(acc, p) > 0 "
+        f"ELSE pmod(element_at(acc, p), 2) = 1 END)) "
+        f"THEN 1 ELSE 0 END) + (CASE WHEN s > 0 THEN 2 ELSE 0 END))"
+    )
+    return (
+        f"CAST(element_at(aggregate({lst}, array_repeat(0, {p_n}), "
+        f"{step}), {p_n}) > 0 AS INT)"
+    )
 
 
 def _timed_seq_match(steps, p_n: int, lst: str, cidx: str, garr: str) -> str:
@@ -3787,9 +3642,10 @@ _DICTGET_DEFAULTS = {
     "DateTime": "TIMESTAMP '1970-01-01 00:00:00'",
 }
 
-_DICT_FN = (
-    r"\bdict(?:Has|Get(?:OrDefault|OrNull)?"
-    r"(?:String|U?Int(?:8|16|32|64)|Float(?:32|64)|DateTime|Date)?)\s*\("
+_DICT_CALL = re.compile(
+    r"\b(dict(?:Has|Get(?:OrDefault|OrNull)?"
+    r"(?:String|U?Int(?:8|16|32|64)|Float(?:32|64)|DateTime|Date)?))\s*\(",
+    re.IGNORECASE,
 )
 
 
@@ -3808,11 +3664,9 @@ def _rewrite_dictget(sql: str, dictionaries: dict[str, str] | None) -> str:
     (tuple) keys are not bridged and reject."""
     if not dictionaries:
         return sql
-    seq = 0
-    while True:
-        m = _first_match(sql, _DICT_FN)
-        if m is None:
-            return sql
+    seq = []
+
+    def lookup(m, args: str) -> str:
         # inner projection renames the dictionary's columns to reserved
         # names BEFORE the correlated predicate: a bare column in the
         # key expression must resolve to the OUTER query — with the
@@ -3820,12 +3674,10 @@ def _rewrite_dictget(sql: str, dictionaries: dict[str, str] | None) -> str:
         # d also has a column k would silently correlate d.k = d.k
         # (every row matches). The rename leaves only __chd*_ names in
         # the inner scope.
-        kc, vc = f"__chd{seq}_k", f"__chd{seq}_v"
-        seq += 1
-        fn = m.group(0)[: m.group(0).index("(")].strip()
-        open_i = sql.index("(", m.end() - 1)
-        close_i = _match_paren(sql, open_i)
-        args = [a.strip() for a in _split_top_commas(sql[open_i + 1 : close_i])]
+        kc, vc = f"__chd{len(seq)}_k", f"__chd{len(seq)}_v"
+        seq.append(kc)
+        fn = m.group(1)
+        args = _split_top_commas(args)
         mname = re.fullmatch(r"'([^']*)'", args[0]) if args else None
         if not mname:
             raise ChSqlError(f"{fn}: the dictionary name must be a quoted literal")
@@ -3841,46 +3693,42 @@ def _rewrite_dictget(sql: str, dictionaries: dict[str, str] | None) -> str:
         if fn == "dictHas":
             if len(args) != 2:
                 raise ChSqlError("dictHas needs ('dict', key)")
-            keyexpr = args[1]
-            repl = (
+            return (
                 f"((SELECT count(1) FROM (SELECT {key_col} AS {kc} "
-                f"FROM {dname}) WHERE {kc} = ({keyexpr})) > 0)"
+                f"FROM {dname}) WHERE {kc} = ({args[1]})) > 0)"
             )
-        else:
-            or_default = fn.startswith("dictGetOrDefault")
-            or_null = fn == "dictGetOrNull"
-            want = 4 if or_default else 3
-            if len(args) != want:
-                raise ChSqlError(
-                    f"{fn} needs ('dict', 'attr', key"
-                    + (", default)" if or_default else ")")
-                )
-            mattr = re.fullmatch(r"'([^']*)'", args[1])
-            if not mattr:
-                raise ChSqlError(
-                    f"{fn}: the attribute name must be a quoted literal"
-                )
-            attr, keyexpr = mattr.group(1), args[2]
-            if re.match(r"(?:tuple\s*)?\(", keyexpr, re.IGNORECASE):
-                raise ChSqlError(
-                    f"{fn}: composite (tuple) dictionary keys are not "
-                    "bridged — spell the lookup as a JOIN on all key parts"
-                )
-            sub = (
-                f"(SELECT {vc} FROM (SELECT {key_col} AS {kc}, "
-                f"{attr} AS {vc} FROM {dname}) WHERE {kc} = ({keyexpr}))"
+        or_default = fn.startswith("dictGetOrDefault")
+        want = 4 if or_default else 3
+        if len(args) != want:
+            raise ChSqlError(
+                f"{fn} needs ('dict', 'attr', key"
+                + (", default)" if or_default else ")")
             )
-            if or_default:
-                repl = f"coalesce({sub}, ({args[3]}))"
-            elif or_null:
-                # CH's dictGetOrNull: NULL on a missing key — exactly
-                # the bare scalar subquery (no coalesce)
-                repl = sub
-            else:
-                suffix = fn[len("dictGet"):]
-                dflt = _DICTGET_DEFAULTS.get(suffix)
-                repl = f"coalesce({sub}, {dflt})" if dflt else sub
-        sql = sql[: m.start()] + repl + sql[close_i + 1 :]
+        mattr = re.fullmatch(r"'([^']*)'", args[1])
+        if not mattr:
+            raise ChSqlError(
+                f"{fn}: the attribute name must be a quoted literal"
+            )
+        attr, keyexpr = mattr.group(1), args[2]
+        if re.match(r"(?:tuple\s*)?\(", keyexpr, re.IGNORECASE):
+            raise ChSqlError(
+                f"{fn}: composite (tuple) dictionary keys are not "
+                "bridged — spell the lookup as a JOIN on all key parts"
+            )
+        sub = (
+            f"(SELECT {vc} FROM (SELECT {key_col} AS {kc}, "
+            f"{attr} AS {vc} FROM {dname}) WHERE {kc} = ({keyexpr}))"
+        )
+        if or_default:
+            return f"coalesce({sub}, ({args[3]}))"
+        if fn == "dictGetOrNull":
+            # CH's dictGetOrNull: NULL on a missing key — exactly
+            # the bare scalar subquery (no coalesce)
+            return sub
+        dflt = _DICTGET_DEFAULTS.get(fn[len("dictGet"):])
+        return f"coalesce({sub}, {dflt})" if dflt else sub
+
+    return _rewrite_calls(sql, _DICT_CALL, lookup)
 
 
 def _rewrite_sequence_count(sql: str) -> str:
@@ -3891,57 +3739,59 @@ def _rewrite_sequence_count(sql: str) -> str:
     exactly greedy left-to-right search — the count increments and
     every position resets, so the next match must start strictly after
     the completing event (CH resumes its search there too)."""
-    while True:
-        pc = _parametric_call(sql, "sequenceCount")
-        if pc is None:
-            return sql
-        start, params, args, end = pc
-        mpat = re.fullmatch(r"'([^']*)'", params)
-        if not mpat:
+    return _rewrite_calls(sql, _SEQ_COUNT_CALL, _seq_count, parametric=True)
+
+
+_SEQ_COUNT_CALL = _call_pattern(("sequenceCount",))
+
+
+def _seq_count(m, params: str, args: str | None) -> str:
+    args = _second_list(m, args)
+    mpat = re.fullmatch(r"'([^']*)'", params.strip())
+    if not mpat:
+        raise ChSqlError(
+            "sequenceCount needs a quoted literal pattern: "
+            "sequenceCount('(?1)(?2)')(ts, cond1, cond2)"
+        )
+    steps = _parse_seq_pattern(mpat.group(1))
+    if len(args) < 2:
+        raise ChSqlError("sequenceCount needs (timestamp, cond1, ...)")
+    ts, conds = args[0], args[1:]
+    for ci, *_rest in steps:
+        if not (0 <= ci < len(conds)):
             raise ChSqlError(
-                "sequenceCount needs a quoted literal pattern: "
-                "sequenceCount('(?1)(?2)')(ts, cond1, cond2)"
+                f"sequenceCount pattern ref (?{ci + 1}) has no matching "
+                f"condition (got {len(conds)})"
             )
-        steps = _parse_seq_pattern(mpat.group(1))
-        if len(args) < 2:
-            raise ChSqlError("sequenceCount needs (timestamp, cond1, ...)")
-        ts, conds = args[0], args[1:]
-        for ci, *_rest in steps:
-            if not (0 <= ci < len(conds)):
-                raise ChSqlError(
-                    f"sequenceCount pattern ref (?{ci + 1}) has no matching "
-                    f"condition (got {len(conds)})"
-                )
-        p_n = len(steps)
-        lst = _behavior_events(ts, conds)
-        cidx = "array(" + ", ".join(str(ci) for ci, *_ in steps) + ")"
-        garr = "array(" + ", ".join(
-            "true" if g else "false" for _, g, *_ in steps
-        ) + ")"
-        last_ci, last_gap = steps[-1][0], steps[-1][1]
-        if p_n == 1:
-            complete = f"e.c[{last_ci}]"
-        else:
-            gate = (
-                f"element_at(acc, {p_n - 1}) > 0"
-                if last_gap
-                else f"pmod(element_at(acc, {p_n - 1}), 2) = 1"
-            )
-            complete = f"(e.c[{last_ci}] AND {gate})"
-        step = (
-            f"(acc, e) -> transform(acc, (s, p) -> "
-            f"CASE WHEN p = {p_n} THEN s + (CASE WHEN {complete} THEN 1 ELSE 0 END) "
-            f"WHEN {complete} THEN 0 "
-            f"ELSE (CASE WHEN e.c[{cidx}[p]] AND (p = 0 OR (CASE WHEN {garr}[p] "
-            f"THEN element_at(acc, p) > 0 "
-            f"ELSE pmod(element_at(acc, p), 2) = 1 END)) "
-            f"THEN 1 ELSE 0 END) + (CASE WHEN s > 0 THEN 2 ELSE 0 END) END)"
+    p_n = len(steps)
+    lst = _behavior_events(ts, conds)
+    cidx = "array(" + ", ".join(str(ci) for ci, *_ in steps) + ")"
+    garr = "array(" + ", ".join(
+        "true" if g else "false" for _, g, *_ in steps
+    ) + ")"
+    last_ci, last_gap = steps[-1][0], steps[-1][1]
+    if p_n == 1:
+        complete = f"e.c[{last_ci}]"
+    else:
+        gate = (
+            f"element_at(acc, {p_n - 1}) > 0"
+            if last_gap
+            else f"pmod(element_at(acc, {p_n - 1}), 2) = 1"
         )
-        repl = (
-            f"CAST(element_at(aggregate({lst}, array_repeat(0, {p_n + 1}), "
-            f"{step}), {p_n + 1}) AS BIGINT)"
-        )
-        sql = sql[:start] + repl + sql[end:]
+        complete = f"(e.c[{last_ci}] AND {gate})"
+    step = (
+        f"(acc, e) -> transform(acc, (s, p) -> "
+        f"CASE WHEN p = {p_n} THEN s + (CASE WHEN {complete} THEN 1 ELSE 0 END) "
+        f"WHEN {complete} THEN 0 "
+        f"ELSE (CASE WHEN e.c[{cidx}[p]] AND (p = 0 OR (CASE WHEN {garr}[p] "
+        f"THEN element_at(acc, p) > 0 "
+        f"ELSE pmod(element_at(acc, p), 2) = 1 END)) "
+        f"THEN 1 ELSE 0 END) + (CASE WHEN s > 0 THEN 2 ELSE 0 END) END)"
+    )
+    return (
+        f"CAST(element_at(aggregate({lst}, array_repeat(0, {p_n + 1}), "
+        f"{step}), {p_n + 1}) AS BIGINT)"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4277,39 +4127,34 @@ def _rewrite_type_names(sql: str) -> str:
         conv = _ch_type_or_none(t)
         if conv:
             sql = sql[:start] + conv + sql[end:]
-    pos = 0
-    while True:
-        m = _first_match(sql[pos:], r"\bCAST\s*\(")
-        if not m:
-            return sql
-        o = sql.index("(", pos + m.end() - 1)
-        c = _match_paren(sql, o)
-        inner = sql[o + 1 : c]
-        as_kw = _top_level_matches(inner, r"\bAS\b")
-        if as_kw:
-            t = inner[as_kw[-1].end() :].strip()
-            conv = _ch_type_or_none(t)
-            if conv:
-                inner = inner[: as_kw[-1].end()] + " " + conv
-                sql = sql[: o + 1] + inner + sql[c:]
-        else:
-            # CH's FUNCTION-form cast CAST(x, 'Type') (round 11 probe:
-            # previously fell through to Spark's zero-arg `cast`
-            # resolver error three layers down). The type must be a
-            # literal; unknown names raise rather than pass a bad AS
-            # clause along.
-            args = _split_top_commas(inner)
-            tm = re.fullmatch(r"'([^']*)'", args[1].strip()) if len(args) == 2 else None
-            if tm:
-                conv = _ch_type_or_none(tm.group(1))
-                if conv is None:
-                    raise ChSqlError(
-                        f"CAST(x, '{tm.group(1)}'): unrecognized "
-                        "ClickHouse type name in the function-form "
-                        "cast — spell CAST(x AS <spark type>)"
-                    )
-                sql = sql[: o + 1] + f"{args[0]} AS {conv}" + sql[c:]
-        pos = pos + m.start() + 4  # revisit nested CASTs inside
+    return _rewrite_calls(sql, _CAST_CALL, _cast_type)
+
+
+_CAST_CALL = _call_pattern(("CAST",))
+_AS_KW = re.compile(r"\bAS\b", re.IGNORECASE)
+
+
+def _cast_type(m, inner: str) -> str | None:
+    as_kw = _top_level_matches(inner, _AS_KW)
+    if as_kw:
+        conv = _ch_type_or_none(inner[as_kw[-1].end() :].strip())
+        return f"{m.group(0)}{inner[: as_kw[-1].end()]} {conv})" if conv else None
+    # CH's FUNCTION-form cast CAST(x, 'Type') (round 11 probe:
+    # previously fell through to Spark's zero-arg `cast` resolver
+    # error three layers down). The type must be a literal; unknown
+    # names raise rather than pass a bad AS clause along.
+    args = _split_top_commas(inner)
+    tm = re.fullmatch(r"'([^']*)'", args[1]) if len(args) == 2 else None
+    if not tm:
+        return None
+    conv = _ch_type_or_none(tm.group(1))
+    if conv is None:
+        raise ChSqlError(
+            f"CAST(x, '{tm.group(1)}'): unrecognized "
+            "ClickHouse type name in the function-form "
+            "cast — spell CAST(x AS <spark type>)"
+        )
+    return f"{m.group(0)}{args[0]} AS {conv})"
 
 
 def _rewrite_dquote_identifiers(sql: str) -> str:
@@ -4340,11 +4185,7 @@ def _rewrite_int_literals(sql: str) -> str:
     (Spark parses ``0x1F`` as an identifier → a cryptic
     UNRESOLVED_COLUMN; round 11 probe)."""
     for pat, base in ((r"\b0[xX][0-9A-Fa-f]+\b", 16), (r"\b0[bB][01]+\b", 2)):
-        while True:
-            m = _first_match(sql, pat)
-            if not m:
-                break
-            sql = sql[: m.start()] + str(int(m.group(0)[2:], base)) + sql[m.end() :]
+        sql = _sub_code(sql, pat, lambda m, b=base: str(int(m.group(0)[2:], b)))
     return sql
 
 
@@ -4383,135 +4224,114 @@ def _rewrite_array_vocabulary(sql: str) -> str:
       whole match. Literal patterns only (the group decision is made
       at rewrite time); a non-literal pattern raises.
     """
-    names = "|".join(sorted(_ARRAY_TEMPLATES, key=len, reverse=True))
-    while True:
-        m = _first_match(sql, rf"\b({names})\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-        tmpl = _ARRAY_TEMPLATES[m.group(1).lower()].get(len(args))
-        if tmpl is None:
-            raise ChSqlError(
-                f"{m.group(1)} does not take {len(args)} argument(s) "
-                f"(supported: {sorted(_ARRAY_TEMPLATES[m.group(1).lower()])})"
-            )
-        rep = tmpl.format(*args)
-        sql = sql[: m.start()] + f"({rep})" + sql[c + 1 :]
+    sql = _rewrite_calls(sql, _ARRAY_TEMPLATE_CALL, _array_template)
+    sql = _rewrite_calls(sql, _ARRAY_SORT_CALL, _array_sort)
+    sql = _rewrite_calls(sql, _FORMAT_CALL, _format_string)
+    return _rewrite_calls(sql, _EXTRACT_CALL, _regexp_extract)
 
-    for fname, desc in (("arraySort", "asc"), ("arrayReverseSort", "desc")):
-        while True:
-            m = _first_match(sql, rf"\b{fname}\s*\(")
-            if not m:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-            if len(args) == 1:
-                rep = (
-                    f"array_sort({args[0]})" if desc == "asc"
-                    else f"reverse(array_sort({args[0]}))"
-                )
-            elif len(args) == 2 and "->" in args[0]:
-                lm = re.fullmatch(
-                    r"\(?\s*(\w+)\s*\)?\s*->\s*(.+)", args[0], re.DOTALL
-                )
-                if not lm:
-                    raise ChSqlError(
-                        f"{fname}: only a single-parameter key lambda is "
-                        f"bridged, got {args[0]!r}"
-                    )
-                p, body = lm.group(1), lm.group(2).strip()
-                kl = _subst_const(body, p, "(__sl)")
-                kr = _subst_const(body, p, "(__sr)")
-                lt, gt = ("-1", "1") if desc == "asc" else ("1", "-1")
-                rep = (
-                    f"array_sort({args[1]}, (__sl, __sr) -> "
-                    f"CASE WHEN ({kl}) < ({kr}) THEN {lt} "
-                    f"WHEN ({kl}) > ({kr}) THEN {gt} ELSE 0 END)"
-                )
+
+_ARRAY_TEMPLATE_CALL = _call_pattern(_ARRAY_TEMPLATES)
+_ARRAY_SORT_CALL = _call_pattern(("arraySort", "arrayReverseSort"))
+_FORMAT_CALL = _call_pattern(("format",))
+_EXTRACT_CALL = _call_pattern(("extract",))
+
+
+def _array_template(m, args: str) -> str:
+    forms = _ARRAY_TEMPLATES[m.group(1).lower()]
+    args = _split_top_commas(args)
+    tmpl = forms.get(len(args))
+    if tmpl is None:
+        raise ChSqlError(
+            f"{m.group(1)} does not take {len(args)} argument(s) "
+            f"(supported: {sorted(forms)})"
+        )
+    return f"({tmpl.format(*args)})"
+
+
+def _array_sort(m, args: str) -> str:
+    fname, args = m.group(1), _split_top_commas(args)
+    desc = fname.lower() == "arrayreversesort"
+    if len(args) == 1:
+        rep = f"reverse(array_sort({args[0]}))" if desc else f"array_sort({args[0]})"
+    elif len(args) == 2 and "->" in args[0]:
+        lm = re.fullmatch(r"\(?\s*(\w+)\s*\)?\s*->\s*(.+)", args[0], re.DOTALL)
+        if not lm:
+            raise ChSqlError(
+                f"{fname}: only a single-parameter key lambda is "
+                f"bridged, got {args[0]!r}"
+            )
+        p, body = lm.group(1), lm.group(2).strip()
+        kl = _subst_const(body, p, "(__sl)")
+        kr = _subst_const(body, p, "(__sr)")
+        lt, gt = ("1", "-1") if desc else ("-1", "1")
+        rep = (
+            f"array_sort({args[1]}, (__sl, __sr) -> "
+            f"CASE WHEN ({kl}) < ({kr}) THEN {lt} "
+            f"WHEN ({kl}) > ({kr}) THEN {gt} ELSE 0 END)"
+        )
+    else:
+        raise ChSqlError(
+            f"{fname} expects (arr) or (key_lambda, arr), got "
+            f"{len(args)} argument(s)"
+        )
+    return f"({rep})"
+
+
+def _format_string(m, args: str) -> str:
+    args = _split_top_commas(args)
+    if len(args) < 2:
+        raise ChSqlError(
+            "format(pattern, arg, ...) needs a pattern and at least "
+            "one argument"
+        )
+    fm = re.fullmatch(r"'((?:[^']|'')*)'", args[0])
+    if not fm:
+        raise ChSqlError(
+            "format() needs a literal pattern (ClickHouse requires a "
+            "constant pattern too)"
+        )
+    # {{ / }} are literal braces; {} auto-numbers; {N} is explicit.
+    # CH forbids mixing the auto and explicit forms — so do we.
+    parts = re.split(r"(\{\{|\}\}|\{\d*\})", fm.group(1))
+    out_parts, auto_i, saw_auto, saw_num = [], 0, False, False
+    for p in parts:
+        if p == "{{":
+            out_parts.append("{")
+        elif p == "}}":
+            out_parts.append("}")
+        elif re.fullmatch(r"\{\d*\}", p):
+            if p == "{}":
+                saw_auto = True
+                out_parts.append(f"%{auto_i + 1}$s")
+                auto_i += 1
             else:
-                raise ChSqlError(
-                    f"{fname} expects (arr) or (key_lambda, arr), got "
-                    f"{len(args)} argument(s)"
-                )
-            sql = sql[: m.start()] + f"({rep})" + sql[c + 1 :]
+                saw_num = True
+                out_parts.append(f"%{int(p[1:-1]) + 1}$s")
+        else:
+            out_parts.append(p.replace("%", "%%"))
+    if saw_auto and saw_num:
+        raise ChSqlError(
+            "format(): mixing automatic {} and indexed {N} "
+            "placeholders is an error in ClickHouse too"
+        )
+    spat = "".join(out_parts)
+    return f"(format_string('{spat}', {', '.join(args[1:])}))"
 
-    while True:
-        m = _first_match(sql, r"\bformat\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-        if len(args) < 2:
-            raise ChSqlError(
-                "format(pattern, arg, ...) needs a pattern and at least "
-                "one argument"
-            )
-        fm = re.fullmatch(r"'((?:[^']|'')*)'", args[0])
-        if not fm:
-            raise ChSqlError(
-                "format() needs a literal pattern (ClickHouse requires a "
-                "constant pattern too)"
-            )
-        pat = fm.group(1)
-        # {{ / }} are literal braces; {} auto-numbers; {N} is explicit.
-        # CH forbids mixing the auto and explicit forms — so do we.
-        parts = re.split(r"(\{\{|\}\}|\{\d*\})", pat)
-        out_parts, auto_i, saw_auto, saw_num = [], 0, False, False
-        for p in parts:
-            if p == "{{":
-                out_parts.append("{")
-            elif p == "}}":
-                out_parts.append("}")
-            elif re.fullmatch(r"\{\d*\}", p):
-                if p == "{}":
-                    saw_auto = True
-                    out_parts.append(f"%{auto_i + 1}$s")
-                    auto_i += 1
-                else:
-                    saw_num = True
-                    out_parts.append(f"%{int(p[1:-1]) + 1}$s")
-            else:
-                out_parts.append(p.replace("%", "%%"))
-        if saw_auto and saw_num:
-            raise ChSqlError(
-                "format(): mixing automatic {} and indexed {N} "
-                "placeholders is an error in ClickHouse too"
-            )
-        spat = "".join(out_parts)
-        rep = f"(format_string('{spat}', {', '.join(args[1:])}))"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
 
-    pos = 0
-    while True:
-        m = _first_match(sql[pos:], r"\bextract\s*\(")
-        if not m:
-            break
-        o = sql.index("(", pos + m.end() - 1)
-        c = _match_paren(sql, o)
-        args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-        if len(args) != 2:
-            pos = c + 1  # ANSI EXTRACT(field FROM ts) — not the CH form
-            continue
-        pm = re.fullmatch(r"'((?:[^']|'')*)'", args[1])
-        if not pm:
-            raise ChSqlError(
-                "extract(s, regex) needs a literal pattern — the "
-                "capture-group decision (CH returns group 1 when the "
-                "pattern has one, else the whole match) is made at "
-                "rewrite time"
-            )
-        pat = pm.group(1)
-        has_group = re.search(r"(?<!\\)\((?!\?)", pat) is not None
-        grp = 1 if has_group else 0
-        rep = f"(regexp_extract({args[0]}, {args[1]}, {grp}))"
-        start = pos + m.start()
-        sql = sql[:start] + rep + sql[c + 1 :]
-        pos = start + len(rep)
-    return sql
+def _regexp_extract(m, args: str) -> str | None:
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        return None  # ANSI EXTRACT(field FROM ts) — not the CH form
+    pm = re.fullmatch(r"'((?:[^']|'')*)'", args[1])
+    if not pm:
+        raise ChSqlError(
+            "extract(s, regex) needs a literal pattern — the "
+            "capture-group decision (CH returns group 1 when the "
+            "pattern has one, else the whole match) is made at "
+            "rewrite time"
+        )
+    has_group = re.search(r"(?<!\\)\((?!\?)", pm.group(1)) is not None
+    return f"(regexp_extract({args[0]}, {args[1]}, {1 if has_group else 0}))"
 
 
 def _rewrite_scalar_calls(sql: str) -> str:
@@ -4530,443 +4350,385 @@ def _rewrite_scalar_calls(sql: str) -> str:
       intervals raise (CH anchors them to a calendar origin a literal
       rewrite cannot reproduce faithfully).
     """
-    # parseDateTime(s, '%Y-%m-%d ...') — CH's EXACT-format parse (the
-    # MySQL-code twin of formatDateTime) — shares _translate_fmt's
-    # exact %-code subset; -OrNull maps to try_to_timestamp, -OrZero
-    # to its epoch-0 coalesce (CH's DateTime zero). The BestEffort
-    # heuristics family keeps its loud reject. A third (timezone)
-    # argument is not bridged: timestamps are session-zoned here.
-    while True:
-        m = _first_match(sql, r"\bparseDateTime(OrNull|OrZero)?\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2:
-            raise ChSqlError(
-                f"parseDateTime{m.group(1) or ''} is bridged for "
-                "(value, 'format') — a timezone argument is not "
-                "(timestamps are session-zoned; set "
-                "spark.sql.session.timeZone)"
-            )
-        fm = re.fullmatch(r"'([^']*)'", args[1])
-        if not fm:
-            raise ChSqlError(
-                "parseDateTime needs a LITERAL format (the %-code "
-                "translation happens at rewrite time)"
-            )
-        # format-only codes reject at REWRITE time (ADVICE r10): %a/%W/
-        # %Q translate to E/q-class Java symbols Spark forbids in
-        # datetime PARSING — at runtime they die with a
-        # SparkUpgradeException (and -OrNull would leak it instead of
-        # returning NULL). They stay available for formatDateTime.
-        for pm in re.finditer(r"%(.)", fm.group(1)):
-            if pm.group(1) in ("a", "W", "Q"):
-                raise ChSqlError(
-                    f"parseDateTime{m.group(1) or ''} %-code "
-                    f"%{pm.group(1)} maps to a format-only Java symbol "
-                    f"({_FMT_CODES[pm.group(1)]}) that Spark forbids in "
-                    "datetime parsing — usable in formatDateTime only"
-                )
-        pat = _translate_fmt(fm.group(1))
-        # quoted literal letters in the Java pattern escape as ''
-        # inside the emitted SQL literal (the formatDateTime rule)
-        pat = pat.replace("'", "''")
-        if m.group(1) == "OrNull":
-            rep = f"try_to_timestamp({args[0]}, '{pat}')"
-        elif m.group(1) == "OrZero":
-            rep = (
-                f"coalesce(try_to_timestamp({args[0]}, '{pat}'), "
-                f"TIMESTAMP '1970-01-01 00:00:00')"
-            )
-        else:
-            # the PLAIN form throws in ClickHouse on unparseable input;
-            # a bare to_timestamp silently returns NULL in a non-ANSI
-            # session (the fixture default), collapsing parseDateTime
-            # into parseDateTimeOrNull (ADVICE r10) — raise in-plan,
-            # NULL input still passes through as NULL (CH nullable
-            # propagation)
-            rep = (
-                f"(CASE WHEN ({args[0]}) IS NULL "
-                f"THEN CAST(NULL AS TIMESTAMP) "
-                f"ELSE coalesce(try_to_timestamp({args[0]}, '{pat}'), "
-                f"CAST(raise_error(concat('parseDateTime: ', "
-                f"CAST({args[0]} AS STRING), ' does not match the "
-                f"format — parseDateTimeOrNull is the NULL-on-miss "
-                f"form')) AS TIMESTAMP)) END)"
-            )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # tupleElement(t, N) / tupleElement(t, 'name'): positional access
-    # uses the tuple() bridge's ._N element names (arbitrary source
-    # structs need the string-name form); a non-literal selector
-    # rejects — there is no runtime field dispatch (round 10)
-    while True:
-        m = _first_match(sql, r"\btupleElement\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2:
-            raise ChSqlError("tupleElement expects (tuple, index_or_name)")
-        t, sel = args
-        if re.fullmatch(r"\d+", sel):
-            if int(sel) < 1:
-                raise ChSqlError(
-                    "tupleElement indexes are 1-based (ClickHouse "
-                    f"throws on index {sel})"
-                )
-            field = f"_{int(sel)}"
-        elif re.fullmatch(r"'(\w+)'", sel):
-            field = sel[1:-1]
-        else:
-            raise ChSqlError(
-                "tupleElement selector must be an integer or quoted-name "
-                "literal (runtime field dispatch is not bridgeable) — "
-                f"got {sel!r}"
-            )
-        sql = sql[: m.start()] + f"({t}).{field}" + sql[c + 1 :]
-
+    sql = _rewrite_calls(sql, _PARSE_DATETIME_CALL, _parse_datetime)
+    sql = _rewrite_calls(sql, _TUPLE_ELEMENT_CALL, _tuple_element)
     # CH tuple access `tuple(a, b).1`: after the tuple() template the
     # expression ends in ')', so ').N' is unambiguous (a decimal
     # literal never follows a closing paren) -> the ._N element name
-    while True:
-        m = _first_match(sql, r"\)\.(\d+)\b")
-        if not m:
-            break
-        sql = sql[: m.start()] + f")._{m.group(1)}" + sql[m.end() :]
+    sql = _sub_code(sql, _TUPLE_INDEX, lambda m: f")._{m.group(1)}")
+    for pat, rule in _SCALAR_CALLS:
+        sql = _rewrite_calls(sql, pat, rule)
+    return sql
 
-    # toDecimal32/64/128[OrNull|OrZero](x, scale-literal) -> CAST at
-    # CH's precision tier (9/18/38); toDecimal256 exceeds DECIMAL(38)
-    while True:
-        m = _first_match(
-            sql, r"\btoDecimal(32|64|128|256)(OrNull|OrZero)?\s*\("
+
+def _parse_datetime(m, args: str) -> str:
+    """parseDateTime(s, '%Y-%m-%d ...') — CH's EXACT-format parse (the
+    MySQL-code twin of formatDateTime) — shares _translate_fmt's exact
+    %-code subset; -OrNull maps to try_to_timestamp, -OrZero to its
+    epoch-0 coalesce (CH's DateTime zero). The BestEffort heuristics
+    family keeps its loud reject. A third (timezone) argument is not
+    bridged: timestamps are session-zoned here."""
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError(
+            f"parseDateTime{m.group(1) or ''} is bridged for "
+            "(value, 'format') — a timezone argument is not "
+            "(timestamps are session-zoned; set "
+            "spark.sql.session.timeZone)"
         )
-        if not m:
-            break
-        if m.group(1) == "256":
-            raise ChSqlError(
-                "toDecimal256 exceeds Spark's DECIMAL(38) lane — use "
-                "toDecimal128, or keep the value in DOUBLE"
-            )
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2 or not re.fullmatch(r"\d+", args[1]):
-            raise ChSqlError(
-                f"toDecimal{m.group(1)}{m.group(2) or ''} expects "
-                "(x, scale-literal)"
-            )
-        p = {"32": 9, "64": 18, "128": 38}[m.group(1)]
-        s = int(args[1])
-        if s > p:
-            raise ChSqlError(
-                f"toDecimal{m.group(1)}: scale {s} exceeds precision {p}"
-            )
-        if m.group(2):
-            cast = f"try_cast({args[0]} AS DECIMAL({p},{s}))"
-            if m.group(2) == "OrZero":
-                cast = f"coalesce({cast}, CAST(0 AS DECIMAL({p},{s})))"
-        else:
-            cast = f"CAST({args[0]} AS DECIMAL({p},{s}))"
-        sql = sql[: m.start()] + cast + sql[c + 1 :]
-
-    while True:
-        m = _first_match(sql, r"\bmultiIf\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) < 3 or len(args) % 2 == 0:
-            raise ChSqlError(
-                f"multiIf expects (cond, val, ..., else) — odd argument "
-                f"count >= 3, got {len(args)}"
-            )
-        whens = "".join(
-            f" WHEN {args[i]} THEN {args[i + 1]}"
-            for i in range(0, len(args) - 1, 2)
+    fm = re.fullmatch(r"'([^']*)'", args[1])
+    if not fm:
+        raise ChSqlError(
+            "parseDateTime needs a LITERAL format (the %-code "
+            "translation happens at rewrite time)"
         )
-        rep = f"(CASE{whens} ELSE {args[-1]} END)"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # date_diff is CH's documented alias of dateDiff; Spark ALSO has a
-    # 2-arg date_diff builtin, so only the 3-arg literal-unit call form
-    # is treated as the CH spelling (the 2-arg form passes through)
-    pos = 0
-    while True:
-        m = _first_match(sql[pos:], r"\b(?:dateDiff|date_diff)\s*\(")
-        if not m:
-            break
-        start = pos + m.start()
-        o = sql.index("(", pos + m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        name = sql[start:o].rstrip(" \t(").strip()
-        if len(args) == 2 and name == "date_diff":
-            pos = o + 1  # Spark's own 2-arg builtin
-            continue
-        if len(args) != 3:
-            raise ChSqlError(f"dateDiff expects 3 arguments, got {len(args)}")
-        um = re.fullmatch(r"\s*'(\w+)'\s*", args[0])
-        if not um or um.group(1).lower() not in _TSDIFF_UNITS:
+    # format-only codes reject at REWRITE time (ADVICE r10): %a/%W/
+    # %Q translate to E/q-class Java symbols Spark forbids in
+    # datetime PARSING — at runtime they die with a
+    # SparkUpgradeException (and -OrNull would leak it instead of
+    # returning NULL). They stay available for formatDateTime.
+    for pm in re.finditer(r"%(.)", fm.group(1)):
+        if pm.group(1) in ("a", "W", "Q"):
             raise ChSqlError(
-                f"dateDiff unit must be a literal of {sorted(_TSDIFF_UNITS)}, "
-                f"got {args[0]!r}"
+                f"parseDateTime{m.group(1) or ''} %-code "
+                f"%{pm.group(1)} maps to a format-only Java symbol "
+                f"({_FMT_CODES[pm.group(1)]}) that Spark forbids in "
+                "datetime parsing — usable in formatDateTime only"
             )
-        u = um.group(1).lower()
-        rep = (
-            f"timestampdiff({u.upper()}, date_trunc('{u}', {args[1]}), "
-            f"date_trunc('{u}', {args[2]}))"
+    # quoted literal letters in the Java pattern escape as ''
+    # inside the emitted SQL literal (the formatDateTime rule)
+    pat = _translate_fmt(fm.group(1)).replace("'", "''")
+    if m.group(1) == "OrNull":
+        return f"try_to_timestamp({args[0]}, '{pat}')"
+    if m.group(1) == "OrZero":
+        return (
+            f"coalesce(try_to_timestamp({args[0]}, '{pat}'), "
+            f"TIMESTAMP '1970-01-01 00:00:00')"
         )
-        sql = sql[:start] + rep + sql[c + 1 :]
-        pos = start
+    # the PLAIN form throws in ClickHouse on unparseable input;
+    # a bare to_timestamp silently returns NULL in a non-ANSI
+    # session (the fixture default), collapsing parseDateTime
+    # into parseDateTimeOrNull (ADVICE r10) — raise in-plan,
+    # NULL input still passes through as NULL (CH nullable
+    # propagation)
+    return (
+        f"(CASE WHEN ({args[0]}) IS NULL "
+        f"THEN CAST(NULL AS TIMESTAMP) "
+        f"ELSE coalesce(try_to_timestamp({args[0]}, '{pat}'), "
+        f"CAST(raise_error(concat('parseDateTime: ', "
+        f"CAST({args[0]} AS STRING), ' does not match the "
+        f"format — parseDateTimeOrNull is the NULL-on-miss "
+        f"form')) AS TIMESTAMP)) END)"
+    )
 
+
+def _tuple_element(m, args: str) -> str:
+    """tupleElement(t, N) / tupleElement(t, 'name'): positional access
+    uses the tuple() bridge's ._N element names (arbitrary source
+    structs need the string-name form); a non-literal selector
+    rejects — there is no runtime field dispatch (round 10)"""
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError("tupleElement expects (tuple, index_or_name)")
+    t, sel = args
+    if re.fullmatch(r"\d+", sel):
+        if int(sel) < 1:
+            raise ChSqlError(
+                "tupleElement indexes are 1-based (ClickHouse "
+                f"throws on index {sel})"
+            )
+        return f"({t})._{int(sel)}"
+    if re.fullmatch(r"'(\w+)'", sel):
+        return f"({t}).{sel[1:-1]}"
+    raise ChSqlError(
+        "tupleElement selector must be an integer or quoted-name "
+        "literal (runtime field dispatch is not bridgeable) — "
+        f"got {sel!r}"
+    )
+
+
+def _to_decimal(m, args: str) -> str:
+    """toDecimal32/64/128[OrNull|OrZero](x, scale-literal) -> CAST at
+    CH's precision tier (9/18/38); toDecimal256 exceeds DECIMAL(38)"""
+    if m.group(1) == "256":
+        raise ChSqlError(
+            "toDecimal256 exceeds Spark's DECIMAL(38) lane — use "
+            "toDecimal128, or keep the value in DOUBLE"
+        )
+    args = _split_top_commas(args)
+    if len(args) != 2 or not re.fullmatch(r"\d+", args[1]):
+        raise ChSqlError(
+            f"toDecimal{m.group(1)}{m.group(2) or ''} expects "
+            "(x, scale-literal)"
+        )
+    p = {"32": 9, "64": 18, "128": 38}[m.group(1)]
+    s = int(args[1])
+    if s > p:
+        raise ChSqlError(
+            f"toDecimal{m.group(1)}: scale {s} exceeds precision {p}"
+        )
+    if not m.group(2):
+        return f"CAST({args[0]} AS DECIMAL({p},{s}))"
+    cast = f"try_cast({args[0]} AS DECIMAL({p},{s}))"
+    if m.group(2) == "OrZero":
+        cast = f"coalesce({cast}, CAST(0 AS DECIMAL({p},{s})))"
+    return cast
+
+
+def _multi_if(m, args: str) -> str:
+    args = _split_top_commas(args)
+    if len(args) < 3 or len(args) % 2 == 0:
+        raise ChSqlError(
+            f"multiIf expects (cond, val, ..., else) — odd argument "
+            f"count >= 3, got {len(args)}"
+        )
+    whens = "".join(
+        f" WHEN {args[i]} THEN {args[i + 1]}"
+        for i in range(0, len(args) - 1, 2)
+    )
+    return f"(CASE{whens} ELSE {args[-1]} END)"
+
+
+def _date_diff(m, args: str) -> str | None:
+    """date_diff is CH's documented alias of dateDiff; Spark ALSO has a
+    2-arg date_diff builtin (any case), so only the 3-arg literal-unit
+    call form is treated as the CH spelling (the 2-arg form passes
+    through)"""
+    args = _split_top_commas(args)
+    if len(args) == 2 and m.group(1).lower() == "date_diff":
+        return None  # Spark's own 2-arg builtin
+    if len(args) != 3:
+        raise ChSqlError(f"dateDiff expects 3 arguments, got {len(args)}")
+    um = re.fullmatch(r"\s*'(\w+)'\s*", args[0])
+    if not um or um.group(1).lower() not in _TSDIFF_UNITS:
+        raise ChSqlError(
+            f"dateDiff unit must be a literal of {sorted(_TSDIFF_UNITS)}, "
+            f"got {args[0]!r}"
+        )
+    u = um.group(1).lower()
+    return (
+        f"timestampdiff({u.upper()}, date_trunc('{u}', {args[1]}), "
+        f"date_trunc('{u}', {args[2]}))"
+    )
+
+
+#: age('unit', a, b) — COMPLETE units elapsed (no truncation, unlike
+#: dateDiff's boundary-crossing count). Spark's timestampdiff has
+#: exactly this contract for duration units (probed: 23:00 -> next
+#: day 01:00 is 0 DAYs). Calendar units reject: CH's month
+#: arithmetic clamps month-ends (Jan 31 + 1 month = Feb 29) while
+#: Spark's complete-month rule differs on those edges — a silent
+#: off-by-one on real data (round-12 wave 3).
+_AGE_UNITS = {
+    "microsecond", "millisecond", "second", "minute", "hour",
+    "day", "week",
+}
+
+
+def _age(m, args: str) -> str:
+    args = _split_top_commas(args)
+    if len(args) != 3:
+        raise ChSqlError(f"age expects 3 arguments, got {len(args)}")
+    um = re.fullmatch(r"\s*'(\w+)'\s*", args[0])
+    unit = um.group(1).lower() if um else None
+    if unit not in _AGE_UNITS:
+        raise ChSqlError(
+            f"age unit must be a literal of {sorted(_AGE_UNITS)} "
+            f"(month/quarter/year diverge on CH's month-end "
+            f"clamping and are not bridged), got {args[0]!r}"
+        )
+    return f"timestampdiff({unit.upper()}, {args[1]}, {args[2]})"
+
+
+#: accurateCast[OrNull](x, 'Type') — re-route onto the to<T>[OrNull]
+#: family, whose emitted forms carry the width/sign range gates
+#: (ADVICE r11): OrNull -> NULL out of domain; the plain form raises
+#: in-plan (CH accurateCast throws; the to<T> truncating casts would
+#: silently wrap, so they are NOT used here).
+_ACC_TYPES = {
+    "UInt8", "UInt16", "UInt32", "UInt64",
+    "Int8", "Int16", "Int32", "Int64",
+    "Float32", "Float64", "DateTime",
+}
+
+
+def _accurate_cast(m, args: str) -> str:
+    ornull = bool(m.group(1))
+    args = _split_top_commas(args)
+    tm = re.fullmatch(r"\s*'(\w+)'\s*", args[1]) if len(args) == 2 else None
+    t = tm.group(1) if tm else None
+    if t is None or (t not in _ACC_TYPES and t != "String"):
+        raise ChSqlError(
+            f"accurateCast{'OrNull' if ornull else ''}: the type must "
+            f"be a literal of {sorted(_ACC_TYPES | {'String'})} "
+            f"(CH type names, exact case), got "
+            f"{args[1] if len(args) == 2 else args!r}"
+        )
+    if t == "String":
+        return f"CAST({args[0]} AS STRING)"
+    name = f"to{t}"
+    probe = f"{name}OrNull({args[0]})"
+    if ornull:
+        return probe
+    return (
+        f"(CASE WHEN ({args[0]}) IS NOT NULL AND {probe} IS "
+        f"NULL THEN {name}OrNull(raise_error(concat("
+        f"'accurateCast: value out of {t} domain: ', "
+        f"CAST({args[0]} AS STRING)))) ELSE {probe} END)"
+    )
+
+
+def _start_of_interval(m, args: str) -> str:
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError(
+            f"toStartOfInterval expects 2 arguments, got {len(args)}"
+        )
+    im = re.fullmatch(
+        r"\s*INTERVAL\s+(\d+)\s+(\w+?)s?\s*", args[1], re.IGNORECASE
+    )
+    if not im or im.group(2).lower() not in _INTERVAL_SECONDS:
+        raise ChSqlError(
+            "toStartOfInterval supports INTERVAL n second/minute/hour/"
+            f"day (fixed-width units), got {args[1]!r} — month-class "
+            "intervals are calendar-anchored in ClickHouse and have no "
+            "faithful literal rewrite"
+        )
+    secs = int(im.group(1)) * _INTERVAL_SECONDS[im.group(2).lower()]
+    ts = args[0]
+    # pmod, not %: Spark's % takes the dividend's sign, so a negative
+    # epoch (pre-1970, representable in CH DateTime64) would round
+    # toward zero — an interval start AFTER the input. pmod floors.
+    return (
+        f"timestamp_seconds(unix_seconds({ts}) - "
+        f"pmod(unix_seconds({ts}), {secs}))"
+    )
+
+
+def _linear_regression(m, args: str) -> str:
+    """simpleLinearRegression(x, y) — CH's least-squares aggregate
+    returning (k, b). Inputs snap to DECIMAL(18,4); the four moment
+    sums are exact decimals (x up to epoch scale fits precision 38),
+    and k/b derive from them through one fixed IEEE expression — so
+    an oracle spelling the same formula over the same snapped sums is
+    bit-identical (CH's own float accumulation is partitioning-
+    dependent; the snap-then-derive form is the deterministic
+    equivalent, same trade as the uniq sketch mappings). Returns a
+    named_struct('k','b') — tuple positions in CH."""
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError("simpleLinearRegression expects (x, y)")
+    x, y = args
+    dx = f"CAST({x} AS DECIMAL(18,4))"
+    dy = f"CAST({y} AS DECIMAL(18,4))"
+    stats = (
+        f"named_struct("
+        f"'n', CAST(count({x}) AS DOUBLE), "
+        f"'sx', CAST(sum({dx}) AS DOUBLE), "
+        f"'sy', CAST(sum({dy}) AS DOUBLE), "
+        f"'sxy', CAST(sum({dx} * {dy}) AS DOUBLE), "
+        f"'sxx', CAST(sum({dx} * {dx}) AS DOUBLE))"
+    )
+    return (
+        f"element_at(transform(array({stats}), s -> element_at("
+        f"transform(array((s.n * s.sxy - s.sx * s.sy) / "
+        f"(s.n * s.sxx - s.sx * s.sx)), k -> named_struct("
+        f"'k', k, 'b', (s.sy - k * s.sx) / s.n)), 1)), 1)"
+    )
+
+
+def _array_fold(m, args: str) -> str:
+    """arrayFold((acc, x) -> ..., arr, init) — CH's explicit fold; the
+    lambda syntax is identical to Spark's aggregate(), only the
+    ARGUMENT ORDER differs (function first in CH, last in Spark)"""
+    args = _split_top_commas(args)
+    if len(args) != 3:
+        raise ChSqlError(
+            "arrayFold expects (lambda, array, init) — CH's "
+            "single-array form"
+        )
+    fn, arr, init = args
+    return f"aggregate({arr}, {init}, {fn})"
+
+
+#: arrayReduce('agg', arr) — a named aggregate applied to an array.
+#: Bridged for the order-free exact members; anything else raises
+#: with the aggregate-subquery spelling
+_ARRAY_REDUCE = {
+    "sum": "aggregate({a}, CAST(0 AS DOUBLE), (x, y) -> x + y)",
+    "min": "array_min({a})",
+    "max": "array_max({a})",
+    "count": "size({a})",
+    "avg": (
+        "(aggregate({a}, CAST(0 AS DOUBLE), (x, y) -> x + y) / "
+        "size({a}))"
+    ),
+    "uniqExact": "size(array_distinct({a}))",
+}
+
+
+def _array_reduce(m, args: str) -> str:
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError("arrayReduce expects ('agg', array)")
+    am = re.fullmatch(r"\s*'(\w+)'\s*", args[0])
+    if not am or am.group(1) not in _ARRAY_REDUCE:
+        raise ChSqlError(
+            f"arrayReduce supports {sorted(_ARRAY_REDUCE)} — other "
+            "aggregates need the explode + aggregate spelling"
+        )
+    return _ARRAY_REDUCE[am.group(1)].format(a=args[1])
+
+
+def _array_cum_sum(m, a: str) -> str:
+    """arrayCumSum / arrayDifference — CH array scalars, exact integer
+    algebra when fed integral arrays (the bridge keeps the element
+    type for arrayDifference; arrayCumSum folds in DOUBLE — CH keeps
+    the widened input type, a documented divergence)"""
+    return (
+        f"aggregate({a.strip()}, named_struct("
+        f"'o', CAST(array() AS ARRAY<DOUBLE>), 'r', CAST(0 AS DOUBLE)), "
+        f"(acc, v) -> named_struct("
+        f"'o', concat(acc.o, array(acc.r + v)), 'r', acc.r + v)).o"
+    )
+
+
+def _array_difference(m, a: str) -> str:
+    # i is 0-based; element_at is 1-based, so element_at(a, i) IS
+    # the previous element; v - v pins the leading 0 to the
+    # array's own element type (element_at(a, 0) would raise)
+    a = a.strip()
+    return (
+        f"transform({a}, (v, i) -> "
+        f"if(i = 0, v - v, v - element_at({a}, i)))"
+    )
+
+
+_PARSE_DATETIME_CALL = re.compile(
+    r"\bparseDateTime(OrNull|OrZero)?\s*\(", re.IGNORECASE
+)
+_TUPLE_ELEMENT_CALL = _call_pattern(("tupleElement",))
+_TUPLE_INDEX = re.compile(r"\)\.(\d+)\b")
+_SCALAR_CALLS = (
+    (re.compile(r"\btoDecimal(32|64|128|256)(OrNull|OrZero)?\s*\(",
+                re.IGNORECASE), _to_decimal),
+    (_call_pattern(("multiIf",)), _multi_if),
+    (_call_pattern(("dateDiff", "date_diff")), _date_diff),
     # leftPad/rightPad 2-arg form: CH defaults the pad string to a
     # space; the registered SQL UDFs are fixed 3-arg (round-12 wave 3)
-    pos = 0
-    while True:
-        m = _first_match(sql[pos:], r"\b(?:leftPad|rightPad)\s*\(")
-        if not m:
-            break
-        start = pos + m.start()
-        o = sql.index("(", pos + m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) == 2:
-            sql = sql[:c] + ", ' '" + sql[c:]
-        pos = o + 1
-
-    # age('unit', a, b) — COMPLETE units elapsed (no truncation, unlike
-    # dateDiff's boundary-crossing count). Spark's timestampdiff has
-    # exactly this contract for duration units (probed: 23:00 -> next
-    # day 01:00 is 0 DAYs). Calendar units reject: CH's month
-    # arithmetic clamps month-ends (Jan 31 + 1 month = Feb 29) while
-    # Spark's complete-month rule differs on those edges — a silent
-    # off-by-one on real data (round-12 wave 3).
-    _AGE_UNITS = {
-        "microsecond", "millisecond", "second", "minute", "hour",
-        "day", "week",
-    }
-    while True:
-        m = _first_match(sql, r"\bage\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 3:
-            raise ChSqlError(f"age expects 3 arguments, got {len(args)}")
-        um = re.fullmatch(r"\s*'(\w+)'\s*", args[0])
-        unit = um.group(1).lower() if um else None
-        if unit not in _AGE_UNITS:
-            raise ChSqlError(
-                f"age unit must be a literal of {sorted(_AGE_UNITS)} "
-                f"(month/quarter/year diverge on CH's month-end "
-                f"clamping and are not bridged), got {args[0]!r}"
-            )
-        rep = f"timestampdiff({unit.upper()}, {args[1]}, {args[2]})"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # accurateCast[OrNull](x, 'Type') — re-route onto the to<T>[OrNull]
-    # family, whose emitted forms carry the width/sign range gates
-    # (ADVICE r11): OrNull -> NULL out of domain; the plain form raises
-    # in-plan (CH accurateCast throws; the to<T> truncating casts would
-    # silently wrap, so they are NOT used here).
-    _ACC_TYPES = {
-        "UInt8", "UInt16", "UInt32", "UInt64",
-        "Int8", "Int16", "Int32", "Int64",
-        "Float32", "Float64", "DateTime",
-    }
-    while True:
-        m = _first_match(sql, r"\baccurateCast(OrNull)?\s*\(")
-        if not m:
-            break
-        ornull = bool(m.group(1))
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        tm = re.fullmatch(r"\s*'(\w+)'\s*", args[1]) if len(args) == 2 else None
-        t = tm.group(1) if tm else None
-        if t is None or (t not in _ACC_TYPES and t != "String"):
-            raise ChSqlError(
-                f"accurateCast{'OrNull' if ornull else ''}: the type must "
-                f"be a literal of {sorted(_ACC_TYPES | {'String'})} "
-                f"(CH type names, exact case), got "
-                f"{args[1] if len(args) == 2 else args!r}"
-            )
-        if t == "String":
-            rep = f"CAST({args[0]} AS STRING)"
-        else:
-            name = f"to{t}"
-            probe = f"{name}OrNull({args[0]})"
-            if ornull:
-                rep = probe
-            else:
-                rep = (
-                    f"(CASE WHEN ({args[0]}) IS NOT NULL AND {probe} IS "
-                    f"NULL THEN {name}OrNull(raise_error(concat("
-                    f"'accurateCast: value out of {t} domain: ', "
-                    f"CAST({args[0]} AS STRING)))) ELSE {probe} END)"
-                )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    while True:
-        m = _first_match(sql, r"\btoStartOfInterval\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2:
-            raise ChSqlError(
-                f"toStartOfInterval expects 2 arguments, got {len(args)}"
-            )
-        im = re.fullmatch(
-            r"\s*INTERVAL\s+(\d+)\s+(\w+?)s?\s*", args[1], re.IGNORECASE
-        )
-        if not im or im.group(2).lower() not in _INTERVAL_SECONDS:
-            raise ChSqlError(
-                "toStartOfInterval supports INTERVAL n second/minute/hour/"
-                f"day (fixed-width units), got {args[1]!r} — month-class "
-                "intervals are calendar-anchored in ClickHouse and have no "
-                "faithful literal rewrite"
-            )
-        secs = int(im.group(1)) * _INTERVAL_SECONDS[im.group(2).lower()]
-        ts = args[0]
-        # pmod, not %: Spark's % takes the dividend's sign, so a negative
-        # epoch (pre-1970, representable in CH DateTime64) would round
-        # toward zero — an interval start AFTER the input. pmod floors.
-        rep = (
-            f"timestamp_seconds(unix_seconds({ts}) - "
-            f"pmod(unix_seconds({ts}), {secs}))"
-        )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # simpleLinearRegression(x, y) — CH's least-squares aggregate
-    # returning (k, b). Inputs snap to DECIMAL(18,4); the four moment
-    # sums are exact decimals (x up to epoch scale fits precision 38),
-    # and k/b derive from them through one fixed IEEE expression — so
-    # an oracle spelling the same formula over the same snapped sums is
-    # bit-identical (CH's own float accumulation is partitioning-
-    # dependent; the snap-then-derive form is the deterministic
-    # equivalent, same trade as the uniq sketch mappings). Returns a
-    # named_struct('k','b') — tuple positions in CH.
-    while True:
-        m = _first_match(sql, r"\bsimpleLinearRegression\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2:
-            raise ChSqlError("simpleLinearRegression expects (x, y)")
-        x, y = (a.strip() for a in args)
-        dx = f"CAST({x} AS DECIMAL(18,4))"
-        dy = f"CAST({y} AS DECIMAL(18,4))"
-        stats = (
-            f"named_struct("
-            f"'n', CAST(count({x}) AS DOUBLE), "
-            f"'sx', CAST(sum({dx}) AS DOUBLE), "
-            f"'sy', CAST(sum({dy}) AS DOUBLE), "
-            f"'sxy', CAST(sum({dx} * {dy}) AS DOUBLE), "
-            f"'sxx', CAST(sum({dx} * {dx}) AS DOUBLE))"
-        )
-        rep = (
-            f"element_at(transform(array({stats}), s -> element_at("
-            f"transform(array((s.n * s.sxy - s.sx * s.sy) / "
-            f"(s.n * s.sxx - s.sx * s.sx)), k -> named_struct("
-            f"'k', k, 'b', (s.sy - k * s.sx) / s.n)), 1)), 1)"
-        )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # arrayFold((acc, x) -> ..., arr, init) — CH's explicit fold; the
-    # lambda syntax is identical to Spark's aggregate(), only the
-    # ARGUMENT ORDER differs (function first in CH, last in Spark)
-    while True:
-        m = _first_match(sql, r"\barrayFold\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 3:
-            raise ChSqlError(
-                "arrayFold expects (lambda, array, init) — CH's "
-                "single-array form"
-            )
-        fn, arr, init = args
-        rep = f"aggregate({arr}, {init}, {fn})"
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # arrayReduce('agg', arr) — a named aggregate applied to an array.
-    # Bridged for the order-free exact members; anything else raises
-    # with the aggregate-subquery spelling
-    _ARRAY_REDUCE = {
-        "sum": "aggregate({a}, CAST(0 AS DOUBLE), (x, y) -> x + y)",
-        "min": "array_min({a})",
-        "max": "array_max({a})",
-        "count": "size({a})",
-        "avg": (
-            "(aggregate({a}, CAST(0 AS DOUBLE), (x, y) -> x + y) / "
-            "size({a}))"
-        ),
-        "uniqExact": "size(array_distinct({a}))",
-    }
-    while True:
-        m = _first_match(sql, r"\barrayReduce\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = _split_top_commas(sql[o + 1 : c])
-        if len(args) != 2:
-            raise ChSqlError("arrayReduce expects ('agg', array)")
-        am = re.fullmatch(r"\s*'(\w+)'\s*", args[0])
-        if not am or am.group(1) not in _ARRAY_REDUCE:
-            raise ChSqlError(
-                f"arrayReduce supports {sorted(_ARRAY_REDUCE)} — other "
-                "aggregates need the explode + aggregate spelling"
-            )
-        rep = _ARRAY_REDUCE[am.group(1)].format(a=args[1].strip())
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-
-    # arrayCumSum / arrayDifference — CH array scalars, exact integer
-    # algebra when fed integral arrays (the bridge keeps the element
-    # type for arrayDifference; arrayCumSum folds in DOUBLE — CH keeps
-    # the widened input type, a documented divergence)
-    while True:
-        m = _first_match(sql, r"\barrayCumSum\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        a = sql[o + 1 : c].strip()
-        rep = (
-            f"aggregate({a}, named_struct("
-            f"'o', CAST(array() AS ARRAY<DOUBLE>), 'r', CAST(0 AS DOUBLE)), "
-            f"(acc, v) -> named_struct("
-            f"'o', concat(acc.o, array(acc.r + v)), 'r', acc.r + v)).o"
-        )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-    while True:
-        m = _first_match(sql, r"\barrayDifference\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        a = sql[o + 1 : c].strip()
-        # i is 0-based; element_at is 1-based, so element_at(a, i) IS
-        # the previous element; v - v pins the leading 0 to the
-        # array's own element type (element_at(a, 0) would raise)
-        rep = (
-            f"transform({a}, (v, i) -> "
-            f"if(i = 0, v - v, v - element_at({a}, i)))"
-        )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
-    return sql
+    (_call_pattern(("leftPad", "rightPad")),
+     lambda m, a: f"{m.group(0)}{a}, ' ')"
+     if len(_split_top_commas(a)) == 2 else None),
+    (_call_pattern(("age",)), _age),
+    (re.compile(r"\baccurateCast(OrNull)?\s*\(", re.IGNORECASE),
+     _accurate_cast),
+    (_call_pattern(("toStartOfInterval",)), _start_of_interval),
+    (_call_pattern(("simpleLinearRegression",)), _linear_regression),
+    (_call_pattern(("arrayFold",)), _array_fold),
+    (_call_pattern(("arrayReduce",)), _array_reduce),
+    (_call_pattern(("arrayCumSum",)), _array_cum_sum),
+    (_call_pattern(("arrayDifference",)), _array_difference),
+)
 
 
 def _rewrite_prewhere_settings(sql: str) -> str:
@@ -5081,15 +4843,7 @@ def _rewrite_sample(sql: str, sample_by: dict | None) -> str:
         except ValueError:  # pragma: no cover - pattern-bounded
             raise ChSqlError(f"SAMPLE: cannot parse {what} {txt!r}") from None
 
-    while True:
-        m = _first_match(
-            sql,
-            r"\bFROM\s+([A-Za-z_][A-Za-z0-9_.]*)\s+SAMPLE\s+"
-            r"([0-9.]+(?:\s*/\s*[0-9]+)?)"
-            r"(?:\s+OFFSET\s+([0-9.]+(?:\s*/\s*[0-9]+)?))?",
-        )
-        if not m:
-            return sql
+    def sample(m: re.Match) -> str:
         table = m.group(1)
         frac = _frac(m.group(2), "fraction")
         off = _frac(m.group(3), "offset") if m.group(3) else 0.0
@@ -5111,34 +4865,36 @@ def _rewrite_sample(sql: str, sample_by: dict | None) -> str:
         # by the last component only (round-5 advisory)
         alias = table.split(".")[-1]
         if frac >= 1.0:
-            sub = f"FROM {table}"
+            return f"FROM {table}"
+        hx = f"substr(md5(CAST({key} AS STRING)), 1, 8)"
+        # when the window's upper edge reaches 1.0 exactly (the
+        # canonical disjoint-shard usage: SAMPLE 1/2 OFFSET 1/2),
+        # int(1.0 * 16**8) formats to NINE hex chars and the 8-char
+        # md5 prefix compares below it only when it starts with
+        # '0' — i.e. the emitted `< hi` bound silently EMPTIES the
+        # tail shard (ADVICE r11, high). The tail window needs no
+        # upper bound at all: emit only `>= lo`.
+        hi_int = int((off + frac) * 16**8)
+        if hi_int >= 16**8:
+            if off <= 0.0:  # pragma: no cover - frac>=1.0 handled above
+                return f"FROM {table}"
+            lo = format(int(off * 16**8), "08x")
+            cond = f"{hx} >= '{lo}'"
+        elif off > 0.0:
+            lo = format(int(off * 16**8), "08x")
+            hi = format(hi_int, "08x")
+            cond = f"{hx} >= '{lo}' AND {hx} < '{hi}'"
         else:
-            hx = f"substr(md5(CAST({key} AS STRING)), 1, 8)"
-            # when the window's upper edge reaches 1.0 exactly (the
-            # canonical disjoint-shard usage: SAMPLE 1/2 OFFSET 1/2),
-            # int(1.0 * 16**8) formats to NINE hex chars and the 8-char
-            # md5 prefix compares below it only when it starts with
-            # '0' — i.e. the emitted `< hi` bound silently EMPTIES the
-            # tail shard (ADVICE r11, high). The tail window needs no
-            # upper bound at all: emit only `>= lo`.
-            hi_int = int((off + frac) * 16**8)
-            if hi_int >= 16**8:
-                if off <= 0.0:  # pragma: no cover - frac>=1.0 handled above
-                    sub = f"FROM {table}"
-                    sql = sql[: m.start()] + sub + sql[m.end() :]
-                    continue
-                lo = format(int(off * 16**8), "08x")
-                cond = f"{hx} >= '{lo}'"
-            elif off > 0.0:
-                lo = format(int(off * 16**8), "08x")
-                hi = format(hi_int, "08x")
-                cond = f"{hx} >= '{lo}' AND {hx} < '{hi}'"
-            else:
-                cond = f"{hx} < '{format(hi_int, '08x')}'"
-            sub = (
-                f"FROM (SELECT * FROM {table} WHERE {cond}) {alias}"
-            )
-        sql = sql[: m.start()] + sub + sql[m.end() :]
+            cond = f"{hx} < '{format(hi_int, '08x')}'"
+        return f"FROM (SELECT * FROM {table} WHERE {cond}) {alias}"
+
+    return _sub_code(
+        sql,
+        r"\bFROM\s+([A-Za-z_][A-Za-z0-9_.]*)\s+SAMPLE\s+"
+        r"([0-9.]+(?:\s*/\s*[0-9]+)?)"
+        r"(?:\s+OFFSET\s+([0-9.]+(?:\s*/\s*[0-9]+)?))?",
+        sample,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5190,10 +4946,7 @@ def _rewrite_final(sql: str, final_tables: dict | None) -> str:
     version column for deterministic results. A FINAL on a table absent
     from ``final_tables`` raises rather than silently dropping the
     modifier."""
-    while True:
-        m = _first_match(sql, r"\bFROM\s+([A-Za-z_][A-Za-z0-9_.]*)\s+FINAL\b")
-        if not m:
-            return sql
+    def final(m: re.Match) -> str:
         table = m.group(1)
         if not final_tables or table not in final_tables:
             raise ChSqlError(
@@ -5201,17 +4954,18 @@ def _rewrite_final(sql: str, final_tables: dict | None) -> str:
                 "pass final_tables={'" + table + "': ([key_cols], version_col)}"
             )
         keys, version = final_tables[table]
-        keys_sql = ", ".join(keys)
         # alias by the last name component: "...) db.t" is unparseable
         # for a qualified table (round-5 advisory)
-        alias = table.split(".")[-1]
-        sub = (
+        return (
             f"FROM (SELECT * EXCEPT (__rn) FROM ("
-            f"SELECT __ft.*, row_number() OVER (PARTITION BY {keys_sql} "
+            f"SELECT __ft.*, row_number() OVER (PARTITION BY {', '.join(keys)} "
             f"ORDER BY {version} DESC) AS __rn FROM {table} __ft"
-            f") WHERE __rn = 1) {alias}"
+            f") WHERE __rn = 1) {table.split('.')[-1]}"
         )
-        sql = sql[: m.start()] + sub + sql[m.end() :]
+
+    return _sub_code(
+        sql, r"\bFROM\s+([A-Za-z_][A-Za-z0-9_.]*)\s+FINAL\b", final
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5297,7 +5051,7 @@ def _rewrite_tuple_in(sql: str) -> str:
     for m in reversed(
         _top_level_matches(sql, r"\b(?:GLOBAL\s+)?(?:NOT\s+)?IN\s*\(")
     ):
-        o = sql.index("(", m.end() - 1)
+        o = m.end() - 1
         c = _match_paren(sql, o)
         items = _split_top_commas(sql[o + 1 : c])
         elem_lists = [_is_bare_tuple(i) for i in items]
@@ -5580,56 +5334,45 @@ def _rewrite_misc_grammar(sql: str) -> str:
             "semantics; run the SELECT and write with df.write"
             ".csv/.parquet(...)"
         )
-    while True:
-        m = _first_match(sql, r"\bLIMIT\s+(\d+)\s*,\s*(\d+)\b(?!\s*BY\b)")
-        if not m:
-            break
-        o, n = m.group(1), m.group(2)
-        sql = sql[: m.start()] + f"LIMIT {n} OFFSET {o}" + sql[m.end() :]
-    pos = 0
-    while True:
-        m = _first_match(
-            sql[pos:],
-            r"\bIN\s+([A-Za-z_][\w.]*)\b(?!\s*[(.])",
-        )
-        if not m:
-            break
-        name = m.group(1)
-        start = pos + m.start()
-        if name.lower() in _IN_KEYWORDS or name.lower() in _WIRE_FORMATS:
-            pos = start + len(m.group(0))
-            continue
-        rep = f"IN (SELECT * FROM {name})"
-        sql = sql[:start] + rep + sql[pos + m.end() :]
-        pos = start + len(rep)
-    while True:
-        m = _first_match(sql, r"\buntuple\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        inner = sql[o + 1 : c].strip()
-        if not re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*", inner):
-            raise ChSqlError(
-                f"untuple({inner!r}): only a named tuple column is "
-                "bridged (Spark star-expands `col.*`) — alias the "
-                "expression in a subquery first"
-            )
-        sql = sql[: m.start()] + f"{inner}.*" + sql[c + 1 :]
+    sql = _sub_code(
+        sql, r"\bLIMIT\s+(\d+)\s*,\s*(\d+)\b(?!\s*BY\b)",
+        lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}",
+    )
+    sql = _sub_code(
+        sql, r"\bIN\s+([A-Za-z_][\w.]*)\b(?!\s*[(.])",
+        lambda m: m.group(0)
+        if m.group(1).lower() in _IN_KEYWORDS | _WIRE_FORMATS
+        else f"IN (SELECT * FROM {m.group(1)})",
+    )
+    sql = _rewrite_calls(sql, _UNTUPLE_CALL, _untuple)
     return _rewrite_misc_fns(sql)
+
+
+_UNTUPLE_CALL = _call_pattern(("untuple",))
+
+
+def _untuple(m, inner: str) -> str:
+    inner = inner.strip()
+    if not re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*", inner):
+        raise ChSqlError(
+            f"untuple({inner!r}): only a named tuple column is "
+            "bridged (Spark star-expands `col.*`) — alias the "
+            "expression in a subquery first"
+        )
+    return f"{inner}.*"
 
 
 #: CH toInterval* constructors -> Spark make_interval/make_dt_interval
 #: call templates ({} = the argument text; non-literal args compose)
 _TO_INTERVAL = {
-    "toIntervalYear": "make_interval({})",
-    "toIntervalQuarter": "make_interval(0, 3 * ({}))",
-    "toIntervalMonth": "make_interval(0, {})",
-    "toIntervalWeek": "make_interval(0, 0, {})",
-    "toIntervalDay": "make_dt_interval({})",
-    "toIntervalHour": "make_dt_interval(0, {})",
-    "toIntervalMinute": "make_dt_interval(0, 0, {})",
-    "toIntervalSecond": "make_dt_interval(0, 0, 0, {})",
+    "tointervalyear": "make_interval({})",
+    "tointervalquarter": "make_interval(0, 3 * ({}))",
+    "tointervalmonth": "make_interval(0, {})",
+    "tointervalweek": "make_interval(0, 0, {})",
+    "tointervalday": "make_dt_interval({})",
+    "tointervalhour": "make_dt_interval(0, {})",
+    "tointervalminute": "make_dt_interval(0, 0, {})",
+    "tointervalsecond": "make_dt_interval(0, 0, 0, {})",
 }
 
 
@@ -5681,20 +5424,6 @@ def _rewrite_qualify(sql: str) -> str:
 #: builtin while CH returns a uniform UInt32 — `rand() % N` would run
 #: and always yield 0.
 _RAND_UINT32 = "CAST(floor(rand() * 4294967296) AS BIGINT)"
-
-
-def _replace_fn_name(sql: str, ch_name: str, spark_name: str) -> str:
-    """Rename every string-aware call of ``ch_name(`` to
-    ``spark_name(`` (arguments untouched)."""
-    pos = 0
-    while True:
-        m = _first_match(sql[pos:], rf"\b{ch_name}\s*\(")
-        if not m:
-            return sql
-        start = pos + m.start()
-        o = sql.index("(", pos + m.end() - 1)
-        sql = sql[:start] + spark_name + "(" + sql[o + 1 :]
-        pos = start + len(spark_name) + 1
 
 
 #: keywords that terminate an ORDER BY item list at its own depth
@@ -5844,184 +5573,149 @@ def _rewrite_misc_fns(sql: str) -> str:
         if _first_match(sql, pat):
             raise ChSqlError(msg)
     # simple call renames: CH name -> Spark spelling, arguments kept
-    for pat, rep in (
-        (r"\bmax2\s*\(", "greatest("),
-        (r"\bmin2\s*\(", "least("),
-        (r"\broundBankers\s*\(", "bround("),  # 1- and 2-arg both
-    ):
-        while True:
-            m = _first_match(sql, pat)
-            if not m:
-                break
-            o = sql.index("(", m.end() - 1)
-            sql = sql[: m.start()] + rep + sql[o + 1 :]
+    sql = _rewrite_calls(
+        sql, _FN_RENAME_CALL,
+        lambda m, a: f"{_FN_RENAMES[m.group(1).lower()]}({a})",
+    )
     # wave-5b scalar batch: bit operators, negated LIKEs, substring
     # alias, array constructors (argument-order/variadic forms a
     # registered SQL UDF cannot express)
-    for name, tpl, nargs in (
-        ("bitAnd", "({0} & {1})", 2),
-        ("bitOr", "({0} | {1})", 2),
-        ("bitXor", "({0} ^ {1})", 2),
-        ("bitNot", "(~{0})", 1),
-        ("notLike", "({0} NOT LIKE {1})", 2),
-        ("notILike", "({0} NOT ILIKE {1})", 2),
-        ("mid", "substring({0}, {1}, {2})", 3),
-        ("arrayWithConstant", "array_repeat({1}, CAST({0} AS INT))", 2),
-        ("toDateTime64", "CAST({0} AS TIMESTAMP)", 2),
-    ):
-        while True:
-            m = _first_match(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = _split_top_commas(sql[o + 1 : c])
-            if len(args) != nargs:
-                raise ChSqlError(
-                    f"{name} expects {nargs} arguments, got {len(args)}"
-                )
-            rep = tpl.format(*(a.strip() for a in args))
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-    # bitTestAll/bitTestAny(x, b1, b2, ...) — variadic bit probes
-    for name, joiner in (("bitTestAll", " AND "), ("bitTestAny", " OR ")):
-        while True:
-            m = _first_match(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-            if len(args) < 2:
-                raise ChSqlError(f"{name} needs a value and >= 1 bit")
-            x = args[0]
-            probes = joiner.join(
-                f"((({x}) >> ({b})) & 1) = 1" for b in args[1:]
-            )
-            sql = (
-                sql[: m.start()]
-                + f"(CAST({probes} AS INT))"
-                + sql[c + 1 :]
-            )
-    # arrayResize(a, n, ext): truncate or right-extend with ext. The
-    # 2-arg form extends with the element TYPE's default — unknowable
-    # textually (the min/maxOrDefault precedent) — and rejects;
-    # negative n (CH's resize-from-the-left) likewise
-    while True:
-        m = _first_match(sql, r"\barrayResize\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        args = [a.strip() for a in _split_top_commas(sql[o + 1 : c])]
-        if len(args) != 3:
-            raise ChSqlError(
-                "arrayResize is bridged for the 3-argument form "
-                "(arr, size, extender) — the 2-arg form extends with "
-                "the element type's default value, which has no "
-                "textual spelling; negative sizes (resize from the "
-                "left) are likewise not bridged"
-            )
-        a, n_, ext = args
-        # ADVICE r12: sequence(1, 0) is the DESCENDING [1, 0] in Spark,
-        # so size 0 evaluated element_at(a, 0) and raised at runtime —
-        # CH returns []. Literal sizes resolve statically (negative =
-        # CH's resize-from-the-left, documented reject); non-literal
-        # sizes get a runtime guard — slice(a, 1, 0) is the typed empty
-        # array, raise_error fires for negatives.
-        nlit = re.fullmatch(r"[+-]?\d+", n_)
-        if nlit and int(n_) < 0:
-            raise ChSqlError(
-                "arrayResize with a negative size (resize from the "
-                "left) is not bridged"
-            )
-        body = (
-            f"transform(sequence(1, greatest(CAST({n_} AS INT), 1)), "
-            f"__i -> if(__i <= size({a}), element_at({a}, __i), {ext}))"
-        )
-        if nlit and int(n_) == 0:
-            rep = f"slice({a}, 1, 0)"
-        elif nlit:
-            rep = (
-                f"transform(sequence(1, CAST({n_} AS INT)), __i -> "
-                f"if(__i <= size({a}), element_at({a}, __i), {ext}))"
-            )
-        else:
-            rep = (
-                f"CASE WHEN CAST({n_} AS INT) < 0 THEN "
-                f"raise_error('arrayResize: negative size (resize from "
-                f"the left) is not bridged') "
-                f"WHEN CAST({n_} AS INT) = 0 THEN slice({a}, 1, 0) "
-                f"ELSE {body} END"
-            )
-        sql = sql[: m.start()] + rep + sql[c + 1 :]
+    sql = _rewrite_calls(sql, _FN_TEMPLATE_CALL, _fn_template)
+    sql = _rewrite_calls(sql, _BIT_TEST_CALL, _bit_test)
+    sql = _rewrite_calls(sql, _ARRAY_RESIZE_CALL, _array_resize)
     # toInterval* constructors -> make_interval/make_dt_interval
-    for name, tpl in _TO_INTERVAL.items():
-        while True:
-            m = _first_match(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            rep = tpl.format(sql[o + 1 : c].strip())
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-    # map algebra: CH's merge-by-key arithmetic -> map_zip_with (keys
-    # union, absent value = 0); mapKeys/mapValues/mapContains etc. are
-    # registered functions — these two need the lambda
-    for name, op in (("mapAdd", "+"), ("mapSubtract", "-")):
-        while True:
-            m = _first_match(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            o = sql.index("(", m.end() - 1)
-            c = _match_paren(sql, o)
-            args = _split_top_commas(sql[o + 1 : c])
-            if len(args) != 2:
-                raise ChSqlError(
-                    f"{name} is bridged for exactly 2 map arguments, "
-                    f"got {len(args)}"
-                )
-            rep = (
-                f"map_zip_with({args[0]}, {args[1]}, (__k, __a, __b) -> "
-                f"coalesce(__a, 0) {op} coalesce(__b, 0))"
-            )
-            sql = sql[: m.start()] + rep + sql[c + 1 :]
-    # JSONExtractKeys(j) -> Spark's json_object_keys; anyHeavy -> mode
-    # (CH: SOME heavy hitter if one exists, else arbitrary — mode is
-    # the deterministic refinement of that contract)
-    sql = _replace_fn_name(sql, "JSONExtractKeys", "json_object_keys")
-    sql = _replace_fn_name(sql, "anyHeavy", "mode")
-    # now64([precision]) -> now() (micros; CH precision arg dropped)
-    while True:
-        m = _first_match(sql, r"\bnow64\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        sql = sql[: m.start()] + "now()" + sql[c + 1 :]
+    sql = _rewrite_calls(
+        sql, _TO_INTERVAL_CALL,
+        lambda m, a: _TO_INTERVAL[m.group(1).lower()].format(a.strip()),
+    )
+    sql = _rewrite_calls(sql, _MAP_ARITH_CALL, _map_arith)
+    # now64([precision]) -> now() (micros; CH precision arg dropped);
     # toNullable(x) -> (x): Spark nullability is inferred, the wrapper
-    # is a no-op on values
-    while True:
-        m = _first_match(sql, r"\btoNullable\s*\(")
-        if not m:
-            break
-        o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
-        sql = sql[: m.start()] + f"({sql[o + 1 : c]})" + sql[c + 1 :]
-    # rand() / rand(x) -> uniform UInt32 draw (CH's dummy argument only
-    # defeats common-subexpression elimination; Spark's rand() is
-    # per-row already, so it is dropped). Position-advancing scan: the
-    # replacement itself contains rand()
-    pos = 0
-    while True:
-        m = _first_match(sql[pos:], r"\brand\s*\(")
-        if not m:
-            break
-        start = pos + m.start()
-        o = sql.index("(", pos + m.end() - 1)
-        c = _match_paren(sql, o)
-        sql = sql[:start] + _RAND_UINT32 + sql[c + 1 :]
-        pos = start + len(_RAND_UINT32)
-    return sql
+    # is a no-op on values; rand() / rand(x) -> uniform UInt32 draw
+    # (CH's dummy argument only defeats common-subexpression
+    # elimination; Spark's rand() is per-row already, so it is dropped)
+    sql = _rewrite_calls(sql, _NOW64_CALL, lambda m, a: "now()")
+    sql = _rewrite_calls(sql, _TO_NULLABLE_CALL, lambda m, a: f"({a})")
+    return _rewrite_calls(sql, _RAND_CALL, lambda m, a: _RAND_UINT32)
+
+
+#: call renames, arguments kept; JSONExtractKeys(j) -> Spark's
+#: json_object_keys; anyHeavy -> mode (CH: SOME heavy hitter if one
+#: exists, else arbitrary — mode is the deterministic refinement of
+#: that contract)
+_FN_RENAMES = {
+    "max2": "greatest",
+    "min2": "least",
+    "roundbankers": "bround",  # 1- and 2-arg both
+    "jsonextractkeys": "json_object_keys",
+    "anyheavy": "mode",
+}
+#: name -> (template, arity)
+_FN_TEMPLATES = {
+    "bitand": ("({0} & {1})", 2),
+    "bitor": ("({0} | {1})", 2),
+    "bitxor": ("({0} ^ {1})", 2),
+    "bitnot": ("(~{0})", 1),
+    "notlike": ("({0} NOT LIKE {1})", 2),
+    "notilike": ("({0} NOT ILIKE {1})", 2),
+    "mid": ("substring({0}, {1}, {2})", 3),
+    "arraywithconstant": ("array_repeat({1}, CAST({0} AS INT))", 2),
+    "todatetime64": ("CAST({0} AS TIMESTAMP)", 2),
+}
+_FN_RENAME_CALL = _call_pattern(_FN_RENAMES)
+_FN_TEMPLATE_CALL = _call_pattern(_FN_TEMPLATES)
+_BIT_TEST_CALL = _call_pattern(("bitTestAll", "bitTestAny"))
+_ARRAY_RESIZE_CALL = _call_pattern(("arrayResize",))
+_TO_INTERVAL_CALL = _call_pattern(_TO_INTERVAL)
+_MAP_ARITH_CALL = _call_pattern(("mapAdd", "mapSubtract"))
+_NOW64_CALL = _call_pattern(("now64",))
+_TO_NULLABLE_CALL = _call_pattern(("toNullable",))
+_RAND_CALL = _call_pattern(("rand",))
+
+
+def _fn_template(m, args: str) -> str:
+    tpl, nargs = _FN_TEMPLATES[m.group(1).lower()]
+    args = _split_top_commas(args)
+    if len(args) != nargs:
+        raise ChSqlError(
+            f"{m.group(1)} expects {nargs} arguments, got {len(args)}"
+        )
+    return tpl.format(*args)
+
+
+def _bit_test(m, args: str) -> str:
+    """bitTestAll/bitTestAny(x, b1, b2, ...) — variadic bit probes"""
+    args = _split_top_commas(args)
+    if len(args) < 2:
+        raise ChSqlError(f"{m.group(1)} needs a value and >= 1 bit")
+    x = args[0]
+    joiner = " AND " if m.group(1).lower() == "bittestall" else " OR "
+    probes = joiner.join(f"((({x}) >> ({b})) & 1) = 1" for b in args[1:])
+    return f"(CAST({probes} AS INT))"
+
+
+def _array_resize(m, args: str) -> str:
+    """arrayResize(a, n, ext): truncate or right-extend with ext. The
+    2-arg form extends with the element TYPE's default — unknowable
+    textually (the min/maxOrDefault precedent) — and rejects; negative
+    n (CH's resize-from-the-left) likewise"""
+    args = _split_top_commas(args)
+    if len(args) != 3:
+        raise ChSqlError(
+            "arrayResize is bridged for the 3-argument form "
+            "(arr, size, extender) — the 2-arg form extends with "
+            "the element type's default value, which has no "
+            "textual spelling; negative sizes (resize from the "
+            "left) are likewise not bridged"
+        )
+    a, n_, ext = args
+    # ADVICE r12: sequence(1, 0) is the DESCENDING [1, 0] in Spark,
+    # so size 0 evaluated element_at(a, 0) and raised at runtime —
+    # CH returns []. Literal sizes resolve statically (negative =
+    # CH's resize-from-the-left, documented reject); non-literal
+    # sizes get a runtime guard — slice(a, 1, 0) is the typed empty
+    # array, raise_error fires for negatives.
+    nlit = re.fullmatch(r"[+-]?\d+", n_)
+    if nlit and int(n_) < 0:
+        raise ChSqlError(
+            "arrayResize with a negative size (resize from the "
+            "left) is not bridged"
+        )
+    if nlit and int(n_) == 0:
+        return f"slice({a}, 1, 0)"
+    if nlit:
+        return (
+            f"transform(sequence(1, CAST({n_} AS INT)), __i -> "
+            f"if(__i <= size({a}), element_at({a}, __i), {ext}))"
+        )
+    body = (
+        f"transform(sequence(1, greatest(CAST({n_} AS INT), 1)), "
+        f"__i -> if(__i <= size({a}), element_at({a}, __i), {ext}))"
+    )
+    return (
+        f"CASE WHEN CAST({n_} AS INT) < 0 THEN "
+        f"raise_error('arrayResize: negative size (resize from "
+        f"the left) is not bridged') "
+        f"WHEN CAST({n_} AS INT) = 0 THEN slice({a}, 1, 0) "
+        f"ELSE {body} END"
+    )
+
+
+def _map_arith(m, args: str) -> str:
+    """map algebra: CH's merge-by-key arithmetic -> map_zip_with (keys
+    union, absent value = 0); mapKeys/mapValues/mapContains etc. are
+    registered functions — these two need the lambda"""
+    args = _split_top_commas(args)
+    if len(args) != 2:
+        raise ChSqlError(
+            f"{m.group(1)} is bridged for exactly 2 map arguments, "
+            f"got {len(args)}"
+        )
+    op = "+" if m.group(1).lower() == "mapadd" else "-"
+    return (
+        f"map_zip_with({args[0]}, {args[1]}, (__k, __a, __b) -> "
+        f"coalesce(__a, 0) {op} coalesce(__b, 0))"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6178,18 +5872,17 @@ def _rewrite_query_params(sql: str, params: dict | None) -> str:
             "the view body with {name:Type} placeholders and pass "
             "params={'name': value} to ch_sql/rewrite_clickhouse_sql"
         )
-    while True:
-        m = _first_match(sql, _QPARAM.pattern)
-        if not m:
-            return sql
+
+    def bind(m: re.Match) -> str:
         name, chtype = m.group(1), m.group(2)
         if not params or name not in params:
             raise ChSqlError(
                 f"unbound query parameter {{{name}:{chtype}}} — pass "
                 f"params={{'{name}': <value>}}"
             )
-        rep = _render_param(name, chtype, params[name])
-        sql = sql[: m.start()] + rep + sql[m.end() :]
+        return _render_param(name, chtype, params[name])
+
+    return _sub_code(sql, _QPARAM, bind)
 
 
 def _check_insert_statement(sql: str) -> None:
@@ -6217,9 +5910,8 @@ def _check_insert_statement(sql: str) -> None:
     m = _first_match(sql, r"^\s*INSERT\s+INTO\s+[A-Za-z_][\w.]*\s*\(")
     if not m:
         return
-    o = sql.index("(", m.end() - 1)
-    c = _match_paren(sql, o)
-    cols = _split_top_commas(sql[o + 1 : c])
+    c = _match_paren(sql, m.end() - 1)
+    cols = _split_top_commas(sql[m.end() : c])
     after = sql[c + 1 :]
     ms = re.match(r"\s*SELECT\b", after, re.IGNORECASE)
     if not ms:

@@ -119,6 +119,14 @@ class TestCombinatorRewrites:
         assert rw(q) == q  # quantified form untouched
         got = rw("SELECT any(a), k FROM t WHERE v > ANY (SELECT v FROM u) GROUP BY k")
         assert got.startswith("SELECT any_value(a, true)") and "> ANY (SELECT" in got
+        # the aggregate after a comparison: only a subquery argument is
+        # the quantified form
+        assert rw("SELECT k FROM t GROUP BY k HAVING max(v) = any(v)") == (
+            "SELECT k FROM t GROUP BY k HAVING max(v) = any_value(v, true)"
+        )
+        assert rw("SELECT k, 7 = anyLast(v) AS g FROM t GROUP BY k") == (
+            "SELECT k, 7 = any_value(v, true) AS g FROM t GROUP BY k"
+        )
 
     def test_bare_count(self):
         assert rw("SELECT count() FROM t") == "SELECT count(*) FROM t"
@@ -417,6 +425,13 @@ class TestArrayVocabularyTemplates:
         # ANSI EXTRACT(field FROM ts) coexists untouched
         assert "EXTRACT(YEAR FROM ts)" in rw(
             "SELECT EXTRACT(YEAR FROM ts), extract(s, '[a-z]') FROM t"
+        )
+        # the regex form nested inside the ANSI form is still rewritten
+        assert rw(
+            r"SELECT EXTRACT(YEAR FROM toDate(extract(s, 'd=(\S+)'))) FROM t"
+        ) == (
+            r"SELECT EXTRACT(YEAR FROM toDate((regexp_extract(s, 'd=(\S+)', "
+            r"1)))) FROM t"
         )
         with pytest.raises(ChSqlError, match="literal pattern"):
             rw("SELECT extract(s, some_col) FROM t")
@@ -4769,6 +4784,10 @@ class TestRound12GrammarWave3:
         assert rw("SELECT date_diff(a, b) FROM t") == (
             "SELECT date_diff(a, b) FROM t"
         )
+        # in any case, as Spark resolves it
+        for q in ("SELECT DATE_DIFF(d1, d0) FROM t",
+                  "SELECT Date_Diff(d1, d0) FROM t"):
+            assert rw(q) == q
 
     def test_age_complete_units(self, spark):
         from mb8600_clickhouse_spark.functions.chsql import ch_sql

@@ -5,7 +5,8 @@ The per-character view (``_lex``), the ascending cursor behind
 and the top-level comma split all read one token regex. On any text —
 here drawn from the characters that open, close or escape a span, plus
 parens, brackets, commas and filler — they must tell the same story.
-No Spark."""
+The call rewriter (``_rewrite_calls``) is checked against the
+per-character view too. No Spark."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from mb8600_clickhouse_spark.functions.chsql import (
     _Cursor,
     _lex,
     _match_paren,
+    _rewrite_calls,
     _split_top_commas,
 )
 
@@ -56,6 +58,52 @@ def test_lexer_views_agree(sql):
     bounds = [-1, *cuts, len(sql)]
     parts = [sql[a + 1 : b].strip() for a, b in zip(bounds, bounds[1:])]
     assert _split_top_commas(sql) == [p for p in parts if p]
+
+
+_CALL_PIECES = st.sampled_from(
+    ["f(", "g(", ")", ",", "'", "`", '"', "--", "/*", "*/", "a", " ", "\n"]
+)
+# runs of pieces, some wrapped as f(...) so that closed nested calls are
+# common; the texts are still strings of the pieces alone
+_CALL_TEXTS = st.recursive(
+    _CALL_PIECES,
+    lambda inner: st.one_of(
+        st.lists(inner, min_size=2, max_size=4).map("".join),
+        inner.map(lambda t: f"f({t})"),
+    ),
+    max_leaves=30,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(sql=_CALL_TEXTS)
+def test_call_rewriter_agrees_with_lexer(sql):
+    """Every code ``f(`` that begins a word becomes ``g(`` and nothing
+    else changes; ``_rewrite_calls`` raises exactly when such a call has no
+    closing paren."""
+    view = list(_lex(sql))
+    calls = [
+        i for i, ch, _d, kind in view
+        if ch == "f" and kind == "code" and sql[i + 1 : i + 2] == "("
+        and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
+    ]
+    unclosed = [
+        i for i in calls
+        if not any(
+            c == ")" and k == "code" and d == view[i + 1][2]
+            for _j, c, d, k in view[i + 2 :]
+        )
+    ]
+
+    def rewrite():
+        return _rewrite_calls(sql, r"\bf\s*\(", lambda m, a: f"g({a})")
+
+    if unclosed:
+        with pytest.raises(ChSqlError, match="unbalanced"):
+            rewrite()
+    else:
+        want = "".join("g" if i in calls else ch for i, ch in enumerate(sql))
+        assert rewrite() == want
 
 
 def test_spans():
