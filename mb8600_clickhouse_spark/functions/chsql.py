@@ -637,7 +637,7 @@ def _frame_nav(m, args: str, end: int) -> str:
                 "bridged form) or spell the frame navigation with "
                 "nth_value/first_value over the frame instead"
             )
-    return ("lag(" if fn == "lagInFrame" else "lead(") + args + ")"
+    return ("lag(" if fn.lower() == "laginframe" else "lead(") + args + ")"
 
 
 def _array_agg(m, a: str) -> str:
@@ -786,9 +786,15 @@ def _inline_scalar_alias(m, args: str) -> str | None:
     params = [p.strip().split()[0] for p in _split_top_commas(sig.strip()[1:-1])]
     if len(args) != len(params):
         return None
-    for pname, a in zip(params, args):
-        # lambda repl: argument text must not be re-escaped
-        body = re.sub(rf"\b{re.escape(pname)}\b", lambda _m, a=a: f"({a})", body)
+    # one pass over all parameters: each is substituted once, so an
+    # argument spelled like a later parameter stays as written
+    if params:
+        subst = dict(zip(params, args))
+        body = re.sub(
+            rf"\b({'|'.join(map(re.escape, params))})\b",
+            lambda pm: f"({subst[pm.group(1)]})",
+            body,
+        )
     return _inline_scalar_aliases(f"({body})")
 
 
@@ -1190,12 +1196,13 @@ def _rewrite_running(sql: str) -> str:
             _inline_select_aliases(m.string, a, pat)
             for a in _split_top_commas(args)
         ]
-        if m.group(1) == "runningDifference":
+        fn = m.group(1).lower()
+        if fn == "runningdifference":
             if len(args) != 1:
                 raise ChSqlError("runningDifference takes exactly one argument")
             x = args[0]
             return f"coalesce(({x}) - lag({x}) {over}, 0)"
-        if m.group(1) == "runningDifferenceStartingWithFirstValue":
+        if fn == "runningdifferencestartingwithfirstvalue":
             # CH variant: the first row carries the VALUE, not 0
             if len(args) != 1:
                 raise ChSqlError(
@@ -3632,14 +3639,14 @@ def _timed_seq_match(steps, p_n: int, lst: str, cidx: str, garr: str) -> str:
 #: typed dictGet suffix -> the ClickHouse missing-key default the typed
 #: variant returns (plain dictGet's per-attribute type default needs
 #: schema knowledge the string layer lacks — it bridges as NULL with the
-#: divergence documented on ch_sql)
+#: divergence documented on ch_sql), keyed lowercase
 _DICTGET_DEFAULTS = {
-    "String": "''",
-    "Int8": "0", "Int16": "0", "Int32": "0", "Int64": "0",
-    "UInt8": "0", "UInt16": "0", "UInt32": "0", "UInt64": "0",
-    "Float32": "CAST(0 AS DOUBLE)", "Float64": "CAST(0 AS DOUBLE)",
-    "Date": "DATE '1970-01-01'",
-    "DateTime": "TIMESTAMP '1970-01-01 00:00:00'",
+    "string": "''",
+    "int8": "0", "int16": "0", "int32": "0", "int64": "0",
+    "uint8": "0", "uint16": "0", "uint32": "0", "uint64": "0",
+    "float32": "CAST(0 AS DOUBLE)", "float64": "CAST(0 AS DOUBLE)",
+    "date": "DATE '1970-01-01'",
+    "datetime": "TIMESTAMP '1970-01-01 00:00:00'",
 }
 
 _DICT_CALL = re.compile(
@@ -3690,14 +3697,15 @@ def _rewrite_dictget(sql: str, dictionaries: dict[str, str] | None) -> str:
                 "or spell the lookup as a broadcast JOIN"
             )
         key_col = dictionaries[dname]
-        if fn == "dictHas":
+        low = fn.lower()
+        if low == "dicthas":
             if len(args) != 2:
                 raise ChSqlError("dictHas needs ('dict', key)")
             return (
                 f"((SELECT count(1) FROM (SELECT {key_col} AS {kc} "
                 f"FROM {dname}) WHERE {kc} = ({args[1]})) > 0)"
             )
-        or_default = fn.startswith("dictGetOrDefault")
+        or_default = low.startswith("dictgetordefault")
         want = 4 if or_default else 3
         if len(args) != want:
             raise ChSqlError(
@@ -3721,11 +3729,11 @@ def _rewrite_dictget(sql: str, dictionaries: dict[str, str] | None) -> str:
         )
         if or_default:
             return f"coalesce({sub}, ({args[3]}))"
-        if fn == "dictGetOrNull":
+        if low == "dictgetornull":
             # CH's dictGetOrNull: NULL on a missing key — exactly
             # the bare scalar subquery (no coalesce)
             return sub
-        dflt = _DICTGET_DEFAULTS.get(fn[len("dictGet"):])
+        dflt = _DICTGET_DEFAULTS.get(low[len("dictget"):])
         return f"coalesce({sub}, {dflt})" if dflt else sub
 
     return _rewrite_calls(sql, _DICT_CALL, lookup)
@@ -4398,9 +4406,10 @@ def _parse_datetime(m, args: str) -> str:
     # quoted literal letters in the Java pattern escape as ''
     # inside the emitted SQL literal (the formatDateTime rule)
     pat = _translate_fmt(fm.group(1)).replace("'", "''")
-    if m.group(1) == "OrNull":
+    tail = (m.group(1) or "").lower()
+    if tail == "ornull":
         return f"try_to_timestamp({args[0]}, '{pat}')"
-    if m.group(1) == "OrZero":
+    if tail == "orzero":
         return (
             f"coalesce(try_to_timestamp({args[0]}, '{pat}'), "
             f"TIMESTAMP '1970-01-01 00:00:00')"
@@ -4470,7 +4479,7 @@ def _to_decimal(m, args: str) -> str:
     if not m.group(2):
         return f"CAST({args[0]} AS DECIMAL({p},{s}))"
     cast = f"try_cast({args[0]} AS DECIMAL({p},{s}))"
-    if m.group(2) == "OrZero":
+    if m.group(2).lower() == "orzero":
         cast = f"coalesce({cast}, CAST(0 AS DECIMAL({p},{s})))"
     return cast
 

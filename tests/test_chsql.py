@@ -5337,3 +5337,57 @@ class TestAdviceR12Fixes:
                 "SELECT arrayResize(array(7,8), n, 0) AS r "
                 "FROM adv12_ar_neg",
             ).collect()
+
+
+class TestCaseInsensitiveHeads:
+    """Call heads match case-insensitively, so the form a rule picks
+    must not depend on how the name is spelled; and an alias body's
+    parameters are substituted once each."""
+
+    def test_scalar_alias_params_substituted_once(self):
+        from mb8600_clickhouse_spark.functions.chsql import (
+            _inline_scalar_aliases,
+        )
+
+        out = _inline_scalar_aliases("addHours(n, 7)")
+        assert out == "((n) + make_interval(0,0,0,0,(7),0,0))"
+
+    def test_lag_in_frame_any_case(self):
+        for head in ("lagInFrame", "LagInFrame", "LAGINFRAME"):
+            out = rw(f"SELECT {head}(v) OVER (ORDER BY t) FROM x")
+            assert "lag(v) OVER" in out and "lead(" not in out
+        assert "lead(v) OVER" in rw("SELECT LEADINFRAME(v) OVER (ORDER BY t) FROM x")
+
+    def test_running_difference_any_case(self):
+        out = rw("SELECT RunningDifference(v) FROM x ORDER BY t")
+        assert "coalesce((v) - lag(v) OVER" in out and out.count(", 0)") == 1
+        out = rw(
+            "SELECT RUNNINGDIFFERENCESTARTINGWITHFIRSTVALUE(v) FROM x ORDER BY t"
+        )
+        assert "coalesce((v) - lag(v) OVER" in out and out.endswith(
+            ", (v)) FROM x ORDER BY t NULLS LAST"
+        )
+
+    def test_dict_has_and_typed_get_any_case(self):
+        d = {"d": "id"}
+        assert rw("SELECT DictHas('d', k) FROM x", dictionaries=d) == rw(
+            "SELECT dictHas('d', k) FROM x", dictionaries=d
+        )
+        assert rw("SELECT DICTGETSTRING('d', 'a', k) FROM x", dictionaries=d) == rw(
+            "SELECT dictGetString('d', 'a', k) FROM x", dictionaries=d
+        )
+        assert rw("SELECT DictGetOrNull('d', 'a', k) FROM x", dictionaries=d) == rw(
+            "SELECT dictGetOrNull('d', 'a', k) FROM x", dictionaries=d
+        )
+
+    def test_parse_datetime_or_null_any_case(self):
+        out = rw("SELECT parseDateTimeORNULL(s, '%Y') FROM x")
+        assert out == "SELECT try_to_timestamp(s, 'yyyy') FROM x"
+        assert rw("SELECT parseDateTimeorzero(s, '%Y') FROM x") == rw(
+            "SELECT parseDateTimeOrZero(s, '%Y') FROM x"
+        )
+
+    def test_to_decimal_or_zero_any_case(self):
+        assert rw("SELECT toDecimal32orzero(s, 2) FROM x") == rw(
+            "SELECT toDecimal32OrZero(s, 2) FROM x"
+        )

@@ -147,6 +147,23 @@ class TestCommitProtocol:
         assert not t._manifest_path(0).exists()  # old manifest dropped
 
 
+class TestNoSuccessMarker:
+    """The manifest commit is the table's success marker: data-file
+    writes leave no ``_SUCCESS`` in their txn directories."""
+
+    def test_append_and_compact(self, spark, tmp_path):
+        t = ManifestTable(str(tmp_path / "t"))
+        t.append(_df(spark, 0, 5))
+        t.append(_df(spark, 5, 9))
+        before = _keys(t.read(spark))
+        t.compact(spark, sort_cols=["k"], n_files=2)
+        assert _keys(t.read(spark)) == before == list(range(9))
+        txns = list((tmp_path / "t" / "data").glob("txn_*"))
+        assert len(txns) == 3
+        assert all(any(d.glob("*.parquet")) for d in txns)
+        assert not list((tmp_path / "t").rglob("*_SUCCESS*"))
+
+
 class TestCommitBackend:
     """The pluggable commit primitive: the whole protocol runs through
     CommitBackend.put_if_absent, so an object-store deployment only

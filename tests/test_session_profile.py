@@ -101,6 +101,31 @@ class TestExecProfile:
         assert dict(caller.conf.getAll) == before
 
 
+class TestCheckpointFileManager:
+    """Streaming checkpoint logs are written through the Hadoop
+    FileSystem API on every session the engine runs streams on."""
+
+    @staticmethod
+    def _manager(session, path) -> str:
+        jvm = session._jvm
+        cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        return (
+            cfm.CheckpointFileManager.create(
+                jvm.org.apache.hadoop.fs.Path(str(path)),
+                session._jsparkSession.sessionState().newHadoopConf(),
+            )
+            .getClass()
+            .getSimpleName()
+        )
+
+    def test_engine_and_child_sessions(self, spark, tmp_path, monkeypatch):
+        monkeypatch.delenv("SPARK_GRAFT_MIMIC", raising=False)
+        for s in (spark, spark.newSession(), exec_profile(spark.newSession(), 0)):
+            assert (
+                self._manager(s, tmp_path) == "FileSystemBasedCheckpointFileManager"
+            )
+
+
 class TestTruncateLineage:
     """session.truncate_lineage — local blocks on a single-JVM local
     master, a reliable checkpoint on any other."""
