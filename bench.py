@@ -1,32 +1,41 @@
-"""Benchmark runner: all declared queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
-SPARK_GRAFT_CPUS defaults to the cores this process may run on.
+"""Registry benchmark: every registered query (or the ones named on the
+command line) against its DuckDB oracle, at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the cores
+this process may run on).
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Usage: python bench.py [name ...]
 
-value = total wall seconds across all declared queries (lower is better).
+A name is a registered query's full name (``q19_multi_join_revenue``) or
+its short key (``q19``); an unknown name exits 2 before Spark starts.
 
-Output contract (round 7): stdout's final line is COMPACT (short query
-keys, minimal separators, <=1900 chars) because the driver json-parses
-only the last 2000 chars of stdout — rounds 2-6 recorded "parsed": null
-when the detail line outgrew that window. The full per-query detail
-(long names, oracle times, ratio maps, floor_class) is written to
-``bench_detail.json`` at the repo root on every run.
+Protocol, the same for both engines, per query in name order:
+  - Spark: an untimed JVM GC, then one run in a fresh
+    ``spark.newSession()``; that first run is the **cold** time. Five more
+    runs follow on the same session; their median and interquartile range
+    are the **warm** time.
+  - DuckDB oracle, right after that query's Spark runs: a fresh connection
+    with as many threads as Spark's ``defaultParallelism``; the first
+    execution is cold, the median and IQR of five more are warm.
+A Spark run executes the whole plan through a noop-format write, so every
+projected column is materialized and final sorts run (``count()`` lets
+Catalyst prune both). Before the first query one untimed query warms the
+JVM on a throwaway session.
 
-Action: each query runs to completion via a **noop-format write** — a
-real write job with a discarding sink — so every projected column is
-materialized and final sorts execute. (``count()`` lets Catalyst prune
-unreferenced projections and drop final sorts, under-billing
-projection-heavy queries by 2-10x; round-1 verdict "What's wrong #2".)
+Ratios are cold over cold and warm median over warm median. A row is in
+the data-proportional maps unless ``FLOOR_CLASS`` names it or its oracle's
+warm median is under ``ORACLE_FLOOR_S`` (``sub_floor``: the ratio would
+compare Spark's fixed per-query cost with ~0). The one classification
+serves both maps, and nothing is re-measured or re-classified after.
 
-Contention: numbers are only meaningful uncontended. Any concurrent JVM
-(another Spark session, a leftover bench) inflates totals 40-80%; the
-runner samples 1-min loadavg at start AND after the last query and flags
-the run ``"contended"`` when either exceeds 2.0 — the round-3 bench ran
-at load1 5.26 without tripping the old ``> cpus/2`` threshold, and its
-headline "regressions" turned out to be contention artifacts (judge
-re-measured q41 at 3.81 s vs the recorded 7.99 s).
+Output: the full record (per row: cold, warm median and IQR for both
+engines, ratios, class) goes to ``bench_detail.json`` at the repo root.
+stdout's last line is one compact JSON object of at most 1900 chars
+(a consumer may parse only the last 2000): ``value`` is the Spark cold
+total in seconds, with the warm total, the median and p90 ratio of each
+map with its row count, and the per-query cold times under short keys.
+The 1-minute load average at start and end is recorded; the run is
+flagged ``contended_at_start`` when the start reading is over 2.0, since
+any concurrent JVM inflates the times.
 """
 
 from __future__ import annotations
@@ -37,393 +46,243 @@ import sys
 import time
 from pathlib import Path
 
+import duckdb
+
 _REPO = Path(__file__).resolve().parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 from mb8600_clickhouse_spark.queries import all_queries  # noqa: E402
-from mb8600_clickhouse_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
+from mb8600_clickhouse_spark.session import get_spark  # noqa: E402
+
+REPS = 5
+ORACLE_FLOOR_S = 0.15
+LOAD_THRESHOLD = 2.0
+TAIL_WINDOW = 1900  # a consumer parses the last 2000 chars; margin for \n
+WARMUP_QUERY = "q14_top_k"
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents "
+    "embeddings"
+).split()
+
+# Oracles whose DuckDB formulation is super-linear in fixture size (not a
+# property of the Spark side); they stay hash-verified by the correctness
+# gate at sf0.01, and the bench records the reason instead of a ratio.
+ORACLE_BENCH_SKIP = {
+    "q68_sequence_packing": (
+        "recursive-CTE oracle is O(rows x recursion depth) - 141 s of "
+        "DuckDB time at sf0.1 (measured) for a 1.1 s Spark query; "
+        "hash-verified at sf0.01 by the correctness gate"
+    ),
+}
+# Rows whose ratio measures machinery, not the analytic plan:
+#   stream_setup    - real Structured Streaming queries; the per-run cost
+#                     is checkpoint and stream startup
+#   codec           - pure-Python reference codecs (JPEG/FLAC/AVI); the
+#                     oracle reads pre-extracted metadata
+#   materialization - per-run physical writes are the query's semantics
+#                     (manifest commits, index builds); the oracle
+#                     computes the logical result with no I/O
+FLOOR_CLASS: dict[str, str] = {
+    "q73_stream_rollup": "stream_setup",
+    "q84_stream_stream_join": "stream_setup",
+    "q101_stream_dedup": "stream_setup",
+    "q116_stream_curation": "stream_setup",
+    "q78_jpeg_decode": "codec",
+    "q80_flac_decode": "codec",
+    "q81_video_decode": "codec",
+    "q70_ttl_demote": "materialization",
+    "q112_bloom_scan": "materialization",
+    "q113_ivf_incremental": "materialization",
+}
+
+
+def short_key(name: str) -> str:
+    return name.split("_", 1)[0]
+
+
+def quantile(xs, q: float) -> float:
+    """Linear interpolation between closest ranks (numpy's default)."""
+    s = sorted(xs)
+    pos = q * (len(s) - 1)
+    lo = int(pos)
+    hi = min(lo + 1, len(s) - 1)
+    return s[lo] + (s[hi] - s[lo]) * (pos - lo)
+
+
+def median(xs) -> float:
+    return quantile(xs, 0.5)
+
+
+def iqr(xs) -> float:
+    return quantile(xs, 0.75) - quantile(xs, 0.25)
+
+
+def p90(xs) -> float:
+    return quantile(xs, 0.9)
+
+
+def resolve(args: list[str], names) -> tuple[list[str], list[str]]:
+    """(selected full names, unknown args); no args selects every name."""
+    by_key = {short_key(n): n for n in names}
+    by_key.update({n: n for n in names})
+    if not args:
+        return sorted(names), []
+    return [by_key[a] for a in args if a in by_key], [a for a in args if a not in by_key]
 
 
 def run_to_completion(df) -> None:
-    """Execute the FULL plan: noop-format write materializes every output
-    column and keeps final sorts (count() would prune both)."""
+    """Execute the whole plan: a noop-format write materializes every
+    output column and keeps final sorts (count() would prune both)."""
     df.write.format("noop").mode("overwrite").save()
 
 
-def _timed(fn) -> float:
-    t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    cpus = DEFAULT_CPUS
-    def _load1() -> float:
-        try:
-            return os.getloadavg()[0]
-        except OSError:  # pragma: no cover
-            return 0.0
-
-    # Any sustained external load skews single-node timings; loadavg > 2
-    # on an otherwise-idle box means another multi-core job is running.
-    # (cpus/2 was far too lax: round 3 recorded load1 5.26 as "clean".)
-    LOAD_THRESHOLD = 2.0
-    # Load GATE (round 12, VERDICT r11 #4): don't just flag — WAIT.
-    # BENCH_r11 started at load1 3.31 and its 280 s / 19-warm->2x
-    # artifact was noise on a tree that same-box measured at parity.
-    # Before the first timed query, poll until load1 drops under the
-    # gate (30 s steps, bounded budget), then record how long we
-    # waited. Never refuse outright: a driver run must always produce
-    # an artifact, so past the budget we proceed with the contended
-    # flags set as before. Gate tunable via SPARK_GRAFT_LOAD_GATE
-    # (0 disables).
-    LOAD_GATE = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "0.5"))
-    GATE_BUDGET_S = float(os.environ.get("SPARK_GRAFT_LOAD_GATE_BUDGET", "600"))
-    gate_waited = 0.0
-    if LOAD_GATE > 0:
-        while _load1() > LOAD_GATE and gate_waited < GATE_BUDGET_S:
-            print(
-                f"# load gate: load1 {_load1():.2f} > {LOAD_GATE} — "
-                f"waiting 30s ({gate_waited:.0f}s/{GATE_BUDGET_S:.0f}s)",
-                file=sys.stderr,
-            )
-            time.sleep(30)
-            gate_waited += 30
-    load1_start = _load1()
-    if load1_start > LOAD_THRESHOLD:
-        print(
-            f"# WARNING: loadavg {load1_start:.1f} at start "
-            f"(>{LOAD_THRESHOLD}); numbers will be inflated 40-80% — "
-            "re-run uncontended",
-            file=sys.stderr,
-        )
-    spark = get_spark("bench")
-
-    specs = all_queries()
-    # Warm up the JVM + parquet footers: one cheap query, then a count of
-    # every fixture table so no query is charged for the first cold read
-    # of a table that happens to sort before its siblings.
-    run_to_completion(specs["q14_top_k"].fn(spark, sf_dir))
-    from mb8600_clickhouse_spark.tables import load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        df.count()
-
-    per_query: dict[str, float] = {}
-    total = 0.0
-    for name, spec in sorted(specs.items()):
-        # untimed GC between queries: without it, a query gets billed for
-        # the allocation debt of its predecessors (measured 5x per-query
-        # run-to-run swings on a shared VM)
-        spark.sparkContext._jvm.System.gc()
+def measure(run) -> dict:
+    """Cold: the first call; warm: median and IQR of REPS more."""
+    times = []
+    for _ in range(1 + REPS):
         t0 = time.perf_counter()
-        df = spec.fn(spark, sf_dir)
-        run_to_completion(df)
-        dt = round(time.perf_counter() - t0, 3)
-        per_query[name] = dt
-        total += dt
-        print(f"# {name}: {dt:.3f}s", file=sys.stderr)
-
-    # Oracle timings: also time each query's DuckDB oracle on the same
-    # fixtures and emit an "oracle" map + per-query ratios — the
-    # self-service version of the judge's <=2x-of-oracle comparison.
-    # DEFAULT ON since round 5 (the 2x target should be self-auditing in
-    # every BENCH_r{N}.json); set SPARK_GRAFT_ORACLE=0 to skip.
-    # Oracles whose DuckDB formulation is super-linear in fixture size
-    # (not a property of the Spark side): timing them at sf0.1 burns
-    # minutes of bench wall-clock for a number that says nothing about
-    # the engine. They stay fully hash-verified by the correctness gate
-    # at sf0.01; the bench records the skip reason instead of a ratio.
-    ORACLE_BENCH_SKIP = {
-        "q68_sequence_packing": (
-            "recursive-CTE oracle is O(rows x recursion depth) - 141 s of "
-            "DuckDB time at sf0.1 (measured) for a 1.1 s Spark query; "
-            "hash-verified at sf0.01 by the correctness gate"
-        ),
+        run()
+        times.append(time.perf_counter() - t0)
+    warm = times[1:]
+    return {
+        "cold": round(times[0], 3),
+        "warm": round(median(warm), 3),
+        "iqr": round(iqr(warm), 3),
     }
-    # Floor classification (r06 verdict #4): some ratio rows measure
-    # machinery, not the analytic plan, and oracle jitter of milliseconds
-    # swings them 100s of x (q81 "went" 172x -> 550x on noise). Keyed out
-    # of the data-proportional map so the ratio signal isn't buried:
-    #   stream_setup  - real Structured Streaming queries; per-invocation
-    #                   cost is checkpoint/stream startup, throughput is
-    #                   what scales (q73/q84/q101/q116)
-    #   codec         - pure-Python reference codecs (JPEG/FLAC/AVI);
-    #                   the oracle reads pre-extracted metadata, the
-    #                   Spark side decodes actual bytes (q78/q80/q81)
-    #   sub_floor     - oracle under ORACLE_FLOOR_S: the comparison is
-    #                   Spark's fixed per-query overhead vs ~0, not plan
-    #                   vs plan (assigned dynamically below)
-    #   materialization - queries whose SEMANTICS include per-run
-    #                   physical writes (manifest commits, index builds:
-    #                   q70's TTL demotion, q112's bloom build, q113's
-    #                   incremental IVF ingest); the oracle computes the
-    #                   logical result with zero I/O, so the ratio
-    #                   measures parquet-write machinery, not the plan —
-    #                   the stream_setup argument applied to table state
-    FLOOR_CLASS: dict[str, str] = {
-        "q73_stream_rollup": "stream_setup",
-        "q84_stream_stream_join": "stream_setup",
-        "q101_stream_dedup": "stream_setup",
-        "q116_stream_curation": "stream_setup",
-        "q78_jpeg_decode": "codec",
-        "q80_flac_decode": "codec",
-        "q81_video_decode": "codec",
-        "q70_ttl_demote": "materialization",
-        "q112_bloom_scan": "materialization",
-        "q113_ivf_incremental": "materialization",
-    }
-    ORACLE_FLOOR_S = 0.15
-    oracle_times: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_ORACLE", "1") != "0":
-        import duckdb
 
-        con = duckdb.connect()
-        con.execute(f"SET threads TO {cpus}")
-        for t in (
-            "region nation customer supplier part orders lineitem events "
-            "documents embeddings"
-        ).split():
+
+def bench_query(spark, spec, sf_dir: str, threads: int) -> dict:
+    spark.sparkContext._jvm.System.gc()
+    session = spark.newSession()
+    row = {"spark": measure(lambda: run_to_completion(spec.fn(session, sf_dir)))}
+    sql = spec.oracle_for(sf_dir)
+    if sql is None or spec.name in ORACLE_BENCH_SKIP:
+        return row
+    con = duckdb.connect()
+    try:
+        con.execute(f"SET threads TO {threads}")
+        for t in TABLES:
             con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
             )
-        for name, spec in sorted(specs.items()):
-            sql = spec.oracle_for(sf_dir)
-            if sql is None or name in ORACLE_BENCH_SKIP:
-                continue
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            oracle_times[name] = round(time.perf_counter() - t0, 3)
-            print(f"# oracle {name}: {oracle_times[name]:.3f}s", file=sys.stderr)
+        row["oracle"] = measure(lambda: con.execute(sql).fetchall())
+    finally:
+        con.close()
+    return row
 
-    floor_class = dict(FLOOR_CLASS)
-    for n, t in oracle_times.items():
-        if n not in floor_class and t < ORACLE_FLOOR_S:
-            floor_class[n] = "sub_floor"
-    # Snapshot BEFORE the warm loop (round 14, ADVICE r13 #2): the warm
-    # loop's sub_floor_warm reclassification only ever examines rows that
-    # exceeded 2x on the fast warm pass, so letting it retro-remove rows
-    # from ratio_dp could only ever remove UNFLATTERING rows (rows Spark
-    # is fast on are never warm-floor-checked). The cold-ratio maps are
-    # therefore computed against this symmetric snapshot; the
-    # reclassification affects only the WARM maps, where the check
-    # actually ran.
-    floor_class_cold = dict(floor_class)
 
-    # FULL-REGISTRY warm map (VERDICT r12 #3 — the selective form
-    # re-measured only the >2x single-shot rows, which hid warm walls
-    # like q54's r09 regression): every data-proportional row gets ONE
-    # warm rep (the single-shot above already compiled the plan, so
-    # rep 2 is steady-state) against the recorded oracle time; any row
-    # landing >2x on that fast pass is refined with min-of-3 Spark AND
-    # min-of-3 oracle (the judge methodology) before being committed
-    # over the bar. Budget: one extra pass over the registry (~60-150 s
-    # at sf0.1) + 3x reps only for the shortlist.
-    ratio_warm: dict[str, float] = {}
-    # Floor-at-warm reclassification (round 13 measurement fix): the
-    # single-shot oracle time includes DuckDB's cold parquet read, so a
-    # row can clear ORACLE_FLOOR_S cold yet fall under it warm (measured
-    # q08: oracle 0.187 s single-shot -> 0.053 s min-of-3). Committing
-    # best_s/best_o for such a row compares Spark's fixed per-query
-    # overhead against ~0 — the exact comparison the sub_floor class
-    # exists to key out. Refined rows whose WARM oracle is under the
-    # floor are reclassified "sub_floor_warm"; their measured ratios are
-    # kept in ratio_warm_subfloor so no number is dropped.
-    ratio_warm_subfloor: dict[str, float] = {}
-    if oracle_times and os.environ.get("SPARK_GRAFT_WARM", "1") != "0":
-        for name in sorted(oracle_times):
-            if name in floor_class or oracle_times[name] <= 0:
-                continue
-            spark.sparkContext._jvm.System.gc()
-            w = _timed(lambda: run_to_completion(specs[name].fn(spark, sf_dir)))
-            if w / oracle_times[name] <= 2:
-                ratio_warm[name] = round(w / oracle_times[name], 2)
-                print(f"# warm {name}: spark {w:.3f}s", file=sys.stderr)
-                continue
-            best_s = min(
-                [w]
-                + [
-                    _timed(
-                        lambda: run_to_completion(specs[name].fn(spark, sf_dir))
-                    )
-                    for _ in range(2)
-                ]
-            )
-            sql = specs[name].oracle_for(sf_dir)
-            best_o = min(
-                _timed(lambda: con.execute(sql).fetchall()) for _ in range(3)
-            )
-            if best_o > 0:
-                if best_o < ORACLE_FLOOR_S:
-                    floor_class[name] = "sub_floor_warm"
-                    ratio_warm_subfloor[name] = round(best_s / best_o, 2)
-                else:
-                    ratio_warm[name] = round(best_s / best_o, 2)
-            print(
-                f"# warm {name}: spark {best_s:.3f}s oracle {best_o:.3f}s",
-                file=sys.stderr,
-            )
-
-    # Contention self-correction (r07 verdict #2): a loaded driver box
-    # inflates even the warm min-of-3. When the run is contended, any
-    # row still >2x warm gets ONE bounded second warm pass (<=15 rows x
-    # 3 reps) and the committed ratio is the min of both passes, with
-    # the pass-2 value annotated so judge-vs-builder variance is
-    # visible instead of contested.
-    ratio_warm_pass2: dict[str, float] = {}
-    contended_now = load1_start > LOAD_THRESHOLD or _load1() > LOAD_THRESHOLD
-    if ratio_warm and contended_now:
-        still_over = sorted(
-            (n for n, v in ratio_warm.items() if v > 2),
-            key=lambda n: -ratio_warm[n],
-        )[:15]
-        for name in still_over:
-            spark.sparkContext._jvm.System.gc()
-            best_s = min(
-                _timed(lambda: run_to_completion(specs[name].fn(spark, sf_dir)))
-                for _ in range(3)
-            )
-            sql = specs[name].oracle_for(sf_dir)
-            best_o = min(
-                _timed(lambda: con.execute(sql).fetchall()) for _ in range(3)
-            )
-            if best_o > 0:
-                ratio_warm_pass2[name] = round(best_s / best_o, 2)
-                ratio_warm[name] = min(
-                    ratio_warm[name], ratio_warm_pass2[name]
-                )
-            print(
-                f"# warm-p2 {name}: spark {best_s:.3f}s oracle {best_o:.3f}s",
-                file=sys.stderr,
-            )
-    ratio_dp = {
-        n: round(per_query[n] / oracle_times[n], 2)
-        for n in oracle_times
-        if oracle_times[n] > 0 and n not in floor_class_cold
+def _stats(vals: list[float]) -> dict:
+    return {
+        "n": len(vals),
+        "median": round(median(vals), 2) if vals else None,
+        "p90": round(p90(vals), 2) if vals else None,
     }
-    ratio_floor = {
-        n: round(per_query[n] / oracle_times[n], 2)
-        for n in oracle_times
-        if oracle_times[n] > 0 and n in floor_class_cold
-    }
-    dp_sorted = sorted(ratio_dp.values())
-    median_dp = (
-        round(dp_sorted[len(dp_sorted) // 2], 2) if dp_sorted else None
-    )
-    # steady-state dp median: warm values replace the single-shot ones
-    # for the re-measured rows; a row whose WARM oracle fell under the
-    # floor has no warm value here and keeps its cold ratio_dp value
-    # (the symmetric-snapshot rule)
-    dp_eff = sorted({**ratio_dp, **ratio_warm}.values())
-    median_dp_warm = (
-        round(dp_eff[len(dp_eff) // 2], 2) if dp_eff else None
-    )
 
-    load1_end = _load1()
-    # load1_end includes this bench's own tail (one Spark JVM winding
-    # down); only flag on end-load well above what the bench itself
-    # generates on 32 threads of short bursts.
-    contended = load1_start > LOAD_THRESHOLD or load1_end > cpus / 2
-    detail = {
+
+def summarize(rows: dict[str, dict]) -> dict:
+    """The detail record for measured ``rows`` ({name: {"spark": m,
+    "oracle": m}}, oracle optional). Each row is classified once, and the
+    cold and warm data-proportional maps hold the same rows."""
+    for name, row in rows.items():
+        o = row.get("oracle")
+        if name in FLOOR_CLASS:
+            row["class"] = FLOOR_CLASS[name]
+        elif o is not None and o["warm"] < ORACLE_FLOOR_S:
+            row["class"] = "sub_floor"
+        if o is not None:
+            row["ratio"] = {
+                k: round(row["spark"][k] / o[k], 2) if o[k] > 0 else None
+                for k in ("cold", "warm")
+            }
+    dp = [n for n, r in rows.items() if "ratio" in r and "class" not in r]
+    return {
         "metric": "total_declared_query_seconds",
-        "value": round(total, 3),
+        "value": round(sum(r["spark"]["cold"] for r in rows.values()), 3),
         "unit": "sec",
         "action": "noop_write",
-        "contended": contended,
-        "contended_at_start": load1_start > LOAD_THRESHOLD,
-        "load1_at_start": round(load1_start, 2),
-        "load1_at_end": round(load1_end, 2),
-        "load_gate": LOAD_GATE,
-        "load_gate_waited_s": round(gate_waited, 1),
-        "queries": per_query,
-        **(
-            {
-                "oracle_skipped": ORACLE_BENCH_SKIP,
-                "oracle": oracle_times,
-                "ratio": {
-                    n: round(per_query[n] / oracle_times[n], 2)
-                    for n in oracle_times
-                    if oracle_times[n] > 0
-                },
-                "ratio_data_proportional": ratio_dp,
-                "ratio_data_proportional_warm": ratio_warm,
-                "ratio_warm_subfloor": ratio_warm_subfloor,
-                "ratio_warm_pass2_contended": ratio_warm_pass2,
-                "ratio_floor": ratio_floor,
-                "floor_class": floor_class,
-                "median_ratio_data_proportional": median_dp,
-                "median_ratio_dp_warm": median_dp_warm,
-            }
-            if oracle_times
-            else {}
-        ),
-        "sf": float(sf),
+        "n_queries": len(rows),
+        "warm_total": round(sum(r["spark"]["warm"] for r in rows.values()), 3),
+        "ratio_data_proportional": {
+            k: _stats([rows[n]["ratio"][k] for n in dp]) for k in ("cold", "warm")
+        },
+        "oracle_floor_s": ORACLE_FLOOR_S,
+        "oracle_skipped": {n: r for n, r in ORACLE_BENCH_SKIP.items() if n in rows},
+        "rows": rows,
     }
-    # Full detail goes to a FILE; stdout gets ONE compact line. The
-    # driver captures only the LAST 2000 chars of stdout and json-parses
-    # that tail — every BENCH_r{N}.json since r02 recorded "parsed":
-    # null because the detail line outgrew the window (judge then graded
-    # from a front-truncated fragment, where millisecond oracle jitter
-    # on floor queries read as 100x "regressions"). Keep the final line
-    # strictly under the window or the whole bench is invisible.
-    detail_path = _REPO / "bench_detail.json"
-    detail_path.write_text(json.dumps(detail, indent=1))
-    print(f"# full detail -> {detail_path}", file=sys.stderr)
 
-    def _short(name: str) -> str:
-        return name.split("_", 1)[0]
 
-    short_q = {}
-    for n in sorted(per_query):
-        s = _short(n)
-        short_q[s if s not in short_q else n] = per_query[n]
-    compact_base = {
-        "metric": "total_declared_query_seconds",
-        "value": round(total, 3),
-        "unit": "sec",
-        "n_queries": len(per_query),
-        "contended": contended,
-        "median_ratio_data_proportional": median_dp,
-        "median_ratio_dp_warm": median_dp_warm,
-        "n_warm_over_2x": sum(1 for v in ratio_warm.values() if v > 2)
-        if ratio_warm
-        else None,
-        # the same count with the sub_floor_warm-reclassified rows added
-        # back in (VERDICT r13 #3: the headline must not be able to
-        # improve by moving rows between maps)
-        "n_warm_over_2x_incl_subfloor": (
-            sum(1 for v in ratio_warm.values() if v > 2)
-            + sum(1 for v in ratio_warm_subfloor.values() if v > 2)
-        )
-        if (ratio_warm or ratio_warm_subfloor)
-        else None,
-        "detail": "bench_detail.json",
-        "sf": float(sf),
-    }
-    TAIL_WINDOW = 1900  # driver window is 2000; leave margin for a \n
-    line = ""
-    for ndigits in (2, 1):
+def compact_line(detail: dict) -> str:
+    """One JSON object of at most TAIL_WINDOW chars: the headline numbers
+    and the per-query cold times under short keys, rounded harder (and at
+    last cut to the slowest 60) until it fits."""
+    base = {k: v for k, v in detail.items() if k not in ("rows", "oracle_skipped", "action")}
+    base["detail"] = "bench_detail.json"
+    cold = {short_key(n): r["spark"]["cold"] for n, r in detail["rows"].items()}
+    for nd in (2, 1):
         line = json.dumps(
-            {**compact_base,
-             "queries": {k: round(v, ndigits) for k, v in short_q.items()}},
+            {**base, "queries": {k: round(v, nd) for k, v in cold.items()}},
             separators=(",", ":"),
         )
         if len(line) <= TAIL_WINDOW:
-            break
-    if len(line) > TAIL_WINDOW:
-        # last resort: report only the slowest queries, whole map in file
-        top = dict(sorted(short_q.items(), key=lambda kv: -kv[1])[:60])
-        line = json.dumps(
-            {**compact_base, "queries_truncated_to_slowest": True,
-             "queries": {k: round(v, 1) for k, v in top.items()}},
-            separators=(",", ":"),
+            return line
+    top = sorted(cold.items(), key=lambda kv: -kv[1])[:60]
+    return json.dumps(
+        {**base, "queries_truncated_to_slowest": True,
+         "queries": {k: round(v, 1) for k, v in top}},
+        separators=(",", ":"),
+    )
+
+
+def _load1() -> float:
+    try:
+        return round(os.getloadavg()[0], 2)
+    except OSError:  # pragma: no cover
+        return 0.0
+
+
+def main(argv: list[str] | None = None) -> int:
+    specs = all_queries()
+    names, unknown = resolve(sys.argv[1:] if argv is None else argv, specs)
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    load1_start = _load1()
+    if load1_start > LOAD_THRESHOLD:
+        print(
+            f"# WARNING: load1 {load1_start} at start (> {LOAD_THRESHOLD}); "
+            "times will be inflated - re-run uncontended",
+            file=sys.stderr,
         )
-    print(line)
+    spark = get_spark("bench")
+    threads = spark.sparkContext.defaultParallelism
+    run_to_completion(specs[WARMUP_QUERY].fn(spark.newSession(), sf_dir))
+
+    rows = {}
+    for name in names:
+        rows[name] = row = bench_query(spark, specs[name], sf_dir, threads)
+        s, o = row["spark"], row.get("oracle")
+        print(
+            f"# {name}: spark {s['cold']:.3f}s cold, {s['warm']:.3f}s warm"
+            + (f" | oracle {o['cold']:.3f}s cold, {o['warm']:.3f}s warm" if o else ""),
+            file=sys.stderr,
+        )
+
+    detail = summarize(rows)
+    detail.update(
+        sf=float(os.path.basename(os.path.normpath(sf_dir)).removeprefix("sf")),
+        cpus=threads,
+        load1_at_start=load1_start,
+        load1_at_end=_load1(),
+        contended_at_start=load1_start > LOAD_THRESHOLD,
+    )
+    detail_path = _REPO / "bench_detail.json"
+    detail_path.write_text(json.dumps(detail, indent=1))
+    print(f"# full detail -> {detail_path}", file=sys.stderr)
+    print(compact_line(detail))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

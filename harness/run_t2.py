@@ -31,7 +31,7 @@ def main() -> int:
     if names:
         # loud on typos (VERDICT r10 #3), and BEFORE the JVM spins up:
         # a misspelled name must fail the certification command
-        # instantly, not silently under-cover (ab.py's exit-2 rule)
+        # instantly, not silently under-cover (bench.py's exit-2 rule)
         unknown = sorted(set(names) - set(specs))
         if unknown:
             print(f"ERROR: unknown query names: {', '.join(unknown)}")

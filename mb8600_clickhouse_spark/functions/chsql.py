@@ -117,6 +117,7 @@ dashboard uses (reference ``tables.sql:5-30`` workload; VERDICT r04
 
 from __future__ import annotations
 
+import itertools
 import re
 
 from .clickhouse import CLICKHOUSE_SCALARS, register_clickhouse_functions
@@ -6418,9 +6419,9 @@ _ASOF_COND = re.compile(
     r"^\s*(\w+)\.(\w+)\s*(>=|<=|=|>|<)\s*(\w+)\.(\w+)\s*$"
 )
 
-#: monotonically increasing suffix for the bridge's temp views (unique
-#: within a session; Date/RNG are avoided everywhere in this repo)
-_ASOF_SEQ = [0]
+#: suffix for the bridges' temp views: one ``next()`` per view gives each
+#: call its own name even when threads run ``ch_sql`` on one session
+_BRIDGE_SEQ = itertools.count(1)
 
 
 def _extract_asof_join(sql: str):
@@ -6537,8 +6538,7 @@ def _apply_asof_join(spark, sql: str, spec, final_tables, sample_by):
         joined = joined.filter(
             F.col(f"asof_{spec['right_ts']}").isNotNull()
         )
-    _ASOF_SEQ[0] += 1
-    view = f"__asof_bridge_{_ASOF_SEQ[0]}"
+    view = f"__asof_bridge_{next(_BRIDGE_SEQ)}"
     joined.createOrReplaceTempView(view)
     s, e = spec["span"]
     out = sql[:s] + f"FROM {view} " + sql[e:]
@@ -6634,8 +6634,7 @@ def _apply_any_join(spark, sql: str, spec, final_tables, sample_by):
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    _ASOF_SEQ[0] += 1
-    view = f"__any_bridge_{_ASOF_SEQ[0]}"
+    view = f"__any_bridge_{next(_BRIDGE_SEQ)}"
     dedup.createOrReplaceTempView(view)
     s, e = spec["span"]
     out = (

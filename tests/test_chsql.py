@@ -1677,6 +1677,77 @@ class TestAnyAllJoinBridge:
         assert [(r["k"], r["rb"]) for r in rows] == [(1, 3)]
 
 
+class TestBridgeConcurrency:
+    """Concurrent ASOF and ANY bridge calls on one session each get their
+    own temp view. A tracer yields the GIL at every bytecode of the two
+    bridge functions, so the threads interleave inside them as they could
+    on any build; a view name two calls share lets the second swap the
+    first call's frame out and return the wrong rows with no error."""
+
+    def test_concurrent_bridges_keep_their_own_rows(self, spark):
+        import threading
+        import time
+
+        from pyspark.sql import Row
+
+        from mb8600_clickhouse_spark.functions import chsql
+
+        n_threads, n_calls = 4, 6
+        spark.createDataFrame(
+            [Row(k=i, ts=5, b=float(i)) for i in range(n_threads)]
+        ).createOrReplaceTempView("race_r")
+        for i in range(n_threads):
+            spark.createDataFrame([Row(k=i, ts=10)]).createOrReplaceTempView(
+                f"race_l{i}"
+            )
+        bridges = {chsql._apply_asof_join.__code__, chsql._apply_any_join.__code__}
+
+        def yield_each_opcode(frame, event, arg):
+            if event == "opcode":
+                time.sleep(0)
+            return yield_each_opcode
+
+        def tracer(frame, event, arg):
+            if frame.f_code in bridges:
+                frame.f_trace_opcodes = True
+                return yield_each_opcode
+            return None
+
+        wrong, errors = [], []
+
+        def work(i):
+            try:
+                for c in range(n_calls):
+                    join = (
+                        "ASOF LEFT JOIN race_r r ON l.k = r.k AND l.ts >= r.ts"
+                        if c % 2 == 0
+                        else "ANY LEFT JOIN race_r r ON l.k = r.k"
+                    )
+                    got = [
+                        (r["k"], r["rb"])
+                        for r in chsql.ch_sql(
+                            spark, f"SELECT l.k, r.b AS rb FROM race_l{i} l {join}"
+                        ).collect()
+                    ]
+                    if got != [(i, float(i))]:
+                        wrong.append((i, join.split()[0], got))
+            except Exception as e:  # pragma: no cover - reported below
+                errors.append(e)
+
+        threading.settrace(tracer)
+        try:
+            threads = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            threading.settrace(None)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert not wrong, wrong
+
+
 class TestBehavioralFunctionRejects:
     """Unbridged CH behavioral/dictionary functions fail with the
     engine's equivalent named (documented-failure contract, round 7).

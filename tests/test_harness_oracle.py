@@ -55,7 +55,7 @@ def test_nullable_int_with_missing():
 
 def test_run_t2_rejects_unknown_names(monkeypatch, capsys):
     """VERDICT r10 #3: a misspelled query name must fail the
-    certification command with exit 2 (ab.py's rule) BEFORE any JVM
+    certification command with exit 2 (bench.py's rule) BEFORE any JVM
     spins up — the old intersection filter silently under-covered
     (16 names, 5 misspelled -> a clean-looking '11/11 ok')."""
     from harness import run_t2
