@@ -44,6 +44,7 @@ retries then fails the micro-batch for replay — never a silent drop.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import signal
@@ -157,6 +158,26 @@ def build_query(spark, cfg: dict, checkpoint_dir: str, transport=None):
     )
 
 
+def _log_progress(query, last_batch: int) -> int:
+    """Log one JSON line (``batchId``, ``numInputRows``, ``durationMs``)
+    per micro-batch that ran since ``last_batch``; returns the newest
+    batch id logged. Idle triggers report no ``addBatch`` and are
+    skipped: they repeat the id of the batch that has not run yet."""
+    for p in query.recentProgress:
+        if p.batchId > last_batch and "addBatch" in p.durationMs:
+            log.info(
+                json.dumps(
+                    {
+                        "batchId": p.batchId,
+                        "numInputRows": p.numInputRows,
+                        "durationMs": p.durationMs,
+                    }
+                )
+            )
+            last_batch = p.batchId
+    return last_batch
+
+
 def main(
     env: dict | None = None,
     spark=None,
@@ -196,8 +217,10 @@ def main(
         cfg["scrape_delay"],
         cfg["table_path"] or cfg.get("clickhouse_url"),
     )
+    last_batch = -1
     try:
         while not stop.is_set() and query.isActive:
+            last_batch = _log_progress(query, last_batch)
             stop.wait(1.0)
         if query.exception() is not None:
             log.critical("stream failed: %s", query.exception())

@@ -1,4 +1,3 @@
 """Physical-layout conventions (the engine's write-path policies)."""
 
-from .layout import DOCSIS_LAYOUT, EVENTS_LAYOUT, TableLayout, write_table  # noqa: F401
 from .manifest import CommitConflict, ManifestTable, SchemaMismatch  # noqa: F401

@@ -1,93 +1,23 @@
-"""Table layout policies — the Spark stand-in for the reference's
-ClickHouse storage clauses (reference ``tables.sql:30``):
+"""Physical-layout writers beyond the manifest table's own
+(``plans.manifest``): layouts the engine's scan-time optimizations rely
+on where one sort prefix is not enough.
 
-    PARTITION BY toDate(timestamp)            -> directory partitioning
-    ORDER BY / PRIMARY KEY (modem_name, ts)   -> sortWithinPartitions +
-                                                 Parquet row-group min/max
-                                                 stats (data skipping)
-    MergeTree columnar + LowCardinality codecs-> Parquet columnar +
-                                                 automatic dictionary
-                                                 encoding
+- ``write_bucketed_table``: hash-bucketed catalog tables, so joins and
+  aggregates on the bucket key run with no exchange;
+- ``zorder_key`` / ``write_zordered``: Morton-curve clustering, so
+  min/max skipping works for predicates on either of two columns
+  (``ManifestTable.compact(zorder=...)`` uses the same key).
 
-A ``TableLayout`` carries everything a writer needs to lay files out so
-the engine's scan-time optimizations (partition pruning, row-group
-skipping, column pruning) hold at any scale. ``write_table`` is the one
-write path — ingest micro-batches and batch backfills both go through
-it, so layout is a property of the TABLE, not of whoever wrote it.
-
-100 TB posture: date partitioning bounds each partition to one day of
-data; within a partition, files are sorted on the prefix keys so a
-``WHERE modem_name = ? AND timestamp BETWEEN ...`` scan reads only
-matching row groups. ``target_file_rows`` keeps files large enough to
-amortize footer/open costs (the small-file problem) — on a cluster,
-pair it with periodic compaction of streaming output.
+The reference's storage clauses (``tables.sql:30``) live on the
+manifest table: ``ORDER BY (modem_name, timestamp)`` is
+``ManifestTable.compact(sort_cols=...)`` and ``PARTITION BY
+toDate(timestamp)`` is its per-file min/max skipping.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass(frozen=True)
-class TableLayout:
-    """Physical layout policy for one managed table."""
-
-    name: str
-    partition_col: str                      # materialized partition column
-    partition_expr: str                     # SQL expr deriving it
-    sort_cols: tuple[str, ...]              # within-partition sort (PK prefix)
-    target_file_rows: int = 4_000_000
-
-    def partition_column(self) -> Column:
-        return F.expr(self.partition_expr).alias(self.partition_col)
-
-
-# reference tables.sql:30 — PARTITION BY toDate(timestamp),
-# ORDER BY (modem_name, timestamp)
-DOCSIS_LAYOUT = TableLayout(
-    name="docsis",
-    partition_col="date",
-    partition_expr="to_date(timestamp)",
-    sort_cols=("modem_name", "timestamp"),
-)
-
-# the events stream table: daily partitions, (user_id, ts) scan prefix
-EVENTS_LAYOUT = TableLayout(
-    name="events",
-    partition_col="date",
-    partition_expr="to_date(ts)",
-    sort_cols=("user_id", "ts"),
-)
-
-
-def write_table(
-    df: DataFrame,
-    layout: TableLayout,
-    path: str,
-    mode: str = "append",
-    extra_columns: dict[str, Column] | None = None,
-) -> None:
-    """Append ``df`` under ``layout``: materialize the partition column,
-    cluster rows into one in-memory partition per date (so each date
-    directory gets coherent, sorted files rather than one sliver per
-    task), sort within partitions on the primary-key prefix, write
-    Parquet."""
-    out = df.withColumn(layout.partition_col, layout.partition_column())
-    for name, col in (extra_columns or {}).items():
-        out = out.withColumn(name, col)
-    # the sort must LEAD with the partition column: FileFormatWriter
-    # requires child ordering to start with partition cols and would
-    # otherwise inject its own sort, destroying the key order
-    (
-        out.repartition(layout.partition_col)
-        .sortWithinPartitions(layout.partition_col, *layout.sort_cols)
-        .write.mode(mode)
-        .partitionBy(layout.partition_col)
-        .parquet(path)
-    )
 
 
 def write_bucketed_table(

@@ -1270,9 +1270,10 @@ def q31(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q32(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-predicate scan — the shape ClickHouse's PARTITION BY
-    toDate(timestamp) serves (tables.sql:30). Against the date-partitioned
-    engine table this prunes to one partition directory; plan assertion in
-    tests/test_plans.py."""
+    toDate(timestamp) serves (tables.sql:30). On the ingest-written
+    ManifestTable the same day range is served by per-file min/max
+    skipping (``ManifestTable.scan``); Spark's own directory partition
+    pruning is pinned in tests/test_plans.py."""
     d = load_tables(spark, sf_dir)["docsis"]
     return (
         d.filter(F.to_date("timestamp") == F.lit("2025-06-02").cast("date"))

@@ -1,5 +1,5 @@
-"""Streaming ingest: HNAP payload JSON -> parsed docsis rows -> partitioned
-Parquet table.
+"""Streaming ingest: HNAP payload JSON -> parsed docsis rows -> a
+manifest-committed table.
 
 The reference pipeline is scrape -> bounded queue -> row-wise INSERT into
 a ClickHouse Buffer table (reference ``mb8600.py:294-311``, ``:313-443``,
@@ -11,19 +11,19 @@ a ClickHouse Buffer table (reference ``mb8600.py:294-311``, ``:313-443``,
   so the queue + Buffer table both disappear);
 - parsing is the declarative §2.B column-expression path shared with
   batch — one code path, batch/stream parity by construction;
-- the sink is ``foreachBatch`` appending to a date-partitioned Parquet
-  table sorted within partitions by (modem_name, timestamp) — the
-  write-path convention that stands in for ClickHouse's
-  ``PARTITION BY toDate(ts) ORDER BY (modem_name, ts)``
-  (``tables.sql:30``): partition pruning comes from the directory
-  layout, primary-key-prefix scans from Parquet row-group min/max on
-  the sorted files.
+- the sink is ``foreachBatch`` committing each micro-batch to one
+  ``plans.ManifestTable`` — the table the exporter daemon writes. The
+  reference's storage clauses (``tables.sql:30``) map onto it:
+  ``ORDER BY (modem_name, timestamp)`` is
+  ``ManifestTable.compact(sort_cols=["modem_name", "timestamp"])``, and
+  ``PARTITION BY toDate(timestamp)`` is the manifest's per-file min/max
+  skipping (``prune_files``/``scan`` on a ``timestamp`` range).
 
 Delivery: the reference *drops* a batch on sink error (at-most-once,
 ``mb8600.py:308-311``). Here the checkpointed file source replays unacked
-micro-batches (at-least-once), and replayed appends are fenced by an
-epoch-id marker column — an improvement documented in SURVEY.md §2.A5,
-not a replication.
+micro-batches, and the sink finds a replayed epoch in the manifest's
+committed-epoch ledger and skips it (exactly-once) — an improvement
+documented in SURVEY.md §2.A5, not a replication.
 """
 
 from __future__ import annotations
@@ -141,7 +141,7 @@ def dedup_scrapes(parsed: DataFrame, watermark: str = "10 minutes") -> DataFrame
     so state size tracks (modems × watermark/scrape-interval), not
     stream history. Batch inputs take the plain exact dedup. Works in
     the parsed chain before any sink:
-    ``parse_payloads(...) |> dedup_scrapes |> write_docsis_stream*``."""
+    ``parse_payloads(...) |> dedup_scrapes |> write_docsis_stream_manifest``."""
     if not parsed.isStreaming:
         return parsed.dropDuplicates(["modem_name", "timestamp"])
     return parsed.withWatermark("timestamp", watermark).dropDuplicatesWithinWatermark(
@@ -149,53 +149,14 @@ def dedup_scrapes(parsed: DataFrame, watermark: str = "10 minutes") -> DataFrame
     )
 
 
-def append_docsis(df: DataFrame, table_path: str, epoch_id: int | None = None) -> None:
-    """Append under the docsis table layout (plans.DOCSIS_LAYOUT — the
-    PARTITION BY/ORDER BY convention from reference tables.sql:30).
-
-    ``epoch_id`` (from foreachBatch) is stamped on every row: replays of
-    the same micro-batch write the same marker, so downstream exact-once
-    consumers can fence duplicates (batch writes stamp -1)."""
-    from ..plans import DOCSIS_LAYOUT, write_table
-
-    write_table(
-        df,
-        DOCSIS_LAYOUT,
-        table_path,
-        extra_columns={
-            "_epoch_id": F.lit(-1 if epoch_id is None else epoch_id).cast("long")
-        },
-    )
-
-
-def write_docsis_stream(
-    parsed: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    processing_time: str | None = None,
-    available_now: bool = False,
-):
-    """Start the micro-batched append (the Spark stand-in for the
-    Buffer-engine flush cadence, tables.sql:57 -> trigger interval)."""
-    writer = parsed.writeStream.foreachBatch(
-        lambda batch_df, epoch_id: append_docsis(batch_df, table_path, epoch_id)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
 def manifest_epoch_sink(table_path: str):
     """foreachBatch sink with EXACTLY-ONCE semantics on a
     ``plans.ManifestTable``: each micro-batch commits atomically with its
     epoch id recorded in the manifest; a replayed epoch (checkpoint
     recovery re-delivers the last unacked batch) finds itself in the
-    committed-epoch ledger and is a no-op. This removes the read-side
-    fencing the plain-parquet path needs (``read_docsis``) — the sink
-    itself is idempotent, the transactional upgrade over the reference's
-    drop-on-error INSERT (mb8600.py:308-311).
+    committed-epoch ledger and is a no-op. The sink itself is idempotent,
+    so readers need no replay fencing — the transactional upgrade over
+    the reference's drop-on-error INSERT (mb8600.py:308-311).
 
     Replays of one streaming query are sequential (the engine never runs
     the same epoch concurrently), so check-then-commit is race-free per
@@ -221,7 +182,8 @@ def write_docsis_stream_manifest(
     available_now: bool = False,
 ):
     """Start the micro-batched EXACTLY-ONCE append into a ManifestTable
-    (the transactional sibling of ``write_docsis_stream``)."""
+    (the Spark stand-in for the Buffer-engine flush cadence,
+    tables.sql:57 -> trigger interval)."""
     writer = parsed.writeStream.foreachBatch(
         manifest_epoch_sink(table_path)
     ).option("checkpointLocation", checkpoint_dir)
@@ -230,97 +192,3 @@ def write_docsis_stream_manifest(
     elif processing_time is not None:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
-
-
-def read_docsis(spark: SparkSession, table_path: str) -> DataFrame:
-    """Read the ingest-written docsis table with replay fencing: a
-    foreachBatch replay appends the same rows with the same _epoch_id,
-    so exactly-once reads collapse duplicates on (natural key,
-    _epoch_id). Keeps the engine's at-least-once write + idempotent
-    read contract (the upgrade over the reference's drop-on-error sink,
-    mb8600.py:308-311)."""
-    raw = spark.read.parquet(table_path)
-    return raw.dropDuplicates(
-        ["modem_name", "timestamp", "_epoch_id"]
-    ).drop("_epoch_id")
-
-
-def compact_docsis(spark: SparkSession, table_path: str) -> int:
-    """Compact a streaming-written docsis table in place: micro-batch
-    appends leave one small file per (batch x date); this rewrites the
-    table through the same layout policy (one sorted file per date via
-    the layout's repartition), restoring scan efficiency — the Spark
-    stand-in for OPTIMIZE / ClickHouse background merges. Returns the
-    number of files after compaction.
-
-    Semantics: replayed duplicate appends are collapsed on
-    (modem_name, timestamp, _epoch_id) — the same fencing rule
-    ``read_docsis`` applies — but the ORIGINAL ``_epoch_id`` survives
-    compaction, so two distinct same-second scrapes from different
-    micro-batches remain distinct rows (a -2 re-stamp would silently
-    merge them).
-
-    Durability: crash-safe swap ordering — write the compacted copy to
-    a sibling dir, rename the live table ASIDE, rename the copy in,
-    then delete the old data. A crash at any point leaves at least one
-    complete copy on disk; ``recover_docsis`` rolls an interrupted swap
-    forward/back. (A transactional format's metadata swap is the real
-    fix at deployment scale — see plans/manifest.py for the engine's
-    manifest-commit table format.)"""
-    import shutil
-    from pathlib import Path
-
-    from ..plans import DOCSIS_LAYOUT
-
-    src = Path(table_path)
-    tmp = src.with_name(src.name + "._compacting")
-    old = src.with_name(src.name + "._precompact")
-    for leftover in (tmp, old):
-        if leftover.exists():
-            shutil.rmtree(leftover)
-    deduped = spark.read.parquet(table_path).dropDuplicates(
-        ["modem_name", "timestamp", "_epoch_id"]
-    )
-    (
-        deduped.withColumn("date", F.to_date("timestamp"))
-        .repartition("date")
-        .sortWithinPartitions("date", *DOCSIS_LAYOUT.sort_cols)
-        .write.mode("overwrite")
-        .partitionBy("date")
-        .parquet(str(tmp))
-    )
-    src.rename(old)  # live table aside (recoverable from here on)
-    tmp.rename(src)  # compacted copy in
-    shutil.rmtree(old)
-    return len(list(src.glob("date=*/*.parquet")))
-
-
-def recover_docsis(table_path: str) -> str:
-    """Roll an interrupted ``compact_docsis`` swap to a consistent state.
-    Returns what happened: 'clean' (nothing to do), 'rolled_forward'
-    (compacted copy was complete -> becomes the table), or
-    'rolled_back' (pre-compaction copy restored)."""
-    import shutil
-    from pathlib import Path
-
-    src = Path(table_path)
-    tmp = src.with_name(src.name + "._compacting")
-    old = src.with_name(src.name + "._precompact")
-    if src.exists():
-        # live table intact; drop any half-finished sibling state
-        for leftover in (tmp, old):
-            if leftover.exists():
-                shutil.rmtree(leftover)
-        return "clean"
-    # crashed between the two renames: old aside, table missing
-    if tmp.exists() and (tmp / "_SUCCESS").exists():
-        tmp.rename(src)
-        if old.exists():
-            shutil.rmtree(old)
-        return "rolled_forward"
-    if old.exists():
-        old.rename(src)
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        return "rolled_back"
-    raise FileNotFoundError(f"no recoverable state at {table_path}")

@@ -1,9 +1,10 @@
 """bench.py's statistics, row classification, output line and name
 filter, without a JVM: rows are synthetic and ``get_spark`` is replaced
-where a test must not reach it."""
+where a test must not reach it. The warm-up test alone runs Spark."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 
 import pytest
@@ -78,3 +79,29 @@ def test_names_resolve_and_unknown_exits_before_spark(monkeypatch):
 
     monkeypatch.setattr(bench, "get_spark", no_spark)
     assert bench.main(["q19", "q9999_nope"]) == 2
+
+
+def test_warmup_runs_no_registered_query(spark, monkeypatch, tmp_path):
+    """The JVM warm-up calls no ``QuerySpec.fn``: warming a registered
+    plan would leave that query's cold row warm."""
+    called = []
+
+    def recording(name):
+        def fn(session, sf_dir):
+            called.append(name)
+            return session.range(1)
+
+        return fn
+
+    specs = {
+        n: dataclasses.replace(s, fn=recording(n))
+        for n, s in bench.all_queries().items()
+    }
+    monkeypatch.setattr(bench, "all_queries", lambda: specs)
+    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
+    monkeypatch.setattr(
+        bench, "bench_query", lambda *a: {"spark": _m(1.0, 1.0)}
+    )
+    monkeypatch.setattr(bench, "_REPO", tmp_path)
+    assert bench.main(["q19"]) == 0
+    assert called == []

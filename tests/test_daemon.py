@@ -6,6 +6,8 @@ the fake modem, and SIGTERM-driven graceful stop (mb8600.py:445-457)."""
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import signal
 import threading
@@ -112,9 +114,11 @@ def _wait(pred, timeout=60.0):
 
 
 class TestDaemonEndToEnd:
-    def test_fake_modem_to_manifest_table(self, spark, tmp_path):
+    def test_fake_modem_to_manifest_table(self, spark, tmp_path, caplog):
         """CLI path end-to-end: fake modem polls -> parse -> exactly-once
-        ManifestTable; graceful stop; rows land with the docsis shape."""
+        ManifestTable; one JSON progress line per micro-batch; graceful
+        stop; rows land with the docsis shape."""
+        caplog.set_level(logging.INFO, logger="mb8600_clickhouse_spark")
         env = {
             **BASE_ENV,
             "DOCSIS_TABLE_PATH": str(tmp_path / "docsis"),
@@ -139,10 +143,21 @@ class TestDaemonEndToEnd:
             except Exception:
                 return False
 
+        def progress():
+            msgs = (r.getMessage() for r in caplog.records)
+            return [json.loads(m) for m in msgs if m.startswith("{")]
+
         assert _wait(has_rows), "no rows landed in the manifest table"
+        assert _wait(progress), "no progress line logged"
         stop.set()
         t.join(timeout=120)
         assert not t.is_alive() and rc == [0]
+        lines = progress()
+        ids = [p["batchId"] for p in lines]
+        assert ids == sorted(set(ids))  # one line per batch, in order
+        first = lines[0]
+        assert first["numInputRows"] >= 1
+        assert first["durationMs"]["addBatch"] >= 0
         df = table.read(spark)
         cols = set(df.columns)
         assert {"modem_name", "modem_uptime", "downstream_channels",

@@ -45,8 +45,10 @@ class TestPushdownAndPruning:
         assert read_schema.count(",") <= 5
 
     def test_partition_pruning_on_engine_layout(self, spark, tmp_path):
-        """The ingest write convention (partitionBy date) must produce
-        scans that prune to matching date directories."""
+        """Spark's own partition pruning: a scan of a ``partitionBy``
+        date-directory table filtered on the date column carries the
+        predicate as a ``PartitionFilter``. The engine's ingest table
+        skips files through manifest stats instead (test_streaming)."""
         ev = load_tables(spark, "/root/testdata/sf0.001")["events"].limit(1000)
         table = str(tmp_path / "t")
         (

@@ -5,11 +5,14 @@ the stateful sessionization operator.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from mb8600_clickhouse_spark.plans import ManifestTable
 from mb8600_clickhouse_spark.streaming import ingest, windows
 from mb8600_clickhouse_spark.tables import load_tables
 
@@ -58,20 +61,26 @@ def landing(tmp_path):
     return str(d)
 
 
-class TestIngestEndToEnd:
-    def test_stream_parses_writes_partitioned_table(self, spark, landing, tmp_path):
-        table = str(tmp_path / "docsis_out")
-        ckpt = str(tmp_path / "ckpt")
-        q = ingest.write_docsis_stream(
-            ingest.parse_payloads(ingest.read_payload_stream(spark, landing)),
-            table,
-            ckpt,
-            available_now=True,
-        )
-        q.awaitTermination(120)
+def _stream_to_table(spark, parsed, table, ckpt):
+    q = ingest.write_docsis_stream_manifest(parsed, table, ckpt, available_now=True)
+    q.awaitTermination(120)
+    return ManifestTable(table)
 
-        out = spark.read.parquet(table)
-        rows = {r["modem_name"]: r for r in out.collect()}
+
+class TestIngestEndToEnd:
+    def test_stream_parses_writes_prunable_table(self, spark, landing, tmp_path):
+        table = str(tmp_path / "docsis_out")
+        # one landing file per micro-batch: each scrape commits its own files
+        t = _stream_to_table(
+            spark,
+            ingest.parse_payloads(
+                ingest.read_payload_stream(spark, landing, max_files_per_trigger=1)
+            ),
+            table,
+            str(tmp_path / "ckpt"),
+        )
+
+        rows = {r["modem_name"]: r for r in t.read(spark).collect()}
         # bad-status record gated out (mb8600.py:354-360)
         assert set(rows) == {"MB8600", "MB8600-attic"}
 
@@ -86,23 +95,29 @@ class TestIngestEndToEnd:
         # second-precision timestamps (tables.sql:29)
         assert r["timestamp"].microsecond == 0
 
-        # write-path convention: date-partitioned directory layout
-        assert any("date=" in str(p) for p in (tmp_path / "docsis_out").iterdir())
+        # PARTITION BY toDate(timestamp) as manifest min/max skipping: a
+        # timestamp range around the first scrape drops the other's file
+        ts = r["timestamp"]
+        kept = t.prune_files(
+            [("timestamp", ">=", ts), ("timestamp", "<", ts + dt.timedelta(seconds=5))]
+        )
+        assert kept and len(kept) < len(t.snapshot_files())
+        got = spark.read.parquet(*kept).select("modem_name").distinct().collect()
+        assert [g["modem_name"] for g in got] == ["MB8600"]
 
     def test_stream_equals_batch_parse(self, spark, landing, tmp_path):
         batch = ingest.parse_payloads(
             spark.read.schema(ingest.PAYLOAD_RECORD_SCHEMA).json(landing)
         )
-        table = str(tmp_path / "t2")
-        q = ingest.write_docsis_stream(
+        t = _stream_to_table(
+            spark,
             ingest.parse_payloads(ingest.read_payload_stream(spark, landing)),
-            table,
+            str(tmp_path / "t2"),
             str(tmp_path / "c2"),
-            available_now=True,
         )
-        q.awaitTermination(120)
-        streamed = spark.read.parquet(table).drop("date", "_epoch_id")
+        streamed = t.read(spark)
         cols = sorted(batch.columns)
+        assert sorted(streamed.columns) == cols
         a = sorted(map(str, batch.select(*cols).collect()))
         b = sorted(map(str, streamed.select(*cols).collect()))
         assert a == b
@@ -111,14 +126,13 @@ class TestIngestEndToEnd:
         table = str(tmp_path / "t3")
         ckpt = str(tmp_path / "c3")
         for _ in range(2):  # second start: checkpoint says all files done
-            q = ingest.write_docsis_stream(
+            t = _stream_to_table(
+                spark,
                 ingest.parse_payloads(ingest.read_payload_stream(spark, landing)),
                 table,
                 ckpt,
-                available_now=True,
             )
-            q.awaitTermination(120)
-        assert spark.read.parquet(table).count() == 2
+        assert t.read(spark).count() == 2
 
 
 def _events(spark):
@@ -254,8 +268,6 @@ class TestStatefulSessionization:
             for r in spark.table("custom_sess").collect()
         }
 
-        import datetime as dt
-
         native = windows.session_windows(spark.read.parquet(src_dir), gap="30 minutes")
         # drop each user's last session (open at end-of-stream; the
         # stream never emits it because no later event / timeout closes
@@ -341,109 +353,58 @@ class TestStreamStreamJoin:
 
 
 class TestReplayFencingAndCompaction:
-    def test_replayed_epoch_reads_once(self, spark, landing, tmp_path):
+    """The exporter's sink (``manifest_epoch_sink``) fences replays at
+    commit time, and ``ManifestTable.compact`` is the table's
+    ``ORDER BY (modem_name, timestamp)`` (reference tables.sql:30)."""
+
+    @pytest.fixture()
+    def parsed(self, spark, landing):
+        return ingest.parse_payloads(
+            spark.read.schema(ingest.PAYLOAD_RECORD_SCHEMA).json(landing)
+        )
+
+    def test_replayed_epoch_reads_once(self, spark, parsed, tmp_path):
         table = str(tmp_path / "fence")
-        parsed = ingest.parse_payloads(
-            spark.read.schema(ingest.PAYLOAD_RECORD_SCHEMA).json(landing)
-        )
-        ingest.append_docsis(parsed, table, epoch_id=7)
-        ingest.append_docsis(parsed, table, epoch_id=7)  # replay
-        assert spark.read.parquet(table).count() == 4  # raw: duplicated
-        fenced = ingest.read_docsis(spark, table)
-        assert fenced.count() == 2  # fenced: exactly once
-        assert "_epoch_id" not in fenced.columns
+        sink = ingest.manifest_epoch_sink(table)
+        t = ManifestTable(table)
+        sink(parsed, 7)
+        committed = t.latest_version()
+        sink(parsed, 7)  # replay
+        assert t.latest_version() == committed  # no second commit
+        assert t.committed_epochs() == {7}
+        assert t.read(spark).count() == 2  # exactly once
 
-    def test_compaction_reduces_files_keeps_data(self, spark, landing, tmp_path):
+    def test_compaction_reduces_files_keeps_data(self, spark, parsed, tmp_path):
         table = str(tmp_path / "compact")
-        parsed = ingest.parse_payloads(
-            spark.read.schema(ingest.PAYLOAD_RECORD_SCHEMA).json(landing)
-        )
-        for epoch in range(5):  # five appends -> five files per date
-            ingest.append_docsis(parsed, table, epoch_id=epoch)
-        from pathlib import Path
+        sink = ingest.manifest_epoch_sink(table)
+        for epoch in range(5):  # five commits -> at least five files
+            sink(parsed, epoch)
+        t = ManifestTable(table)
+        before = len(t.snapshot_files())
+        want = sorted(map(str, t.read(spark).collect()))
+        t.compact(spark, sort_cols=["modem_name", "timestamp"])
+        files = t.snapshot_files()
+        assert len(files) < before
+        assert sorted(map(str, t.read(spark).collect())) == want
+        for f in files:  # each output file is sorted on the primary key
+            tbl = pq.read_table(f, columns=["modem_name", "timestamp"]).to_pydict()
+            keys = list(zip(tbl["modem_name"], tbl["timestamp"]))
+            assert keys == sorted(keys)
 
-        before = len(list(Path(table).glob("date=*/*.parquet")))
-        want = {
-            (r["modem_name"], r["timestamp"])
-            for r in ingest.read_docsis(spark, table).collect()
-        }
-        n_files = ingest.compact_docsis(spark, table)
-        assert n_files < before
-        got = {
-            (r["modem_name"], r["timestamp"])
-            for r in ingest.read_docsis(spark, table).collect()
-        }
-        assert got == want
-        # layout properties survive compaction
-        assert any("date=" in str(p) for p in Path(table).iterdir())
-
-    def test_compaction_preserves_distinct_epochs(self, spark, landing, tmp_path):
+    def test_compaction_preserves_distinct_epochs(self, spark, parsed, tmp_path):
         """Two same-second scrapes from DIFFERENT micro-batches are
-        distinct observations; compaction must not merge them (a
-        re-stamped epoch would)."""
+        distinct observations; compaction must not merge them."""
         table = str(tmp_path / "epochs")
-        parsed = ingest.parse_payloads(
-            spark.read.schema(ingest.PAYLOAD_RECORD_SCHEMA).json(landing)
-        )
-        ingest.append_docsis(parsed, table, epoch_id=1)
-        ingest.append_docsis(parsed, table, epoch_id=1)  # replay of epoch 1
-        ingest.append_docsis(parsed, table, epoch_id=2)  # a distinct scrape epoch
-        before = ingest.read_docsis(spark, table).count()
+        sink = ingest.manifest_epoch_sink(table)
+        sink(parsed, 1)
+        sink(parsed, 1)  # replay of epoch 1
+        sink(parsed, 2)  # a distinct scrape epoch
+        t = ManifestTable(table)
+        before = t.read(spark).count()
         assert before == 4  # 2 rows x 2 real epochs; replay collapsed
-        ingest.compact_docsis(spark, table)
-        assert ingest.read_docsis(spark, table).count() == before
-        epochs = {
-            r["_epoch_id"] for r in spark.read.parquet(table).select("_epoch_id").collect()
-        }
-        assert epochs == {1, 2}  # original markers survive
-
-    def test_compaction_crash_recovery(self, spark, landing, tmp_path):
-        """Every interruption point of the swap leaves a recoverable
-        table: recover_docsis rolls forward (compacted copy complete) or
-        back (pre-compaction copy intact), never loses data."""
-        import shutil
-        from pathlib import Path
-
-        table = str(tmp_path / "crash")
-        parsed = ingest.parse_payloads(
-            spark.read.schema(ingest.PAYLOAD_RECORD_SCHEMA).json(landing)
-        )
-        for epoch in range(3):
-            ingest.append_docsis(parsed, table, epoch_id=epoch)
-        want = sorted(
-            (r["modem_name"], r["timestamp"])
-            for r in ingest.read_docsis(spark, table).collect()
-        )
-        src = Path(table)
-        old = src.with_name(src.name + "._precompact")
-        tmp = src.with_name(src.name + "._compacting")
-
-        # clean state: no-op
-        assert ingest.recover_docsis(table) == "clean"
-
-        # crash AFTER rename-aside, BEFORE compacted copy renamed in
-        # (simulate: full compaction, then reconstruct the mid-swap state)
-        ingest.compact_docsis(spark, table)
-        shutil.copytree(table, str(tmp))
-        src.rename(old)
-        assert ingest.recover_docsis(table) == "rolled_forward"
-        got = sorted(
-            (r["modem_name"], r["timestamp"])
-            for r in ingest.read_docsis(spark, table).collect()
-        )
-        assert got == want
-
-        # crash mid-WRITE of the compacted copy (no _SUCCESS): roll back
-        shutil.copytree(table, str(tmp))
-        (tmp / "_SUCCESS").unlink()
-        src.rename(old)
-        assert ingest.recover_docsis(table) == "rolled_back"
-        got = sorted(
-            (r["modem_name"], r["timestamp"])
-            for r in ingest.read_docsis(spark, table).collect()
-        )
-        assert got == want
-        assert not tmp.exists() and not old.exists()
+        t.compact(spark, sort_cols=["modem_name", "timestamp"])
+        assert t.read(spark).count() == before
+        assert t.committed_epochs() == {1, 2}  # the ledger survives
 
 
 class TestIngestRobustness:
@@ -492,19 +453,17 @@ class TestScrapeDedup:
         (d / "b.json").write_text(  # retry dup + one genuinely new scrape
             line + "\n" + _payload_line("MB8600", 1748736010.5, DS, US, "1h:00m:10s")
         )
-        table = str(tmp_path / "t_dedup")
-        q = ingest.write_docsis_stream(
+        t = _stream_to_table(
+            spark,
             ingest.dedup_scrapes(
                 ingest.parse_payloads(
                     ingest.read_payload_stream(spark, str(d), max_files_per_trigger=1)
                 )
             ),
-            table,
+            str(tmp_path / "t_dedup"),
             str(tmp_path / "c_dedup"),
-            available_now=True,
         )
-        q.awaitTermination(120)
-        out = spark.read.parquet(table)
+        out = t.read(spark)
         assert out.count() == 2  # not 3
         assert out.select("modem_name", "timestamp").distinct().count() == 2
 
