@@ -99,6 +99,19 @@ double-quoted identifiers, comments) and the structural characters
 inside literals, identifiers or comments never confuse clause
 detection, and parens are matched in code only.
 
+One table says where a clause ends. ``_CLAUSES`` lists ClickHouse's
+SELECT clause keywords in grammar order, the set operators, the
+window-spec parts and the ORDER BY modifiers; ``_clause_end(sql,
+pos)`` reads it through the lexer. A clause ends at the next table
+keyword at its own paren depth, once the current comma-separated item
+has content that does not end in an operator (``ORDER BY
+interpolate`` and ``WHERE a AND rows > 1`` name columns), at the ``)``
+closing that depth, or at the end of the text. Every pass that
+needs a clause's extent asks it: ARRAY JOIN and arrayJoin's LATERAL
+VIEW, PREWHERE, the WHERE alias inlining, LIMIT BY, QUALIFY, ORDER
+BY's NULLS LAST, the ternary operands, the WITH-constant ordinal
+guard, the INSERT arity check and the ASOF/ANY join conditions.
+
 One function rewrites calls: ``_rewrite_calls(sql, pattern, rule)``
 finds each call in code whose head matches ``pattern`` (compiled at
 import), matches its parens through the lexer, rewrites the arguments
@@ -288,15 +301,97 @@ def _pair_map(sql: str) -> dict[int, int]:
     return pairs
 
 
+def _comma_parts(s: str) -> list[str]:
+    """``s`` cut at its top-level commas, each part verbatim."""
+    cuts = [i for i, ch, d in _code_marks(s) if ch == "," and d == 0]
+    return [s[b:e] for b, e in zip([0] + [c + 1 for c in cuts], cuts + [len(s)])]
+
+
 def _split_top_commas(s: str) -> list[str]:
     """Split an expression list on top-level commas."""
-    parts, last = [], 0
-    for i, ch, d in _code_marks(s):
-        if ch == "," and d == 0:
-            parts.append(s[last:i].strip())
-            last = i + 1
-    parts.append(s[last:].strip())
-    return [p for p in parts if p]
+    return [p for p in map(str.strip, _comma_parts(s)) if p]
+
+
+def _without_comments(s: str) -> str:
+    """``s`` with each comment replaced by a space."""
+    return _TOKEN.sub(
+        lambda t: " " if _SPAN_KIND.get(t[0][0]) == "comment" else t[0], s
+    )
+
+
+# ---------------------------------------------------------------------------
+# the clause table: where a clause ends
+# ---------------------------------------------------------------------------
+#: ClickHouse's SELECT clause grammar, the ONE list of the keywords that
+#: end a clause (a space is any whitespace): the statement clauses in
+#: grammar order, the set operators, the window-spec parts and the
+#: ORDER BY modifiers. ``WITH`` also ends a clause at ``WITH TOTALS``,
+#: ``WITH FILL``, ``WITH ROLLUP``/``CUBE`` and ``WITH TIES``; ``LIMIT``
+#: covers ``LIMIT n BY``, whose ``BY`` does not end the count.
+_CLAUSES = (
+    # statement clauses
+    "WITH", "SELECT", "FROM", "(?:(?:LEFT|INNER) )?ARRAY JOIN", "PREWHERE",
+    "WHERE", "GROUP BY", "WITH TOTALS", "HAVING", "WINDOW", "QUALIFY",
+    "ORDER BY", "LIMIT", "OFFSET", "SETTINGS", "FORMAT",
+    # set operators
+    "UNION", "EXCEPT", "INTERSECT",
+    # window-spec parts
+    "PARTITION BY", "ROWS", "RANGE", "GROUPS",
+    # ORDER BY modifiers
+    "WITH FILL", "INTERPOLATE",
+)
+#: the table's keywords (not after ``.``: a field named ``rows`` is no
+#: frame clause), then ``_TOKEN``
+_CLAUSE_SCAN = re.compile(
+    r"(?<![\w.])(?:"
+    + "|".join(kw.replace(" ", r"\s+") for kw in _CLAUSES)
+    + rf")\b|{_TOKEN.pattern}",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+#: what an item cannot end with before a clause keyword: a keyword
+#: after these is an operand (``a AND range > 5``, ``x AS rows``)
+_OPERATOR_CHARS = frozenset("-=<>!+/%|&^~?:")
+_OPERATOR_WORDS = frozenset(
+    "AND OR NOT IS IN LIKE ILIKE BETWEEN CASE WHEN THEN ELSE AS BY "
+    "DISTINCT".split()
+)
+
+
+def _clause_end(sql: str, pos: int) -> int:
+    """End of the clause whose body starts at ``pos`` (in code): the
+    next ``_CLAUSES`` keyword at the body's paren depth, the ``)``
+    closing that depth, or the end of the text. A keyword ends the
+    clause only once the current comma-separated item has content that
+    does not end in an operator, so ``ORDER BY interpolate``, ``FROM
+    range(5)`` and ``WHERE a AND rows > 1`` name a column, a table
+    function and a column."""
+    depth, content, last = 0, False, pos
+    for t in _CLAUSE_SCAN.finditer(sql, pos):
+        s = t.start()
+        if not depth and (gap := sql[last:s].rstrip()):
+            content = gap[-1] not in _OPERATOR_CHARS and (
+                gap.rsplit(None, 1)[-1].upper() not in _OPERATOR_WORDS
+            )
+        last = t.end()
+        ch = sql[s]
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            if not depth:
+                return s
+            depth -= 1
+        elif depth:
+            continue
+        elif ch == ",":
+            content = False
+            continue
+        elif ch.isalpha() and content:
+            return s
+        if _SPAN_KIND.get(ch) != "comment":
+            content = True
+    return len(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -799,10 +894,6 @@ def _inline_scalar_alias(m, args: str) -> str | None:
     return _inline_scalar_aliases(f"({body})")
 
 
-_CLAUSE_AFTER_FROM = (
-    r"\b(WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|UNION|EXCEPT|INTERSECT|SETTINGS)\b"
-)
-
 #: ClickHouse wire-format names the FORMAT directive can carry — the
 #: mid-statement reject only fires on these, so identifiers literally
 #: named 'format' keep passing (lowercased membership test)
@@ -1001,12 +1092,7 @@ def _order_anchor(sql: str, pat: str, family: str) -> str:
             "non-deterministic; the rewrite anchors its window there)"
         )
     ob = obs[-1]
-    ends = [
-        m.start()
-        for m in _top_level_matches(sql, r"\bLIMIT\b|\bSETTINGS\b")
-        if m.start() > ob.end()
-    ]
-    obtxt = sql[ob.start() : min(ends) if ends else len(sql)].strip()
+    obtxt = sql[ob.start() : _clause_end(sql, ob.end())].strip()
     if _first_match(obtxt, pat):
         raise ChSqlError(
             f"{family} inside ORDER BY itself has no "
@@ -1251,16 +1337,7 @@ def _inline_aliases_into_where(sql: str) -> str:
     if not wh:
         return sql
     w = wh[0]
-    ends = [
-        m.start()
-        for m in _top_level_matches(
-            sql,
-            r"\bGROUP\s+BY\b|\bHAVING\b|\bORDER\s+BY\b|\bLIMIT\b|"
-            r"\bWINDOW\b|\bUNION\b|\bEXCEPT\b|\bINTERSECT\b|\bSETTINGS\b",
-        )
-        if m.start() > w.end()
-    ]
-    end = min(ends) if ends else len(sql)
+    end = _clause_end(sql, w.end())
     body = sql[w.end() : end]
     inlined = _inline_select_aliases(sql, body, r"(?!x)x")
     if inlined == body:
@@ -1308,16 +1385,7 @@ def _rewrite_array_join_clause(sql: str) -> str:
             return sql
         m = ms[0]
         outer = (m.group(1) or "").upper() == "LEFT"
-        enders = [
-            t.start()
-            for t in _top_level_matches(sql, _CLAUSE_AFTER_FROM)
-            if t.start() >= m.end()
-        ] + [
-            t.start()
-            for t in _top_level_matches(sql, _ARRAY_JOIN_CLAUSE)
-            if t.start() >= m.end()
-        ]
-        end = min(enders) if enders else len(sql)
+        end = _clause_end(sql, m.end())
         args = _split_top_commas(sql[m.end() : end].strip())
         if not args or not all(a for a in args):
             raise ChSqlError("ARRAY JOIN requires at least one array expression")
@@ -1386,12 +1454,7 @@ def _rewrite_array_join(sql: str) -> str:
     froms = _top_level_matches(sql, r"\bFROM\b")
     if not froms:
         raise ChSqlError("arrayJoin requires a FROM clause")
-    after = [
-        m
-        for m in _top_level_matches(sql, _CLAUSE_AFTER_FROM)
-        if m.start() > froms[0].end()
-    ]
-    at = after[0].start() if after else len(sql)
+    at = _clause_end(sql, froms[0].end())
     return sql[:at].rstrip() + " " + views + " " + sql[at:]
 
 
@@ -2055,13 +2118,6 @@ def _lambda_param_collision(text: str, name: str) -> bool:
     return False
 
 
-_CLAUSE_TERMINATORS = re.compile(
-    r"\b(HAVING|ORDER|LIMIT|OFFSET|WINDOW|UNION|EXCEPT|INTERSECT|"
-    r"SETTINGS|FORMAT|WITH|GROUP)\b",
-    re.IGNORECASE,
-)
-
-
 def _ordinal_item_collision(text: str, name: str) -> bool:
     """True when ``name`` appears as a BARE item of a GROUP BY / ORDER
     BY list in ``text``. Substituting an integer-literal WITH constant
@@ -2075,31 +2131,11 @@ def _ordinal_item_collision(text: str, name: str) -> bool:
                          re.IGNORECASE):
         if cur.at(m.start())[1]:
             continue
-        items, item = [], []
-        for off, ch, d, kind in _lex(text[m.end() :]):
-            if kind == "comment":
-                item.append(" ")  # separates, carries no item content
-                continue
-            if kind == "code":
-                if ch == ")" and d < 0:
-                    break  # clause ends with the enclosing subquery
-                if ch == "," and d == 0:
-                    items.append("".join(item))
-                    item = []
-                    continue
-                i = m.end() + off
-                if (
-                    d == 0
-                    and (off == 0 or not text[i - 1].isalnum())
-                    and _CLAUSE_TERMINATORS.match(text, i)
-                ):
-                    break
-            item.append(ch)
-        items.append("".join(item))
-        for it in items:
+        end = _clause_end(text, m.end())
+        for it in _split_top_commas(text[m.end() : end]):
             it = re.sub(
                 r"\b(ASC|DESC|NULLS\s+FIRST|NULLS\s+LAST)\b\s*$", "",
-                it.strip(), flags=re.IGNORECASE,
+                _without_comments(it).strip(), flags=re.IGNORECASE,
             ).strip()
             while it.startswith("(") and it.endswith(")"):
                 it = it[1:-1].strip()
@@ -3933,15 +3969,15 @@ _ARRAY_TEMPLATES: dict[str, dict[int, str]] = {
 }
 
 
-_TERNARY_LEFT_STOP = re.compile(
-    r"\b(SELECT|DISTINCT|WHERE|HAVING|WHEN|THEN|ELSE|BY|ON|SET|"
-    r"VALUES|RETURN|JOIN)\s*$",
-    re.IGNORECASE,
+#: the expression keywords that bound a ternary operand; the clause
+#: keywords come from ``_CLAUSES`` through ``_clause_end``. SELECT and
+#: BY also open a list where no clause ends (a statement's or window
+#: spec's first keyword has no content before it)
+_TERNARY_LEFT_STOP = frozenset(
+    "SELECT DISTINCT WHEN THEN ELSE BY ON SET VALUES RETURN JOIN".split()
 )
 _TERNARY_RIGHT_STOP = re.compile(
-    r"\b(FROM|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|EXCEPT|INTERSECT|"
-    r"AS|WHEN|THEN|ELSE|END|ASC|DESC)\b",
-    re.IGNORECASE,
+    r"(?:AS|WHEN|THEN|ELSE|END|ASC|DESC)\b", re.IGNORECASE
 )
 
 
@@ -3952,8 +3988,9 @@ def _rewrite_ternary(sql: str) -> str:
     split. Operand extents follow C precedence — ternary binds LOOSER
     than AND/OR, so ``a AND b ? x : y`` conditions on the whole
     conjunction; operands stop only at same-depth commas, enclosing
-    parens, outer ternary marks, and clause keywords. Malformed
-    extents produce SQL Spark's parser rejects loudly."""
+    parens, outer ternary marks, expression keywords and the clause
+    they sit in (``_clause_end``). Malformed extents produce SQL
+    Spark's parser rejects loudly."""
     while "?" in sql:
         depth_at, opaque = [], []
         for _i, _c, d, kind in _lex(sql):
@@ -3994,7 +4031,9 @@ def _rewrite_ternary(sql: str) -> str:
                 "cond ? a : b needs both"
             )
         # condition: scan LEFT from '?' to the nearest same-depth
-        # boundary (comma, opening paren, outer ':'/'?', keyword)
+        # boundary (comma, opening paren, outer ':'/'?', expression
+        # keyword), then forward over the clauses to the body of the
+        # one holding the '?'
         k = qpos - 1
         cstart = 0
         while k >= 0:
@@ -4004,24 +4043,29 @@ def _rewrite_ternary(sql: str) -> str:
                 if (ch in ",?:" and d == d0) or (ch == "(" and d < d0):
                     cstart = k + 1
                     break
-                if ch.isalpha():
-                    stop = _TERNARY_LEFT_STOP.search(sql[: k + 1])
-                    if stop and stop.end() == k + 1:
+                if ch.isalnum() or ch == "_":
+                    ws = k
+                    while ws and (sql[ws - 1].isalnum() or sql[ws - 1] == "_"):
+                        ws -= 1
+                    if sql[ws : k + 1].upper() in _TERNARY_LEFT_STOP:
                         cstart = k + 1
                         break
+                    k = ws
             k -= 1
-        # else-part: scan RIGHT from ':' to the nearest boundary. A
-        # second bare same-depth ':' belongs to an OUTER ternary whose
-        # then-branch this one is (``a ? b ? c : d : e`` — ADVICE r09):
-        # the else operand ends there, so the outer pass sees its ':'
-        # intact. '::' casts pass through, as in the colon matcher.
+        while (e := _clause_end(sql, cstart)) < qpos:
+            cstart = _CLAUSE_SCAN.match(sql, e).end()
+        # else-part: scan RIGHT from ':' to the nearest same-depth
+        # boundary inside its clause. A second bare same-depth ':'
+        # belongs to an OUTER ternary whose then-branch this one is
+        # (``a ? b ? c : d : e`` — ADVICE r09): the else operand ends
+        # there, so the outer pass sees its ':' intact. '::' casts pass
+        # through, as in the colon matcher.
         j = colon + 1
-        eend = len(sql)
-        while j < len(sql):
+        eend = _clause_end(sql, j)
+        while j < eend:
             ch = sql[j]
-            if not opaque[j]:
-                d = depth_at[j]
-                if ch == ":" and d == d0:
+            if not opaque[j] and depth_at[j] == d0:
+                if ch == ":":
                     if j + 1 < len(sql) and sql[j + 1] == ":":
                         j += 2
                         continue
@@ -4030,14 +4074,13 @@ def _rewrite_ternary(sql: str) -> str:
                         continue
                     eend = j
                     break
-                if (ch == "," and d == d0) or (ch == ")" and d < d0):
+                if ch == "," or (
+                    ch.isalpha()
+                    and not (sql[j - 1].isalnum() or sql[j - 1] == "_")
+                    and _TERNARY_RIGHT_STOP.match(sql, j)
+                ):
                     eend = j
                     break
-                if ch.isalpha():
-                    stop = _TERNARY_RIGHT_STOP.match(sql, j)
-                    if stop and not sql[j - 1].isalnum():
-                        eend = j
-                        break
             j += 1
         cond = sql[cstart:qpos].strip()
         then = sql[qpos + 1 : colon].strip()
@@ -4751,23 +4794,12 @@ def _rewrite_prewhere_settings(sql: str) -> str:
     SparkSession config)."""
     mp = _first_match(sql, r"\bPREWHERE\b")
     if mp:
-        # the PREWHERE predicate runs until the next top-level clause
-        after = [
-            t
-            for t in _top_level_matches(sql, _CLAUSE_AFTER_FROM)
-            if t.start() > mp.end()
-        ]
-        pend = after[0].start() if after else len(sql)
+        pend = _clause_end(sql, mp.end())
         pred = sql[mp.end() : pend].strip().rstrip(";")
         rest = sql[pend:]
         mw = _first_match(rest, r"\bWHERE\b")
         if mw and mw.start() == 0:  # PREWHERE directly followed by WHERE
-            wafter = [
-                t
-                for t in _top_level_matches(rest, _CLAUSE_AFTER_FROM)
-                if t.start() > mw.end()
-            ]
-            wend = wafter[0].start() if wafter else len(rest)
+            wend = _clause_end(rest, mw.end())
             wpred = rest[mw.end() : wend].strip()
             rest = f"WHERE ({pred}) AND ({wpred}) " + rest[wend:]
         else:
@@ -5117,14 +5149,8 @@ def _rewrite_limit_by(sql: str) -> str:
     else:
         off, n = 0, int(m.group(1))
 
-    # the BY expression list runs to the next top-level LIMIT or EOF
     tail_start = m.end()
-    next_limit = [
-        t
-        for t in _top_level_matches(sql, r"\bLIMIT\b|\bSETTINGS\b")
-        if t.start() >= tail_start
-    ]
-    by_end = next_limit[0].start() if next_limit else len(sql)
+    by_end = _clause_end(sql, tail_start)
     by_cols = sql[tail_start:by_end].strip().rstrip(";")
     trailing = sql[by_end:].strip().rstrip(";")  # e.g. "LIMIT 100" or ""
 
@@ -5403,14 +5429,7 @@ def _rewrite_qualify(sql: str) -> str:
             "QUALIFY in an un-parenthesized set-operation statement is "
             "not bridged — parenthesize each branch"
         )
-    after = [
-        t
-        for t in _top_level_matches(
-            sql, r"\b(ORDER\s+BY|LIMIT|OFFSET|SETTINGS|FORMAT)\b"
-        )
-        if t.start() > m.end()
-    ]
-    pend = after[0].start() if after else len(sql)
+    pend = _clause_end(sql, m.end())
     pred = sql[m.end() : pend].strip().rstrip(";")
     tail = sql[pend:]
     head = sql[: m.start()].rstrip()
@@ -5436,14 +5455,6 @@ def _rewrite_qualify(sql: str) -> str:
 _RAND_UINT32 = "CAST(floor(rand() * 4294967296) AS BIGINT)"
 
 
-#: keywords that terminate an ORDER BY item list at its own depth
-_ORDER_STOP = re.compile(
-    r"(LIMIT|OFFSET|SETTINGS|FORMAT|UNION|EXCEPT|INTERSECT|WITH|"
-    r"INTERPOLATE|ROWS|RANGE|GROUPS|WINDOW)\b",
-    re.IGNORECASE,
-)
-
-
 def _rewrite_order_by_nulls(sql: str) -> str:
     """ClickHouse sorts NULLs LAST by default in BOTH sort directions;
     Spark's ASC default is NULLS FIRST — a SILENT row-order divergence
@@ -5453,85 +5464,30 @@ def _rewrite_order_by_nulls(sql: str) -> str:
     explicit NULLS FIRST/LAST gets ``NULLS LAST`` appended — CH's
     default, which is also DuckDB's, so oracles need no change.
 
-    ADVICE r12: the span scan rides ``_lex`` so comments,
-    strings and backtick identifiers are opaque (a ``limit`` inside a
-    block comment no longer ends the span mid-comment), item text is
-    preserved verbatim — newlines included — and ``NULLS LAST`` is
-    inserted after the item's last CODE character, never after a
-    trailing ``--`` comment that would swallow it and everything
-    after."""
+    The list is the clause's span (``_clause_end``), so comments,
+    strings and backtick identifiers are opaque and ``ORDER BY
+    interpolate`` is a column; item text is preserved verbatim —
+    newlines included — and ``NULLS LAST`` is inserted after the
+    item's last CODE character, never after a trailing ``--`` comment
+    that would swallow it and everything after."""
     pos = 0
-    while True:
-        m = _first_match(sql[pos:], r"\bORDER\s+BY\b")
-        if not m:
-            return sql
+    while m := _first_match(sql[pos:], r"\bORDER\s+BY\b"):
         istart = pos + m.end()
-        # span scan: end at a stop keyword at the SAME depth, at the
-        # ')' closing the enclosing block (window spec), or at EOS. A
-        # stop keyword can only TERMINATE the list after the current
-        # item has content — `ORDER BY interpolate` is a column named
-        # interpolate (the FillRejectionScope contract), while
-        # `ORDER BY x LIMIT 5`'s LIMIT follows a complete item
-        n = len(sql)
-        end = n
-        item_content = False
-        prev_code = " "
-        commas = []  # top-level comma positions inside the span
-        for off, ch, d, kind in _lex(sql[istart:]):
-            i = istart + off
-            if kind == "comment":
-                continue  # opaque: no content, never a stop keyword
-            if kind != "code":
-                item_content = True
-                prev_code = ch
-                continue
-            if ch == ")" and d < 0:
-                end = i
-                break
-            if d == 0:
-                if ch == ",":
-                    commas.append(i)
-                    item_content = False
-                elif ch.isalpha() or ch == "_":
-                    if (
-                        item_content
-                        and not (prev_code.isalnum() or prev_code == "_")
-                        and _ORDER_STOP.match(sql, i)
-                    ):
-                        end = i
-                        break
-                    item_content = True
-                elif not ch.isspace():
-                    item_content = True
-            elif not ch.isspace():
-                item_content = True
-            prev_code = ch
-        # segment k spans (after previous comma) .. (next comma or end)
-        starts = [istart] + [c + 1 for c in commas]
-        seg_ends = commas + [end]
-        parts = [sql[b:e] for b, e in zip(starts, seg_ends)]
+        end = _clause_end(sql, istart)
         out_parts = []
-        for it in parts:
-            code_chars = []
-            last = -1
-            for k, c, _d2, kind in _lex(it):
-                if kind == "comment":
-                    continue
-                code_chars.append(c)
-                if not c.isspace():
-                    last = k
-            code = "".join(code_chars).strip()
+        for it in _comma_parts(sql[istart:end]):
+            last = _statement_tail(it)[0]
+            code = _without_comments(it[:last]).strip()
             if not code or re.search(
                 r"\bNULLS\s+(FIRST|LAST)$", code, re.IGNORECASE
             ):
                 out_parts.append(it)
             else:
-                out_parts.append(
-                    it[: last + 1] + " NULLS LAST" + it[last + 1 :]
-                )
+                out_parts.append(it[:last] + " NULLS LAST" + it[last:])
         rep = ",".join(out_parts)
         sql = sql[:istart] + rep + sql[end:]
         pos = istart + len(rep)
+    return sql
 
 
 def _reject_parametrized_calls(sql: str) -> str:
@@ -5927,15 +5883,10 @@ def _check_insert_statement(sql: str) -> None:
     if not ms:
         return  # VALUES / TABLE: Spark's arity check is already loud
     body = after[ms.end() :]
-    # truncate at the first top-level clause/set-operator keyword, not
-    # just FROM (ADVICE r12: a FROM-less `SELECT 1, 2 UNION ALL SELECT
-    # 3, 4` counted both branches' lists and falsely rejected)
-    stops = _top_level_matches(
-        body,
-        r"\b(FROM|WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|UNION|EXCEPT|"
-        r"INTERSECT|SETTINGS|FORMAT|WINDOW|QUALIFY)\b",
-    )
-    seg = body[: stops[0].start()] if stops else body
+    # the SELECT list ends at the next clause, not just FROM (ADVICE
+    # r12: a FROM-less `SELECT 1, 2 UNION ALL SELECT 3, 4` counted both
+    # branches' lists and falsely rejected)
+    seg = body[: _clause_end(body, 0)]
     if _first_match(seg, r"\*"):
         return
     items = _split_top_commas(seg.strip())
@@ -6447,16 +6398,7 @@ def _extract_asof_join(sql: str):
     if len(ms) > 1:
         raise ChSqlError("multiple ASOF JOINs are not bridged")
     m = _ASOF_FROM.search(sql, ms[0].start())
-    # ON conditions end at the next top-level clause keyword
-    stops = [
-        s.start()
-        for s in _top_level_matches(
-            sql,
-            r"\b(WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|SETTINGS|UNION)\b",
-        )
-        if s.start() > m.end()
-    ]
-    end = min(stops) if stops else len(sql)
+    end = _clause_end(sql, m.end())
     conds = _split_top_commas(sql[m.end() : end].strip())  # no top commas
     parts = re.split(r"\bAND\b", conds[0] if conds else "", flags=re.IGNORECASE)
     la = m.group("la") or m.group("lt")
@@ -6572,15 +6514,7 @@ def _extract_any_join(sql: str):
     if len(ms) > 1:
         raise ChSqlError("multiple ANY JOINs are not bridged")
     m = _ANY_JOIN.search(sql, ms[0].start())
-    stops = [
-        s.start()
-        for s in _top_level_matches(
-            sql,
-            r"\b(WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|SETTINGS|UNION)\b",
-        )
-        if s.start() > m.end()
-    ]
-    end = min(stops) if stops else len(sql)
+    end = _clause_end(sql, m.end())
     ra = m.group("ra") or m.group("rt")
     rkeys = []
     for p in re.split(r"\bAND\b", sql[m.end() : end], flags=re.IGNORECASE):

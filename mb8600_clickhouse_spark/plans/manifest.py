@@ -49,6 +49,23 @@ from pyspark.sql import Column, DataFrame, SparkSession
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 
+
+def read_manifest(root: str | Path, version: int) -> dict:
+    """The manifest of snapshot ``version`` of the table at ``root``."""
+    return json.loads((Path(root) / MANIFEST_DIR / f"v{version}.json").read_text())
+
+
+def latest_version(root: str | Path) -> int | None:
+    """The newest committed version of the table at ``root``, None
+    before its first commit. Creates nothing: readers call it on paths
+    that may not hold a table yet."""
+    versions = [
+        int(p.stem[1:])
+        for p in (Path(root) / MANIFEST_DIR).glob("v*.json")
+        if p.stem[1:].isdigit()
+    ]
+    return max(versions) if versions else None
+
 # ---------------------------------------------------------------------------
 # File-level column stats (the Iceberg/Delta data-skipping idiom).
 # Collected once per commit from the parquet footers of the NEW files
@@ -296,15 +313,10 @@ class ManifestTable:
         return self.root / MANIFEST_DIR / f"v{version}.json"
 
     def latest_version(self) -> int | None:
-        versions = [
-            int(p.stem[1:])
-            for p in (self.root / MANIFEST_DIR).glob("v*.json")
-            if p.stem[1:].isdigit()
-        ]
-        return max(versions) if versions else None
+        return latest_version(self.root)
 
     def _read_manifest(self, version: int) -> dict:
-        return json.loads(self._manifest_path(version).read_text())
+        return read_manifest(self.root, version)
 
     def snapshot_files(self, version: int | None = None) -> list[str]:
         v = self.latest_version() if version is None else version

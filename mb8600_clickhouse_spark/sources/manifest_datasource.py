@@ -40,9 +40,7 @@ Options:
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
-from pathlib import Path
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -53,20 +51,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-MANIFEST_DIR = "_manifests"
-
-
-def _manifest(root: str, version: int) -> dict:
-    return json.loads((Path(root) / MANIFEST_DIR / f"v{version}.json").read_text())
-
-
-def _latest_version(root: str) -> int | None:
-    versions = [
-        int(p.stem[1:])
-        for p in (Path(root) / MANIFEST_DIR).glob("v*.json")
-        if p.stem[1:].isdigit()
-    ]
-    return max(versions) if versions else None
+from ..plans.manifest import latest_version, read_manifest
 
 
 def _added_files(root: str, m: dict) -> list[str]:
@@ -78,7 +63,7 @@ def _added_files(root: str, m: dict) -> list[str]:
     parent = m.get("parent")
     if parent is None:
         return m["files"]
-    prior = set(_manifest(root, parent)["files"])
+    prior = set(read_manifest(root, parent)["files"])
     return [f for f in m["files"] if f not in prior]
 
 
@@ -125,7 +110,7 @@ class ManifestBatchReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType | None = None):
         self.root = options["path"]
         v = options.get("version")
-        self.version = int(v) if v is not None else _latest_version(self.root)
+        self.version = int(v) if v is not None else latest_version(self.root)
         if self.version is None:
             raise FileNotFoundError(f"no committed snapshot in {self.root}")
         self.declared_schema = schema
@@ -133,7 +118,7 @@ class ManifestBatchReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         return [
             ParquetFilePartition(f)
-            for f in _manifest(self.root, self.version)["files"]
+            for f in read_manifest(self.root, self.version)["files"]
         ]
 
     def read(self, partition: ParquetFilePartition) -> Iterator:
@@ -154,13 +139,13 @@ class ManifestStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         if self.starting == "latest":
-            latest = _latest_version(self.root)
+            latest = latest_version(self.root)
             return {"version": -1 if latest is None else latest}
         # start BEFORE startingVersion so that version itself is emitted
         return {"version": int(self.starting) - 1}
 
     def latestOffset(self) -> dict:
-        latest = _latest_version(self.root)
+        latest = latest_version(self.root)
         return {"version": -1 if latest is None else latest}
 
     def partitions(
@@ -168,7 +153,7 @@ class ManifestStreamReader(DataSourceStreamReader):
     ) -> Sequence[InputPartition]:
         files: list[str] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            m = _manifest(self.root, v)
+            m = read_manifest(self.root, v)
             if m["op"] != "append":
                 if self.skip_change_commits:
                     continue
@@ -206,7 +191,7 @@ class ManifestDataSource(DataSource):
         # design. An empty table (no snapshot yet) stays unpinned; the
         # batch reader then raises its own clear error.
         if options.get("version") is None and "path" in options:
-            latest = _latest_version(options["path"])
+            latest = latest_version(options["path"])
             if latest is not None:
                 options["version"] = str(latest)
 
@@ -224,7 +209,7 @@ class ManifestDataSource(DataSource):
 
         v = self.options.get("version")
         latest = (
-            int(v) if v is not None else _latest_version(self.options["path"])
+            int(v) if v is not None else latest_version(self.options["path"])
         )
         if latest is None:
             raise FileNotFoundError(
@@ -237,7 +222,7 @@ class ManifestDataSource(DataSource):
         # leak into an already-planned batch DataFrame. (Streaming
         # ignores the pin: its offsets advance by design.)
         self.options["version"] = str(latest)
-        m = _manifest(self.options["path"], latest)
+        m = read_manifest(self.options["path"], latest)
         if m.get("schema") is not None:
             return StructType.fromJson(m["schema"])
         files = m["files"]

@@ -5,10 +5,12 @@ The reference pipeline is scrape -> bounded queue -> row-wise INSERT into
 a ClickHouse Buffer table (reference ``mb8600.py:294-311``, ``:313-443``,
 ``tables.sql:57``). The Spark-native shape (SURVEY.md §1.1, §2.A):
 
-- the poll connector (``sources/hnap.py``) drops one JSON *payload
-  record* per scrape into a landing directory — the smallest durable
-  handoff; a file-source stream picks them up (checkpointed, replayable,
-  so the queue + Buffer table both disappear);
+- the exporter daemon (``__main__.build_query``) streams the scrapes
+  straight from ``format("hnap")`` (``sources/hnap_datasource.py``),
+  whose poll-count offsets the checkpoint records, so the queue and the
+  Buffer table both disappear; ``read_payload_stream`` is the
+  file-source alternative over a landing directory of JSON payload
+  records, one per scrape, which tests and perfbench write;
 - parsing is the declarative §2.B column-expression path shared with
   batch — one code path, batch/stream parity by construction;
 - the sink is ``foreachBatch`` committing each micro-batch to one
@@ -34,8 +36,9 @@ from pyspark.sql import types as T
 
 from .. import parse
 
-# One landing record per scrape, as written by the connector:
-# the raw HNAP JSON plus connector-side instrumentation (B9-B11).
+# One landing record per scrape (the rows ``read_payload_stream``
+# reads and ``format("hnap")`` yields): the raw HNAP JSON plus the
+# scrape's instrumentation (B9-B11).
 PAYLOAD_RECORD_SCHEMA = T.StructType(
     [
         T.StructField("modem_name", T.StringType(), False),

@@ -135,12 +135,13 @@ class LazyTables(dict):
         return df
 
     def force(self) -> "LazyTables":
-        """Materialize every entry (register_views / bench warmup)."""
+        """Materialize every entry (``items()``/``values()``, and
+        perfbench's warm-up)."""
         for name in list(FIXTURE_SCHEMAS) + ["docsis"]:
             self[name]
         return self
 
-    def values(self):  # bench warms all tables via values()
+    def values(self):
         return dict.values(self.force())
 
     def items(self):

@@ -345,6 +345,37 @@ class TestArrayVocabularyTemplates:
         assert sorted(got) == [4, 5]
         with pytest.raises(ChSqlError, match="matching"):
             rw("SELECT a ? b FROM t")
+        # the else operand ends at any clause keyword of the clause table
+        assert rw(
+            "SELECT k FROM t WHERE c ? a : b QUALIFY row_number() "
+            "OVER (ORDER BY k) = 1"
+        ) == (
+            "SELECT * EXCEPT (__qual) FROM (SELECT k, (row_number() OVER "
+            "(ORDER BY k NULLS LAST) = 1) AS __qual FROM t WHERE "
+            "if(c, a, b)) __q WHERE __qual "
+        )
+        assert rw(
+            "SELECT k, count() OVER w AS n FROM t WHERE c ? a : b "
+            "WINDOW w AS (ORDER BY k)"
+        ) == (
+            "SELECT k, count(*) OVER w AS n FROM t WHERE if(c, a, b) "
+            "WINDOW w AS (ORDER BY k NULLS LAST)"
+        )
+        assert rw(
+            "SELECT k FROM t WHERE c ? a : b SETTINGS max_threads = 1"
+        ) == "SELECT k FROM t WHERE if(c, a, b)"
+        # a stop keyword is a whole word, and nested keywords stay in
+        # their operand
+        assert rw("SELECT one ? 1 : 0 FROM t") == (
+            "SELECT if(one, 1, 0) FROM t"
+        )
+        assert rw("SELECT c ? 1 : CAST(x AS INT) FROM t") == (
+            "SELECT if(c, 1, CAST(x AS INT)) FROM t"
+        )
+        # a column named like a clause keyword, after an operator
+        assert rw("SELECT a AND range < 5 ? 1 : 0 FROM t") == (
+            "SELECT if(a AND range < 5, 1, 0) FROM t"
+        )
 
     def test_top_and_ornull_combinators(self, spark):
         from mb8600_clickhouse_spark.functions.chsql import ch_sql
@@ -748,6 +779,18 @@ class TestEndToEnd:
         got = {(r["k"], r["tag"]): r["n"] for r in rows}
         assert got[("a", "x")] == 3 and got[("a", "y")] == 1
         assert got[("b", "y")] == 3  # 'y' + 'y,y' unrolled
+        # the LATERAL VIEW ends the FROM clause, before a WINDOW clause
+        rows = spark.sql(
+            rw(
+                "SELECT k, arrayJoin(splitByChar(',', tags)) AS tag, "
+                "count() OVER w AS n FROM chsql_t "
+                "WINDOW w AS (PARTITION BY k) ORDER BY k, tag"
+            )
+        ).collect()
+        assert [(r["k"], r["tag"], r["n"]) for r in rows] == [
+            ("a", "x", 5), ("a", "x", 5), ("a", "x", 5), ("a", "y", 5),
+            ("a", "z", 5), ("b", "y", 3), ("b", "y", 3), ("b", "y", 3),
+        ]
 
     def test_array_lambdas_execute(self, spark):
         """The docsis dashboard idiom: lambda array ops over nested
@@ -981,6 +1024,24 @@ class TestArrayJoinClause:
     def test_single_with_alias(self):
         assert rw("SELECT ch FROM t ARRAY JOIN arr AS ch") == (
             "SELECT ch FROM t  LATERAL VIEW explode(arr) __ajv0 AS ch "
+        )
+        # the clause ends at any later clause of the clause table
+        assert rw(
+            "SELECT k, x FROM t ARRAY JOIN a AS x WINDOW w AS (ORDER BY k)"
+        ) == (
+            "SELECT k, x FROM t  LATERAL VIEW explode(a) __ajv0 AS x "
+            "WINDOW w AS (ORDER BY k NULLS LAST)"
+        )
+        assert rw(
+            "SELECT k, x FROM t ARRAY JOIN a AS x QUALIFY row_number() "
+            "OVER (PARTITION BY k ORDER BY x) = 1"
+        ) == (
+            "SELECT * EXCEPT (__qual) FROM (SELECT k, x, (row_number() "
+            "OVER (PARTITION BY k ORDER BY x NULLS LAST) = 1) AS __qual "
+            "FROM t  LATERAL VIEW explode(a) __ajv0 AS x) __q WHERE __qual "
+        )
+        assert rw("SELECT k, x FROM t ARRAY JOIN a AS x OFFSET 2") == (
+            "SELECT k, x FROM t  LATERAL VIEW explode(a) __ajv0 AS x OFFSET 2"
         )
 
     def test_bare_name_references_element(self):
@@ -3280,6 +3341,12 @@ class TestWithConstants:
             rw("WITH 2 AS k SELECT v, count() FROM t GROUP BY /* it's */ k")
         with pytest.raises(ChSqlError, match="positional"):
             rw("WITH 2 AS k SELECT v, count() FROM t GROUP BY `a'b`, k")
+        # whichever clause follows the list
+        for tail in ("QUALIFY n > 0", "HAVING n > 0",
+                     "WINDOW w AS (ORDER BY n)"):
+            with pytest.raises(ChSqlError, match="positional"):
+                rw("WITH 2 AS k SELECT k, count() AS n FROM t "
+                   f"GROUP BY k {tail}")
         # inside a subquery block too
         with pytest.raises(ChSqlError, match="positional"):
             rw("WITH 1 AS k SELECT * FROM "
@@ -4998,6 +5065,16 @@ class TestRound12GrammarWave3c:
         assert out.rstrip().endswith(
             "WHERE __qual ORDER BY k NULLS LAST LIMIT 5"
         )
+        # arrayJoin's LATERAL VIEW ends the FROM clause, not the predicate
+        assert rw(
+            "SELECT arrayJoin(a) AS x, k FROM t QUALIFY row_number() OVER "
+            "(PARTITION BY k ORDER BY x) = 1"
+        ) == (
+            "SELECT * EXCEPT (__qual) FROM (SELECT __aj0 AS x, k, "
+            "(row_number() OVER (PARTITION BY k ORDER BY x NULLS LAST) = 1)"
+            " AS __qual FROM t LATERAL VIEW explode(a) __ajv___aj0 AS __aj0)"
+            " __q WHERE __qual "
+        )
 
     def test_qualify_executed(self, spark):
         from mb8600_clickhouse_spark.functions.chsql import ch_sql
@@ -5020,6 +5097,19 @@ class TestRound12GrammarWave3c:
             "ORDER BY k",
         ).collect()
         assert [tuple(r) for r in rows2] == [(0, 4), (1, 3)]
+        # with arrayJoin: the window orders by the unrolled element
+        # (the same arrayJoin call; Spark rejects a lateral alias in a
+        # window)
+        spark.range(10).selectExpr(
+            "id % 3 AS k", "array(id, id + 10) AS a"
+        ).createOrReplaceTempView("r12_qual_aj")
+        rows3 = ch_sql(
+            spark,
+            "SELECT arrayJoin(a) AS x, k FROM r12_qual_aj QUALIFY "
+            "row_number() OVER (PARTITION BY k ORDER BY arrayJoin(a) DESC)"
+            " = 1 ORDER BY k",
+        ).collect()
+        assert [tuple(r) for r in rows3] == [(19, 0), (17, 1), (18, 2)]
 
     def test_qualify_union_rejects(self):
         with pytest.raises(ChSqlError, match="QUALIFY"):

@@ -6,9 +6,12 @@ and the top-level comma split all read one token regex. On any text —
 here drawn from the characters that open, close or escape a span, plus
 parens, brackets, commas and filler — they must tell the same story.
 The call rewriter (``_rewrite_calls``) is checked against the
-per-character view too. No Spark."""
+per-character view too, and the clause-span function (``_clause_end``)
+against statements built from the clause table. No Spark."""
 
 from __future__ import annotations
+
+import random
 
 import pytest
 from hypothesis import given, settings
@@ -17,6 +20,7 @@ from hypothesis import strategies as st
 from mb8600_clickhouse_spark.functions.chsql import (
     ChSqlError,
     _Cursor,
+    _clause_end,
     _lex,
     _match_paren,
     _rewrite_calls,
@@ -124,3 +128,75 @@ def test_spans():
     assert kinds("`x") == "ii"
     assert kinds("'a\\") == "sss"
     assert kinds("/*/") == "###"
+
+
+# --- clause spans --------------------------------------------------------
+# the clause table's keywords in grammar order; a tuple is one slot
+# whose spellings are alternatives
+_STATEMENT = [
+    "WITH", "SELECT", "FROM", ("ARRAY JOIN", "LEFT ARRAY JOIN"), "PREWHERE",
+    "WHERE", "GROUP BY", "WITH TOTALS", "HAVING", "WINDOW", "QUALIFY",
+    "ORDER BY", "WITH FILL", "INTERPOLATE", "LIMIT", "OFFSET", "SETTINGS",
+    "FORMAT", ("UNION", "EXCEPT", "INTERSECT"), "SELECT", "FROM", "WHERE",
+]
+_WINDOW_SPEC = ["PARTITION BY", "ORDER BY", ("ROWS", "RANGE", "GROUPS")]
+_GAPS = [" ", "  ", "\n", " \t"]
+# item bodies; the keyword text in them is opaque, nested, after a dot
+# or an operator, or the first word of its item, so it ends no clause
+_ATOMS = [
+    "x", "42", "a + b", "1 BY k", "arr[1]", "'LIMIT 1, ''WHERE'''",
+    "`from`", '"ORDER BY"', "/* GROUP BY */ y", "y /* LIMIT */",
+    "z -- SETTINGS\n", "f(a, (SELECT b FROM c WHERE d LIMIT 1))",
+    "interpolate", "rows", "range(5)", "format", "t.rows", "t.limit",
+    "a AND offset > 1", "x AS window", "b = range", "-groups",
+]
+
+
+def _keyword(rnd, slot):
+    """A slot's keyword in random case, its words apart by any gap."""
+    kw = rnd.choice(slot) if isinstance(slot, tuple) else slot
+    words = [rnd.choice([w, w.lower(), w.title()]) for w in kw.split()]
+    return "".join(w + rnd.choice(_GAPS) for w in words[:-1]) + words[-1]
+
+
+def _item(rnd, depth):
+    """``(text, spans)``: an atom, or a window call whose spec's clause
+    spans are relative to the text."""
+    if depth > 1 or rnd.random() < 0.7:
+        return rnd.choice(_ATOMS), []
+    head = "count() OVER ("
+    spec, spans = _clauses(rnd, _WINDOW_SPEC, depth + 1)
+    return f"{head}{spec})", [(a + len(head), b + len(head)) for a, b in spans]
+
+
+def _clauses(rnd, slots, depth=0):
+    """``(text, spans)`` for a grammar-ordered subset of ``slots``: each
+    clause is its keyword and a body of items; a span runs from the end
+    of the keyword to the next keyword or the end of the text."""
+    chosen = [s for s in slots if rnd.random() < 0.5] or slots[:1]
+    text, spans = "", []
+    for slot in chosen:
+        if spans:
+            spans[-1] = (spans[-1][0], len(text))
+        text += _keyword(rnd, slot)
+        start = len(text)
+        text += rnd.choice(_GAPS)
+        for i in range(rnd.randint(1, 3)):
+            it, sub = _item(rnd, depth)
+            text += ", " if i else ""
+            spans += [(a + len(text), b + len(text)) for a, b in sub]
+            text += it
+        text += rnd.choice(_GAPS)
+        spans.append((start, None))
+    spans[-1] = (spans[-1][0], len(text))
+    return text, spans
+
+
+@settings(max_examples=300, deadline=None)
+@given(seed=st.integers(min_value=0))
+def test_clause_spans_are_the_built_bodies(seed):
+    """``_clause_end`` from the end of each clause keyword, top level or
+    inside a window spec, lands on the next keyword at that depth, the
+    ``)`` closing the spec or the end of the text."""
+    sql, spans = _clauses(random.Random(seed), _STATEMENT)
+    assert [(s, _clause_end(sql, s)) for s, _e in spans] == spans, sql
